@@ -228,6 +228,25 @@ class TableCatalog(val spark: SparkSession, warehouse: String) {
         st.isFile && !n.startsWith("_") && !n.startsWith(".")
       }
 
+  /** Rows in a plain partition's visible data files, summed from their
+    * parquet footers on the driver — a metadata read per file, no Spark
+    * job. Sub-directories (a `subField=` split partition) are not
+    * descended into. */
+  def partitionRowCount(table: String, partField: String,
+                        partValue: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    listStatusOrEmpty(new Path(partitionPath(table, partField, partValue)))
+      .filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+      .map { st =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+  }
+
   /** Write a small metadata marker file under the table root, only if
     * absent (idempotent under replay). Underscore-prefixed names stay
     * invisible to Spark partition/file discovery. */

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
@@ -68,17 +68,21 @@ object CorpusStream {
     * batches would raise it for sharper pruning. */
   val StatePartitions = 64
 
-  /** A batch's band rows are laid out as `pk=` sub-directories only
-    * when there are enough of them that each pk file is substantial
-    * (≥ ~1k rows per pk on average); smaller batches write ONE plain
-    * file with pk as a data column. Without this, tiny frequent
-    * batches explode into batches×64 near-empty files and the
-    * per-batch LISTING cost grows faster than the scan the layout
-    * saves (measured: the 40-small-batch ProbeStream run regressed
-    * from flat to a +0.1 s/batch slope before the split was made
-    * granularity-aware). Reads handle both layouts: pk-split batches
-    * are pruned at the directory level, plain batches are read whole
-    * (tiny by construction) and pruned by the pk column. */
+  /** A pk-bucketed state partition ([[writeState]]) is laid out as
+    * `pk=` sub-directories only when it holds at least this many rows,
+    * so each pk file is substantial (≥ ~1k rows per pk on average);
+    * smaller partitions are ONE plain file. The rule is the same for a
+    * live batch partition, the `_fp` backfill and a compaction fold's
+    * `c` partition. Without it, tiny frequent batches explode into
+    * batches×64 near-empty files and the per-batch LISTING cost grows
+    * faster than the scan the layout saves (measured: the 40-small-batch
+    * ProbeStream run regressed from flat to a +0.1 s/batch slope before
+    * the split was made granularity-aware; folds that always split
+    * turned 400 docs of state into 40–65 files per table, and every
+    * later batch paid Spark's parallel file-listing jobs). Reads handle
+    * both layouts: pk-split partitions are pruned at the directory
+    * level, plain ones are read whole (small by this rule) and pruned
+    * by the pk column. */
   val PkSplitMinRows: Long = 1000L * StatePartitions
 
   /** Live (uncompacted) batch partitions that trigger a compaction pass
@@ -86,7 +90,9 @@ object CorpusStream {
     * accumulate one `batch_id=` directory per batch forever, and the
     * per-batch LISTING cost — the one term the pk layout doesn't bound —
     * grows linearly with stream age. With it, the directory count stays
-    * under CompactEvery + 1 regardless of how long the stream runs. */
+    * under CompactEvery + 1 regardless of how long the stream runs. The
+    * folded `c` partition follows the [[PkSplitMinRows]] rule like any
+    * other, so a small state stays one file per table. */
   val CompactEvery = 16
 
   private def pkCol: org.apache.spark.sql.Column =
@@ -119,6 +125,124 @@ object CorpusStream {
     .add("id", LongType).add("lbl", LongType).add("b", LongType)
     .add("batch_id", StringType)
   private def withPk(s: StructType): StructType = s.add("pk", LongType)
+
+  /** Layout facts of one pk-bucketed state table — the sketch table and
+    * its `_bands`, `_fp` and `_emit` siblings. The four share one layout
+    * rule and writer ([[writeState]]), one shape-aware reader
+    * ([[readPkTable]]) and one compaction fold; only these facts differ:
+    *  - `pk`, the bucket expression over the data columns;
+    *  - `pkStored`, whether a plain partition stores pk as a data
+    *    column (the sketch table computes it on read: it is a pure
+    *    function of id, so legacy plain sketch files need no backfill);
+    *  - `dedupKeys`, the row identity a fold over a stranded target
+    *    deduplicates on;
+    *  - `sortById`, files sorted by id (tight row-group id ranges for the
+    *    sketch fetch's candidate-id IN filter);
+    *  - `heal`, per-column read fixes for legacy files. */
+  private case class PkTable(suffix: String, schema: StructType,
+      pk: Column, pkStored: Boolean, dedupKeys: Seq[String],
+      sortById: Boolean = false, heal: Map[String, Column] = Map.empty) {
+    def of(stateTable: String): String = stateTable + suffix
+    def cols: Seq[Column] = schema.fieldNames.toSeq.map(n =>
+      heal.get(n).fold(col(n))(_.as(n)))
+  }
+
+  /** The per-doc sketch table itself. Legacy rows without the persisted
+    * bottom-k column read `sb` as null and heal from `sh`. */
+  private val SketchState = PkTable("", SketchDataSchema,
+    emitPkCol(col("id")), pkStored = false, Seq("id"), sortById = true,
+    heal = Map("sb" -> coalesce(col("sb"), MinHashLSH.bottomKCol(col("sh")))))
+
+  /** Pre-banded sketch rows, bucketed by band key, so a batch's
+    * cross-batch candidate join reads only its colliding buckets. */
+  private val BandsState = PkTable("_bands", BandsDataSchema, pkCol,
+    pkStored = true, Seq("id", "band_idx"))
+
+  /** The one writer of the pk-bucketed state tables — the live sinks,
+    * the `_fp` backfill and every compaction fold. `rows` (data columns
+    * only) lands as batch partition `key` of `t`. With `split` — the
+    * caller's "at least `pkSplitMinRows` rows" ([[PkSplitMinRows]]) —
+    * it writes `pk=` sub-directories, repartitioned by pk first so each
+    * bucket gets ~one file instead of one per shuffle task; otherwise
+    * ONE plain file. */
+  private def writeState(catalog: TableCatalog, t: PkTable,
+      stateTable: String, key: String, rows: DataFrame,
+      split: Boolean): Unit = {
+    val keyed =
+      (if (split || t.pkStored) rows.withColumn("pk", t.pk) else rows)
+        .withColumn("batch_id", lit(key))
+    def sorted(df: DataFrame) =
+      if (t.sortById) df.sortWithinPartitions(col("id")) else df
+    if (split)
+      catalog.writeSubPartitioned(sorted(keyed.repartition(col("pk"))),
+        t.of(stateTable), "batch_id", key, "pk")
+    else
+      catalog.writePartition(sorted(keyed.coalesce(1)),
+        t.of(stateTable), "batch_id", key)
+  }
+
+  /** The layout rule for a partition written from existing partitions
+    * `keys` of `table` (a fold's sources, a backfill's sketch batch):
+    * split when they hold at least `pkSplitMinRows` rows. A pk-split
+    * source held that many alone; plain sources' counts come from their
+    * parquet footers on the driver, so the choice costs no Spark job. */
+  private def splitLayoutFor(catalog: TableCatalog, table: String,
+      keys: Seq[String], pkSplitMinRows: Long): Boolean =
+    keys.exists(
+      catalog.listSubPartitions(table, "batch_id", _, "pk").nonEmpty) ||
+      keys.iterator.map(
+        catalog.partitionRowCount(table, "batch_id", _)).sum >=
+        pkSplitMinRows
+
+  /** The one shape-aware reader of a pk-bucketed state table: batch
+    * partitions `keys` of `t`, data columns only. Each partition is
+    * listed once (one Hadoop LISTING per batch dir, not a per-(dir, pk)
+    * exists round-trip — on an object store each exists() is a remote
+    * call) and the shapes read as separate groups, so partition
+    * discovery never sees conflicting directory depths. With `pks`
+    * set, pk-split partitions prune at the DIRECTORY level and plain
+    * ones — small by [[PkSplitMinRows]] — are read whole and filtered
+    * on pk. None when no partition holds a data file. */
+  private def readPkTable(catalog: TableCatalog, t: PkTable,
+      stateTable: String, keys: Seq[String],
+      pks: Option[Set[Long]]): Option[DataFrame] = {
+    val table = t.of(stateTable)
+    def path(b: String) = catalog.partitionPath(table, "batch_id", b)
+    val (split, plain) = keys
+      .map(b => b -> catalog.listSubPartitions(table, "batch_id", b, "pk"))
+      .partition(_._2.nonEmpty)
+    val splitDirs = split.flatMap { case (b, subs) =>
+      pks match {
+        case None => Seq(path(b))
+        case Some(ps) => subs
+          .filter(s => scala.util.Try(s.toLong).toOption.exists(ps.contains))
+          .map(p => s"${path(b)}/pk=$p")
+      }
+    }
+    val plainDirs = plain.map(_._1)
+      .filter(catalog.partitionHasDataFiles(table, "batch_id", _))
+      .map(path)
+    val plainPk = if (t.pkStored) col("pk") else t.pk
+    Seq(
+      if (splitDirs.isEmpty) None
+      else Some(catalog.readPaths(table, splitDirs, t.schema)),
+      if (plainDirs.isEmpty) None
+      else {
+        val raw = catalog.readPaths(table, plainDirs,
+          if (t.pkStored) withPk(t.schema) else t.schema)
+        Some(pks.fold(raw)(ps => raw.filter(plainPk.isin(ps.toSeq: _*))))
+      }).flatten.map(_.select(t.cols: _*)).reduceOption(_ unionByName _)
+  }
+
+  /** [[readPkTable]] of `t`'s committed partitions other than the
+    * in-flight batch's, pruned to `pks`. */
+  private def prunedStateRead(catalog: TableCatalog, t: PkTable,
+      stateTable: String, batchKey: String,
+      pks: Set[Long]): Option[DataFrame] =
+    readPkTable(catalog, t, stateTable,
+      catalog.listPartitions(t.of(stateTable), "batch_id")
+        .filter(_ != batchKey),
+      Some(pks))
 
   /** Label the jobs a block's actions spawn (guide §1.5): thread-local,
     * restored on exit, so concurrent lanes keep their own labels. Pure
@@ -166,9 +290,6 @@ object CorpusStream {
     }
   }
 
-  private def bandsTableOf(stateTable: String): String =
-    stateTable + "_bands"
-
   /** Component-label state (round-10): rows `(id, lbl, b)` mapping a
     * doc to its near-dup component's canonical id, written only for
     * members of multi-doc or merged components (singletons implicitly
@@ -205,8 +326,8 @@ object CorpusStream {
     * recorded in the `_covered_keys` marker when a compaction folded
     * it; anything else (a warehouse written by pre-index code) falls
     * back to the full output scan. */
-  private def emitTableOf(stateTable: String): String =
-    stateTable + "_emit"
+  private val EmitState = PkTable("_emit", EmitDataSchema,
+    emitPkCol(col("id")), pkStored = true, Seq("id"))
 
   private val CoveredFromMarker = "_covered_from"
   private val CoveredKeysMarker = "_covered_keys"
@@ -354,8 +475,8 @@ object CorpusStream {
     * the corpus every batch, however small the batch. A state written
     * by pre-index code is backfilled once from the sketch table's own
     * fp column (see [[seenFpRows]]). */
-  private def fpTableOf(stateTable: String): String =
-    stateTable + "_fp"
+  private val FpState = PkTable("_fp", FpDataSchema, fpPkCol(col("fp")),
+    pkStored = true, Seq("id"))
 
   private def fpPkCol(f: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column =
@@ -440,22 +561,24 @@ object CorpusStream {
     }
   }
 
+  /** Each id's latest-`b` label row among `rows` (id, lbl, b). */
+  private def latestLabels(rows: DataFrame): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("id")).orderBy(col("b").desc)
+    rows.select(col("id"), col("lbl"), col("b"))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
+  }
+
   /** Current (latest-wins) label per stored doc, or null when no label
     * state exists yet. */
   private def currentLabels(catalog: TableCatalog, stateTable: String,
                             batchKey: String): DataFrame = {
     val lblTable = lblTableOf(stateTable)
     if (!catalog.tableExists(lblTable)) null
-    else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("id")).orderBy(col("b").desc)
-      catalog.read(lblTable, LblSchema)
-        .filter(col("batch_id").cast("string") =!= batchKey)
-        .select(col("id"), col("lbl"), col("b"))
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .select(col("id"), col("lbl"))
-    }
+    else latestLabels(catalog.read(lblTable, LblSchema)
+        .filter(col("batch_id").cast("string") =!= batchKey))
+      .select(col("id"), col("lbl"))
   }
 
   /** Signature width of a stored state table: the parquet-persisted
@@ -499,17 +622,21 @@ object CorpusStream {
 
   private def fp = md5(CorpusPipeline.fingerprintPrefix)
 
-  /** Merge every committed batch partition of the sketch + bands state
-    * tables into ONE compacted partition each (`batch_id=c<maxBatch>`),
+  /** Merge every committed batch partition of each state table (the
+    * sketch and its `_bands`, `_fp`, `_lbl` and `_emit` siblings) into
+    * ONE compacted partition per table (`batch_id=c<maxBatch>`),
     * deleting the sources — the periodic pass that keeps the state
     * tables' directory count (and so the per-batch listing cost) flat in
     * stream age. Row-content-neutral by construction: the target is the
-    * exact union of the sources, and every consumer (the `fp` anti-join,
-    * `seenBandFrame`, `storedSigWidth`) reads the state by COLUMNS, not
-    * by which partition a row lives in. `excludeBatchKey` (the in-flight
-    * batch) is never touched, so replay idempotence is preserved: a
-    * compacted partition only ever contains batches committed before the
-    * current one started.
+    * exact union of the sources (latest-wins per id for the label
+    * table), and every consumer (the `fp` anti-join, `seenBandFrame`,
+    * `storedSigWidth`) reads the state by COLUMNS, not by which
+    * partition a row lives in. `excludeBatchKey` (the in-flight batch)
+    * is never touched, so replay idempotence is preserved: a compacted
+    * partition only ever contains batches committed before the current
+    * one started. A pk-bucketed target takes the live writes' layout
+    * rule ([[PkSplitMinRows]], overridable by `pkSplitMinRows`): pk-split
+    * once the folded rows reach the threshold, one plain file below it.
     *
     * Idempotent and crash-safe: the target key is a pure function of the
     * source keys (`c` + max numeric key — never equal to a real numeric
@@ -520,37 +647,40 @@ object CorpusStream {
     * directory that exists but fails the probe, so the re-run rewrites
     * it from the still-present sources instead of trusting a half-write
     * and deleting the only complete copies. Each table compacts
-    * independently with the same rule, so a crash between the two
-    * tables' passes heals on the next trigger. Legacy sketch rows
-    * without the persisted bottom-k column are normalized during the
-    * rewrite. Returns true when anything moved.
+    * independently with the same rule, so a crash between two tables'
+    * passes heals on the next trigger. Legacy sketch rows without the
+    * persisted bottom-k column are normalized during the rewrite.
+    * Returns true when anything moved.
     *
     * Concurrent writers (round 11): the whole pass runs under the
     * state table's lease lock ([[TableCatalog.tryAcquireTableLock]] —
-    * one lock covers the sibling `_bands`/`_lbl`/`_emit` tables, which
-    * are only ever mutated through this state table's pipeline). A
-    * second pipeline compacting the same state concurrently — the
-    * interleaving that could delete a source the other pass still
-    * reads — is SKIPPED safely (returns false): compaction is
-    * periodic, so deferring to the lock holder loses nothing, and a
-    * crashed holder's lock ages out after the lease.
+    * one lock covers the sibling tables, which are only ever mutated
+    * through this state table's pipeline). A second pipeline compacting
+    * the same state concurrently — the interleaving that could delete a
+    * source the other pass still reads — is SKIPPED safely (returns
+    * false): compaction is periodic, so deferring to the lock holder
+    * loses nothing, and a crashed holder's lock ages out after the
+    * lease.
     *
     * `failpoint` is a test-only hook, invoked with a stage label after
     * each target write commits and before its sources are deleted;
     * StreamingSpec throws from it to simulate the crash windows. */
   def compactState(catalog: TableCatalog, stateTable: String,
                    excludeBatchKey: String,
-                   failpoint: String => Unit = _ => ()): Boolean =
+                   failpoint: String => Unit = _ => (),
+                   pkSplitMinRows: Long = PkSplitMinRows): Boolean =
     // heartbeated hold (round 13): a compaction over a huge state can
     // outlive the 15-min lease; the bare acquire would let a waiter
     // break the lock mid-rewrite
     catalog.withTableLockIfFree(stateTable) {
-      compactStateLocked(catalog, stateTable, excludeBatchKey, failpoint)
+      compactStateLocked(catalog, stateTable, excludeBatchKey, failpoint,
+        pkSplitMinRows)
     }.getOrElse(false)
 
   private def compactStateLocked(catalog: TableCatalog, stateTable: String,
                                  excludeBatchKey: String,
-                                 failpoint: String => Unit): Boolean = {
+                                 failpoint: String => Unit,
+                                 pkSplitMinRows: Long): Boolean = {
     def numOf(key: String): Option[Long] =
       scala.util.Try(key.stripPrefix("c").toLong).toOption
     def sourcesOf(table: String): Seq[String] =
@@ -571,189 +701,71 @@ object CorpusStream {
     // fold (lbl) is untouched: its latest-wins collapse is real work
     // on every path.
     def dedupIfStranded(df: DataFrame, srcs: Seq[String],
-                        cols: String*): DataFrame = {
+                        cols: Seq[String]): DataFrame = {
       val cNums = srcs.filter(_.startsWith("c")).flatMap(numOf(_))
       val plainNums = srcs.filterNot(_.startsWith("c")).flatMap(numOf(_))
       val stranded = cNums.size >= 2 ||
         cNums.exists(c => plainNums.exists(_ <= c))
       if (stranded) df.dropDuplicates(cols) else df
     }
-    // The five folds below touch DISJOINT tables (sketch / bands / lbl
-    // / emit / fp — all mutated only under this state table's lock, so
-    // the outer lock covers them all) and each is a self-contained
-    // write-target-then-delete-sources unit whose crash recovery never
-    // consults a sibling table. Run them as concurrent lanes
-    // (guide §2.6): the chain gates' compaction pass is many small
-    // serial jobs whose driver latency the lanes overlap — identical
-    // final state in any interleaving. Each lane returns whether it
-    // moved anything.
-    val foldSketch: () => Boolean = () => {
-    var moved = false
-    // sketch table: mixed layout like the bands (plain small batches vs
-    // pk-split large ones — round 12), read shape-aware; the compacted
-    // partition is large by construction so it always takes the
-    // pk-split layout, which is also what heals a legacy all-plain
-    // state into the pruned-fetch fast path
-    val sk = sourcesOf(stateTable)
-    if (sk.size >= 2) {
-      val key = "c" + sk.flatMap(numOf).max
-      val srcs = sk.filter(_ != key)
-      if (!sk.contains(key) ||
-          !catalog.partitionCommitted(stateTable, "batch_id", key)) {
-        // rewrite from the sources only: a crashed half-written target
-        // is replaced wholesale by the overwrite (its intended content
-        // was exactly this union — sources are deleted strictly after
-        // the target commits, so they are all still present here).
-        // [[readSketchBatches]] normalizes the legacy optional sb.
-        val merged = readSketchBatches(catalog, stateTable, srcs, None)
-        // dropDuplicates: a crash that stranded an OLDER compacted
-        // partition beside its undeleted sources makes the union carry
-        // identical rows twice; by-id dedup restores the one-row-per-doc
-        // invariant (a no-op shuffle on the clean path)
-        merged.foreach(m =>
-          catalog.writeSubPartitioned(
-            dedupIfStranded(m, srcs, "id")
-              .withColumn("pk", emitPkCol(col("id")))
-              .withColumn("batch_id", lit(key))
-              .repartition(col("pk"))
-              .sortWithinPartitions(col("id")),
-            stateTable, "batch_id", key, "pk"))
+    // One fold per table: `rewrite(srcs, key)` commits the target from
+    // the sources, `beforeDelete(srcs)` runs between the target's commit
+    // and the source deletes. The rewrite reads the sources only: a
+    // crashed half-written target is replaced wholesale by the overwrite
+    // (its intended content was exactly this union — sources are deleted
+    // strictly after the target commits, so they are all still here).
+    def fold(table: String, stage: String,
+             rewrite: (Seq[String], String) => Unit,
+             beforeDelete: Seq[String] => Unit = _ => ()): () => Boolean =
+      () => jd(catalog.spark, s"compact $table") {
+        val ks = sourcesOf(table)
+        ks.size >= 2 && {
+          val key = "c" + ks.flatMap(numOf).max
+          val srcs = ks.filter(_ != key)
+          if (!ks.contains(key) ||
+              !catalog.partitionCommitted(table, "batch_id", key))
+            rewrite(srcs, key)
+          failpoint(s"$stage-target-written")
+          beforeDelete(srcs)
+          srcs.foreach(catalog.deletePartition(table, "batch_id", _))
+          true
+        }
       }
-      failpoint("sketch-target-written")
-      srcs.foreach(catalog.deletePartition(stateTable, "batch_id", _))
-      moved = true
-    }
-    moved
-    }
-    val foldBands: () => Boolean = () => {
-    var moved = false
-    // bands table: mixed layout (pk= sub-dirs vs plain files with a pk
-    // data column — see PkSplitMinRows) read per shape, pk recomputed
-    // uniformly (a pure function of band_key); the compacted partition
-    // is large by construction so it always takes the pk-split layout
-    val bandsTable = bandsTableOf(stateTable)
-    val bd = sourcesOf(bandsTable)
-    if (bd.size >= 2) {
-      val key = "c" + bd.flatMap(numOf).max
-      val srcs = bd.filter(_ != key)
-      if (!bd.contains(key) ||
-          !catalog.partitionCommitted(bandsTable, "batch_id", key)) {
-        val cols = Seq(col("id"), col("n"), col("sig"), col("band_idx"),
-          col("band_key"))
-        val (split, plain) = srcs.partition(b =>
-          catalog.listSubPartitions(bandsTable, "batch_id", b, "pk")
-            .nonEmpty)
-        val parts = Seq(
-          if (split.nonEmpty)
-            Some(catalog.readPaths(bandsTable,
-                split.map(catalog.partitionPath(bandsTable, "batch_id", _)),
-                BandsDataSchema)
-              .select(cols: _*))
-          else None,
-          if (plain.nonEmpty)
-            Some(catalog.readPaths(bandsTable,
-                plain.map(catalog.partitionPath(bandsTable, "batch_id", _)),
-                withPk(BandsDataSchema))
-              .select(cols: _*))
-          else None).flatten
-        if (parts.nonEmpty)
-          catalog.writeSubPartitioned(
-            dedupIfStranded(parts.reduce(_ unionByName _), srcs,
-                "id", "band_idx")
-              .withColumn("pk", pkCol)
-              .withColumn("batch_id", lit(key))
-              .repartition(col("pk")),
-            bandsTable, "batch_id", key, "pk")
-      }
-      failpoint("bands-target-written")
-      srcs.foreach(catalog.deletePartition(bandsTable, "batch_id", _))
-      moved = true
-    }
-    moved
-    }
-    val foldLbl: () => Boolean = () => {
-    var moved = false
+    // the pk-bucketed tables: read shape-aware, dedup only a stranded
+    // union, write through the one layout rule (a stale pk-split source
+    // keeps the target split; plain sources are counted from footers)
+    def foldPk(t: PkTable, stage: String,
+               beforeDelete: Seq[String] => Unit = _ => ()) =
+      fold(t.of(stateTable), stage, (srcs, key) =>
+        readPkTable(catalog, t, stateTable, srcs, None).foreach(m =>
+          writeState(catalog, t, stateTable, key,
+            dedupIfStranded(m, srcs, t.dedupKeys),
+            splitLayoutFor(catalog, t.of(stateTable), srcs,
+              pkSplitMinRows))),
+        beforeDelete)
     // label table: rows are UPDATES (latest `b` wins per id), so the
     // compacted partition keeps exactly each id's highest-b row — the
     // union-then-latest a reader would compute anyway, materialized
     val lblTable = lblTableOf(stateTable)
-    val lb = sourcesOf(lblTable)
-    if (lb.size >= 2) {
-      val key = "c" + lb.flatMap(numOf).max
-      val srcs = lb.filter(_ != key)
-      if (!lb.contains(key) ||
-          !catalog.partitionCommitted(lblTable, "batch_id", key)) {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("id")).orderBy(col("b").desc)
-        catalog.writePartition(
-          catalog.read(lblTable, LblSchema)
-            .filter(col("batch_id").isin(srcs: _*))
-            .select(col("id"), col("lbl"), col("b"))
-            .withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn")
-            .withColumn("batch_id", lit(key))
-            .coalesce(1),
-          lblTable, "batch_id", key)
-      }
-      failpoint("lbl-target-written")
-      srcs.foreach(catalog.deletePartition(lblTable, "batch_id", _))
-      moved = true
-    }
-    moved
-    }
-    val foldEmit: () => Boolean = () => {
-    var moved = false
-    // emit-index table: same mixed layout as the bands table (pk-split
-    // vs plain — see PkSplitMinRows), `eb` is a data column so folding
-    // many batch partitions into one `c` partition loses no mapping;
-    // the compacted partition is large by construction so it always
-    // takes the pk-split layout
-    val emitTable = emitTableOf(stateTable)
-    val em = sourcesOf(emitTable)
-    if (em.size >= 2) {
-      val key = "c" + em.flatMap(numOf).max
-      val srcs = em.filter(_ != key)
-      if (!em.contains(key) ||
-          !catalog.partitionCommitted(emitTable, "batch_id", key)) {
-        val cols = Seq(col("id"), col("eb"))
-        val (split, plain) = srcs.partition(b =>
-          catalog.listSubPartitions(emitTable, "batch_id", b, "pk")
-            .nonEmpty)
-        val parts = Seq(
-          if (split.nonEmpty)
-            Some(catalog.readPaths(emitTable,
-                split.map(catalog.partitionPath(emitTable, "batch_id", _)),
-                EmitDataSchema)
-              .select(cols: _*))
-          else None,
-          if (plain.nonEmpty) {
-            val withData = plain.filter(
-              catalog.partitionHasDataFiles(emitTable, "batch_id", _))
-            if (withData.isEmpty) None
-            else Some(catalog.readPaths(emitTable,
-                withData.map(catalog.partitionPath(emitTable, "batch_id", _)),
-                withPk(EmitDataSchema))
-              .select(cols: _*))
-          } else None).flatten
-        if (parts.nonEmpty)
-          catalog.writeSubPartitioned(
-            dedupIfStranded(parts.reduce(_ unionByName _), srcs, "id")
-              .withColumn("pk", emitPkCol(col("id")))
-              .withColumn("batch_id", lit(key))
-              .repartition(col("pk")),
-            emitTable, "batch_id", key, "pk")
-      }
-      failpoint("emit-target-written")
-      // record the folded PLAIN-numeric batch keys in the covered-keys
-      // marker BEFORE deleting their directories (re-folded `c` keys
-      // were recorded at their own fold): coverage stays structurally
-      // checkable after the fold. Crash windows are safe in both
-      // orders — keys both in the marker and still present just count
-      // twice in a union, and a crash before the append leaves the
-      // sources present (covered via the live listing) for the re-run
-      // to append again.
-      val folded = srcs.filter(k =>
-        scala.util.Try(k.toLong).isSuccess).map(_.toLong)
+    val foldLbl = fold(lblTable, "lbl", (srcs, key) =>
+      catalog.writePartition(
+        latestLabels(catalog.read(lblTable, LblSchema)
+            .filter(col("batch_id").isin(srcs: _*)))
+          .withColumn("batch_id", lit(key))
+          .coalesce(1),
+        lblTable, "batch_id", key))
+    // emit-index table: `eb` is a data column, so folding many batch
+    // partitions into one `c` partition loses no mapping. The folded
+    // PLAIN-numeric batch keys are recorded in the covered-keys marker
+    // BEFORE their directories are deleted (re-folded `c` keys were
+    // recorded at their own fold): coverage stays structurally
+    // checkable after the fold. Crash windows are safe in both orders —
+    // keys both in the marker and still present just count twice in a
+    // union, and a crash before the append leaves the sources present
+    // (covered via the live listing) for the re-run to append again.
+    val emitTable = EmitState.of(stateTable)
+    val foldEmit = foldPk(EmitState, "emit", srcs => {
+      val folded = srcs.flatMap(k => scala.util.Try(k.toLong).toOption)
       if (folded.nonEmpty) {
         // a torn/legacy prior marker decodes to absent: its keys are
         // re-recorded here only if their directories still exist (they
@@ -764,58 +776,17 @@ object CorpusStream {
         catalog.writeMarker(emitTable, CoveredKeysMarker,
           encodeCoveredKeys(prior ++ folded.map(k => (k, k))))
       }
-      srcs.foreach(catalog.deletePartition(emitTable, "batch_id", _))
-      moved = true
-    }
-    moved
-    }
-    val foldFp: () => Boolean = () => {
-    var moved = false
-    // fingerprint-index table: same mixed layout and rules as the emit
-    // table; pk is a pure function of fp, recomputed uniformly
-    val fpTable = fpTableOf(stateTable)
-    val fpb = sourcesOf(fpTable)
-    if (fpb.size >= 2) {
-      val key = "c" + fpb.flatMap(numOf).max
-      val srcs = fpb.filter(_ != key)
-      if (!fpb.contains(key) ||
-          !catalog.partitionCommitted(fpTable, "batch_id", key)) {
-        val cols = Seq(col("id"), col("fp"))
-        val (split, plain) = srcs.partition(b =>
-          catalog.listSubPartitions(fpTable, "batch_id", b, "pk")
-            .nonEmpty)
-        val parts = Seq(
-          if (split.nonEmpty)
-            Some(catalog.readPaths(fpTable,
-                split.map(catalog.partitionPath(fpTable, "batch_id", _)),
-                FpDataSchema)
-              .select(cols: _*))
-          else None,
-          if (plain.nonEmpty) {
-            val withData = plain.filter(
-              catalog.partitionHasDataFiles(fpTable, "batch_id", _))
-            if (withData.isEmpty) None
-            else Some(catalog.readPaths(fpTable,
-                withData.map(catalog.partitionPath(fpTable, "batch_id", _)),
-                withPk(FpDataSchema))
-              .select(cols: _*))
-          } else None).flatten
-        if (parts.nonEmpty)
-          catalog.writeSubPartitioned(
-            dedupIfStranded(parts.reduce(_ unionByName _), srcs, "id")
-              .withColumn("pk", fpPkCol(col("fp")))
-              .withColumn("batch_id", lit(key))
-              .repartition(col("pk")),
-            fpTable, "batch_id", key, "pk")
-      }
-      failpoint("fp-target-written")
-      srcs.foreach(catalog.deletePartition(fpTable, "batch_id", _))
-      moved = true
-    }
-    moved
-    }
-    graft.core.Par.concurrently(
-      Seq(foldSketch, foldBands, foldLbl, foldEmit, foldFp))
+    })
+    // The five folds touch DISJOINT tables (all mutated only under this
+    // state table's lock, so the outer lock covers them all) and each is
+    // a self-contained write-target-then-delete-sources unit whose crash
+    // recovery never consults a sibling table. Run them as concurrent
+    // lanes (guide §2.6): the chain gates' compaction pass is many small
+    // serial jobs whose driver latency the lanes overlap — identical
+    // final state in any interleaving.
+    graft.core.Par.concurrently(Seq(
+        foldPk(SketchState, "sketch"), foldPk(BandsState, "bands"),
+        foldLbl, foldEmit, foldPk(FpState, "fp")))
       .exists(identity)
   }
 
@@ -867,7 +838,8 @@ object CorpusStream {
         catalog.listPartitions(stateTable, "batch_id")
           .count(_ != batchKey) >= compactEvery)
       jd(batch.sparkSession, s"b$batchKey compactState") {
-        compactState(catalog, stateTable, batchKey)
+        compactState(catalog, stateTable, batchKey,
+          pkSplitMinRows = pkSplitMinRows)
       }
     // 1. row-local gate + batch-local exact dedup (keep smallest id —
     //    the same rule dp01 applies globally); when a benchmark set is
@@ -900,7 +872,8 @@ object CorpusStream {
             .filter(_ != batchKey),
           None).orNull
     if (state != null)
-      requireCompatibleState(state, geom, stateTable, threshold)
+      jd(batch.sparkSession, s"b$batchKey state width") {
+        requireCompatibleState(state, geom, stateTable, threshold) }
     // persist the local batch once it has several consumers: the fp-pk
     // collect, the anti-join cascade and the forced-pair join below
     // all read it (state == null leaves the single-consumer lazy form)
@@ -931,11 +904,13 @@ object CorpusStream {
       else jd(batch.sparkSession, s"b$batchKey seen fp") {
         seenFpRows(catalog, stateTable, batchKey, state,
           localDeduped, pkSplitMinRows) }
-    val newDocs = graft.core.Fence(
-      if (seenFp == null) localDeduped
-      else localDeduped.join(seenFp,
-        fp === col("__seen_fp") && col("__seen_id") <= col("doc_id"),
-        "left_anti"))
+    // (fencing plans the frame, and planning starts its broadcast jobs)
+    val newDocs = jd(batch.sparkSession, s"b$batchKey new docs") {
+      graft.core.Fence(
+        if (seenFp == null) localDeduped
+        else localDeduped.join(seenFp,
+          fp === col("__seen_fp") && col("__seen_id") <= col("doc_id"),
+          "left_anti")) }
     val fpForced =
       if (seenFp == null) null
       else newDocs.join(seenFp,
@@ -945,9 +920,10 @@ object CorpusStream {
     // 4. shingle + sign the NEW docs once; band them against their own
     //    bands (internal pairs) and the STORED bands (cross pairs) —
     //    seen docs are never re-shingled
-    val newSigs = graft.core.Fence(
-      MinHashLSH.signatureFrame(newDocs, "doc_id", "text", 3, geom)
-        .withColumn("sb", MinHashLSH.bottomKCol(col("sh"))))
+    val newSigs = jd(batch.sparkSession, s"b$batchKey signatures") {
+      graft.core.Fence(
+        MinHashLSH.signatureFrame(newDocs, "doc_id", "text", 3, geom)
+          .withColumn("sb", MinHashLSH.bottomKCol(col("sh")))) }
     // materialize the signature checkpoint EAGERLY, before the two
     // cascade lanes below fan out over it: concurrent first-touch of a
     // lazy checkpoint can compute partitions twice (block-level dedup
@@ -968,12 +944,15 @@ object CorpusStream {
     val newSk = newSigs.select(col("id"), col("sh"), col("n"),
       col("sig"), col("sb"))
     // internal pairs are new×new: their sample/verify fetches touch
-    // only this batch's sketches, never the state
-    val internal = MinHashLSH.verifySurvivors(
-        MinHashLSH.collidedSurvivors(newBands, newBands, threshold,
-          geom, selfJoin = true),
-        newSk, threshold, sb = Some(newSk.select(col("id"), col("sb"))))
-      .select(col("doc_a"), col("doc_b"))
+    // only this batch's sketches, never the state (labelled: building
+    // the verify frame plans it, which starts its broadcast jobs)
+    val internalLabel = s"b$batchKey internal pairs + components"
+    val internal = jd(batch.sparkSession, internalLabel) {
+      MinHashLSH.verifySurvivors(
+          MinHashLSH.collidedSurvivors(newBands, newBands, threshold,
+            geom, selfJoin = true),
+          newSk, threshold, sb = Some(newSk.select(col("id"), col("sb"))))
+        .select(col("doc_a"), col("doc_b")) }
     // cross PAIRS (new doc, seen doc), not just touched flags: merging
     // needs to know WHICH seen components this batch connects. The
     // forced fp-duplicate pairs union in here — same capped collect,
@@ -985,10 +964,11 @@ object CorpusStream {
     // jobs over the same fenced signature frame.
     val crossPairsThunk: () => DataFrame = () =>
       if (state == null) null
-      else {
+      else jd(batch.sparkSession, s"b$batchKey cross pairs") {
         val covered = bandsCovered(catalog, stateTable, batchKey)
-        val seenBands = seenBandFrame(catalog, stateTable, batchKey,
-          state, newBands, geom, covered)
+        val seenBands = jd(batch.sparkSession, s"b$batchKey seen bands") {
+          seenBandFrame(catalog, stateTable, batchKey, state, newBands,
+            geom, covered) }
         def fullStateVerify(survivors: DataFrame): DataFrame = {
           val sigs = newSk.unionByName(state.select(col("id"),
             col("sh"), col("n"), col("sig"), col("sb")))
@@ -1135,8 +1115,7 @@ object CorpusStream {
     //    cascades over the shared fenced signatures, joined here.
     val lanes = graft.core.Par.concurrently(Seq[() => Any](
       crossPairsThunk,
-      () => jd(batch.sparkSession,
-        s"b$batchKey internal pairs + components") {
+      () => jd(batch.sparkSession, internalLabel) {
         cappedComponents(internal, "doc_a", "doc_b") }))
     val crossPairs = lanes(0).asInstanceOf[DataFrame]
     val labelsOpt = lanes(1).asInstanceOf[Option[DataFrame]]
@@ -1202,7 +1181,8 @@ object CorpusStream {
         else la.join(curLbls.withColumnRenamed("id", "__sb"),
             col("doc_b") === col("__sb"), "left")
           .select(col("la"), coalesce(col("lbl"), col("doc_b")).as("lb"))
-      cappedComponents(edges, "la", "lb") match {
+      jd(spark, s"b$batchKey merge components") {
+        cappedComponents(edges, "la", "lb") } match {
         case None => null
         case Some(m) =>
           val f = graft.core.Fence.soft(m); release += f; f
@@ -1217,7 +1197,7 @@ object CorpusStream {
       .drop("label", "__fl")
     // dethroned canonicals leave the output before this batch commits.
     // Affected partitions come from the pk-pruned EMIT INDEX (round 11
-    // — [[emitTableOf]]; legacy warehouses fall back to the full
+    // — [[EmitState]]; legacy warehouses fall back to the full
     // output semi-join scan), are read by explicit path, and rewrite
     // in ONE dynamic-overwrite job under the output table's writer
     // lock — a per-partition loop pays one serial Spark job per
@@ -1237,76 +1217,32 @@ object CorpusStream {
       }
     }
     // 6. every new doc's sketch (kept or cluster-dropped) joins the
-    //    state — dropped docs still bridge future arrivals. Two tables:
-    //    the per-doc sketch (arrays, partitioned by batch) and the
-    //    pre-banded rows partitioned by (batch, band-key bucket) so
-    //    later batches prune their cross join at the storage layer.
-    //    The sketch partition takes the same granularity-aware
-    //    `pk = xxhash64(id) mod StatePartitions` layout as the
-    //    bands/fp/emit tables (round 12), so the cross-verify `sh`
-    //    fetch above prunes at the directory level; small batches stay
-    //    one plain file — pk is a pure function of id, so plain files
-    //    never store it (see [[readSketchBatches]]).
+    //    state — dropped docs still bridge future arrivals — beside its
+    //    pre-banded rows (bucketed by band key, so later batches prune
+    //    their cross join at the storage layer) and its fingerprint
+    //    (bucketed by fp, for the exact-dedup gate — [[seenFpRows]]).
+    //    All three take [[writeState]]'s granularity-aware layout: the
+    //    sketch's pk-split dirs let the cross-verify `sh` fetch above
+    //    prune at the directory level, and a small batch stays one file
+    //    sorted by id (round 13: skDf comes off a shuffle join, and the
+    //    unfused write left ~32 hash-scattered files whose row-group id
+    //    spans covered the whole partition).
     val skDf = newSigs
       .join(newDocs.select(col("doc_id").as("id"), fp.as("fp")),
         Seq("id"))
       .select(col("id"), col("fp"), col("sh"), col("n"), col("sig"),
         col("sb"))
-      .withColumn("batch_id", lit(batchKey))
-    val writeSketch: () => Unit = () =>
-      jd(batch.sparkSession, s"b$batchKey write sketch") {
-    if (nSigs >= pkSplitMinRows)
-      // sortWithinPartitions(id): tight per-row-group id min/max, so
-      // the cross-verify fetch's candidate-id IN filter skips row
-      // groups, not just directories
-      catalog.writeSubPartitioned(
-        skDf.withColumn("pk", emitPkCol(col("id")))
-          .repartition(col("pk"))
-          .sortWithinPartitions(col("id")),
-        stateTable, "batch_id", batchKey, "pk")
-    else
-      // ONE sorted file, like the other plain-layout tables (round 13:
-      // skDf comes off a shuffle join, so the unfused write left ~32
-      // hash-scattered files whose row-group id spans covered the whole
-      // partition — the residual per-state term ProbeSketch measured;
-      // one file sorted by id costs one open and prunes by row-group
-      // min/max under the candidate IN filter)
-      catalog.writePartition(
-        skDf.coalesce(1).sortWithinPartitions(col("id")),
-        stateTable, "batch_id", batchKey)
-    }
-    val bandsDf = newBands.withColumn("pk", pkCol)
-      .withColumn("batch_id", lit(batchKey))
-    val writeBands: () => Unit = () =>
-      jd(batch.sparkSession, s"b$batchKey write bands") {
-    if (nSigs * geom.bands >= pkSplitMinRows)
-      // repartition by pk first: otherwise every shuffle task writes a
-      // file into every pk dir (tasks × 64 small files); this way each
-      // pk's rows land in one task → ~one file per pk
-      catalog.writeSubPartitioned(bandsDf.repartition(col("pk")),
-        bandsTableOf(stateTable), "batch_id", batchKey, "pk")
-    else
-      // small batch: one plain file, pk as a data column (see
-      // PkSplitMinRows)
-      catalog.writePartition(bandsDf.coalesce(1),
-        bandsTableOf(stateTable), "batch_id", batchKey)
-    }
-    // the fingerprint index rides beside the bands: (id, fp) bucketed
-    // by hash(fp) so later batches' exact-dedup gate reads only
-    // colliding buckets ([[seenFpRows]]); same granularity-aware
-    // layout, nSigs rows by construction
-    val fpDf = newDocs.select(col("doc_id").as("id"), fp.as("fp"))
-      .withColumn("pk", fpPkCol(col("fp")))
-      .withColumn("batch_id", lit(batchKey))
-    val writeFp: () => Unit = () =>
-      jd(batch.sparkSession, s"b$batchKey write fp") {
-    if (nSigs >= pkSplitMinRows)
-      catalog.writeSubPartitioned(fpDf.repartition(col("pk")),
-        fpTableOf(stateTable), "batch_id", batchKey, "pk")
-    else
-      catalog.writePartition(fpDf.coalesce(1), fpTableOf(stateTable),
-        "batch_id", batchKey)
-    }
+    def writeLane(t: PkTable, label: String, rows: DataFrame,
+                  split: Boolean): () => Unit = () =>
+      jd(batch.sparkSession, s"b$batchKey write $label") {
+        writeState(catalog, t, stateTable, batchKey, rows, split) }
+    val writeSketch = writeLane(SketchState, "sketch", skDf,
+      nSigs >= pkSplitMinRows)
+    val writeBands = writeLane(BandsState, "bands", newBands,
+      nSigs * geom.bands >= pkSplitMinRows)
+    val writeFp = writeLane(FpState, "fp",
+      newDocs.select(col("doc_id").as("id"), fp.as("fp")),
+      nSigs >= pkSplitMinRows)
     // 6b. label-state updates (see [[lblTableOf]]): new member docs of
     //     multi/merged components, dethroned canonicals, and stored
     //     members whose component merged — one latest-wins row each.
@@ -1373,23 +1309,14 @@ object CorpusStream {
     release += outRows
     val outEpoch = resolveOutputEpoch(catalog, outTable, batchKey,
       epochEvery)
-    val emitTable = emitTableOf(stateTable)
-    val emitDf = outRows
-      .select(col("doc_id").as("id"),
-        lit(encodeEb(outEpoch, batchKey)).as("eb"))
-      .withColumn("pk", emitPkCol(col("id")))
-      .withColumn("batch_id", lit(batchKey))
+    val writeEmit = writeLane(EmitState, "emit", outRows
+        .select(col("doc_id").as("id"),
+          lit(encodeEb(outEpoch, batchKey)).as("eb")),
+      nSigs >= pkSplitMinRows)
     val writeEmitThenOut: () => Unit = () => {
       // in-lane ORDER preserved: the emit-index partition must commit
       // before the output partition (crash contract above)
-      jd(batch.sparkSession, s"b$batchKey write emit") {
-      if (nSigs >= pkSplitMinRows)
-        catalog.writeSubPartitioned(emitDf.repartition(col("pk")),
-          emitTable, "batch_id", batchKey, "pk")
-      else
-        catalog.writePartition(emitDf.coalesce(1), emitTable,
-          "batch_id", batchKey)
-      }
+      writeEmit()
       jd(batch.sparkSession, s"b$batchKey write out") {
       catalog.writePartition(
         outRows.withColumn("batch_id", lit(batchKey)),
@@ -1526,7 +1453,7 @@ object CorpusStream {
 
   /** Output partitions holding at least one retracted doc, grouped by
     * the (epoch) table they live in. Fast path: the emit index
-    * ([[emitTableOf]]) pruned to the retracted ids' pk buckets — reads
+    * ([[EmitState]]) pruned to the retracted ids' pk buckets — reads
     * kilobytes of (id, eb) rows however large and however many epochs
     * the output has grown. Fallback when the index doesn't cover every
     * BASE-table partition (a warehouse whose early batches predate the
@@ -1537,7 +1464,7 @@ object CorpusStream {
   private[graft] def affectedOutputPartitions(catalog: TableCatalog,
       stateTable: String, outTable: String, batchKey: String,
       retr: DataFrame): Seq[(String, Seq[String])] = {
-    val emitTable = emitTableOf(stateTable)
+    val emitTable = EmitState.of(stateTable)
     val baseKeys = catalog.listPartitions(outTable, "batch_id")
       .filter(_ != batchKey)
     // STRUCTURAL coverage (round 12 — replaces the `_covered_from`
@@ -1566,8 +1493,8 @@ object CorpusStream {
     val idxHits: Seq[String] = {
       val pks = retr.select(emitPkCol(col("__r")).as("pk"))
         .distinct().collect().map(_.getLong(0)).toSet
-      prunedStateRead(catalog, emitTable, batchKey, pks,
-          Seq(col("id"), col("eb")), EmitDataSchema) match {
+      prunedStateRead(catalog, EmitState, stateTable, batchKey,
+          pks) match {
         case None => Seq.empty
         case Some(em) =>
           em.join(retr, col("id") === col("__r"), "left_semi")
@@ -1611,7 +1538,7 @@ object CorpusStream {
     * sketch state in memory, the old per-batch linear scan. */
   private def bandsCovered(catalog: TableCatalog, stateTable: String,
       batchKey: String): Boolean = {
-    val bandsTable = bandsTableOf(stateTable)
+    val bandsTable = BandsState.of(stateTable)
     catalog.tableExists(bandsTable) && {
       val sk = catalog.listPartitions(stateTable, "batch_id").toSet -
         batchKey
@@ -1624,124 +1551,25 @@ object CorpusStream {
   private def seenBandFrame(catalog: TableCatalog, stateTable: String,
       batchKey: String, state: DataFrame, newBands: DataFrame,
       geom: graft.sim.LshGeometry, covered: Boolean): DataFrame = {
-    val bandsTable = bandsTableOf(stateTable)
     if (!covered) MinHashLSH.bandFrameWithSig(state, geom)
     else {
       val pks = newBands.select(pkCol.as("pk")).distinct()
         .collect().map(_.getLong(0)).toSet
-      prunedStateRead(catalog, bandsTable, batchKey, pks,
-          Seq(col("id"), col("n"), col("sig"), col("band_idx"),
-            col("band_key")), BandsDataSchema)
+      prunedStateRead(catalog, BandsState, stateTable, batchKey, pks)
         .getOrElse(newBands.limit(0))
     }
   }
 
-  /** Read a pk-bucketed state table (`_bands`, `_emit`) pruned to the
-    * given pk set — the listing-and-scan shape both consumers share.
-    * Enumerates exactly the colliding directories and reads only
-    * those: a table-root read would LIST every partition of the
-    * growing table each batch (a linear term in files, even with
-    * partition pruning skipping the data). pk-split batch dirs prune
-    * at the directory level; plain small-batch dirs (see
-    * [[PkSplitMinRows]]) are read whole (tiny by construction) and
-    * pruned by the pk data column. One Hadoop LISTING per batch dir
-    * (not a per-(dir,pk) exists round-trip — on an object store each
-    * exists() is a remote call), intersected with the pk set
-    * driver-side. None when nothing collides. */
-  private def prunedStateRead(catalog: TableCatalog, table: String,
-      batchKey: String, pks: Set[Long],
-      cols: Seq[org.apache.spark.sql.Column],
-      dataSchema: StructType): Option[DataFrame] = {
-    val withSubs = catalog
-      .listPartitions(table, "batch_id")
-      .filter(_ != batchKey)
-      .map(b => b ->
-        catalog.listSubPartitions(table, "batch_id", b, "pk"))
-    val (split, plain) = withSubs.partition(_._2.nonEmpty)
-    val splitDirs = for {
-      (b, subs) <- split
-      p <- subs.filter(s =>
-        scala.util.Try(s.toLong).toOption.exists(pks.contains))
-    } yield s"${catalog.partitionPath(table, "batch_id", b)}/pk=$p"
-    val plainDirs = plain.map(_._1)
-      .filter(catalog.partitionHasDataFiles(table, "batch_id", _))
-      .map(catalog.partitionPath(table, "batch_id", _))
-    val parts = Seq(
-      if (splitDirs.nonEmpty)
-        Some(catalog.readPaths(table, splitDirs, dataSchema)
-          .select(cols: _*))
-      else None,
-      if (plainDirs.nonEmpty)
-        Some(catalog.readPaths(table, plainDirs, withPk(dataSchema))
-          .filter(col("pk").isin(pks.toSeq: _*)).select(cols: _*))
-      else None).flatten
-    if (parts.isEmpty) None else Some(parts.reduce(_ unionByName _))
-  }
-
-  /** Shape-aware read of the given sketch-table batch partitions
-    * (round 12 — the sketch table joined the pk-bucketed layouts):
-    * batch partitions with ≥ `pkSplitMinRows` rows are laid out as
-    * `pk = xxhash64(id) mod StatePartitions` sub-directories, smaller
-    * ones stay plain files — so a table-ROOT read's partition
-    * discovery would see conflicting directory depths. Each shape
-    * group reads through [[TableCatalog.readPaths]] (uniform depth
-    * within a group), the legacy optional `sb` column normalizes per
-    * group, and the groups union.
-    *
-    * With `pks` set, pk-split partitions prune at the DIRECTORY level
-    * and plain partitions — tiny by construction, or legacy ones this
-    * degrades gracefully on until compaction rewrites them split —
-    * prune on the COMPUTED pk: pk is a pure function of id, so plain
-    * files never store it and legacy states need no backfill pass.
-    * None when no listed partition holds a matching row source. */
+  /** [[readPkTable]] of the sketch table's batch partitions `keys`:
+    * the cross-verify fetch (pruned to `pks`) and the whole-state read
+    * (`pks` = None). */
   private[graft] def readSketchBatches(catalog: TableCatalog,
       stateTable: String, keys: Seq[String],
-      pks: Option[Set[Long]]): Option[DataFrame] = {
-    val withSubs = keys.map(b => b ->
-      catalog.listSubPartitions(stateTable, "batch_id", b, "pk"))
-    val (split, plain0) = withSubs.partition(_._2.nonEmpty)
-    val plain = plain0.map(_._1)
-      .filter(catalog.partitionHasDataFiles(stateTable, "batch_id", _))
-    def normalize(df: DataFrame): DataFrame = {
-      val sb = if (df.columns.contains("sb"))
-          coalesce(col("sb"), MinHashLSH.bottomKCol(col("sh")))
-        else MinHashLSH.bottomKCol(col("sh"))
-      df.select(col("id"), col("fp"), col("sh"), col("n"), col("sig"),
-        sb.as("sb"))
-    }
-    val splitDirs = pks match {
-      case Some(ps) => for {
-        (b, subs) <- split
-        p <- subs.filter(s =>
-          scala.util.Try(s.toLong).toOption.exists(ps.contains))
-      } yield s"${catalog.partitionPath(stateTable, "batch_id", b)}/pk=$p"
-      case None => split.map(s =>
-        catalog.partitionPath(stateTable, "batch_id", s._1))
-    }
-    val splitFrame =
-      if (splitDirs.isEmpty) None
-      else Some(normalize(catalog.readPaths(stateTable, splitDirs,
-        SketchDataSchema)))
-    val plainFrame =
-      if (plain.isEmpty) None
-      else {
-        val raw = catalog.readPaths(stateTable,
-          plain.map(catalog.partitionPath(stateTable, "batch_id", _)),
-          SketchDataSchema)
-        Some(normalize(pks match {
-          case Some(ps) =>
-            raw.filter(emitPkCol(col("id")).isin(ps.toSeq: _*))
-          case None => raw
-        }))
-      }
-    (splitFrame, plainFrame) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (a, b) => a.orElse(b)
-    }
-  }
+      pks: Option[Set[Long]]): Option[DataFrame] =
+    readPkTable(catalog, SketchState, stateTable, keys, pks)
 
   /** Public shape-aware reader for a sketch state table (mixed
-    * plain/pk-split partitions — see [[readSketchBatches]]): what
+    * plain/pk-split partitions — see [[readPkTable]]): what
     * tests and tools must use instead of a table-root read. Falls back
     * to the root read when no committed batch partition exists (the
     * `_schema`-anchor empty-table case). */
@@ -1751,7 +1579,7 @@ object CorpusStream {
       .getOrElse(catalog.read(stateTable))
 
   /** Stored `(__seen_fp, __seen_id)` rows that could fp-collide with
-    * this batch, from the pk-bucketed `_fp` index ([[fpTableOf]])
+    * this batch, from the pk-bucketed `_fp` index ([[FpState]])
     * pruned to the pk buckets the batch's own fingerprints hash into —
     * the collected pk set is bounded by [[StatePartitions]]. Returns
     * null when no stored bucket collides (the caller then skips the
@@ -1766,7 +1594,7 @@ object CorpusStream {
   private def seenFpRows(catalog: TableCatalog, stateTable: String,
       batchKey: String, state: DataFrame, localDeduped: DataFrame,
       pkSplitMinRows: Long): DataFrame = {
-    val fpTable = fpTableOf(stateTable)
+    val fpTable = FpState.of(stateTable)
     val skKeys = catalog.listPartitions(stateTable, "batch_id").toSet -
       batchKey
     val fpKeys =
@@ -1780,21 +1608,15 @@ object CorpusStream {
       // waiter break the lock mid-write. Lock held elsewhere: fall
       // back to the full fp scan; the next batch retries.
       covered = catalog.withTableLockIfFree(stateTable) {
+        // one fp row per sketch row, so the sketch partition's own
+        // size picks the layout
         (skKeys -- fpKeys).foreach { b =>
-          val rows = catalog.readPaths(stateTable,
-              Seq(catalog.partitionPath(stateTable, "batch_id", b)),
-              FpDataSchema)
-            .select(col("id"), col("fp"))
-            .withColumn("pk", fpPkCol(col("fp")))
-            .withColumn("batch_id", lit(b))
-          // granularity-aware like the live write path; the count is
-          // a one-time backfill cost, not a per-batch term
-          if (rows.count() >= pkSplitMinRows)
-            catalog.writeSubPartitioned(rows.repartition(col("pk")),
-              fpTable, "batch_id", b, "pk")
-          else
-            catalog.writePartition(rows.coalesce(1), fpTable,
-              "batch_id", b)
+          writeState(catalog, FpState, stateTable, b,
+            catalog.readPaths(stateTable,
+                Seq(catalog.partitionPath(stateTable, "batch_id", b)),
+                FpDataSchema)
+              .select(col("id"), col("fp")),
+            splitLayoutFor(catalog, stateTable, Seq(b), pkSplitMinRows))
         }
       }.isDefined
     }
@@ -1803,9 +1625,8 @@ object CorpusStream {
     else {
       val pks = localDeduped.select(fpPkCol(fp).as("pk")).distinct()
         .collect().map(_.getLong(0)).toSet
-      prunedStateRead(catalog, fpTable, batchKey, pks,
-          Seq(col("fp").as("__seen_fp"), col("id").as("__seen_id")),
-          FpDataSchema)
+      prunedStateRead(catalog, FpState, stateTable, batchKey, pks)
+        .map(_.select(col("fp").as("__seen_fp"), col("id").as("__seen_id")))
         .orNull
     }
   }

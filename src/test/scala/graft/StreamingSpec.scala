@@ -911,7 +911,7 @@ class StreamingSpec extends SparkSpec {
         .as[(Long, String)].collect().toSet
       (out, state, cat.listPartitions("cm_seen", "batch_id").size, cat)
     }
-    val (plainOut, plainState, plainDirs, _) = run(every = 0)
+    val (plainOut, plainState, plainDirs, plainCat) = run(every = 0)
     val (compOut, compState, compDirs, compCat) = run(every = 2)
     assert(compOut == plainOut)
     assert(compOut.nonEmpty)
@@ -926,12 +926,129 @@ class StreamingSpec extends SparkSpec {
     assert(again == plainState)
     assert(compCat.listPartitions("cm_seen", "batch_id").size == 1)
     assert(compCat.listPartitions("cm_seen_bands", "batch_id").size == 1)
-    // the bands table's compacted partition carries the pk-split layout
-    val cdir = new java.io.File(compCat.tablePath("cm_seen_bands"),
-      "batch_id=" + compCat.listPartitions("cm_seen_bands",
-        "batch_id").head)
-    assert(cdir.listFiles().exists(f =>
-      f.isDirectory && f.getName.startsWith("pk=")))
+    // a default-threshold fold of small batches takes the live writes'
+    // plain layout: one data file and no pk= directories per table
+    for (t <- pkTables("cm_seen")) {
+      val Seq(c) = compCat.listPartitions(t, "batch_id")
+      assert(pkDirs(compCat, t, c).isEmpty, t)
+      assert(dataFiles(compCat, t, c) == 1, t)
+    }
+    // the same small state folded with pkSplitMinRows = 1 (the footer
+    // row count of its plain sources reaches it) takes pk= directories,
+    // row-identically
+    assert(CorpusStream.compactState(plainCat, "cm_seen", "99",
+      pkSplitMinRows = 1L))
+    for (t <- pkTables("cm_seen")) {
+      val Seq(c) = plainCat.listPartitions(t, "batch_id")
+      assert(pkDirs(plainCat, t, c).nonEmpty, t)
+    }
+    assert(CorpusStream.readState(plainCat, "cm_seen").select($"id", $"fp")
+      .as[(Long, String)].collect().toSet == plainState)
+  }
+
+  private def pkTables(state: String): Seq[String] =
+    Seq(state, s"${state}_bands", s"${state}_fp", s"${state}_emit")
+
+  private def pkDirs(cat: graft.catalog.TableCatalog, table: String,
+                     key: String): Seq[String] =
+    cat.listSubPartitions(table, "batch_id", key, "pk")
+
+  private def dataFiles(cat: graft.catalog.TableCatalog, table: String,
+                        key: String): Int =
+    new java.io.File(cat.partitionPath(table, "batch_id", key)).listFiles()
+      .count(f => f.isFile && !f.getName.startsWith("_") &&
+        !f.getName.startsWith("."))
+
+  test("a plain compacted partition re-folds with later batches into " +
+       "one plain file, and reaching pkSplitMinRows splits the next " +
+       "fold; state and output identical to the uncompacted run") {
+    val dir = "/root/testdata/sf0.001"
+    val docs = graft.core.Tables.load(spark, dir, "documents")
+      .select($"doc_id", $"text", $"lang")
+    val slices = (0 until 5).map(i =>
+      docs.filter($"doc_id" >= i * 100 && $"doc_id" < (i + 1) * 100))
+    def catalog() = new graft.catalog.TableCatalog(spark,
+      java.nio.file.Files.createTempDirectory("corpus_rf_").toString)
+    def batch(cat: graft.catalog.TableCatalog, i: Int): Unit =
+      CorpusStream.processBatch(slices(i), cat, "rf_seen", "rf_out",
+        i.toLong, compactEvery = 0)
+    def rowsOf(cat: graft.catalog.TableCatalog) = (
+      cat.read("rf_out").select($"doc_id").as[Long].collect().toSet,
+      CorpusStream.readState(cat, "rf_seen").select($"id", $"fp")
+        .as[(Long, String)].collect().toSet,
+      cat.read("rf_seen_bands").select($"id", $"band_idx", $"band_key")
+        .as[(Long, Int, String)].collect().toSet,
+      cat.read("rf_seen_fp").select($"id", $"fp")
+        .as[(Long, String)].collect().toSet,
+      cat.read("rf_seen_emit").select($"id", $"eb")
+        .as[(Long, String)].collect().toSet)
+    val ref = catalog()
+    (0 until 4).foreach(batch(ref, _))
+    val cat = catalog()
+    batch(cat, 0); batch(cat, 1)
+    assert(CorpusStream.compactState(cat, "rf_seen", "99"))
+    batch(cat, 2); batch(cat, 3)
+    // c1 (plain) + batches 2, 3 fold into one plain c3
+    assert(CorpusStream.compactState(cat, "rf_seen", "99"))
+    for (t <- pkTables("rf_seen")) {
+      assert(cat.listPartitions(t, "batch_id") == Seq("c3"), t)
+      assert(pkDirs(cat, t, "c3").isEmpty, t)
+      assert(dataFiles(cat, t, "c3") == 1, t)
+    }
+    assert(rowsOf(cat) == rowsOf(ref))
+    // one more batch over the re-folded state, then a fold whose
+    // threshold the plain c3 + batch 4 footers reach: pk-split c4
+    batch(ref, 4); batch(cat, 4)
+    assert(CorpusStream.compactState(cat, "rf_seen", "99",
+      pkSplitMinRows = 1L))
+    for (t <- pkTables("rf_seen")) {
+      assert(cat.listPartitions(t, "batch_id") == Seq("c4"), t)
+      assert(pkDirs(cat, t, "c4").nonEmpty, t)
+    }
+    assert(rowsOf(cat) == rowsOf(ref))
+  }
+
+  test("every job a chain batch starts carries its phase label, not " +
+       "only the batch-wide one") {
+    import scala.jdk.CollectionConverters._
+    val dir = "/root/testdata/sf0.001"
+    val docs = graft.core.Tables.load(spark, dir, "documents")
+      .select($"doc_id", $"text", $"lang")
+    val cat = new graft.catalog.TableCatalog(spark,
+      java.nio.file.Files.createTempDirectory("corpus_jl_").toString)
+    // (description, stage names) of every job started while listening
+    val started =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("") -> e.stageInfos.map(_.name).mkString("; "))
+    }
+    val sc = spark.sparkContext
+    val sentinel = "job-label-sentinel"
+    sc.addSparkListener(listener)
+    try {
+      // three batches with a cadence of 2: the third compacts first
+      (0 until 3).foreach { i =>
+        CorpusStream.processBatch(
+          docs.filter($"doc_id" >= i * 150 && $"doc_id" < (i + 1) * 150),
+          cat, "jl_seen", "jl_out", i.toLong, compactEvery = 2)
+      }
+      // one queue delivers a listener's events in order: once the
+      // sentinel job's start arrives, every batch job's start has too
+      sc.setJobDescription(sentinel)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!started.asScala.exists(_._1 == sentinel) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+    } finally sc.removeSparkListener(listener)
+    val jobs = started.asScala.toSeq
+    assert(jobs.exists(_._1 == sentinel), "listener never drained")
+    assert(jobs.exists(_._1.startsWith("CorpusStream: compact ")))
+    val bare = jobs.filter(_._1.matches("CorpusStream: b\\d+ chain"))
+    assert(bare.isEmpty, bare.mkString("\n"))
   }
 
   // three-batch seeded warehouse + the expected post-compaction state,
@@ -1147,64 +1264,83 @@ class StreamingSpec extends SparkSpec {
     assert(ex.getMessage.contains("seed-build"), ex.getMessage)
   }
 
+  // both target layouts: the default threshold folds this small state
+  // into plain files, pkSplitMinRows = 1 into pk= directories
+  private val crashLayouts = Seq(CorpusStream.PkSplitMinRows, 1L)
+
   test("compactState crash recovery: a kill between a target write and " +
        "its source deletes heals on the next trigger") {
-    val (control, wantState, wantBands) = seedCompactionState()
-    CorpusStream.compactState(control, "cr_seen", "99")
-    for (window <- Seq("sketch-target-written", "bands-target-written")) {
-      val (cat, _, _) = seedCompactionState()
-      intercept[RuntimeException] {
+    for (minRows <- crashLayouts) {
+      val (control, wantState, wantBands) = seedCompactionState()
+      CorpusStream.compactState(control, "cr_seen", "99",
+        pkSplitMinRows = minRows)
+      for (window <- Seq("sketch-target-written", "bands-target-written")) {
+        val (cat, _, _) = seedCompactionState()
+        intercept[RuntimeException] {
+          CorpusStream.compactState(cat, "cr_seen", "99",
+            failpoint = l => if (l == window)
+              throw new RuntimeException(s"injected crash at $l"),
+            pkSplitMinRows = minRows)
+        }
+        // pre-heal: duplicated rows (committed target + undeleted sources)
+        // must not change any consumer's semantics — a batch processed
+        // before the healing pass sees the same seen-corpus
+        assert(CorpusStream.readState(cat, "cr_seen").select($"id", $"fp")
+          .as[(Long, String)].collect().toSet == wantState,
+          s"$window: set-of-rows state changed by the crash")
+        // heal: rerun skips the committed target's rewrite, finishes the
+        // deletes, and ends bit-identical to the never-crashed run
         CorpusStream.compactState(cat, "cr_seen", "99",
-          failpoint = l => if (l == window)
-            throw new RuntimeException(s"injected crash at $l"))
+          pkSplitMinRows = minRows)
+        assert(CorpusStream.readState(cat, "cr_seen").select($"id", $"fp")
+          .as[(Long, String)].collect().toSet == wantState, window)
+        assert(cat.read("cr_seen_bands")
+          .select($"id", $"band_idx", $"band_key")
+          .as[(Long, Int, String)].collect().toSet == wantBands, window)
+        // one-row-per-doc invariant restored (no duplicate ids survive)
+        val ids = CorpusStream.readState(cat, "cr_seen").select($"id").as[Long].collect()
+        assert(ids.length == ids.distinct.length, window)
+        assert(cat.listPartitions("cr_seen", "batch_id") ==
+          control.listPartitions("cr_seen", "batch_id"), window)
+        assert(cat.listPartitions("cr_seen_bands", "batch_id") ==
+          control.listPartitions("cr_seen_bands", "batch_id"), window)
+        for (t <- Seq("cr_seen", "cr_seen_bands"))
+          assert(pkDirs(cat, t, "c2").nonEmpty == (minRows == 1L),
+            s"$window $t minRows=$minRows")
       }
-      // pre-heal: duplicated rows (committed target + undeleted sources)
-      // must not change any consumer's semantics — a batch processed
-      // before the healing pass sees the same seen-corpus
-      assert(CorpusStream.readState(cat, "cr_seen").select($"id", $"fp")
-        .as[(Long, String)].collect().toSet == wantState,
-        s"$window: set-of-rows state changed by the crash")
-      // heal: rerun skips the committed target's rewrite, finishes the
-      // deletes, and ends bit-identical to the never-crashed run
-      CorpusStream.compactState(cat, "cr_seen", "99")
-      assert(CorpusStream.readState(cat, "cr_seen").select($"id", $"fp")
-        .as[(Long, String)].collect().toSet == wantState, window)
-      assert(cat.read("cr_seen_bands")
-        .select($"id", $"band_idx", $"band_key")
-        .as[(Long, Int, String)].collect().toSet == wantBands, window)
-      // one-row-per-doc invariant restored (no duplicate ids survive)
-      val ids = CorpusStream.readState(cat, "cr_seen").select($"id").as[Long].collect()
-      assert(ids.length == ids.distinct.length, window)
-      assert(cat.listPartitions("cr_seen", "batch_id") ==
-        control.listPartitions("cr_seen", "batch_id"), window)
-      assert(cat.listPartitions("cr_seen_bands", "batch_id") ==
-        control.listPartitions("cr_seen_bands", "batch_id"), window)
     }
   }
 
   test("compactState crash recovery: a half-written (uncommitted) " +
        "target is rewritten from the sources, never trusted") {
-    val (control, wantState, wantBands) = seedCompactionState()
-    CorpusStream.compactState(control, "cr_seen", "99")
-    val (cat, _, _) = seedCompactionState()
-    // fabricate the ADVICE-r9 crash: the JVM died DURING the compacted-
-    // target write, leaving batch_id=c2 as a directory with a
-    // _temporary staging dir and no _SUCCESS marker. The pre-fix code
-    // saw the key in listPartitions, skipped the rewrite, and deleted
-    // every complete source — permanently losing committed seen-state.
-    for (t <- Seq("cr_seen", "cr_seen_bands")) {
-      val dir = java.nio.file.Paths.get(cat.partitionPath(t, "batch_id", "c2"))
-      java.nio.file.Files.createDirectories(dir.resolve("_temporary"))
+    for (minRows <- crashLayouts) {
+      val (control, wantState, wantBands) = seedCompactionState()
+      CorpusStream.compactState(control, "cr_seen", "99",
+        pkSplitMinRows = minRows)
+      val (cat, _, _) = seedCompactionState()
+      // fabricate the ADVICE-r9 crash: the JVM died DURING the compacted-
+      // target write, leaving batch_id=c2 as a directory with a
+      // _temporary staging dir and no _SUCCESS marker. The pre-fix code
+      // saw the key in listPartitions, skipped the rewrite, and deleted
+      // every complete source — permanently losing committed seen-state.
+      for (t <- Seq("cr_seen", "cr_seen_bands")) {
+        val dir = java.nio.file.Paths.get(cat.partitionPath(t, "batch_id", "c2"))
+        java.nio.file.Files.createDirectories(dir.resolve("_temporary"))
+      }
+      CorpusStream.compactState(cat, "cr_seen", "99",
+        pkSplitMinRows = minRows)
+      assert(CorpusStream.readState(cat, "cr_seen").select($"id", $"fp")
+        .as[(Long, String)].collect().toSet == wantState)
+      assert(cat.read("cr_seen_bands")
+        .select($"id", $"band_idx", $"band_key")
+        .as[(Long, Int, String)].collect().toSet == wantBands)
+      assert(cat.listPartitions("cr_seen", "batch_id") == Seq("c2"))
+      assert(cat.partitionCommitted("cr_seen", "batch_id", "c2"))
+      assert(cat.partitionCommitted("cr_seen_bands", "batch_id", "c2"))
+      for (t <- Seq("cr_seen", "cr_seen_bands"))
+        assert(pkDirs(cat, t, "c2").nonEmpty == (minRows == 1L),
+          s"$t minRows=$minRows")
     }
-    CorpusStream.compactState(cat, "cr_seen", "99")
-    assert(CorpusStream.readState(cat, "cr_seen").select($"id", $"fp")
-      .as[(Long, String)].collect().toSet == wantState)
-    assert(cat.read("cr_seen_bands")
-      .select($"id", $"band_idx", $"band_key")
-      .as[(Long, Int, String)].collect().toSet == wantBands)
-    assert(cat.listPartitions("cr_seen", "batch_id") == Seq("c2"))
-    assert(cat.partitionCommitted("cr_seen", "batch_id", "c2"))
-    assert(cat.partitionCommitted("cr_seen_bands", "batch_id", "c2"))
   }
 
   test("incremental corpus pipeline: the pk-split band layout produces " +
@@ -1278,13 +1414,16 @@ class StreamingSpec extends SparkSpec {
     val preCompact = CorpusStream.readState(cat, "mx_seen")
       .select($"id", $"fp").as[(Long, String)].collect().toSet
     assert(preCompact.map(_._1) == Set(33L, 41L, 51L, 52L))
-    // compaction folds both shapes into ONE pk-split partition,
-    // row-identically
+    // compaction folds both shapes into ONE partition, row-identically;
+    // the pk-split source alone held >= its threshold, so the target
+    // stays pk-split even at the default threshold
     assert(CorpusStream.compactState(cat, "mx_seen", "99"))
     assert(cat.listPartitions("mx_seen", "batch_id") == Seq("c2"))
     val cdir = new java.io.File(s"$wh/mx_seen/batch_id=c2")
     assert(cdir.listFiles().exists(f =>
       f.isDirectory && f.getName.startsWith("pk=")))
+    for (t <- Seq("mx_seen_bands", "mx_seen_fp"))
+      assert(pkDirs(cat, t, "c2").nonEmpty, t)
     assert(CorpusStream.readState(cat, "mx_seen")
       .select($"id", $"fp").as[(Long, String)].collect().toSet
       == preCompact)
