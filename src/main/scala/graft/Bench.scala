@@ -159,7 +159,7 @@ object Bench {
       (name, math.min(p1, p2), p1, p2)
     }
     val canaryEnd = canaryPass()
-    // SERVING section (round 16): the ProbeAnnIndex-style numbers —
+    // SERVING section (round 16): per-operation serving numbers —
     // what a LIVE deployment pays per operation on a persisted index,
     // as opposed to the gates' in-gate build+probe chains — emitted as
     // a named dict so round-over-round serving regressions are

@@ -51,13 +51,28 @@ object Ann {
       toDouble(col(vecCol)).as("v"))
     val q = broadcast(queries.select(col(idCol).as("q_id"),
       toDouble(col(vecCol)).as("qv")))
-    val scored = d.join(q, col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosine(col("qv"), col("v")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(d.join(q, col("vec_id") =!= col("q_id"))
+        .withColumn("cos", cosine(col("qv"), col("v"))), "cos", "vec_id", k)
       .select(col("q_id"), col("rank"), col("vec_id"), col("cos"))
+  }
+
+  /** Each query's top `k` rows of `scored` — the one per-query rank
+    * window every top-k path ends in: `score` descending, ties to the
+    * smaller `id`, numbered 1..k in a `rank` column (replacing any
+    * column of that name). */
+  private[ann] def topKPerQuery(scored: DataFrame, score: String,
+                                id: String, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(Window
+        .partitionBy(col("q_id")).orderBy(col(score).desc, col(id).asc)))
+      .filter(col("rank") <= k)
+
+  /** Σ vᵢ² by the 0.0-seeded left fold [[dotUnrolled]] and the oracle's
+    * `list_aggregate` run — the driver-side self-dot (and, under a
+    * sqrt, the norm) of centroid and codebook constants. */
+  private[ann] def selfDot(v: collection.Seq[Double]): Double = {
+    var t = 0.0; var i = 0
+    while (i < v.length) { t += v(i) * v(i); i += 1 }
+    t
   }
 
   /** Maximal-marginal-relevance diversified top-k: re-rank each
@@ -110,10 +125,7 @@ object Ann {
         .withColumn("__mmr",
           (lit(lambdaNum) * col("cos") -
             lit(10 - lambdaNum) * col("__m")) / lit(10.0))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("__mmr").desc, col("vec_id").asc)
-      val pick = scored.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
+      val pick = topKPerQuery(scored, "__mmr", "vec_id", 1)
         .select(col("q_id"), col("vec_id"), lit(i).as("step"),
           col("cos"), col("__mmr").as("mmr"), col("__v"))
       sel = graft.core.Fence(sel.unionByName(pick))
@@ -394,19 +406,14 @@ object Ann {
     import spark.implicits._
     val ds = data.select(col(idCol).cast("long").as("id"),
       toDouble(col(vecCol)).as("v")).as[(Long, Seq[Double])]
-    def normOf(v: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      math.sqrt(s)
-    }
     val ref = ds.collect().sortBy(_._1)
-      .map { case (id, v) => (id, v.toArray, normOf(v.toArray)) }
+      .map { case (id, v) => (id, v.toArray, math.sqrt(selfDot(v))) }
     val bc = spark.sparkContext.broadcast(ref)
     ds.mapPartitions { it =>
       val all = bc.value
       it.flatMap { case (idA, vSeq) =>
         val va = vSeq.toArray
-        val na = normOf(va)
+        val na = math.sqrt(selfDot(va))
         all.iterator.filter(_._1 > idA).flatMap { case (idB, vb, nb) =>
           var s = 0.0; var i = 0
           while (i < va.length) { s += va(i) * vb(i); i += 1 }
@@ -656,10 +663,7 @@ object Ann {
       .select(col("q_id"), col("id").as("vec_id"),
         (dotUnrolled(col("qv"), col("v"), dim) /
           (col("qnrm") * col("nrm"))).as("cos"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(cand, "cos", "vec_id", k)
       .select(col("q_id"), col("rank"), col("vec_id"), col("cos"))
   }
 
@@ -695,39 +699,52 @@ object Ann {
     * plan is unchanged. */
   def kmeansCentroids(dWithNorms: DataFrame, numCells: Int,
                       iters: Int): Array[(Seq[Double], Double)] = {
-    var cents: Array[(Seq[Double], Double)] = dWithNorms
+    val seeds: Array[(Seq[Double], Double)] = dWithNorms
       .orderBy(col("id")).limit(numCells).select(col("v"), col("nrm"))
       .collect().map(r => (r.getSeq[Double](0), r.getDouble(1)))
-    def normOf(v: Seq[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      math.sqrt(s)
+    (0 until iters).foldLeft(seeds) { (cents, _) =>
+      lloydUpdate(dWithNorms
+          .withColumn("cell",
+            array_max(centroidScores(cents, col("v"), col("nrm")))
+              .getField("cell"))
+          .select(col("cell"), posexplode(col("v")).as(Seq("pos", "val"))),
+        Array(cents), v => math.sqrt(selfDot(v))).head
     }
-    var round = 0
-    while (round < iters) {
-      val assigned = dWithNorms.withColumn("cell",
-        array_max(centroidScores(cents, col("v"), col("nrm")))
-          .getField("cell"))
-      val meanRows = assigned
-        .select(col("cell"), posexplode(col("v")).as(Seq("pos", "val")))
-        .groupBy(col("cell"), col("pos"))
-        .agg((sum(floor(col("val") * lit(1048576.0) + lit(0.5))
-            .cast("long")).cast("double") / 1048576.0 /
-          count(lit(1)).cast("double")).as("m"))
-        .collect()
-      val byCell = meanRows.groupBy(_.getInt(0))
-      cents = cents.indices.map { c =>
+  }
+
+  /** One deterministic Lloyd mean update, shared by every k-means here.
+    * `exploded` carries (m?, cell, pos, val) — each assigned member's
+    * components, keyed by subspace `m` when present (PQ codebooks),
+    * else one group. The mean is the ann04 reduction: values sum as
+    * `floor(v·2^20 + 0.5)` longs so the per-cell sum is order-free
+    * (double addition is not associative — a shuffled double sum
+    * would not replicate), divided back out as DOUBLE. Returns `prev`
+    * with every re-fitted cell replaced by (mean, `aux` of it); a cell
+    * that lost all members keeps its previous centroid. */
+  private def lloydUpdate(exploded: DataFrame,
+      prev: Array[Array[(Seq[Double], Double)]],
+      aux: Seq[Double] => Double): Array[Array[(Seq[Double], Double)]] = {
+    val g = if (exploded.columns.contains("m")) 1 else 0
+    val byGroup = exploded
+      .groupBy(((if (g == 1) Seq("m") else Nil) :+ "cell" :+ "pos")
+        .map(col): _*)
+      .agg((sum(floor(col("val") * lit(1048576.0) + lit(0.5))
+          .cast("long")).cast("double") / 1048576.0 /
+        count(lit(1)).cast("double")).as("mean"))
+      .collect().groupBy(r => if (g == 1) r.getInt(0) else 0)
+    prev.indices.map { m =>
+      val byCell = byGroup.getOrElse(m, Array.empty[Row])
+        .groupBy(_.getInt(g))
+      prev(m).indices.map { c =>
         byCell.get(c) match {
           case Some(rows) =>
-            val v: Seq[Double] = rows.sortBy(_.getInt(1))
-              .map(_.getDouble(2)).toSeq
-            (v, normOf(v))
-          case None => cents(c)
+            val v: Seq[Double] = rows.sortBy(_.getInt(g + 1))
+              .map(_.getDouble(g + 2)).toSeq
+            (v, aux(v))
+          case None => prev(m)(c)
         }
       }.toArray
-      round += 1
-    }
-    cents
+    }.toArray
   }
 
   /** Within-bucket nearest neighbor (top-1 by cosine, ties to the
@@ -845,7 +862,8 @@ object Ann {
     * inner-product and L2 metrics need it. */
   def sq8Quantized(df: DataFrame, idCol: String, vecCol: String,
                    id: String, dim: Int = Dim): DataFrame =
-    df.select(col(idCol).as(id), toDouble(col(vecCol)).as("__v"))
+    df.select(col(idCol).as(id),
+        checkedVec(toDouble(col(vecCol)), dim).as("__v"))
       .withColumn(s"${id}_sc", sqScale(col("__v")))
       .withColumn(s"${id}_q", sq8Codes(col("__v"), col(s"${id}_sc")))
       .withColumn(s"${id}_qq",
@@ -899,12 +917,8 @@ object Ann {
                                dim: Int,
                                metric: String = "cosine"): DataFrame = {
     val sn = sq8ScoreName(metric)
-    val scored = d.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .withColumn(sn, sq8Score(metric, dim))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col(sn).desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(d.join(broadcast(q), col("vec_id") =!= col("q_id"))
+        .withColumn(sn, sq8Score(metric, dim)), sn, "vec_id", k)
       .select(col("q_id"), col("rank"), col("vec_id"), col(sn))
   }
 
@@ -1050,40 +1064,18 @@ object Ann {
     * same left fold as the oracle's `list_aggregate`). */
   def kmeansCentroidsL2(dSub: DataFrame, numCells: Int,
                         iters: Int): Array[(Seq[Double], Double)] = {
-    def selfDot(v: Seq[Double]): Double = {
-      var t = 0.0; var i = 0
-      while (i < v.length) { t += v(i) * v(i); i += 1 }
-      t
-    }
-    var cents: Array[(Seq[Double], Double)] = dSub
+    val seeds: Array[(Seq[Double], Double)] = dSub
       .orderBy(col("id")).limit(numCells).select(col("s"))
       .collect().map { r =>
         val v = r.getSeq[Double](0); (v, selfDot(v))
       }
-    var round = 0
-    while (round < iters) {
-      val assigned = dSub.withColumn("cell",
-        array_max(centroidScoresL2(cents, col("s"))).getField("cell"))
-      val meanRows = assigned
-        .select(col("cell"), posexplode(col("s")).as(Seq("pos", "val")))
-        .groupBy(col("cell"), col("pos"))
-        .agg((sum(floor(col("val") * lit(1048576.0) + lit(0.5))
-            .cast("long")).cast("double") / 1048576.0 /
-          count(lit(1)).cast("double")).as("m"))
-        .collect()
-      val byCell = meanRows.groupBy(_.getInt(0))
-      cents = cents.indices.map { c =>
-        byCell.get(c) match {
-          case Some(rows) =>
-            val v: Seq[Double] = rows.sortBy(_.getInt(1))
-              .map(_.getDouble(2)).toSeq
-            (v, selfDot(v))
-          case None => cents(c)
-        }
-      }.toArray
-      round += 1
+    (0 until iters).foldLeft(seeds) { (cents, _) =>
+      lloydUpdate(dSub
+          .withColumn("cell",
+            array_max(centroidScoresL2(cents, col("s"))).getField("cell"))
+          .select(col("cell"), posexplode(col("s")).as(Seq("pos", "val"))),
+        Array(cents), selfDot).head
     }
-    cents
   }
 
   /** Train the M per-subspace codebooks over the unit-normalized
@@ -1115,11 +1107,6 @@ object Ann {
   def pqTrainOn(frame: DataFrame, iters: Int,
                 geom: Geom = DefaultGeom)
       : Array[Array[(Seq[Double], Double)]] = {
-    def selfDot(v: Seq[Double]): Double = {
-      var t = 0.0; var i = 0
-      while (i < v.length) { t += v(i) * v(i); i += 1 }
-      t
-    }
     val sliced = (0 until geom.pqM).foldLeft(
       frame.select(col("id"), col("u"))) { (df, m) =>
       df.withColumn(s"__s$m",
@@ -1129,7 +1116,7 @@ object Ann {
     // job, sliced locally (identical to per-subspace orderBy/limit)
     val seedRows = frame.orderBy(col("id")).limit(geom.pqK)
       .select(col("u")).collect()
-    var books: Array[Array[(Seq[Double], Double)]] =
+    val seeds: Array[Array[(Seq[Double], Double)]] =
       Array.tabulate(geom.pqM) { m =>
         seedRows.map { r =>
           val v: Seq[Double] = r.getSeq[Double](0)
@@ -1137,40 +1124,20 @@ object Ann {
           (v, selfDot(v))
         }
       }
-    var round = 0
-    while (round < iters) {
+    (0 until iters).foldLeft(seeds) { (books, _) =>
       val withCells = (0 until geom.pqM).foldLeft(sliced) { (df, m) =>
         df.withColumn(s"__c$m",
           array_max(centroidScoresL2(books(m), col(s"__s$m")))
             .getField("cell"))
       }
-      val meanRows = withCells
-        .select(explode(array((0 until geom.pqM).map(m =>
-          struct(lit(m).as("m"), col(s"__c$m").as("cell"),
-            col(s"__s$m").as("s"))): _*)).as("e"))
-        .select(col("e.m").as("m"), col("e.cell").as("cell"),
-          posexplode(col("e.s")).as(Seq("pos", "val")))
-        .groupBy(col("m"), col("cell"), col("pos"))
-        .agg((sum(floor(col("val") * lit(1048576.0) + lit(0.5))
-            .cast("long")).cast("double") / 1048576.0 /
-          count(lit(1)).cast("double")).as("mv"))
-        .collect()
-      val byM = meanRows.groupBy(_.getInt(0))
-      books = Array.tabulate(geom.pqM) { m =>
-        val byCell = byM.getOrElse(m, Array.empty[Row]).groupBy(_.getInt(1))
-        books(m).indices.map { c =>
-          byCell.get(c) match {
-            case Some(rows) =>
-              val v: Seq[Double] = rows.sortBy(_.getInt(2))
-                .map(_.getDouble(3)).toSeq
-              (v, selfDot(v))
-            case None => books(m)(c)
-          }
-        }.toArray
-      }
-      round += 1
+      lloydUpdate(withCells
+          .select(explode(array((0 until geom.pqM).map(m =>
+            struct(lit(m).as("m"), col(s"__c$m").as("cell"),
+              col(s"__s$m").as("s"))): _*)).as("e"))
+          .select(col("e.m").as("m"), col("e.cell").as("cell"),
+            posexplode(col("e.s")).as(Seq("pos", "val"))),
+        books, selfDot)
     }
-    books
   }
 
   /** Encode every vector to its M codebook cells — the rows a PQ index
@@ -1233,14 +1200,10 @@ object Ann {
         .toDF(s"cell$m", s"cv$m")
       df.join(broadcast(cents), col(s"c$m") === col(s"cell$m"))
     }
-    val scored = joined.withColumn("score",
-      (0 until geom.pqM)
-        .map(m => dotUnrolled(col(s"qs$m"), col(s"cv$m"), geom.subDim))
-        .reduceLeft(_ + _))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(joined.withColumn("score",
+        (0 until geom.pqM)
+          .map(m => dotUnrolled(col(s"qs$m"), col(s"cv$m"), geom.subDim))
+          .reduceLeft(_ + _)), "score", "id", k)
       .select(col("q_id"), col("rank"), col("id").as("vec_id"),
         col("score"))
   }
@@ -1421,16 +1384,12 @@ object Ann {
         .toDF(s"cell$m", s"cv$m", s"cc$m")
       df.join(broadcast(cents), col(s"c$m") === col(s"cell$m"))
     }
-    val scored = joined.withColumn("score",
-      (0 until geom.pqM)
-        .map(m => lit(2.0) *
-          dotUnrolled(col(s"qs$m"), col(s"cv$m"), geom.subDim) -
-          col(s"cc$m"))
-        .reduceLeft(_ + _) - col("qq"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(joined.withColumn("score",
+        (0 until geom.pqM)
+          .map(m => lit(2.0) *
+            dotUnrolled(col(s"qs$m"), col(s"cv$m"), geom.subDim) -
+            col(s"cc$m"))
+          .reduceLeft(_ + _) - col("qq")), "score", "id", k)
       .select(col("q_id"), col("rank"), col("id").as("vec_id"),
         col("score"))
   }
@@ -1522,10 +1481,7 @@ object Ann {
         .join(un.select(col("id").as("vec_id"), col("u")), Seq("vec_id"))
         .join(maybeBcast(qUn), Seq("q_id"))
         .withColumn("score", refineScore(metric, geom.dim))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("score").desc, col("vec_id").asc)
-      exact.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
+      topKPerQuery(exact, "score", "vec_id", k)
         .select(col("q_id"), col("rank"), col("vec_id"), col("score"))
     }
   }

@@ -13,6 +13,16 @@ import graft.catalog.TableCatalog
   * fit-inline operators ([[Ann.lshBucketNeighborsAuto]],
   * [[Ann.ivfTopK]]) do.
   *
+  * One lifecycle, five codecs: LSH, IVF, SQ8, PQ and residual IVF-PQ
+  * differ only in a private `IndexKind` — the kind's name, its
+  * sub-layout (`pk` or `cell`), whether it carries a corpus-level fit
+  * that can go stale, the build to name when it does, how to load its
+  * persisted fits, and how to encode a batch under them. Everything
+  * else runs once for every kind: the build commit (`commitBuild`),
+  * the append (every `appendX` and [[ingestBatch]]), the meta read,
+  * the serving read every probe starts with, [[deleteIds]] and
+  * [[compactSegs]].
+  *
   * Layout under one logical index name:
   *   `<index>`         1-row meta (kind, geometry, dim, fitted-over n,
   *                     indexed n). Written LAST, so a crash mid-build
@@ -22,25 +32,26 @@ import graft.catalog.TableCatalog
   *                     meta to a `rebuilding` marker (round 15), so a
   *                     crashed rebuild fails loudly too instead of
   *                     serving mixed-fit rows under the stale meta.
-  *   `<index>_assign`  per-vector rows (id, v, nrm, bucket|cell), one
+  *   `<index>_assign`  per-vector rows (the kind's encoding), one
   *                     `seg=` partition per build/append segment
-  *                     (round 13 — segments let [[appendLsh]] /
-  *                     [[appendIvf]] land new vectors without
-  *                     rewriting the corpus-sized table, and a
-  *                     replayed append overwrites its own segment
-  *                     idempotently). IVF sub-partitions each segment
-  *                     by `cell` (numCells is a small constant, and a
-  *                     probe's cell equi-join prunes to the probed
-  *                     cells at the storage layer — nprobe/numCells of
-  *                     the corpus). LSH buckets number ~n/target — one
-  *                     directory per bucket would explode into
-  *                     corpus-many tiny files (measured 20 s to build
-  *                     and probes SLOWER than the fit at sf0.1) — so
-  *                     the LSH layout buckets by
+  *                     (round 13 — segments let an append land new
+  *                     vectors without rewriting the corpus-sized
+  *                     table, and a replayed append overwrites its own
+  *                     segment idempotently). IVF and IVF-PQ
+  *                     sub-partition each segment by `cell` (numCells
+  *                     is a small constant, and a probe's cell
+  *                     equi-join prunes to the probed cells at the
+  *                     storage layer — nprobe/numCells of the corpus).
+  *                     LSH buckets number ~n/target — one directory per
+  *                     bucket would explode into corpus-many tiny files
+  *                     (measured 20 s to build and probes SLOWER than
+  *                     the fit at sf0.1) — so LSH sub-partitions by
   *                     `pk = pmod(bucket, LshPkBuckets)`: bounded
   *                     directory count, and a point-lookup still reads
-  *                     only its bucket's pk directory.
-  *   `<index>_cent`    IVF only: (cell, pos, val) centroid components.
+  *                     only its bucket's pk directory. SQ8 and PQ use
+  *                     `pk = pmod(id, LshPkBuckets)`.
+  *   `<index>_cent`    IVF / IVF-PQ: (cell, pos, val) coarse centroids.
+  *   `<index>_pqcent`  PQ / IVF-PQ: (m, cell, pos, val) codebooks.
   *   `<index>_dels`    id-level delete tombstones (round 15), one
   *                     `dseg=` partition per [[deleteIds]] batch — a
   *                     delete is O(batch) and idempotent under replay
@@ -122,15 +133,8 @@ object AnnIndex {
       s"AnnIndex: capacityRows=$fitN is smaller than the build corpus " +
         s"($n rows) — the planned capacity must cover the initial load")
     val planes = Ann.autoPlanes(fitN, targetBucketRows, minPlanes)
-    catalog.withTableLock(assignTableOf(indexTable)) {
-      markRebuilding(catalog, indexTable)
-      writeSeg(catalog, indexTable,
-        assignLsh(data, idCol, vecCol, planes, dim), "0", "pk")
-      dropOtherSegs(catalog, indexTable, keep = "0") // rebuild hygiene
-      drainDels(catalog, indexTable)
-      writeSegCounts(catalog, indexTable, Map("0" -> n))
-      writeMeta(catalog, indexTable, "lsh", planes, dim, 0, 0, fitN, n)
-    }
+    commitBuild(catalog, data, idCol, vecCol, indexTable,
+      Meta(Lsh.name, planes, dim, 0, 0, fitN, n, "cosine"), Fits())
     planes
   }
 
@@ -146,34 +150,14 @@ object AnnIndex {
                trainIters: Int = 0,
                trainData: Option[DataFrame] = None,
                dim: Int = Ann.Dim): Unit = {
-    val spark = data.sparkSession
-    import spark.implicits._
-    val trainD = trainData
-      .map(td => Ann.withNorms(td, idCol, vecCol, dim))
-      .getOrElse(Ann.withNorms(data, idCol, vecCol, dim))
-    val cents = Ann.kmeansCentroids(trainD, numCells, trainIters)
+    val cents = Ann.kmeansCentroids(
+      Ann.withNorms(trainData.getOrElse(data), idCol, vecCol, dim),
+      numCells, trainIters)
     val n = data.count()
-    val fitN = trainData.map(_.count()).getOrElse(n)
-    val centRows = cents.zipWithIndex.flatMap { case ((v, _), c) =>
-      v.zipWithIndex.map { case (x, p) => (c, p, x) }
-    }.toSeq
-    catalog.withTableLock(assignTableOf(indexTable)) {
-      markRebuilding(catalog, indexTable)
-      // disjoint-table artifact writes as concurrent lanes; meta last
-      // (the buildIvfPq pattern)
-      graft.core.Par.concurrently(Seq(
-        () => catalog.writeFull(centRows.toDF("cell", "pos", "val"),
-          indexTable + "_cent"),
-        () => {
-          writeSeg(catalog, indexTable,
-            assignIvf(data, idCol, vecCol, cents, dim), "0", "cell")
-          dropOtherSegs(catalog, indexTable, keep = "0")
-          drainDels(catalog, indexTable)
-        }))
-      writeSegCounts(catalog, indexTable, Map("0" -> n))
-      writeMeta(catalog, indexTable, "ivf", numCells, dim, 0, 0,
-        fitN, n)
-    }
+    commitBuild(catalog, data, idCol, vecCol, indexTable,
+      Meta(Ivf.name, numCells, dim, 0, 0,
+        trainData.map(_.count()).getOrElse(n), n, "cosine"),
+      Fits(cents = Some(cents)))
   }
 
   /** Append new vectors to a persisted LSH index under its FROZEN
@@ -188,14 +172,9 @@ object AnnIndex {
   def appendLsh(catalog: TableCatalog, data: DataFrame, idCol: String,
                 vecCol: String, indexTable: String,
                 segKey: Option[String] = None,
-                allowStale: Boolean = false): Unit = {
-    catalog.withTableLock(assignTableOf(indexTable)) {
-      val m = readMeta(catalog, indexTable, "lsh")
-      appendSeg(catalog, indexTable, m,
-        assignLsh(data, idCol, vecCol, m.geometry, m.dim), data.count(),
-        segKey, "pk", allowStale)
-    }
-  }
+                allowStale: Boolean = false): Unit =
+    append(catalog, data, idCol, vecCol, indexTable, Some(Lsh), segKey,
+      allowStale)
 
   /** Append new vectors to a persisted IVF index under its FROZEN
     * quantizer: the trained centroids are LOADED from the `_cent`
@@ -205,15 +184,9 @@ object AnnIndex {
   def appendIvf(catalog: TableCatalog, data: DataFrame, idCol: String,
                 vecCol: String, indexTable: String,
                 segKey: Option[String] = None,
-                allowStale: Boolean = false): Unit = {
-    catalog.withTableLock(assignTableOf(indexTable)) {
-      val m = readMeta(catalog, indexTable, "ivf")
-      val cents = readCentroids(catalog, indexTable)
-      appendSeg(catalog, indexTable, m,
-        assignIvf(data, idCol, vecCol, cents, m.dim), data.count(),
-        segKey, "cell", allowStale)
-    }
-  }
+                allowStale: Boolean = false): Unit =
+    append(catalog, data, idCol, vecCol, indexTable, Some(Ivf), segKey,
+      allowStale)
 
   /** Build + persist the SQ8 code index: every vector quantized once
     * to int8 codes + integer self-dot + quantization scale
@@ -239,16 +212,8 @@ object AnnIndex {
       s"AnnIndex: unknown metric '$metric' — use one of " +
         Metrics.mkString("'", "', '", "'"))
     val n = data.count()
-    catalog.withTableLock(assignTableOf(indexTable)) {
-      markRebuilding(catalog, indexTable)
-      writeSeg(catalog, indexTable, assignSq8(data, idCol, vecCol, dim),
-        "0", "pk")
-      dropOtherSegs(catalog, indexTable, keep = "0")
-      drainDels(catalog, indexTable)
-      writeSegCounts(catalog, indexTable, Map("0" -> n))
-      writeMeta(catalog, indexTable, "sq8", 127, dim, 0, 0, n, n,
-        metric)
-    }
+    commitBuild(catalog, data, idCol, vecCol, indexTable,
+      Meta(Sq8.name, 127, dim, 0, 0, n, n, metric), Fits())
   }
 
   /** Append new vectors to a persisted SQ8 index — quantize the batch,
@@ -257,12 +222,8 @@ object AnnIndex {
   def appendSq8(catalog: TableCatalog, data: DataFrame, idCol: String,
                 vecCol: String, indexTable: String,
                 segKey: Option[String] = None): Unit =
-    catalog.withTableLock(assignTableOf(indexTable)) {
-      val m = readMeta(catalog, indexTable, "sq8")
-      appendSeg(catalog, indexTable, m,
-        assignSq8(data, idCol, vecCol, m.dim), data.count(),
-        segKey, "pk", allowStale = false)
-    }
+    append(catalog, data, idCol, vecCol, indexTable, Some(Sq8), segKey,
+      allowStale = false)
 
   /** Brute-force top-k off the persisted SQ8 codes — the
     * [[Ann.sq8TopK]] result with the corpus side read as 1-byte codes
@@ -278,24 +239,20 @@ object AnnIndex {
     * BEFORE any scoring. A pre-filter always fills k from the allowed
     * subset (a post-filter of an unfiltered top-k under-returns —
     * the classic filtered-ANN mistake); the semi-join is an equi-join
-    * the planner broadcasts when the allowed set is small. */
+    * the planner broadcasts when the allowed set is small.
+    *
+    * `metric` is served from the META, like the geometry: None = the
+    * recorded one; an explicit request that disagrees with the build
+    * is refused loudly (scoring a cosine corpus by inner product
+    * would silently return magnitude-ranked garbage). */
   def sq8TopKFromIndex(catalog: TableCatalog, indexTable: String,
                        queries: DataFrame, idCol: String, vecCol: String,
                        k: Int,
                        allowedIds: Option[DataFrame] = None,
                        allowedIdCol: String = "id",
                        metric: Option[String] = None): DataFrame = {
-    val m = readMeta(catalog, indexTable, "sq8")
-    // metric is served from the META, like the geometry: None = the
-    // recorded one; an explicit request that disagrees with the build
-    // is refused loudly (scoring a cosine corpus by inner product
-    // would silently return magnitude-ranked garbage)
-    metric.foreach { req =>
-      require(req == m.metric,
-        s"AnnIndex: '$indexTable' was built for metric '${m.metric}' " +
-          s"but the probe requested '$req' — probes serve the " +
-          "RECORDED metric; rebuild with the desired one")
-    }
+    val (m, _, live) = serve(catalog, indexTable, Sq8, allowStale = false,
+      metric, allowedIds, allowedIdCol)
     val baseCols = Seq(col("id").as("vec_id"), col("q").as("vec_id_q"),
       col("qq").as("vec_id_qq"))
     // the scale column only exists on post-r16 layouts and is only
@@ -303,10 +260,7 @@ object AnnIndex {
     // keep working (and keep their byte-identical plans)
     val cols = if (m.metric == "cosine") baseCols
                else baseCols :+ col("sc").as("vec_id_sc")
-    val d = restrictTo(liveAssign(catalog, indexTable),
-        allowedIds, allowedIdCol)
-      .select(cols: _*)
-    Ann.sq8TopKFrom(d,
+    Ann.sq8TopKFrom(live.select(cols: _*),
       Ann.sq8Quantized(queries, idCol, vecCol, "q_id", m.dim), k,
       m.dim, m.metric)
   }
@@ -321,16 +275,13 @@ object AnnIndex {
   def sq8MatchesFromIndex(catalog: TableCatalog, indexTable: String,
                           queries: DataFrame, idCol: String,
                           vecCol: String, minCos: Double): DataFrame = {
-    val m = readMeta(catalog, indexTable, "sq8")
     // the hit threshold is a COSINE — an ip/l2 index's scores live on
     // a different scale entirely, so refuse rather than mis-threshold
-    require(m.metric == "cosine",
-      s"AnnIndex: decontamination thresholds are cosine but " +
-        s"'$indexTable' records metric '${m.metric}'")
-    val d = liveAssign(catalog, indexTable)
-      .select(col("id").as("vec_id"), col("q").as("vec_id_q"),
-        col("qq").as("vec_id_qq"))
-    Ann.sq8Matches(d,
+    val (m, _, live) = serve(catalog, indexTable, Sq8, allowStale = false,
+      Some("cosine"))
+    Ann.sq8Matches(
+      live.select(col("id").as("vec_id"), col("q").as("vec_id_q"),
+        col("qq").as("vec_id_qq")),
       Ann.sq8Quantized(queries, idCol, vecCol, "q_id", m.dim),
       minCos, m.dim)
   }
@@ -347,34 +298,13 @@ object AnnIndex {
               vecCol: String, indexTable: String, trainIters: Int = 2,
               trainData: Option[DataFrame] = None,
               geom: Ann.Geom = Ann.DefaultGeom): Unit = {
-    val spark = data.sparkSession
-    import spark.implicits._
     val books = Ann.pqTrain(trainData.getOrElse(data), idCol, vecCol,
       trainIters, geom)
     val n = data.count()
-    val fitN = trainData.map(_.count()).getOrElse(n)
-    val rows = for {
-      m <- books.indices
-      j <- books(m).indices
-      (x, p) <- books(m)(j)._1.zipWithIndex
-    } yield (m, j, p, x)
-    catalog.withTableLock(assignTableOf(indexTable)) {
-      markRebuilding(catalog, indexTable)
-      // disjoint-table artifact writes as concurrent lanes; meta last
-      // (the buildIvfPq pattern)
-      graft.core.Par.concurrently(Seq(
-        () => catalog.writeFull(rows.toDF("m", "cell", "pos", "val"),
-          indexTable + "_pqcent"),
-        () => {
-          writeSeg(catalog, indexTable,
-            assignPq(data, idCol, vecCol, books, geom), "0", "pk")
-          dropOtherSegs(catalog, indexTable, keep = "0")
-          drainDels(catalog, indexTable)
-        }))
-      writeSegCounts(catalog, indexTable, Map("0" -> n))
-      writeMeta(catalog, indexTable, "pq", geom.pqK, geom.dim,
-        geom.pqM, geom.pqK, fitN, n)
-    }
+    commitBuild(catalog, data, idCol, vecCol, indexTable,
+      Meta(Pq.name, geom.pqK, geom.dim, geom.pqM, geom.pqK,
+        trainData.map(_.count()).getOrElse(n), n, "cosine"),
+      Fits(books = Some(books)))
   }
 
   /** Append new vectors to a persisted PQ index — encode under the
@@ -384,35 +314,27 @@ object AnnIndex {
                vecCol: String, indexTable: String,
                segKey: Option[String] = None,
                allowStale: Boolean = false): Unit =
-    catalog.withTableLock(assignTableOf(indexTable)) {
-      val m = readMeta(catalog, indexTable, "pq")
-      val books = readBooks(catalog, indexTable)
-      appendSeg(catalog, indexTable, m,
-        assignPq(data, idCol, vecCol, books, m.geom), data.count(),
-        segKey, "pk", allowStale)
-    }
+    append(catalog, data, idCol, vecCol, indexTable, Some(Pq), segKey,
+      allowStale)
 
   /** ADC top-k off the persisted codes — [[Ann.pqTopK]] without the
     * training or encoding passes: codebooks load as a driver constant
     * (M·K·subDim doubles), the corpus side is nothing but the stored
     * code columns. Bit-identical to fit-inline ann13 (codes are a
     * pure function of vector × frozen codebooks), gated by ann14
-    * against the ann13 oracle. */
+    * against the ann13 oracle. Filtered search restricts the code
+    * scan BEFORE the ADC scoring and the rank cut (the
+    * [[sq8TopKFromIndex]] contract). */
   def pqTopKFromIndex(catalog: TableCatalog, indexTable: String,
                       queries: DataFrame, idCol: String, vecCol: String,
                       k: Int, allowStale: Boolean = false,
                       allowedIds: Option[DataFrame] = None,
                       allowedIdCol: String = "id"): DataFrame = {
-    val m = readMeta(catalog, indexTable, "pq")
-    requireFresh(m, indexTable, allowStale)
-    val books = readBooks(catalog, indexTable)
-    // filtered search: restrict the code scan BEFORE the ADC scoring
-    // and the rank cut (the [[sq8TopKFromIndex]] contract)
-    val codes = restrictTo(liveAssign(catalog, indexTable),
-        allowedIds, allowedIdCol)
-      .select(col("id") +:
-        (0 until m.pqM).map(i => col(s"c$i")): _*)
-    Ann.pqTopKFromCodes(codes, books, queries, idCol, vecCol, k, m.geom)
+    val (m, fits, live) = serve(catalog, indexTable, Pq, allowStale,
+      None, allowedIds, allowedIdCol)
+    Ann.pqTopKFromCodes(
+      live.select(col("id") +: (0 until m.pqM).map(i => col(s"c$i")): _*),
+      fits.books.get, queries, idCol, vecCol, k, m.geom)
   }
 
   /** Build + persist the residual IVF-PQ index (the ann16 IVFADC
@@ -425,20 +347,19 @@ object AnnIndex {
     * stored: the refine stage reads them from the primary vector
     * table (the classic two-stage fetch — see
     * [[ivfPqRefineTopKFromIndex]]). Both fits are corpus-level, so the
-    * [[MaxDriftFactor]] staleness contract applies. */
+    * [[MaxDriftFactor]] staleness contract applies.
+    *
+    * `metric` is recorded beside the geometry ([[buildSq8]]
+    * contract): cosine | l2 — the residual machinery is metric-blind
+    * past the (un)normalization choice ([[Ann.metricFrame]]); ip is
+    * refused there with a pointer at the SQ8 family, whose
+    * dequantized dot IS the ip score. */
   def buildIvfPq(catalog: TableCatalog, data: DataFrame, idCol: String,
                  vecCol: String, indexTable: String, numCells: Int = 16,
                  trainIters: Int = 2, pqIters: Int = 2,
                  trainData: Option[DataFrame] = None,
                  geom: Ann.Geom = Ann.DefaultGeom,
                  metric: String = "cosine"): Unit = {
-    val spark = data.sparkSession
-    import spark.implicits._
-    // metric recorded at build time beside the geometry ([[buildSq8]]
-    // contract): cosine | l2 — the residual machinery is metric-blind
-    // past the (un)normalization choice ([[Ann.metricFrame]]); ip is
-    // refused there with a pointer at the SQ8 family, whose
-    // dequantized dot IS the ip score
     val trainUn = Ann.metricFrame(trainData.getOrElse(data), idCol,
       vecCol, geom.dim, metric)
     val cents = Ann.kmeansCentroidsL2(
@@ -446,36 +367,10 @@ object AnnIndex {
     val books = Ann.pqTrainOn(Ann.residualFrame(trainUn, cents),
       pqIters, geom)
     val n = data.count()
-    val fitN = trainData.map(_.count()).getOrElse(n)
-    val centRows = cents.zipWithIndex.flatMap { case ((v, _), c) =>
-      v.zipWithIndex.map { case (x, p) => (c, p, x) }
-    }.toSeq
-    val bookRows = for {
-      m <- books.indices
-      j <- books(m).indices
-      (x, p) <- books(m)(j)._1.zipWithIndex
-    } yield (m, j, p, x)
-    catalog.withTableLock(assignTableOf(indexTable)) {
-      markRebuilding(catalog, indexTable)
-      // the three artifact writes land in disjoint tables and nothing
-      // reads them until writeMeta commits (markRebuilding refuses
-      // every probe until then) — concurrent lanes, meta last
-      graft.core.Par.concurrently(Seq(
-        () => catalog.writeFull(centRows.toDF("cell", "pos", "val"),
-          indexTable + "_cent"),
-        () => catalog.writeFull(bookRows.toDF("m", "cell", "pos", "val"),
-          indexTable + "_pqcent"),
-        () => {
-          writeSeg(catalog, indexTable,
-            assignIvfPq(data, idCol, vecCol, cents, books, geom, metric),
-            "0", "cell")
-          dropOtherSegs(catalog, indexTable, keep = "0")
-          drainDels(catalog, indexTable)
-        }))
-      writeSegCounts(catalog, indexTable, Map("0" -> n))
-      writeMeta(catalog, indexTable, "ivfpq", numCells, geom.dim,
-        geom.pqM, geom.pqK, fitN, n, metric)
-    }
+    commitBuild(catalog, data, idCol, vecCol, indexTable,
+      Meta(IvfPq.name, numCells, geom.dim, geom.pqM, geom.pqK,
+        trainData.map(_.count()).getOrElse(n), n, metric),
+      Fits(Some(cents), Some(books)))
   }
 
   /** Append new vectors to a persisted residual IVF-PQ index — cell
@@ -486,15 +381,8 @@ object AnnIndex {
                   vecCol: String, indexTable: String,
                   segKey: Option[String] = None,
                   allowStale: Boolean = false): Unit =
-    catalog.withTableLock(assignTableOf(indexTable)) {
-      val m = readMeta(catalog, indexTable, "ivfpq")
-      val cents = readCentroidsL2(catalog, indexTable)
-      val books = readBooks(catalog, indexTable)
-      appendSeg(catalog, indexTable, m,
-        assignIvfPq(data, idCol, vecCol, cents, books, m.geom,
-          m.metric),
-        data.count(), segKey, "cell", allowStale)
-    }
+    append(catalog, data, idCol, vecCol, indexTable, Some(IvfPq), segKey,
+      allowStale)
 
   /** Two-stage probe off the persisted residual IVF-PQ index: cell
     * pruning × residual ADC from the stored codes alone, then the
@@ -504,7 +392,10 @@ object AnnIndex {
     * the fit-inline [[Ann.ivfPqResidualTopK]] over the same corpus
     * (codes and cells are pure functions of vector × frozen fits;
     * unit vectors recompute exactly from the store) — gated by ann17
-    * against the ann16 oracle. */
+    * against the ann16 oracle. `allowedIds` (the [[sq8TopKFromIndex]]
+    * contract) lands BEFORE the ADC scoring AND before the code-rank
+    * cut, so both the candidate ranks and the refine budget are spent
+    * inside the allowed subset only. */
   def ivfPqRefineTopKFromIndex(catalog: TableCatalog, indexTable: String,
                                store: DataFrame, queries: DataFrame,
                                idCol: String, vecCol: String, k: Int,
@@ -515,44 +406,33 @@ object AnnIndex {
                                allowedIdCol: String = "id",
                                metric: Option[String] = None)
       : DataFrame = {
-    val m = readMeta(catalog, indexTable, "ivfpq")
-    requireFresh(m, indexTable, allowStale)
-    // the [[sq8TopKFromIndex]] metric contract: served from the META,
-    // an explicit disagreeing request refused loudly
-    metric.foreach { req =>
-      require(req == m.metric,
-        s"AnnIndex: '$indexTable' was built for metric '${m.metric}' " +
-          s"but the probe requested '$req' — probes serve the " +
-          "RECORDED metric; rebuild with the desired one")
-    }
-    val cents = readCentroidsL2(catalog, indexTable)
-    val books = readBooks(catalog, indexTable)
-    // `allowedIds` = filtered search (the [[sq8TopKFromIndex]]
-    // contract): the semi-join lands BEFORE the ADC scoring AND before
-    // the code-rank cut, so both the candidate ranks and the refine
-    // budget are spent inside the allowed subset only
-    val codes = restrictTo(liveAssign(catalog, indexTable),
-        allowedIds, allowedIdCol)
-      .select(col("id") +: col("cell").cast("int").as("cell") +:
-        (0 until m.pqM).map(i => col(s"c$i")): _*)
-    Ann.ivfPqRefineProbe(codes, cents, books,
+    val (m, fits, live) = serve(catalog, indexTable, IvfPq, allowStale,
+      metric, allowedIds, allowedIdCol)
+    val codes = live.select(col("id") +: col("cell").cast("int").as("cell")
+      +: (0 until m.pqM).map(i => col(s"c$i")): _*)
+    Ann.ivfPqRefineProbe(codes, fits.cents.get, fits.books.get,
       Ann.metricFrame(store, idCol, vecCol, m.dim, m.metric), queries,
       idCol, vecCol, k, nprobe, refine, broadcastQueries, m.geom,
       m.metric)
   }
 
-  /** One streaming-ingestion micro-batch into a persisted SQ8 index —
-    * the `foreachBatch` body for a live embedding feed (the ann19
-    * shape, lifted to a reusable sink with a COMPACTION CADENCE): the
-    * batch lands as segment `b<batchId>`, so a replayed micro-batch
-    * overwrites its own segment and the sink is idempotent end to
-    * end; and once the index holds `compactEvery` or more other
-    * segments the appended directories fold back into one
-    * ([[compactSegs]] — the
-    * [[graft.streaming.CorpusStream]] `compactState` cadence), so the
-    * directory count a probe pays stays bounded under continuous
-    * ingestion instead of growing one segment per micro-batch
-    * forever. `compactEvery = 0` disables the cadence.
+  /** One streaming-ingestion micro-batch into a persisted index of ANY
+    * kind — the `foreachBatch` body for a live embedding feed (the
+    * ann19 shape, lifted to a reusable sink with a COMPACTION
+    * CADENCE). The batch goes through the one append under the kind
+    * recorded in the meta (the residual IVF-PQ index included, so the
+    * quality serving shape gets the same streaming story as SQ8); the
+    * fit-bearing kinds keep their [[MaxDriftFactor]] staleness
+    * contract — a drifted index fails the batch loudly unless
+    * `allowStale`. The batch lands as segment `b<batchId>`, so a
+    * replayed micro-batch overwrites its own segment and the sink is
+    * idempotent end to end; and once the index holds `compactEvery` or
+    * more other segments the appended directories fold back into one
+    * ([[compactSegs]] — the [[graft.streaming.CorpusStream]]
+    * `compactState` cadence), so the directory count a probe pays
+    * stays bounded under continuous ingestion instead of growing one
+    * segment per micro-batch forever. `compactEvery = 0` disables the
+    * cadence.
     *
     * Replay note: the cadence decision is a PURE FUNCTION of batchId
     * (`batchId % compactEvery == compactEvery - 1`), never of the
@@ -567,60 +447,14 @@ object AnnIndex {
     * maintenance [[compactSegs]] runs belong BETWEEN committed
     * batches; one run inside a crash window is still safe — the
     * replay converges at its next cadence firing. */
-  def ingestSq8Batch(catalog: TableCatalog, df: DataFrame,
-                     idCol: String, vecCol: String, indexTable: String,
-                     batchId: Long, compactEvery: Int = 0): Unit =
-    ingestBatch(catalog, df, idCol, vecCol, indexTable, batchId,
-      compactEvery)
-
-  /** [[ingestSq8Batch]] for ANY index kind: reads the persisted meta
-    * and dispatches the batch through the matching append — the one
-    * foreachBatch body a live deployment points at whichever artifact
-    * it serves (the residual IVF-PQ index included, so the quality
-    * serving shape gets the same streaming story as SQ8). Same
-    * idempotency (segKey = b<batchId>) and compaction cadence; the
-    * fit-bearing kinds keep their [[MaxDriftFactor]] staleness
-    * contract — a drifted index fails the batch loudly unless
-    * `allowStale`. */
   def ingestBatch(catalog: TableCatalog, df: DataFrame,
                   idCol: String, vecCol: String, indexTable: String,
                   batchId: Long, compactEvery: Int = 0,
                   allowStale: Boolean = false): Unit = {
     require(compactEvery >= 0,
       s"compactEvery must be >= 0, got $compactEvery")
-    require(catalog.tableExists(indexTable),
-      s"AnnIndex: no index meta at '$indexTable' — seed-build it " +
-        "before pointing the ingestion sink at it")
-    val row = catalog.read(indexTable).collect()(0)
-    val kind = row.getString(row.fieldIndex("kind"))
-    val key = s"b$batchId"
-    kind match {
-      case "sq8" =>
-        appendSq8(catalog, df, idCol, vecCol, indexTable, Some(key))
-      case "ivfpq" =>
-        appendIvfPq(catalog, df, idCol, vecCol, indexTable, Some(key),
-          allowStale)
-      case "pq" =>
-        appendPq(catalog, df, idCol, vecCol, indexTable, Some(key),
-          allowStale)
-      case "ivf" =>
-        appendIvf(catalog, df, idCol, vecCol, indexTable, Some(key),
-          allowStale)
-      case "lsh" =>
-        appendLsh(catalog, df, idCol, vecCol, indexTable, Some(key),
-          allowStale)
-      case other =>
-        // 'rebuilding' lands here too — readMeta inside the appends
-        // would also refuse, but fail with the precise story up front
-        throw new IllegalArgumentException(
-          s"AnnIndex: cannot ingest into '$indexTable' (kind '$other')")
-    }
-    // the cadence is a pure function of batchId, NOT of the directory
-    // count: a replayed batch whose original run already compacted
-    // must deterministically re-fire its compaction (the directory
-    // count it would otherwise consult is post-compaction — 1 segment
-    // — so a count-based trigger would skip, leaving the replay's
-    // duplicate rows served until some later batch happens to compact)
+    append(catalog, df, idCol, vecCol, indexTable, None, Some(s"b$batchId"),
+      allowStale)
     if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
       compactSegs(catalog, indexTable)
   }
@@ -688,19 +522,9 @@ object AnnIndex {
                 indexTable: String,
                 segKey: Option[String] = None): Unit =
     catalog.withTableLock(assignTableOf(indexTable)) {
-      require(catalog.tableExists(indexTable),
-        s"AnnIndex: no index meta at '$indexTable' — nothing to " +
-          "delete from")
-      val row = catalog.read(indexTable).collect()(0)
-      require(row.getString(row.fieldIndex("kind")) != "rebuilding",
-        s"AnnIndex: a rebuild of '$indexTable' crashed mid-write — " +
-          "re-run the build before deleting from it")
+      readMeta(catalog, indexTable, None) // no index, or a crashed rebuild
       val delsTable = delsTableOf(indexTable)
-      val key = segKey.getOrElse {
-        (catalog.listPartitions(delsTable, "dseg")
-          .flatMap(s => scala.util.Try(s.toLong).toOption)
-          .foldLeft(0L)(math.max) + 1L).toString
-      }
+      val key = segKey.getOrElse(nextKey(catalog, delsTable, "dseg"))
       catalog.writePartition(
         ids.select(checkedId(idCol, "delete").as("id")).distinct()
           .withColumn("dseg", lit(key)),
@@ -728,21 +552,17 @@ object AnnIndex {
     * collapse back to the exact set. Tombstones drain strictly LAST —
     * a crash anywhere earlier leaves them standing, where their
     * read-time anti-join is a harmless no-op against already-purged
-    * rows. Schedule it like any maintenance job: re-run on failure
-    * before serving. */
+    * rows. A single-segment index with no live tombstone rows still
+    * drains marker-only (data-file-free) dseg partitions, so they
+    * can't accumulate a directory listing per probe forever. Schedule
+    * it like any maintenance job: re-run on failure before serving. */
   def compactSegs(catalog: TableCatalog, indexTable: String): Unit =
     catalog.withTableLock(assignTableOf(indexTable)) {
       val assignTable = assignTableOf(indexTable)
-      require(catalog.tableExists(indexTable),
-        s"AnnIndex: no index meta at '$indexTable' — nothing to compact")
-      val row = catalog.read(indexTable).collect()(0)
-      val kind = row.getString(row.fieldIndex("kind"))
-      val m = readMeta(catalog, indexTable, kind)
-      val segs = catalog.listPartitions(assignTable, "seg")
+      val m = readMeta(catalog, indexTable, None)
       val dels = deletedIds(catalog, indexTable)
-      if (segs.size > 1 || dels.nonEmpty) {
-        val subField =
-          if (kind == "ivf" || kind == "ivfpq") "cell" else "pk"
+      if (catalog.listPartitions(assignTable, "seg").size > 1 ||
+          dels.nonEmpty) {
         // materialize the full LIVE set before touching any directory;
         // the distinct is what makes a crashed compaction re-runnable,
         // and the anti-join is the physical purge of deleteIds
@@ -754,61 +574,52 @@ object AnnIndex {
         // EAGERLY materialize the live set before any directory is
         // touched: the count pins every checkpoint partition, so the
         // seg-0 overwrite below reads checkpoint blocks, never the
-        // files it is replacing. The previous form ran the count and
-        // the rewrite as concurrent lanes over the LAZY fence and
-        // rested on AQE executing the distinct's exchange at plan time
-        // — true, but an execution-mode detail, not a contract: with
-        // adaptive execution off (the chain gates now scope it off,
-        // and dp12 runs this compaction in a lane concurrent with a
-        // chain batch) the lazy scan raced the overwrite and read
-        // deleted files (FAILED_READ_FILE). Materialize-then-rewrite
-        // makes the read-before-overwrite structural. The count is
-        // also the self-heal point: compaction recounts after any
-        // crashed append (orphan segment) or crashed prior compaction
-        // (duplicates the distinct just collapsed).
+        // files it is replacing. A lazy scan racing the overwrite
+        // reads deleted files (FAILED_READ_FILE) once adaptive
+        // execution is off — dp12 runs this compaction in a lane
+        // concurrent with a chain batch that scopes it off — so
+        // materialize-then-rewrite makes the read-before-overwrite
+        // structural. The count is also the self-heal point:
+        // compaction recounts after any crashed append (orphan
+        // segment) or crashed prior compaction (duplicates the
+        // distinct just collapsed).
         val n = all.count()
-        // same tombstone discipline as appendSeg: seg 0 is about to be
+        // same tombstone discipline as the append: seg 0 is about to be
         // overwritten, so its recorded count must go first — a crash
         // mid-rewrite then recounts seg 0 from disk instead of
         // trusting a count for data that may be half-replaced
         writeSegCounts(catalog, indexTable,
           readSegCounts(catalog, indexTable) - "0")
-        writeSeg(catalog, indexTable, all, "0", subField)
+        writeSeg(catalog, indexTable, all, "0", m.codec.sub)
         dropOtherSegs(catalog, indexTable, keep = "0")
         writeSegCounts(catalog, indexTable, Map("0" -> n))
-        writeMeta(catalog, indexTable, m.kind, m.geometry, m.dim,
-          m.pqM, m.pqK, m.fittedN, n, m.metric)
-        // drain the tombstones LAST: their rows are already gone from
-        // seg 0, so a crash before this point leaves tombstones whose
-        // anti-join is a no-op (correct, just unpurged) and the re-run
-        // converges; after it, a previously-deleted id is free for
-        // re-insert
-        drainDels(catalog, indexTable)
-      } else
-        // single-segment + no live tombstone rows: still drain any
-        // marker-only (data-file-free) dseg partitions, so they can't
-        // accumulate a directory listing per probe forever
-        drainDels(catalog, indexTable)
+        writeMeta(catalog, indexTable, m.copy(indexedN = n))
+      }
+      // drain the tombstones LAST: their rows are already gone from
+      // seg 0, so a crash before this point leaves tombstones whose
+      // anti-join is a no-op (correct, just unpurged) and the re-run
+      // converges; after it, a previously-deleted id is free for
+      // re-insert
+      drainDels(catalog, indexTable)
     }
 
   /** Within-bucket top-1 neighbors from a persisted LSH index — the
     * [[Ann.lshBucketNeighborsAuto]] result without the count, the
     * norm pass, or the planes×dim bucketing dots: everything comes
     * off the assignment table. Fails on a stale index (corpus grown
-    * past [[MaxDriftFactor]] × the fitted size) unless `allowStale`. */
+    * past [[MaxDriftFactor]] × the fitted size) unless `allowStale`.
+    * Filtered search runs the neighbor join entirely inside the
+    * allowed subset (both the row being matched and its candidates),
+    * restricted BEFORE bucketing fans out. */
   def lshNeighborsFromIndex(catalog: TableCatalog, indexTable: String,
                             allowStale: Boolean = false,
                             allowedIds: Option[DataFrame] = None,
                             allowedIdCol: String = "id"): DataFrame = {
-    val m = readMeta(catalog, indexTable, "lsh")
-    requireFresh(m, indexTable, allowStale)
-    // filtered search: the neighbor join runs entirely inside the
-    // allowed subset (both the row being matched and its candidates),
-    // restricted BEFORE bucketing fans out
+    val (m, _, live) = serve(catalog, indexTable, Lsh, allowStale, None,
+      allowedIds, allowedIdCol)
     Ann.bucketNeighborsFrom(
-      graft.core.Fence(restrictTo(liveAssign(catalog, indexTable),
-          allowedIds, allowedIdCol)
-        .select(col("id"), col("v"), col("nrm"), col("bucket"))),
+      graft.core.Fence(
+        live.select(col("id"), col("v"), col("nrm"), col("bucket"))),
       Ann.NearDupHotCap, Ann.NearDupHotSalts, m.dim)
   }
 
@@ -818,35 +629,357 @@ object AnnIndex {
     * constant, same bound as the broadcast the fit-inline form
     * already pays) and equi-joins the probed cells against the
     * cell-partitioned assignment table. Same staleness contract as
-    * [[lshNeighborsFromIndex]]. */
+    * [[lshNeighborsFromIndex]]; the allowed-id semi-join lands on the
+    * assignment scan BEFORE the cell equi-join and scoring, so k fills
+    * from the allowed subset. */
   def ivfTopKFromIndex(catalog: TableCatalog, indexTable: String,
                        queries: DataFrame, idCol: String, vecCol: String,
                        k: Int, nprobe: Int = 2,
                        allowStale: Boolean = false,
                        allowedIds: Option[DataFrame] = None,
                        allowedIdCol: String = "id"): DataFrame = {
-    val m = readMeta(catalog, indexTable, "ivf")
-    requireFresh(m, indexTable, allowStale)
-    val cents = readCentroids(catalog, indexTable)
-    // filtered search (the [[sq8TopKFromIndex]] contract): the
-    // allowed-id semi-join lands on the assignment scan BEFORE the
-    // cell equi-join and scoring, so k fills from the allowed subset
-    val assigned = restrictTo(liveAssign(catalog, indexTable),
-        allowedIds, allowedIdCol)
-      .select(col("id"), col("v"), col("nrm"),
-        col("cell").cast("int").as("cell"))
-    Ann.ivfProbe(assigned, cents, queries, idCol, vecCol, k, nprobe,
-      m.dim)
+    val (m, fits, live) = serve(catalog, indexTable, Ivf, allowStale,
+      None, allowedIds, allowedIdCol)
+    Ann.ivfProbe(
+      live.select(col("id"), col("v"), col("nrm"),
+        col("cell").cast("int").as("cell")),
+      fits.cents.get, queries, idCol, vecCol, k, nprobe, m.dim)
   }
 
-  // ---- internals ------------------------------------------------------
+  // ---- the per-kind codec ---------------------------------------------
 
-  /** Drop every `dseg=` tombstone partition — called by each REBUILD
-    * inside its locked block: the new index generation starts from a
-    * clean slate, and tombstones recorded against the PREVIOUS
-    * generation's rows must not silently hide a rebuilt corpus's
-    * legitimate re-use of a previously-deleted id (the exact silent
-    * hide the append re-insert guard refuses loudly). */
+  /** A kind's corpus-level fit as persisted beside its index: coarse
+    * centroids (`_cent`) and PQ codebooks (`_pqcent`), each as
+    * (values, assignment constant) pairs — the norm for IVF's cosine
+    * cells, the self-dot for the L2 scorers. None for a kind that
+    * trains neither. */
+  private final case class Fits(
+      cents: Option[Array[(Seq[Double], Double)]] = None,
+      books: Option[Array[Array[(Seq[Double], Double)]]] = None)
+
+  /** What one index kind adds to the shared lifecycle: its name in the
+    * meta, the sub-layout of its segments (`pk` or `cell`), whether it
+    * carries a corpus-level fit that can go stale (and the build to
+    * name when it does), how to `load` its persisted [[Fits]], and how
+    * to `encode` a batch under them. */
+  private final case class IndexKind(name: String, sub: String,
+      fitted: Boolean, build: String)(
+      val load: (TableCatalog, String) => Fits,
+      encode: (DataFrame, String, String, Meta, Fits) => DataFrame) {
+
+    /** Encode a build or append batch under `fits` — the one front
+      * every indexed row passes. A NULL id is refused loudly here
+      * (the stored id type is unchanged): [[deleteIds]] refuses NULL
+      * ids, so such a row could never be taken down. Each encoding
+      * checks the vector width ([[Ann.checkedVec]]). */
+    def assign(data: DataFrame, idCol: String, vecCol: String, m: Meta,
+               fits: Fits): DataFrame =
+      encode(data.withColumn(idCol, when(col(idCol).isNull, raise_error(
+          lit(s"AnnIndex: indexed id is NULL — it could never be " +
+            "deleted"))).otherwise(col(idCol))),
+        idCol, vecCol, m, fits)
+  }
+
+  /** LSH: (id, v, nrm, bucket) under the recorded plane count, pk by
+    * bucket. */
+  private val Lsh = IndexKind("lsh", "pk", fitted = true, "buildLsh")(
+    (_, _) => Fits(),
+    (data, idCol, vecCol, m, _) =>
+      data.select(col(idCol).as("id"),
+          Ann.checkedVec(Ann.toDouble(col(vecCol)), m.dim).as("v"))
+        .withColumn("nrm", sqrt(Ann.dotUnrolled(col("v"), col("v"), m.dim)))
+        .withColumn("bucket", Ann.bucket(col("v"), m.geometry, m.dim))
+        .withColumn("pk", pmod(col("bucket"), lit(LshPkBuckets))))
+
+  /** IVF: (id, v, nrm) under the trained cosine cells. */
+  private val Ivf = IndexKind("ivf", "cell", fitted = true, "buildIvf")(
+    (catalog, t) => Fits(cents =
+      Some(readVecs(catalog, t + "_cent", v => math.sqrt(Ann.selfDot(v)))
+        .flatten)),
+    (data, idCol, vecCol, m, fits) =>
+      Ann.withNorms(data, idCol, vecCol, m.dim)
+        .withColumn("cell", array_max(
+          Ann.centroidScores(fits.cents.get, col("v"), col("nrm")))
+          .getField("cell")))
+
+  /** SQ8: (id, codes-as-tinyint, integer self-dot, scale, pk): codes
+    * are always in [-127, 127] so the byte cast is lossless, and
+    * parquet's annotated-int8 + dictionary encoding stores them at
+    * code (not float) width — the scan-cost saving the index exists
+    * for. pk by id bounds directory counts; a top-k probe scans all
+    * of them by design (brute force). No fit to go stale. */
+  private val Sq8 = IndexKind("sq8", "pk", fitted = false, "buildSq8")(
+    (_, _) => Fits(),
+    (data, idCol, vecCol, m, _) =>
+      Ann.sq8Quantized(data, idCol, vecCol, "id", m.dim)
+        .select(col("id"),
+          transform(col("id_q"), x => x.cast("byte")).as("q"),
+          col("id_qq").as("qq"), col("id_sc").as("sc"))
+        .withColumn("pk", pmod(col("id"), lit(LshPkBuckets))))
+
+  /** PQ: (id, c0 … c_{M−1}, pk) — M small ints per vector
+    * ([[Ann.pqEncode]]) under the frozen codebooks, pk by id. */
+  private val Pq = IndexKind("pq", "pk", fitted = true, "buildPq")(
+    (catalog, t) => Fits(books = Some(readBooks(catalog, t))),
+    (data, idCol, vecCol, m, fits) =>
+      Ann.pqEncode(data, idCol, vecCol, fits.books.get, m.geom)
+        .withColumn("pk", pmod(col("id"), lit(LshPkBuckets))))
+
+  /** IVF-PQ: (id, cell, c0 … c_{M−1}) — L2 cell under the frozen
+    * coarse quantizer, residual encoded under the frozen codebooks
+    * ([[Ann.residualFrame]] + [[Ann.pqEncodeOn]]), under the recorded
+    * metric. */
+  private val IvfPq = IndexKind("ivfpq", "cell", fitted = true,
+      "buildIvfPq")(
+    (catalog, t) => Fits(
+      Some(readVecs(catalog, t + "_cent", Ann.selfDot).flatten),
+      Some(readBooks(catalog, t))),
+    (data, idCol, vecCol, m, fits) =>
+      Ann.pqEncodeOn(
+        Ann.residualFrame(Ann.metricFrame(data, idCol, vecCol, m.dim,
+          m.metric), fits.cents.get),
+        fits.books.get, keep = Seq("id", "cell"), m.geom))
+
+  private val Kinds = Seq(Lsh, Ivf, Sq8, Pq, IvfPq)
+
+  private final case class Meta(kind: String, geometry: Int, dim: Int,
+                                pqM: Int, pqK: Int,
+                                fittedN: Long, indexedN: Long,
+                                metric: String) {
+    /** The recorded per-call geometry probes must serve under. */
+    def geom: Ann.Geom = Ann.Geom(dim, pqM, pqK)
+    def codec: IndexKind = Kinds.find(_.name == kind).get
+  }
+
+  // ---- the shared lifecycle -------------------------------------------
+
+  /** The one build commit: under the assignment lock, flip an existing
+    * meta to the rebuild marker, then write the fit artifacts as
+    * concurrent lanes beside the new segment 0 (which drops every
+    * other segment and drains the tombstones — a new index generation
+    * starts from a clean slate), then the segment count, and the meta
+    * LAST. The lanes land in disjoint tables and nothing reads them
+    * until the meta commits (the marker refuses every probe until
+    * then). */
+  private def commitBuild(catalog: TableCatalog, data: DataFrame,
+                          idCol: String, vecCol: String,
+                          indexTable: String, m: Meta, fits: Fits): Unit =
+    catalog.withTableLock(assignTableOf(indexTable)) {
+      markRebuilding(catalog, indexTable)
+      val fitLanes =
+        fits.cents.map(c => () =>
+          writeVecs(catalog, indexTable + "_cent", Seq(c), keyed = false)) ++
+        fits.books.map(b => () =>
+          writeVecs(catalog, indexTable + "_pqcent", b.toSeq, keyed = true))
+      graft.core.Par.concurrently(fitLanes.toSeq :+ (() => {
+        writeSeg(catalog, indexTable,
+          m.codec.assign(data, idCol, vecCol, m, fits), "0", m.codec.sub)
+        dropOtherSegs(catalog, indexTable, keep = "0")
+        drainDels(catalog, indexTable)
+      }))
+      writeSegCounts(catalog, indexTable, Map("0" -> m.indexedN))
+      writeMeta(catalog, indexTable, m)
+    }
+
+  /** The one append: under the assignment lock, read the meta (of
+    * `expected` kind, or whichever kind it records), encode the batch
+    * under the kind's LOADED fits, and land it as one segment `segKey`
+    * (default: the next numeric one). `indexed_n` is the sum of the
+    * OTHER segments' recorded counts plus the batch — exact under
+    * replay (a replayed segKey overwrites itself, so its old count
+    * drops out of the sum). */
+  private def append(catalog: TableCatalog, data: DataFrame,
+                     idCol: String, vecCol: String, indexTable: String,
+                     expected: Option[IndexKind], segKey: Option[String],
+                     allowStale: Boolean): Unit =
+    catalog.withTableLock(assignTableOf(indexTable)) {
+      val m = readMeta(catalog, indexTable, expected)
+      val assigned = m.codec.assign(data, idCol, vecCol, m,
+        m.codec.load(catalog, indexTable))
+      val incoming = data.count()
+      val key = segKey.getOrElse(
+        nextKey(catalog, assignTableOf(indexTable), "seg"))
+      // checked BEFORE the write — a refused append must not leave
+      // orphan segment rows that probes (which read the whole table,
+      // not the meta's count) would silently serve
+      val prior = readSegCounts(catalog, indexTable)
+      val indexed = (prior - key).values.sum + incoming
+      requireFresh(m.copy(indexedN = indexed), indexTable, allowStale)
+      // re-insert guard: an id-level tombstone (deleteIds) cannot tell a
+      // deleted row from a newer row under the same id — appending one
+      // would be silently hidden by every probe's anti-join. Refuse
+      // loudly and name the purge. Checked BEFORE any write (a refused
+      // append leaves nothing behind); one O(batch ⋈ tombstones)
+      // semi-join, and only when tombstones exist at all.
+      deletedIds(catalog, indexTable).foreach { dels =>
+        require(assigned.select(col("id"))
+            .join(dels, Seq("id"), "left_semi").limit(1).isEmpty,
+          s"AnnIndex: append into '$indexTable' contains ids that are " +
+            "currently delete-tombstoned — run AnnIndex.compactSegs to " +
+            "purge the tombstones before re-inserting a deleted id")
+      }
+      // replay tombstone: drop the key's recorded count BEFORE rewriting
+      // its segment, so a crash mid-overwrite leaves a segment that
+      // readSegCounts RECOUNTS from disk (exact for whatever the crash
+      // actually left committed) instead of a stale recorded count that
+      // silently misstates indexed_n until the batch is replayed
+      if (prior.contains(key))
+        writeSegCounts(catalog, indexTable, prior - key)
+      writeSeg(catalog, indexTable, assigned, key, m.codec.sub)
+      writeSegCounts(catalog, indexTable, prior - key + (key -> incoming))
+      writeMeta(catalog, indexTable, m.copy(indexedN = indexed))
+    }
+
+  /** The one serving read every probe starts with: the meta (of the
+    * probe's kind, fresh unless `allowStale`), the requested `metric`
+    * checked against the RECORDED one (served from the META like the
+    * geometry — None serves the recorded one, a disagreeing request is
+    * refused loudly), the kind's loaded fits, and the LIVE assignment
+    * rows restricted to `allowedIds`. */
+  private def serve(catalog: TableCatalog, indexTable: String,
+                    kind: IndexKind, allowStale: Boolean,
+                    metric: Option[String],
+                    allowedIds: Option[DataFrame] = None,
+                    allowedIdCol: String = "id")
+      : (Meta, Fits, DataFrame) = {
+    val m = readMeta(catalog, indexTable, Some(kind))
+    requireFresh(m, indexTable, allowStale)
+    metric.foreach { req =>
+      require(req == m.metric,
+        s"AnnIndex: '$indexTable' was built for metric '${m.metric}' " +
+          s"but the probe requested '$req' — probes serve the " +
+          "RECORDED metric; rebuild with the desired one")
+    }
+    (m, kind.load(catalog, indexTable),
+      restrictTo(liveAssign(catalog, indexTable), allowedIds,
+        allowedIdCol))
+  }
+
+  /** The one meta read: refuses a missing meta (no build, or one that
+    * crashed mid-write), the rebuild marker (a rebuild that crashed
+    * mid-write), and a kind other than `expected`. Older meta rows
+    * serve under the defaults of their time: no `indexed_n` (pre-round
+    * 13, never appended to: indexed == fitted), no `pq_m`/`pq_k`
+    * (pre-round 15: the compiled-in gate geometry), no `metric`
+    * (pre-round 16: cosine was the only metric). */
+  private def readMeta(catalog: TableCatalog, indexTable: String,
+                       expected: Option[IndexKind]): Meta = {
+    require(catalog.tableExists(indexTable),
+      s"AnnIndex: no index meta at '$indexTable' — build (or seed-build) " +
+        "it first; a missing meta also covers a build that crashed " +
+        "mid-write")
+    val row = catalog.read(indexTable).collect()(0)
+    val k = row.getString(row.fieldIndex("kind"))
+    require(k != "rebuilding",
+      s"AnnIndex: a rebuild of '$indexTable' crashed mid-write — " +
+        "re-run the build before using it")
+    expected.foreach(e => require(k == e.name,
+      s"AnnIndex: '$indexTable' is a '$k' index, expected '${e.name}'"))
+    require(Kinds.exists(_.name == k),
+      s"AnnIndex: '$indexTable' records unknown index kind '$k'")
+    def field[T](name: String, legacy: => T): T =
+      if (row.schema.fieldNames.contains(name)) row.getAs[T](name)
+      else legacy
+    val fitted = row.getLong(row.fieldIndex("fitted_n"))
+    Meta(k, row.getInt(row.fieldIndex("geometry")),
+      row.getInt(row.fieldIndex("dim")),
+      field("pq_m", Ann.PqSubspaces), field("pq_k", Ann.PqCodebook),
+      fitted, field("indexed_n", fitted), field("metric", "cosine"))
+  }
+
+  private def writeMeta(catalog: TableCatalog, indexTable: String,
+                        m: Meta): Unit = {
+    import catalog.spark.implicits._
+    catalog.writeFull(
+      Seq((m.kind, m.geometry, m.dim, m.pqM, m.pqK, m.fittedN, m.indexedN,
+          m.metric))
+        .toDF("kind", "geometry", "dim", "pq_m", "pq_k",
+          "fitted_n", "indexed_n", "metric"),
+      indexTable)
+  }
+
+  /** Rebuild marker: a build over an EXISTING index flips the meta to
+    * kind `rebuilding` before touching any data table, so a crash
+    * mid-rebuild fails every subsequent read/append/probe loudly
+    * ([[readMeta]] rejects the marker by name) instead of serving a
+    * mix of old-fit and new-fit rows under the old meta. The
+    * successful build's final [[writeMeta]] replaces the marker; a
+    * first build has no meta to mark (missing meta already reads as
+    * "no index"). */
+  private def markRebuilding(catalog: TableCatalog,
+                             indexTable: String): Unit =
+    if (catalog.tableExists(indexTable))
+      writeMeta(catalog, indexTable,
+        Meta("rebuilding", 0, 0, 0, 0, 0L, 0L, "cosine"))
+
+  private def requireFresh(m: Meta, indexTable: String,
+                           allowStale: Boolean): Unit =
+    require(!m.codec.fitted || allowStale ||
+        m.indexedN.toDouble <= MaxDriftFactor * m.fittedN.toDouble,
+      s"AnnIndex: '$indexTable' holds ${m.indexedN} vectors but its " +
+        s"${m.kind} geometry was fitted for ${m.fittedN} " +
+        f"(drift ${m.indexedN.toDouble / m.fittedN}%.2fx > " +
+        f"$MaxDriftFactor%.1fx) — rebuild with AnnIndex.${m.codec.build}" +
+        " (or pass allowStale = true to serve from the stale fit anyway)")
+
+  // ---- fit artifacts --------------------------------------------------
+
+  /** The fit-artifact writer: vector `cell` of group `m` lands as
+    * (m, cell, pos, val) rows — without the `m` column unless `keyed`
+    * (the `_cent` layout is one group; `_pqcent` keys by subspace). */
+  private def writeVecs(catalog: TableCatalog, table: String,
+                        groups: Seq[Array[(Seq[Double], Double)]],
+                        keyed: Boolean): Unit = {
+    import catalog.spark.implicits._
+    val rows = for {
+      (g, m) <- groups.zipWithIndex
+      ((v, _), cell) <- g.zipWithIndex
+      (x, pos) <- v.zipWithIndex
+    } yield (m, cell, pos, x)
+    val df = rows.toDF("m", "cell", "pos", "val")
+    catalog.writeFull(if (keyed) df else df.drop("m"), table)
+  }
+
+  /** [[writeVecs]]' reader: groups[m][cell] (a table without `m` is one
+    * group), each vector in `pos` order and paired with `aux` of its
+    * values — the norm or self-dot the assignment scorers expect,
+    * recomputed with the fold training used. */
+  private def readVecs(catalog: TableCatalog, table: String,
+                       aux: Seq[Double] => Double)
+      : Array[Array[(Seq[Double], Double)]] = {
+    val df = catalog.read(table)
+    val m = if (df.columns.contains("m")) col("m") else lit(0)
+    df.select(m, col("cell"), col("pos"), col("val")).collect()
+      .groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (_, group) =>
+        group.groupBy(_.getInt(1)).toSeq.sortBy(_._1).map { case (_, rows) =>
+          val v: Seq[Double] =
+            rows.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq
+          (v, aux(v))
+        }.toArray
+      }.toArray
+  }
+
+  /** Codebooks back from `_pqcent` as (values, self-dot) — the shape
+    * [[Ann.centroidScoresL2]] assigns against. */
+  private def readBooks(catalog: TableCatalog,
+      indexTable: String): Array[Array[(Seq[Double], Double)]] =
+    readVecs(catalog, indexTable + "_pqcent", Ann.selfDot)
+
+  // ---- segments and tombstones ----------------------------------------
+
+  /** The next numeric partition key of `table` (non-numeric keys such
+    * as an ingestion sink's `b<batchId>` are skipped). */
+  private def nextKey(catalog: TableCatalog, table: String,
+                      field: String): String =
+    (catalog.listPartitions(table, field)
+      .flatMap(s => scala.util.Try(s.toLong).toOption)
+      .foldLeft(0L)(math.max) + 1L).toString
+
+  /** Drop every `dseg=` tombstone partition — on each REBUILD (the new
+    * index generation starts from a clean slate: tombstones recorded
+    * against the PREVIOUS generation's rows must not silently hide a
+    * rebuilt corpus's legitimate re-use of a previously-deleted id)
+    * and as the last step of [[compactSegs]]. */
   private def drainDels(catalog: TableCatalog,
                         indexTable: String): Unit =
     catalog.listPartitions(delsTableOf(indexTable), "dseg")
@@ -914,105 +1047,11 @@ object AnnIndex {
     }
   }
 
-  private def assignLsh(data: DataFrame, idCol: String, vecCol: String,
-                        planes: Int, dim: Int): DataFrame =
-    data.select(col(idCol).as("id"),
-        Ann.checkedVec(Ann.toDouble(col(vecCol)), dim).as("v"))
-      .withColumn("nrm", sqrt(Ann.dotUnrolled(col("v"), col("v"), dim)))
-      .withColumn("bucket", Ann.bucket(col("v"), planes, dim))
-      .withColumn("pk", pmod(col("bucket"), lit(LshPkBuckets)))
-
-  /** (id, codes-as-tinyint, integer self-dot, pk): codes are always in
-    * [-127, 127] so the byte cast is lossless, and parquet's
-    * annotated-int8 + dictionary encoding stores them at code (not
-    * float) width — the scan-cost saving the index exists for. pk
-    * sub-layout bounds directory counts and serves point lookups;
-    * a top-k probe scans all buckets by design (brute force). */
-  private def assignSq8(data: DataFrame, idCol: String,
-                        vecCol: String, dim: Int): DataFrame =
-    Ann.sq8Quantized(data, idCol, vecCol, "id", dim)
-      .select(col("id"),
-        transform(col("id_q"), x => x.cast("byte")).as("q"),
-        col("id_qq").as("qq"),
-        col("id_sc").as("sc"))
-      .withColumn("pk", pmod(col("id"), lit(LshPkBuckets)))
-
-  /** (id, c0 … c_{M−1}, pk): the PQ code row — M small ints per
-    * vector ([[Ann.pqEncode]]), pk sub-layout as in [[assignSq8]]. */
-  private def assignPq(data: DataFrame, idCol: String, vecCol: String,
-      books: Array[Array[(Seq[Double], Double)]],
-      geom: Ann.Geom): DataFrame =
-    Ann.pqEncode(data, idCol, vecCol, books, geom)
-      .withColumn("pk", pmod(col("id"), lit(LshPkBuckets)))
-
-  /** Codebooks back from `_pqcent`, with self-dots recomputed by the
-    * same left fold the training used — the (values, self-dot) shape
-    * [[Ann.centroidScoresL2]] assigns against. */
-  private def readBooks(catalog: TableCatalog,
-      indexTable: String): Array[Array[(Seq[Double], Double)]] = {
-    def selfDot(v: Seq[Double]): Double = {
-      var t = 0.0; var i = 0
-      while (i < v.length) { t += v(i) * v(i); i += 1 }
-      t
-    }
-    catalog.read(indexTable + "_pqcent")
-      .orderBy(col("m"), col("cell"), col("pos")).collect()
-      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map { case (_, mRows) =>
-        mRows.groupBy(_.getInt(1)).toSeq.sortBy(_._1)
-          .map { case (_, rows) =>
-            val v: Seq[Double] = rows.sortBy(_.getInt(2))
-              .map(_.getDouble(3)).toSeq
-            (v, selfDot(v))
-          }.toArray
-      }.toArray
-  }
-
-  private def assignIvf(data: DataFrame, idCol: String, vecCol: String,
-                        cents: Array[(Seq[Double], Double)],
-                        dim: Int): DataFrame =
-    Ann.withNorms(data, idCol, vecCol, dim)
-      .withColumn("cell",
-        array_max(Ann.centroidScores(cents, col("v"), col("nrm")))
-          .getField("cell"))
-
-  /** (id, cell, c0 … c_{M−1}): the residual IVF-PQ code row — L2 cell
-    * under the frozen coarse quantizer, residual encoded under the
-    * frozen codebooks ([[Ann.residualFrame]] + [[Ann.pqEncodeOn]]). */
-  private[ann] def assignIvfPq(data: DataFrame, idCol: String, vecCol: String,
-      cents: Array[(Seq[Double], Double)],
-      books: Array[Array[(Seq[Double], Double)]],
-      geom: Ann.Geom, metric: String): DataFrame =
-    Ann.pqEncodeOn(
-      Ann.residualFrame(
-        Ann.metricFrame(data, idCol, vecCol, geom.dim, metric), cents),
-      books, keep = Seq("id", "cell"), geom)
-
-  /** Centroids back from `_cent` as (values, SELF-DOT) — the shape
-    * [[Ann.centroidScoresL2]] assigns against (the cosine family's
-    * [[readCentroids]] carries (values, norm) instead). */
-  private def readCentroidsL2(catalog: TableCatalog,
-      indexTable: String): Array[(Seq[Double], Double)] = {
-    def selfDot(v: Seq[Double]): Double = {
-      var t = 0.0; var i = 0
-      while (i < v.length) { t += v(i) * v(i); i += 1 }
-      t
-    }
-    catalog.read(indexTable + "_cent")
-      .orderBy(col("cell"), col("pos")).collect()
-      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map { case (_, rows) =>
-        val v: Seq[Double] = rows.sortBy(_.getInt(1))
-          .map(_.getDouble(2)).toSeq
-        (v, selfDot(v))
-      }.toArray
-  }
-
   /** One assignment segment: overwrites exactly `_assign/seg=<key>`
-    * (other segments untouched), sub-laid-out by pk (LSH) or cell
-    * (IVF). `repartition(subField)` first so each sub-directory gets
+    * (other segments untouched), sub-laid-out by the kind's `pk` or
+    * `cell`. `repartition(subField)` first so each sub-directory gets
     * ~one file instead of one per shuffle task. */
-  private[ann] def writeSeg(catalog: TableCatalog, indexTable: String,
+  private def writeSeg(catalog: TableCatalog, indexTable: String,
                        assigned: DataFrame, segKey: String,
                        subField: String): Unit =
     catalog.writeSubPartitioned(
@@ -1053,60 +1092,10 @@ object AnnIndex {
 
   private def writeSegCounts(catalog: TableCatalog, indexTable: String,
                              counts: Map[String, Long]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    import spark.implicits._
+    import catalog.spark.implicits._
     catalog.writeFull(
       counts.toSeq.sortBy(_._1).toDF("seg", "rows"),
       segMetaTableOf(indexTable))
-  }
-
-  private def appendSeg(catalog: TableCatalog, indexTable: String,
-                        m: Meta, assigned: DataFrame, incoming: Long,
-                        segKey: Option[String], subField: String,
-                        allowStale: Boolean): Unit = {
-    val assignTable = assignTableOf(indexTable)
-    val key = segKey.getOrElse {
-      val next = catalog.listPartitions(assignTable, "seg")
-        .flatMap(s => scala.util.Try(s.toLong).toOption)
-        .foldLeft(0L)(math.max) + 1
-      next.toString
-    }
-    // post-append total, exact under replay: rows outside this segment
-    // plus the incoming batch (a replayed segKey overwrites itself —
-    // its old count drops out of the sum). Checked BEFORE the write —
-    // a refused append must not leave orphan segment rows that probes
-    // (which read the whole table, not the meta's count) would
-    // silently serve.
-    val prior = readSegCounts(catalog, indexTable)
-    val indexed = prior.collect {
-      case (s, n) if s != key => n
-    }.sum + incoming
-    requireFresh(m.copy(indexedN = indexed), indexTable, allowStale)
-    // re-insert guard: an id-level tombstone (deleteIds) cannot tell a
-    // deleted row from a newer row under the same id — appending one
-    // would be silently hidden by every probe's anti-join. Refuse
-    // loudly and name the purge. Checked BEFORE any write (a refused
-    // append leaves nothing behind); one O(batch ⋈ tombstones)
-    // semi-join, and only when tombstones exist at all.
-    deletedIds(catalog, indexTable).foreach { dels =>
-      require(assigned.select(col("id"))
-          .join(dels, Seq("id"), "left_semi").limit(1).isEmpty,
-        s"AnnIndex: append into '$indexTable' contains ids that are " +
-          "currently delete-tombstoned — run AnnIndex.compactSegs to " +
-          "purge the tombstones before re-inserting a deleted id")
-    }
-    // replay tombstone: drop the key's recorded count BEFORE rewriting
-    // its segment, so a crash mid-overwrite leaves a segment that
-    // readSegCounts RECOUNTS from disk (exact for whatever the crash
-    // actually left committed) instead of a stale recorded count that
-    // silently misstates indexed_n until the batch is replayed
-    if (prior.contains(key))
-      writeSegCounts(catalog, indexTable, prior - key)
-    writeSeg(catalog, indexTable, assigned, key, subField)
-    writeSegCounts(catalog, indexTable,
-      prior - key + (key -> incoming))
-    writeMeta(catalog, indexTable, m.kind, m.geometry, m.dim,
-      m.pqM, m.pqK, m.fittedN, indexed, m.metric)
   }
 
   private def dropOtherSegs(catalog: TableCatalog, indexTable: String,
@@ -1114,109 +1103,4 @@ object AnnIndex {
     catalog.listPartitions(assignTableOf(indexTable), "seg")
       .filter(_ != keep)
       .foreach(catalog.deletePartition(assignTableOf(indexTable), "seg", _))
-
-  private def readCentroids(catalog: TableCatalog,
-      indexTable: String): Array[(Seq[Double], Double)] = {
-    def normOf(v: Seq[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      math.sqrt(s)
-    }
-    catalog.read(indexTable + "_cent")
-      .orderBy(col("cell"), col("pos")).collect()
-      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map { case (_, rows) =>
-        val v: Seq[Double] = rows.sortBy(_.getInt(1))
-          .map(_.getDouble(2)).toSeq
-        (v, normOf(v))
-      }.toArray
-  }
-
-  private case class Meta(kind: String, geometry: Int, dim: Int,
-                          pqM: Int, pqK: Int,
-                          fittedN: Long, indexedN: Long,
-                          metric: String) {
-    /** The recorded per-call geometry probes must serve under. */
-    def geom: Ann.Geom = Ann.Geom(dim, pqM, pqK)
-  }
-
-  private def writeMeta(catalog: TableCatalog, indexTable: String,
-                        kind: String, geometry: Int, dim: Int,
-                        pqM: Int, pqK: Int, fittedN: Long,
-                        indexedN: Long,
-                        metric: String = "cosine"): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    import spark.implicits._
-    catalog.writeFull(
-      Seq((kind, geometry, dim, pqM, pqK, fittedN, indexedN, metric))
-        .toDF("kind", "geometry", "dim", "pq_m", "pq_k",
-          "fitted_n", "indexed_n", "metric"),
-      indexTable)
-  }
-
-  /** Rebuild marker: a build over an EXISTING index flips the meta to
-    * kind `rebuilding` before touching any data table, so a crash
-    * mid-rebuild fails every subsequent read/append/probe loudly
-    * ([[readMeta]] rejects the marker by name) instead of serving a
-    * mix of old-fit and new-fit rows under the old meta. The
-    * successful build's final [[writeMeta]] replaces the marker; a
-    * first build has no meta to mark (missing meta already reads as
-    * "no index"). */
-  private def markRebuilding(catalog: TableCatalog,
-                             indexTable: String): Unit =
-    if (catalog.tableExists(indexTable))
-      writeMeta(catalog, indexTable, "rebuilding", 0, 0, 0, 0, 0L, 0L)
-
-  private def readMeta(catalog: TableCatalog, indexTable: String,
-                       kind: String): Meta = {
-    require(catalog.tableExists(indexTable),
-      s"AnnIndex: no index meta at '$indexTable' — build it first " +
-        "(a missing meta also covers a build that crashed mid-write)")
-    val row = catalog.read(indexTable).collect()(0)
-    val k = row.getString(row.fieldIndex("kind"))
-    require(k != "rebuilding",
-      s"AnnIndex: a rebuild of '$indexTable' crashed mid-write — " +
-        "re-run the build before serving from it")
-    require(k == kind,
-      s"AnnIndex: '$indexTable' is a '$k' index, expected '$kind'")
-    val fitted = row.getLong(row.fieldIndex("fitted_n"))
-    // a pre-round-13 meta has no indexed_n: the table was never
-    // appended to, so indexed == fitted
-    val indexed =
-      if (row.schema.fieldNames.contains("indexed_n"))
-        row.getLong(row.fieldIndex("indexed_n"))
-      else fitted
-    // a pre-round-15 meta has no PQ shape columns: it was built under
-    // the compiled-in gate geometry
-    def intOr(name: String, dflt: Int): Int =
-      if (row.schema.fieldNames.contains(name))
-        row.getInt(row.fieldIndex(name))
-      else dflt
-    // a pre-round-16 meta has no metric column: cosine was the only
-    // metric that existed then
-    val metric =
-      if (row.schema.fieldNames.contains("metric"))
-        row.getString(row.fieldIndex("metric"))
-      else "cosine"
-    Meta(k, row.getInt(row.fieldIndex("geometry")),
-      row.getInt(row.fieldIndex("dim")),
-      intOr("pq_m", Ann.PqSubspaces), intOr("pq_k", Ann.PqCodebook),
-      fitted, indexed, metric)
-  }
-
-  private def requireFresh(m: Meta, indexTable: String,
-                           allowStale: Boolean): Unit =
-    // sq8 quantizes per-vector — no corpus-level fit exists to drift
-    if (m.kind != "sq8")
-    require(allowStale ||
-        m.indexedN.toDouble <= MaxDriftFactor * m.fittedN.toDouble,
-      s"AnnIndex: '$indexTable' holds ${m.indexedN} vectors but its " +
-        s"${m.kind} geometry was fitted for ${m.fittedN} " +
-        f"(drift ${m.indexedN.toDouble / m.fittedN}%.2fx > " +
-        f"$MaxDriftFactor%.1fx) — rebuild with AnnIndex.build" +
-        s"${m.kind match {
-          case "lsh" => "Lsh"; case "pq" => "Pq"
-          case "ivfpq" => "IvfPq"; case _ => "Ivf"
-        }} (or pass " +
-        "allowStale = true to serve from the stale fit anyway)")
 }

@@ -1129,7 +1129,7 @@ object LlmQueries {
     // BOTH feeds: documents through the incremental corpus pipeline
     // (seen-state + emit tables, compactEvery = 2) and the corpus
     // embeddings through the streaming ANN ingestion sink into a
-    // persisted SQ8 index (seed build + ingestSq8Batch, its own
+    // persisted SQ8 index (seed build + ingestBatch, its own
     // compaction cadence). Then the finish: a BPE vocabulary trained
     // ONCE on the first batch and persisted (BpeIndex), semantic
     // decontamination of the survivors probed OFF THE LIVE INDEX
@@ -1178,7 +1178,7 @@ object LlmQueries {
           if (i == 0)
             AnnIndex.buildSq8(cat, vb, "vec_id", "embedding", "dp06_ann")
           else
-            AnnIndex.ingestSq8Batch(cat, vb, "vec_id", "embedding",
+            AnnIndex.ingestBatch(cat, vb, "vec_id", "embedding",
               "dp06_ann", i.toLong, compactEvery = 2)
         },
         // vocabulary: trained once on the first batch, persisted;
@@ -1251,7 +1251,7 @@ object LlmQueries {
           if (i == 0)
             AnnIndex.buildSq8(cat, vb, "vec_id", "embedding", "dp12_ann")
           else
-            AnnIndex.ingestSq8Batch(cat, vb, "vec_id", "embedding",
+            AnnIndex.ingestBatch(cat, vb, "vec_id", "embedding",
               "dp12_ann", i.toLong, compactEvery = 2)
         },
         () => BpeIndex.build(cat, docs.filter(col("doc_id") <= cut1),
@@ -1543,7 +1543,7 @@ object LlmQueries {
     // verbatim.
     // Streaming ingestion into a persisted ANN index: the corpus's
     // embedding feed arrives as 3 micro-batches through the reusable
-    // foreachBatch sink (AnnIndex.ingestSq8Batch) — segKey = batchId
+    // foreachBatch sink (AnnIndex.ingestBatch) — segKey = batchId
     // makes a replayed micro-batch overwrite its own segment
     // (idempotent end to end), and compactEvery = 2 exercises the
     // in-loop compaction cadence that bounds the segment-directory
@@ -1573,7 +1573,7 @@ object LlmQueries {
         .writeStream
         .option("checkpointLocation", wh + "/_ckpt")
         .foreachBatch { (df: DataFrame, batchId: Long) =>
-          AnnIndex.ingestSq8Batch(cat, df, "vec_id", "embedding",
+          AnnIndex.ingestBatch(cat, df, "vec_id", "embedding",
             "ann_s", batchId, compactEvery = 2)
         }.start()
       try {

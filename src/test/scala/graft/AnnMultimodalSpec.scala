@@ -1193,6 +1193,157 @@ class AnnMultimodalSpec extends SparkSpec {
     intercept[IllegalArgumentException] { Ann.Geom(32, 8, 300) }
   }
 
+  // ---- the persisted format, pinned per index kind ----------------------
+  //
+  // One case per kind: how to build it and how to probe it. Every kind
+  // is built over ids 0..15, appended 16..23 and has one id deleted, so
+  // each table the lifecycle writes exists on disk.
+  private case class KindCase(kind: String, sub: String,
+      fits: Map[String, String], assign: String,
+      build: (graft.catalog.TableCatalog,
+        org.apache.spark.sql.DataFrame, String) => Unit,
+      probe: (graft.catalog.TableCatalog, String,
+        org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame)
+
+  private lazy val kindCases: Seq[KindCase] = {
+    import graft.ann.AnnIndex
+    val cent = "struct<cell:int,pos:int,val:double>"
+    val book = "struct<m:int,cell:int,pos:int,val:double>"
+    def q(v: org.apache.spark.sql.DataFrame) = v.filter($"vec_id" < 3)
+    Seq(
+      KindCase("lsh", "pk", Map.empty,
+        "struct<id:bigint,v:array<double>,nrm:double,bucket:bigint>",
+        (c, v, t) => AnnIndex.buildLsh(c, v, "vec_id", "embedding", t,
+          targetBucketRows = 4),
+        (c, t, _) => AnnIndex.lshNeighborsFromIndex(c, t)),
+      KindCase("ivf", "cell", Map("_cent" -> cent),
+        "struct<id:bigint,v:array<double>,nrm:double>",
+        (c, v, t) => AnnIndex.buildIvf(c, v, "vec_id", "embedding", t,
+          numCells = 4, trainIters = 1),
+        (c, t, v) => AnnIndex.ivfTopKFromIndex(c, t, q(v), "vec_id",
+          "embedding", 5)),
+      KindCase("sq8", "pk", Map.empty,
+        "struct<id:bigint,q:array<tinyint>,qq:bigint,sc:double>",
+        (c, v, t) => AnnIndex.buildSq8(c, v, "vec_id", "embedding", t),
+        (c, t, v) => AnnIndex.sq8TopKFromIndex(c, t, q(v), "vec_id",
+          "embedding", 5)),
+      KindCase("pq", "pk", Map("_pqcent" -> book),
+        "struct<id:bigint,c0:int,c1:int,c2:int,c3:int>",
+        (c, v, t) => AnnIndex.buildPq(c, v, "vec_id", "embedding", t,
+          trainIters = 1),
+        (c, t, v) => AnnIndex.pqTopKFromIndex(c, t, q(v), "vec_id",
+          "embedding", 5)),
+      KindCase("ivfpq", "cell", Map("_cent" -> cent, "_pqcent" -> book),
+        "struct<id:bigint,c0:int,c1:int,c2:int,c3:int>",
+        (c, v, t) => AnnIndex.buildIvfPq(c, v, "vec_id", "embedding", t,
+          numCells = 4, trainIters = 1, pqIters = 1),
+        (c, t, v) => AnnIndex.ivfPqRefineTopKFromIndex(c, t, v, q(v),
+          "vec_id", "embedding", 5, refine = 8)))
+  }
+
+  private def kindVecs(seed: Int, dim: Int = 64) = {
+    val rnd = new scala.util.Random(seed)
+    (0 until 24).map(i =>
+      (i.toLong, Array.fill(dim)(rnd.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
+  }
+
+  /** Every message in a throwable's cause chain. */
+  private def causes(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+
+  for (kc <- kindCases) test(s"persisted ${kc.kind} index format: " +
+      "table set, partition columns, assign/meta columns and types; " +
+      "a probe is unchanged under a legacy meta row") {
+    import graft.ann.AnnIndex
+    val vecs = kindVecs(53)
+    val wh = java.nio.file.Files.createTempDirectory("annfmt_").toString
+    val cat = new graft.catalog.TableCatalog(spark, wh)
+    val t = "fx"
+    kc.build(cat, vecs.filter($"vec_id" < 16), t)
+    AnnIndex.ingestBatch(cat, vecs.filter($"vec_id" >= 16), "vec_id",
+      "embedding", t, 1L)
+    AnnIndex.deleteIds(cat, Seq(5L).toDF("vec_id"), "vec_id", t)
+    // the table set
+    assert(cat.listTablesWithPrefix(t).toSet ==
+      (Set("", "_assign", "_segmeta", "_dels") ++ kc.fits.keySet)
+        .map(t + _))
+    // partition directories: seg, then the kind's sub-layout; dseg
+    assert(cat.listPartitions(t + "_assign", "seg") == Seq("0", "b1"))
+    Seq("0", "b1").foreach { s =>
+      assert(cat.listSubPartitions(t + "_assign", "seg", s, kc.sub)
+        .nonEmpty, s"seg=$s has no ${kc.sub}= directories")
+    }
+    assert(cat.listPartitions(t + "_dels", "dseg") == Seq("1"))
+    // column names and types: data columns, then partition columns
+    def dataCols(table: String, parts: Set[String]) =
+      org.apache.spark.sql.types.StructType(
+        cat.read(table).schema.filterNot(f => parts(f.name)))
+        .simpleString
+    val assignRead = cat.read(t + "_assign").schema.fieldNames.toSeq
+    assert(assignRead.takeRight(2) == Seq("seg", kc.sub), assignRead)
+    assert(dataCols(t + "_assign", Set("seg", kc.sub)) == kc.assign)
+    assert(dataCols(t + "_dels", Set("dseg")) == "struct<id:bigint>")
+    assert(dataCols(t + "_segmeta", Set.empty) ==
+      "struct<seg:string,rows:bigint>")
+    kc.fits.foreach { case (suffix, schema) =>
+      assert(dataCols(t + suffix, Set.empty) == schema, suffix)
+    }
+    assert(dataCols(t, Set.empty) == "struct<kind:string," +
+      "geometry:int,dim:int,pq_m:int,pq_k:int,fitted_n:bigint," +
+      "indexed_n:bigint,metric:string>")
+    val meta = cat.read(t).collect()(0)
+    assert(meta.getString(0) == kc.kind)
+    assert(meta.getLong(meta.fieldIndex("indexed_n")) == 24L)
+    // the legacy meta shapes readMeta still serves: no indexed_n
+    // (never appended), no pq_m/pq_k (the gate geometry), no metric
+    // (cosine) — rewritten in one row, the probe must not move
+    def canon() = kc.probe(cat, t, vecs).collect().map(_.toString)
+      .sorted.toSeq
+    val before = canon()
+    assert(before.nonEmpty)
+    val legacy = cat.read(t).drop("indexed_n", "pq_m", "pq_k", "metric")
+    val legacyRows = legacy.collect()
+    cat.writeFull(spark.createDataFrame(
+      java.util.Arrays.asList(legacyRows: _*), legacy.schema), t)
+    assert(cat.read(t).columns.toSeq ==
+      Seq("kind", "geometry", "dim", "fitted_n"))
+    assert(canon() == before)
+  }
+
+  for (kc <- kindCases) test(s"${kc.kind} index refuses bad build and " +
+      "append input: a wrong-width vector and a NULL id raise, and " +
+      "the index is unchanged") {
+    import graft.ann.AnnIndex
+    val vecs = kindVecs(59)
+    val wh = java.nio.file.Files.createTempDirectory("annbad_").toString
+    val cat = new graft.catalog.TableCatalog(spark, wh)
+    kc.build(cat, vecs.filter($"vec_id" < 16), "bx")
+    val before = kc.probe(cat, "bx", vecs).collect().map(_.toString)
+      .sorted.toSeq
+    val wide = Seq((100L, Array.fill(65)(0.1f))).toDF("vec_id", "embedding")
+    val nullId = Seq[(java.lang.Long, Array[Float])](
+      (null, Array.fill(64)(0.1f))).toDF("vec_id", "embedding")
+    val exWide = intercept[Exception] {
+      AnnIndex.ingestBatch(cat, wide, "vec_id", "embedding", "bx", 1L)
+    }
+    assert(causes(exWide).contains("expected 64-dim"), causes(exWide))
+    val exNull = intercept[Exception] {
+      AnnIndex.ingestBatch(cat, nullId, "vec_id", "embedding", "bx", 2L)
+    }
+    assert(causes(exNull).contains("NULL"), causes(exNull))
+    assert(cat.read("bx_assign").count() == 16L)
+    assert(kc.probe(cat, "bx", vecs).collect().map(_.toString)
+      .sorted.toSeq == before)
+    // a build refuses the same input (the shared front covers both)
+    val exBuild = intercept[Exception] {
+      kc.build(cat, vecs.filter($"vec_id" < 16).unionByName(nullId),
+        "bx2")
+    }
+    assert(causes(exBuild).contains("NULL"), causes(exBuild))
+  }
+
   test("kmeansCentroids: a cell that loses all members keeps its " +
        "previous centroid") {
     // two identical vectors seed both cells; assignment ties to the

@@ -1098,7 +1098,7 @@ class StreamingSpec extends SparkSpec {
       AnnIndex.buildSq8(cat, vecs.filter($"vec_id" < 10), "vec_id",
         "embedding", "ing")
       (0 until 5).foreach { i =>
-        AnnIndex.ingestSq8Batch(cat, batchOf(i), "vec_id", "embedding",
+        AnnIndex.ingestBatch(cat, batchOf(i), "vec_id", "embedding",
           "ing", i.toLong, compactEvery = every)
       }
       def indexedN = {
@@ -1120,7 +1120,7 @@ class StreamingSpec extends SparkSpec {
     // re-append duplicates rows seg 0 holds, and the in-loop
     // compaction that fires in the same call collapses them —
     // converged by the end of the replayed batch
-    AnnIndex.ingestSq8Batch(cat2, batchOf(3), "vec_id", "embedding",
+    AnnIndex.ingestBatch(cat2, batchOf(3), "vec_id", "embedding",
       "ing", 3L, compactEvery = 2)
     assert(cat2.listPartitions("ing_assign", "seg") == Seq("0"))
     val r2 = cat2.read("ing").collect()(0)
