@@ -17,12 +17,21 @@ import org.apache.spark.sql.SparkSession
   * in a fresh session).
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine's cores (driver contract: local[32]);
-    // SPARK_GRAFT_CPUS stays as the explicit override for experiments
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+  /** Scale-factor dir the bench times (`SPARK_GRAFT_SF_DIR`). */
+  private[graft] def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  // default to the machine's cores (driver contract: local[32]);
+  // SPARK_GRAFT_CPUS stays as the explicit override for experiments
+  private[graft] def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString)
+
+  /** Smallest scale factor: one pass here absorbs JVM/session/codegen
+    * start-up before anything is timed. */
+  private[graft] val WarmDir = "/root/testdata/sf0.001"
+
+  /** The session every bench measurement runs in. */
+  private[graft] def session(sfDir: String, cpus: String): SparkSession = {
     // Scale-adaptive shuffle width (round 17, guide §2.2): derived from
     // the INPUT SIZE, not the core count — `partitions = cpus` made
     // every reduce stage and streaming state store scale with the
@@ -72,13 +81,31 @@ object Bench {
         "org.apache.spark.scheduler.DAGScheduler",
         org.apache.logging.log4j.Level.FATAL)
     }
+    spark
+  }
 
-    def run(name: String, dir: String): Unit =
-      try SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        throw new RuntimeException(s"bench: query $name failed on $dir", e)
-      }
+  /** Materialize one query through a noop write. */
+  private[graft] def run(spark: SparkSession, name: String,
+                         dir: String): Unit =
+    try SparkEntry.queries(name)(spark, dir)
+      .write.format("noop").mode("overwrite").save()
+    catch { case e: Throwable =>
+      throw new RuntimeException(s"bench: query $name failed on $dir", e)
+    }
+
+  /** Drop cached frames and Fence checkpoint blocks synchronously, then
+    * GC so the ContextCleaner reclaims broadcast/shuffle blocks too. */
+  private[graft] def scrub(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    System.gc()
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = Bench.sfDir
+    val cpus = Bench.cpus
+    val spark = session(sfDir, cpus)
 
     // AMBIENT CANARY (frozen from round 12 — do not change this job):
     // a graft-independent workload (range -> string hash -> shuffle agg
@@ -90,22 +117,14 @@ object Bench {
     // slow queries is a real regression. The three positions also expose
     // within-run load swings that a single sample would hide. (Verdict
     // r11: the bench artifact must settle ambient itself.)
-    def scrub(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
     def canaryPass(): Double = {
-      scrub()
+      scrub(spark)
       // the canary's ENVIRONMENT is frozen with its code: it has run
       // with shuffle width = cpus since round 12, and its round-over-
       // round drift is the box-ambient meter — so it keeps that width
       // even now that the queries run size-derived (scoped, restored)
-      val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      try canaryBody()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
+      graft.core.Scoped.conf(spark,
+        "spark.sql.shuffle.partitions" -> cpus)(canaryBody())
     }
     def canaryBody(): Double = {
       val t0 = System.nanoTime()
@@ -127,8 +146,7 @@ object Bench {
     }
 
     val names = SparkEntry.queries.keys.toSeq.sorted
-    val warmDir = "/root/testdata/sf0.001"
-    names.foreach(run(_, warmDir))
+    names.foreach(run(spark, _, WarmDir))
     canaryPass() // warmup: absorb the canary's own codegen/plan cost
     var canaryMid = 0.0
 
@@ -139,9 +157,9 @@ object Bench {
       // late measurements into block-eviction benchmarks (dd03 measured
       // 73 s mid-run vs 5.3 s in a fresh JVM). Unpersist them
       // synchronously, then GC so the cleaner drops broadcasts too.
-      scrub()
+      scrub(spark)
       val t0 = System.nanoTime()
-      run(name, sfDir)
+      run(spark, name, sfDir)
       (System.nanoTime() - t0) / 1e9
     }
     // TWO timed passes per query, report the MIN: the same-HEAD spread
@@ -170,7 +188,7 @@ object Bench {
     // path must fail the bench run, not report a fake timing.
     val serving = {
       import org.apache.spark.sql.functions._
-      scrub()
+      scrub(spark)
       val wh = java.nio.file.Files
         .createTempDirectory("graft_bench_srv_").toString
       val cat = new graft.catalog.TableCatalog(spark, wh)

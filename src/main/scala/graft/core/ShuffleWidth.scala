@@ -10,9 +10,10 @@ package graft.core
   * 28% SLOWER end-to-end (the round-16 scaling inversion). Deriving the
   * width from bytes makes the same binary correct at both ends: a few
   * MB of local test data plans a handful of partitions; a 100 TB input
-  * plans thousands. Per-query A/B at 32 cores, sf0.1 (ProbeAqe):
-  * width 8 vs 32 → dp03 26.4→18.2 s, dp05 −28%, dd09 1.8→1.0 s,
-  * dd07 −11%, a10 −9%, ts17 −9%, ann17 flat; nothing regressed.
+  * plans thousands. Per-query A/B at 32 cores, sf0.1 (measured with
+  * the former ProbeAqe): width 8 vs 32 → dp03 26.4→18.2 s, dp05 −28%,
+  * dd09 1.8→1.0 s, dd07 −11%, a10 −9%, ts17 −9%, ann17 flat; nothing
+  * regressed.
   *
   * Results are width-invariant: every gate already passes the DuckDB
   * oracle at widths 4 (Verify default), 8 and 32 (the driver's two

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Scoped, Tables}
 import graft.ops.AsOfJoin
 
 /** Oracle-checked queries over the `events` stream table: tumbling-window
@@ -26,12 +26,8 @@ object EventQueries {
     * affected. Results are partition-count-invariant (the oracles
     * prove it). */
   private def withStatePartitions[T](s: SparkSession, n: Int)
-                                    (f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try f finally s.conf.set(key, prev)
-  }
+                                    (f: => T): T =
+    Scoped.conf(s, "spark.sql.shuffle.partitions" -> n.toString)(f)
 
   /** Scope `spark.sql.streaming.noDataMicroBatches.enabled=false`
     * around a stream whose sink does NOT depend on no-data batches —
@@ -44,15 +40,9 @@ object EventQueries {
     * append-mode AGGREGATION gates (ev05…): those emit a window only
     * when a later batch's watermark passes it, so they keep the
     * default. */
-  private def withoutNoDataBatches[T](s: SparkSession)(f: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try f finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+  private def withoutNoDataBatches[T](s: SparkSession)(f: => T): T =
+    Scoped.conf(s,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(f)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Tumbling one-hour window per event type: count + value sum

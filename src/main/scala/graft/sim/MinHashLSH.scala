@@ -45,7 +45,7 @@ object MinHashLSH {
     * to it: 4 bands × 6 rows, collision probability 1-(1-J^6)^4 keeps
     * ~98% recall at J=0.93 (the planted-near-dup scale) while halving
     * mid-similarity (J≈0.5) band collisions vs 5-row bands. */
-  val Bands = 4
+  private val Bands = 4
   val NumPerm: Int = Bands * Rows
   val DefaultGeometry: LshGeometry = LshGeometry(Bands, Rows)
 
@@ -413,7 +413,7 @@ object MinHashLSH {
     * — a per-DOC projection (one sort per row, never per pair), so the
     * sample stage's candidate join ships 128 longs instead of the full
     * array. */
-  def bottomKFrame(sigFrame: DataFrame): DataFrame =
+  private def bottomKFrame(sigFrame: DataFrame): DataFrame =
     sigFrame.select(col("id"), bottomKCol(col("sh")).as("sb"))
 
   /** The bottom-[[BottomK]] sketch as a column expression — exposed so

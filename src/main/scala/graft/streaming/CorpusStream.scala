@@ -75,14 +75,14 @@ object CorpusStream {
     * live batch partition, the `_fp` backfill and a compaction fold's
     * `c` partition. Without it, tiny frequent batches explode into
     * batches×64 near-empty files and the per-batch LISTING cost grows
-    * faster than the scan the layout saves (measured: the 40-small-batch
-    * ProbeStream run regressed from flat to a +0.1 s/batch slope before
-    * the split was made granularity-aware; folds that always split
-    * turned 400 docs of state into 40–65 files per table, and every
-    * later batch paid Spark's parallel file-listing jobs). Reads handle
-    * both layouts: pk-split partitions are pruned at the directory
-    * level, plain ones are read whole (small by this rule) and pruned
-    * by the pk column. */
+    * faster than the scan the layout saves (measured with the former
+    * ProbeStream: a 40-small-batch run regressed from flat to a
+    * +0.1 s/batch slope before the split was made granularity-aware;
+    * folds that always split turned 400 docs of state into 40–65 files
+    * per table, and every later batch paid Spark's parallel
+    * file-listing jobs). Reads handle both layouts: pk-split partitions
+    * are pruned at the directory level, plain ones are read whole
+    * (small by this rule) and pruned by the pk column. */
   val PkSplitMinRows: Long = 1000L * StatePartitions
 
   /** Live (uncompacted) batch partitions that trigger a compaction pass
@@ -246,7 +246,8 @@ object CorpusStream {
 
   /** Label the jobs a block's actions spawn (guide §1.5): thread-local,
     * restored on exit, so concurrent lanes keep their own labels. Pure
-    * observability — ProbeJobs/the UI attribute chain cost by phase. */
+    * observability — `graft.tools.Trace` and the UI attribute chain
+    * cost by phase. */
   private def jd[T](spark: org.apache.spark.sql.SparkSession,
                     label: String)(f: => T): T = {
     val sc = spark.sparkContext
@@ -256,15 +257,16 @@ object CorpusStream {
   }
 
   /** Scope adaptive execution OFF around one micro-batch's work
-    * (restored on exit; `spark.graft.chain.aqe=true` opts back in).
+    * (restored on exit).
     *
     * Why (round 17, measured): AQE materializes every exchange as its
     * own driver-side job plus a replanning pass — on the chain's
     * many-small-jobs batches that splinters each bookkeeping action
     * into ~5–10 jobs whose ~70–170 ms driver floor IS the gate's cost
-    * (ProbeJobs: dp03 = 353 jobs ≈ its whole 21 s; ProbeJobFloor:
-    * one-exchange agg 167 ms with AQE, 134 ms without; ProbeAqe A/B:
-    * dp03 21.4→17.7 s, dp07 21.2→18.1 s with AQE off, width equal).
+    * (measured with the former ProbeJobs: dp03 = 353 jobs ≈ its whole
+    * 21 s; ProbeJobFloor: one-exchange agg 167 ms with AQE, 134 ms
+    * without; ProbeAqe A/B: dp03 21.4→17.7 s, dp07 21.2→18.1 s with AQE
+    * off, width equal; `graft.tools.Trace` gives the same breakdown).
     *
     * Why it is scale-safe HERE and not suite-wide: a micro-batch's
     * frames are bounded by the batch increment and the merge caps
@@ -277,18 +279,8 @@ object CorpusStream {
     * LSH, the ann builds) keep AQE on — measured faster with it
     * (ann17 5.7 s with vs 6.5 s without). */
   private def withBatchAqe[T](spark: org.apache.spark.sql.SparkSession)
-                             (f: => T): T = {
-    if (spark.conf.get("spark.graft.chain.aqe", "false") == "true") f
-    else {
-      val key = "spark.sql.adaptive.enabled"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "false")
-      try f finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
+                             (f: => T): T =
+    graft.core.Scoped.conf(spark, "spark.sql.adaptive.enabled" -> "false")(f)
 
   /** Component-label state (round-10): rows `(id, lbl, b)` mapping a
     * doc to its near-dup component's canonical id, written only for
@@ -385,7 +377,7 @@ object CorpusStream {
     if (!t.endsWith(";")) None else Some(parseRanges(t.dropRight(1)))
   }
 
-  private[graft] def emitPkCol(id: org.apache.spark.sql.Column)
+  private def emitPkCol(id: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column =
     pmod(xxhash64(id), lit(StatePartitions.toLong))
 
@@ -996,8 +988,8 @@ object CorpusStream {
             // candidate id IN-filter survives — metadata-scale, where
             // the round-12 first cut (pk set of every id in colliding
             // band BUCKETS) saturated all 64 buckets on any batch
-            // with a few hundred collisions and pruned nothing
-            // (ProbeSketch measured split slower than plain). The
+            // with a few hundred collisions and pruned nothing (the
+            // former ProbeSketch measured split slower than plain). The
             // verify re-joins the collected pairs as a broadcast
             // LOCAL relation, so the cascade prefix still runs once.
             // Over the cap — a pathological mass-collision batch —
@@ -1201,9 +1193,10 @@ object CorpusStream {
     // output semi-join scan), are read by explicit path, and rewrite
     // in ONE dynamic-overwrite job under the output table's writer
     // lock — a per-partition loop pays one serial Spark job per
-    // directory (measured ~100 s/batch on a merge-heavy ProbeStream),
-    // and an unlocked rewrite window is where a second pipeline
-    // writing the same table could interleave its own deletes.
+    // directory (measured ~100 s/batch on a merge-heavy run of the
+    // former ProbeStream), and an unlocked rewrite window is where a
+    // second pipeline writing the same table could interleave its own
+    // deletes.
     if (mr != null && catalog.tableExists(outTable)) {
       // no emptiness probe needed: every merge edge joins two distinct
       // labels, so mr != null guarantees a dethroned node; whether any
@@ -1461,7 +1454,7 @@ object CorpusStream {
     * table only — epoch tables never need the fallback, because they
     * are written exclusively by epoch-aware code whose emit rows
     * precede every output partition. */
-  private[graft] def affectedOutputPartitions(catalog: TableCatalog,
+  private def affectedOutputPartitions(catalog: TableCatalog,
       stateTable: String, outTable: String, batchKey: String,
       retr: DataFrame): Seq[(String, Seq[String])] = {
     val emitTable = EmitState.of(stateTable)
@@ -1563,7 +1556,7 @@ object CorpusStream {
   /** [[readPkTable]] of the sketch table's batch partitions `keys`:
     * the cross-verify fetch (pruned to `pks`) and the whole-state read
     * (`pks` = None). */
-  private[graft] def readSketchBatches(catalog: TableCatalog,
+  private def readSketchBatches(catalog: TableCatalog,
       stateTable: String, keys: Seq[String],
       pks: Option[Set[Long]]): Option[DataFrame] =
     readPkTable(catalog, SketchState, stateTable, keys, pks)

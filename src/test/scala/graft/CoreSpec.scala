@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.core.{Fence, Par, Tables}
+import graft.core.{Fence, Par, Scoped, Tables}
 
 class CoreSpec extends SparkSpec {
   import spark.implicits._
@@ -192,5 +192,31 @@ class CoreSpec extends SparkSpec {
       Tables.load(spark, junk, "events").count()
     }
     assert(e.getMessage.contains("refusing to guess"))
+  }
+
+  test("Scoped.conf restores a set key, unsets an unset key, and " +
+       "restores both when the body throws") {
+    val set = "spark.graft.test.scoped.set"
+    val unset = "spark.graft.test.scoped.unset"
+    spark.conf.set(set, "before")
+    spark.conf.unset(unset)
+    try {
+      val r = Scoped.conf(spark, set -> "inside", unset -> "inside") {
+        assert(spark.conf.get(set) == "inside")
+        assert(spark.conf.get(unset) == "inside")
+        42
+      }
+      assert(r == 42)
+      assert(spark.conf.get(set) == "before")
+      assert(spark.conf.getOption(unset).isEmpty)
+      val e = intercept[IllegalStateException] {
+        Scoped.conf(spark, set -> "thrown", unset -> "thrown") {
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(e.getMessage == "body failed")
+      assert(spark.conf.get(set) == "before")
+      assert(spark.conf.getOption(unset).isEmpty)
+    } finally spark.conf.unset(set)
   }
 }
