@@ -247,6 +247,34 @@ class TableCatalog(val spark: SparkSession, warehouse: String) {
       }.sum
   }
 
+  /** Key-value metadata of one visible data file's parquet footer in a
+    * partition — a plain file, else the first file of the first
+    * sub-directory (one write stamps every file with the same keys) —
+    * read on the driver like [[partitionRowCount]], no Spark job. None
+    * when the partition holds no data file. */
+  def partitionFooterMetadata(table: String, partField: String,
+      partValue: String): Option[Map[String, String]] = {
+    def visible(st: org.apache.hadoop.fs.FileStatus) = {
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    def dataFiles(p: Path) =
+      listStatusOrEmpty(p).filter(st => st.isFile && visible(st))
+    val dir = new Path(partitionPath(table, partField, partValue))
+    val file = dataFiles(dir).headOption.orElse(
+      listStatusOrEmpty(dir).filter(st => st.isDirectory && visible(st))
+        .sortBy(_.getPath.getName).iterator
+        .flatMap(d => dataFiles(d.getPath).headOption).nextOption())
+    file.map { st =>
+      import scala.jdk.CollectionConverters._
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st,
+          spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getFileMetaData.getKeyValueMetaData.asScala.toMap
+      finally r.close()
+    }
+  }
+
   /** Write a small metadata marker file under the table root, only if
     * absent (idempotent under replay). Underscore-prefixed names stay
     * invisible to Spark partition/file discovery. */

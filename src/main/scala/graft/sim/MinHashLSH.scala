@@ -150,8 +150,11 @@ object MinHashLSH {
   /** The signature width recorded in a frame's `sig` field metadata,
     * when the frame (or the parquet table it was read from) came from
     * [[signatureFrame]]. */
-  def sigWidthOf(df: DataFrame): Option[Int] =
-    df.schema.fields.find(_.name == "sig")
+  def sigWidthOf(df: DataFrame): Option[Int] = sigWidthOf(df.schema)
+
+  def sigWidthOf(schema: org.apache.spark.sql.types.StructType)
+      : Option[Int] =
+    schema.fields.find(_.name == "sig")
       .filter(_.metadata.contains(NumPermMetaKey))
       .map(_.metadata.getLong(NumPermMetaKey).toInt)
 
@@ -408,6 +411,113 @@ object MinHashLSH {
     SetVerify.jaccard(toVerify, sh, threshold)
   }
 
+  // ---- driver twins of the cascade ------------------------------------
+  //
+  // For metadata-scale inputs (the incremental pipeline's small
+  // micro-batches) the band join, floor and verify run on the driver
+  // over collected rows: the same integer math as [[bandFrameWithSig]],
+  // [[collidedSurvivors]] and [[verifySurvivors]] with the same null
+  // rules, so the two forms give the same pairs (pinned by StreamingSpec).
+
+  /** One band row on the driver — a [[bandFrameWithSig]] row: `n` and
+    * `sig` (and `sig`'s elements) may be null, as in the frame. */
+  private[graft] final case class BandRow(id: Long, n: java.lang.Integer,
+      sig: Array[java.lang.Long], idx: Int, key: String)
+
+  /** [[bandFrameWithSig]]'s rows for one doc: band `b`'s key is the
+    * `concat_ws("_")` of its `rows` signature elements as strings, a
+    * null element (or a null signature) skipped. */
+  private[graft] def driverBands(id: Long, n: java.lang.Integer,
+      sig: Array[java.lang.Long], geom: LshGeometry): Seq[BandRow] =
+    (0 until geom.bands).map { b =>
+      val key = (0 until geom.rows).iterator
+        .map(r => b * geom.rows + r)
+        .flatMap(i => if (sig == null || i >= sig.length) None
+                      else Option(sig(i)))
+        .mkString("_")
+      BandRow(id, n, sig, b, key)
+    }
+
+  /** [[collidedSurvivors]] over driver band rows: the (band, key)
+    * equi-join (`a.id < b.id` with `selfJoin`), the size prune with
+    * `least`/`greatest`'s skip-null semantics and the agreement floor
+    * (a null signature never passes: its agreement is null, or -1
+    * without ANSI — below the floor of any threshold >= 0.05). Distinct
+    * (doc_a, doc_b) pairs in first-found order. */
+  private[graft] def driverSurvivors(bandsA: Seq[BandRow],
+      bandsB: Seq[BandRow], threshold: Double, geom: LshGeometry,
+      selfJoin: Boolean): Seq[(Long, Long)] = {
+    val tNum = tNumOf(threshold)
+    val floor = minAgree(threshold, geom.numPerm)
+    def sizeOk(x: java.lang.Integer, y: java.lang.Integer): Boolean =
+      (Option(x) ++ Option(y)).map(_.toLong) match {
+        case Nil => false
+        case ns => 10L * ns.min >= tNum * ns.max
+      }
+    def agree(x: Array[java.lang.Long], y: Array[java.lang.Long]): Int = {
+      var k = 0; var i = 0
+      while (i < math.min(x.length, y.length)) {
+        if (x(i) != null && y(i) != null && x(i).longValue == y(i).longValue)
+          k += 1
+        i += 1
+      }
+      k
+    }
+    val byBucket = bandsB.groupBy(r => (r.idx, r.key))
+    val out = scala.collection.mutable.LinkedHashSet.empty[(Long, Long)]
+    for {
+      a <- bandsA
+      b <- byBucket.getOrElse((a.idx, a.key), Nil)
+      if !selfJoin || a.id < b.id
+      if sizeOk(a.n, b.n) && a.sig != null && b.sig != null &&
+        agree(a.sig, b.sig) >= floor
+    } out += ((a.id, b.id))
+    out.toSeq
+  }
+
+  /** One doc's verify-side arrays on the driver: `sh` SORTED ascending
+    * and the bottom-k sketch `sb`; either is null where the frame's is. */
+  private[graft] final case class DriverSketch(sh: Array[Long],
+                                               sb: Array[Long])
+
+  private[graft] def driverSketch(sh: scala.collection.Seq[Long],
+      sb: scala.collection.Seq[Long]): DriverSketch =
+    DriverSketch(
+      if (sh == null) null
+      else { val s = sh.toArray; java.util.Arrays.sort(s); s },
+      if (sb == null) null else sb.toArray)
+
+  /** The one per-pair check of [[verifySurvivors]] on the driver: below
+    * [[SampleCutoff]] the bottom-k floor ([[SetVerify.samplePrune]]:
+    * a null sketch drops the pair, `taken > 0 && inter/taken >= t −
+    * 0.05`), then the exact Jaccard ([[SetVerify.jaccard]]: a null
+    * array drops the pair, two empty arrays give 0/0 and fail). */
+  private[graft] def pairVerifies(a: DriverSketch, b: DriverSketch,
+                                  threshold: Double): Boolean = {
+    val sampled = threshold >= SampleCutoff || (
+      a.sb != null && b.sb != null && {
+        val (inter, taken) = SetVerify.bottomKInterTaken(a.sb, b.sb, BottomK)
+        taken > 0 && inter.toDouble / taken >= threshold - 0.05
+      })
+    sampled && a.sh != null && b.sh != null && {
+      val inter = SetVerify.sortedIntersect(a.sh, b.sh)
+      inter.toDouble / (a.sh.length + b.sh.length - inter) >= threshold
+    }
+  }
+
+  /** [[verifySurvivors]] over driver pairs, `doc_a`'s sketch from `skA`
+    * and `doc_b`'s from `skB`: a pair missing either drops, as the inner
+    * joins drop it. */
+  private[graft] def driverVerify(pairs: Seq[(Long, Long)],
+      skA: Long => Option[DriverSketch], skB: Long => Option[DriverSketch],
+      threshold: Double): Seq[(Long, Long)] =
+    pairs.filter { case (a, b) =>
+      (skA(a), skB(b)) match {
+        case (Some(x), Some(y)) => pairVerifies(x, y, threshold)
+        case _ => false
+      }
+    }
+
   /** Per-doc bottom-[[BottomK]] sketch over a [[signatureFrame]]:
     * (id, sb) with `sb` the k smallest shingle hashes sorted ascending
     * — a per-DOC projection (one sort per row, never per pair), so the
@@ -537,6 +647,10 @@ object MinHashLSH {
         }
       }
     }(org.apache.spark.sql.Encoders.row(schema))
+      // the row encoder's serializer drops field metadata: stamp the
+      // width on the output column itself, where selects, joins,
+      // fences and parquet writes carry it
+      .withColumn("sig", col("sig").as("sig", sigMeta))
   }
 
   /** Oracle SQL for [[nearDupPairs]] over table `tbl`, generated from

@@ -1,10 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
   StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.catalog.TableCatalog
 import graft.ops.Dedup
@@ -95,7 +97,7 @@ object CorpusStream {
     * other, so a small state stays one file per table. */
   val CompactEvery = 16
 
-  private def pkCol: org.apache.spark.sql.Column =
+  private[graft] def pkCol: org.apache.spark.sql.Column =
     pmod(xxhash64(col("band_key")), lit(StatePartitions.toLong))
 
   /** Static DATA schemas of the pipeline's own state tables, supplied
@@ -138,10 +140,15 @@ object CorpusStream {
     *    deduplicates on;
     *  - `sortById`, files sorted by id (tight row-group id ranges for the
     *    sketch fetch's candidate-id IN filter);
-    *  - `heal`, per-column read fixes for legacy files. */
+    *  - `heal`, per-column read fixes for legacy files;
+    *  - `sigWidth`, whether a read restores `sig`'s
+    *    [[MinHashLSH.NumPermMetaKey]] from the files' footers (the static
+    *    read schema carries no field metadata), so the geometry guard
+    *    needs no Spark job and a fold writes the width back out. */
   private case class PkTable(suffix: String, schema: StructType,
       pk: Column, pkStored: Boolean, dedupKeys: Seq[String],
-      sortById: Boolean = false, heal: Map[String, Column] = Map.empty) {
+      sortById: Boolean = false, heal: Map[String, Column] = Map.empty,
+      sigWidth: Boolean = false) {
     def of(stateTable: String): String = stateTable + suffix
     def cols: Seq[Column] = schema.fieldNames.toSeq.map(n =>
       heal.get(n).fold(col(n))(_.as(n)))
@@ -151,7 +158,8 @@ object CorpusStream {
     * bottom-k column read `sb` as null and heal from `sh`. */
   private val SketchState = PkTable("", SketchDataSchema,
     emitPkCol(col("id")), pkStored = false, Seq("id"), sortById = true,
-    heal = Map("sb" -> coalesce(col("sb"), MinHashLSH.bottomKCol(col("sh")))))
+    heal = Map("sb" -> coalesce(col("sb"), MinHashLSH.bottomKCol(col("sh")))),
+    sigWidth = true)
 
   /** Pre-banded sketch rows, bucketed by band key, so a batch's
     * cross-batch candidate join reads only its colliding buckets. */
@@ -202,7 +210,9 @@ object CorpusStream {
     * discovery never sees conflicting directory depths. With `pks`
     * set, pk-split partitions prune at the DIRECTORY level and plain
     * ones — small by [[PkSplitMinRows]] — are read whole and filtered
-    * on pk. None when no partition holds a data file. */
+    * on pk. None when no partition holds a data file. A `sigWidth`
+    * table's `sig` carries the width its footers agree on
+    * ([[footerSigWidth]]). */
   private def readPkTable(catalog: TableCatalog, t: PkTable,
       stateTable: String, keys: Seq[String],
       pks: Option[Set[Long]]): Option[DataFrame] = {
@@ -223,7 +233,9 @@ object CorpusStream {
       .filter(catalog.partitionHasDataFiles(table, "batch_id", _))
       .map(path)
     val plainPk = if (t.pkStored) col("pk") else t.pk
-    Seq(
+    val width =
+      if (t.sigWidth) footerSigWidth(catalog, table, keys) else None
+    val read = Seq(
       if (splitDirs.isEmpty) None
       else Some(catalog.readPaths(table, splitDirs, t.schema)),
       if (plainDirs.isEmpty) None
@@ -232,7 +244,33 @@ object CorpusStream {
           if (t.pkStored) withPk(t.schema) else t.schema)
         Some(pks.fold(raw)(ps => raw.filter(plainPk.isin(ps.toSeq: _*))))
       }).flatten.map(_.select(t.cols: _*)).reduceOption(_ unionByName _)
+    width.fold(read)(w => read.map(_.withColumn("sig", col("sig").as("sig",
+      new org.apache.spark.sql.types.MetadataBuilder()
+        .putLong(MinHashLSH.NumPermMetaKey, w.toLong).build()))))
   }
+
+  /** The `sig` width recorded in the Spark row schema of each listed
+    * partition's parquet footer, read on the driver. None when a
+    * data-bearing partition's footer lacks it (written before the width
+    * was stamped, or by a fold that dropped it) or the partitions
+    * disagree — the guard then falls back to its head-row probe. */
+  private def footerSigWidth(catalog: TableCatalog, table: String,
+      keys: Seq[String]): Option[Int] = {
+    val widths = keys.flatMap(
+        catalog.partitionFooterMetadata(table, "batch_id", _))
+      .map(_.get(SparkRowSchemaKey)
+        .flatMap(j => scala.util.Try(
+          org.apache.spark.sql.types.DataType.fromJson(j)).toOption)
+        .collect { case s: StructType => s }
+        .flatMap(MinHashLSH.sigWidthOf))
+    if (widths.nonEmpty && widths.forall(_.isDefined) &&
+        widths.distinct.size == 1) widths.head
+    else None
+  }
+
+  /** The footer key under which Spark's parquet writer stores the row
+    * schema, field metadata included. */
+  private val SparkRowSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** [[readPkTable]] of `t`'s committed partitions other than the
     * in-flight batch's, pruned to `pks`. */
@@ -377,7 +415,7 @@ object CorpusStream {
     if (!t.endsWith(";")) None else Some(parseRanges(t.dropRight(1)))
   }
 
-  private def emitPkCol(id: org.apache.spark.sql.Column)
+  private[graft] def emitPkCol(id: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column =
     pmod(xxhash64(id), lit(StatePartitions.toLong))
 
@@ -486,17 +524,28 @@ object CorpusStream {
     * prunes and the pk-directory pruning stands alone. */
   val IsinCap = 1 << 16
 
-  /** When a batch's cross-batch candidate set is this small — the
-    * common small-batch-on-big-state shape — the verify runs in the
-    * DRIVER: the candidate docs' (sh, sb) arrays are collected (one
-    * pruned read, bytes bounded by caps × corpus-gated doc size) and
-    * each pair runs the SAME scalar kernels the distributed cascade
-    * uses ([[graft.sim.SetVerify.sortedIntersect]] /
-    * `bottomKInterTaken` — shared code, so the paths cannot drift).
-    * This removes the distributed sample-prune + verify joins' worth
-    * of per-batch jobs where the data is metadata-scale anyway. */
+  /** The driver caps of a micro-batch's near-dup cascade. A batch of at
+    * most [[DriverVerifyIdCap]] new signatures whose band keys collide
+    * with at most [[DriverVerifyPairCap]] stored band rows — the common
+    * small-batch-on-big-state shape — runs the WHOLE cascade on the
+    * driver ([[driverCascade]]): its signatures arrive in the job that
+    * counts them, the colliding stored band rows in one pruned read and
+    * the seen side's (sh, sb) arrays in one pruned fetch, and each pair
+    * runs the SAME scalar kernels the distributed cascade uses
+    * ([[MinHashLSH.pairVerifies]] over the shared
+    * [[graft.sim.SetVerify]] kernels — the paths cannot drift). That
+    * replaces the internal and cross Spark cascades' planning and
+    * broadcast jobs where the data is kilobytes anyway. Over either cap
+    * the cascade runs distributed ([[distributedCascade]]), whose cross
+    * verify still takes the driver fast path when its candidates fit
+    * the same caps. The pair cap bounds collected stored band rows
+    * (~1 KB each on the driver, and at most one sketch fetched per
+    * row): 1024, because on a template-correlated corpus the colliding
+    * rows grow with the state — the perfbench chain's 4–12-doc gated
+    * batches collided with 115–260 stored rows over batches 12–20, so
+    * 256 sent some of them down the distributed path. */
   val DriverVerifyIdCap = 64
-  val DriverVerifyPairCap = 256
+  val DriverVerifyPairCap = 1024
 
   /** Capped connected components over a pair frame — the per-batch
     * component machinery shared by the internal near-dup graph and
@@ -521,36 +570,301 @@ object CorpusStream {
     if (capped.length > MergeGraphCap)
       Some(Dedup.connectedComponents(pairs, aCol, bCol)
         .select(col("id").as("__node"), col("label").as("__m")))
-    else {
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val n = parent(c); parent(c) = r; c = n
-        }
-        r
+    else driverComponents(spark, capped.toSeq
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .map(r => (r.getLong(0), r.getLong(1))))
+  }
+
+  /** [[cappedComponents]]' driver union-find over collected edges:
+    * (`__node`, `__m`) as a local relation, None for no edges. */
+  private def driverComponents(spark: org.apache.spark.sql.SparkSession,
+      edges: Seq[(Long, Long)]): Option[DataFrame] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) {
+        val n = parent(c); parent(c) = r; c = n
       }
-      // union by value: the smaller root wins, so every component's
-      // root IS its minimum label — the same fixpoint the distributed
-      // loop reaches
-      val clean = capped.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-      clean.foreach { r =>
-        val ra = find(r.getLong(0)); val rb = find(r.getLong(1))
-        if (ra != rb) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      val nodes = clean.iterator.flatMap(r =>
-          Iterator(r.getLong(0), r.getLong(1)))
-        .toArray.distinct
-      if (nodes.isEmpty) None
-      else {
-        import spark.implicits._
-        Some(nodes.map(n => (n, find(n))).toSeq.toDF("__node", "__m"))
+      r
+    }
+    // union by value: the smaller root wins, so every component's
+    // root IS its minimum label — the same fixpoint the distributed
+    // loop reaches
+    edges.foreach { case (a, b) =>
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) {
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
       }
     }
+    val nodes = edges.iterator.flatMap { case (a, b) => Iterator(a, b) }
+      .toArray.distinct
+    if (nodes.isEmpty) None
+    else {
+      import spark.implicits._
+      Some(nodes.map(n => (n, find(n))).toSeq.toDF("__node", "__m"))
+    }
+  }
+
+  /** ONE job: `df`'s exact row count and, from each partition, its
+    * first `cap + 1` rows — every row when the count is at most `cap`,
+    * a bounded prefix otherwise. `limit(cap + 1).collect()` would scan
+    * the partitions in growing rounds of jobs and still leave the count
+    * to another job. */
+  private def boundedCollect(df: DataFrame, cap: Int): (Long, Array[Row]) = {
+    val parts = df.rdd.mapPartitions { it =>
+      val kept = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var n = 0L
+      it.foreach { r => if (kept.length <= cap) kept += r; n += 1 }
+      Iterator.single((n, kept.toArray))
+    }.collect()
+    (parts.iterator.map(_._1).sum, parts.flatMap(_._2))
+  }
+
+  /** [[pkCol]] of one band key on the driver: `xxhash64` (seed 42) of
+    * its UTF-8 bytes, `pmod` [[StatePartitions]]. */
+  private[graft] def bandKeyPk(key: String): Long = Math.floorMod(
+    XXH64.hashUTF8String(UTF8String.fromString(key), 42L),
+    StatePartitions.toLong)
+
+  /** [[emitPkCol]] of one long id on the driver. */
+  private[graft] def idPk(id: Long): Long =
+    Math.floorMod(XXH64.hashLong(id, 42L), StatePartitions.toLong)
+
+  private[graft] def intOf(r: Row, i: Int): java.lang.Integer =
+    if (r.isNullAt(i)) null else Int.box(r.getInt(i))
+
+  private[graft] def sigOf(r: Row, i: Int): Array[java.lang.Long] =
+    if (r.isNullAt(i)) null
+    else r.getSeq[Any](i).map(_.asInstanceOf[java.lang.Long]).toArray
+
+  private[graft] def sketchOf(r: Row, sh: Int,
+      sb: Int): MinHashLSH.DriverSketch =
+    MinHashLSH.driverSketch(
+      if (r.isNullAt(sh)) null else r.getSeq[Long](sh),
+      if (r.isNullAt(sb)) null else r.getSeq[Long](sb))
+
+  /** The (sh, sb) sketches of `ids` among `df`'s rows, collected in one
+    * job labelled `verify fetch`. */
+  private def fetchSketches(df: DataFrame, ids: Seq[Long],
+      batchKey: String): Map[Long, MinHashLSH.DriverSketch] =
+    jd(df.sparkSession, s"b$batchKey verify fetch") {
+      df.filter(col("id").isin(ids: _*))
+        .select(col("id"), col("sh"), col("sb")).collect() }
+      .map(r => r.getLong(0) -> sketchOf(r, 1, 2)).toMap
+
+  /** Step 5's cascade on the driver for a batch whose signature rows
+    * `sigRows` (id, sh, n, sig, sb) all arrived — at most
+    * [[DriverVerifyIdCap]] of them. Internal pairs band, prune and
+    * verify among those rows. Cross pairs join them with the stored
+    * `_bands` rows their keys collide with — ONE pruned read collects
+    * those, its pk buckets computed on the driver ([[bandKeyPk]]) — and
+    * verify against ONE pruned fetch of the seen side's sketches. The
+    * math and null rules are the distributed cascade's
+    * ([[MinHashLSH.driverSurvivors]], [[MinHashLSH.pairVerifies]]).
+    * Returns (internal pairs, cross pairs), or None when more than
+    * [[DriverVerifyPairCap]] stored band rows collide — the caller then
+    * runs [[distributedCascade]]. A row with a null id is skipped: a null
+    * id verifies against nothing in the distributed cascade either. */
+  private def driverCascade(catalog: TableCatalog, stateTable: String,
+      batchKey: String, sigRows: Array[Row], withState: Boolean,
+      threshold: Double, geom: graft.sim.LshGeometry)
+      : Option[(Seq[(Long, Long)], Seq[(Long, Long)])] = {
+    val spark = catalog.spark
+    val docs = sigRows.toSeq.filterNot(_.isNullAt(0))
+    val newBands = docs.flatMap(r =>
+      MinHashLSH.driverBands(r.getLong(0), intOf(r, 2), sigOf(r, 3), geom))
+    val seenBands: Option[Seq[MinHashLSH.BandRow]] =
+      if (!withState || newBands.isEmpty) Some(Nil)
+      else {
+        val keys = newBands.map(_.key).distinct
+        prunedStateRead(catalog, BandsState, stateTable, batchKey,
+            keys.map(bandKeyPk).toSet)
+          .fold(Option(Seq.empty[MinHashLSH.BandRow])) { df =>
+            val (n, rows) = jd(spark, s"b$batchKey seen bands") {
+              boundedCollect(df.filter(col("band_key").isin(keys: _*)),
+                DriverVerifyPairCap) }
+            if (n > DriverVerifyPairCap) None
+            else Some(rows.toSeq.filterNot(_.isNullAt(0)).map(r =>
+              MinHashLSH.BandRow(r.getLong(0), intOf(r, 1), sigOf(r, 2),
+                r.getInt(3), r.getString(4))))
+          }
+      }
+    seenBands.map { seen =>
+      val newSk = docs.map(r => r.getLong(0) -> sketchOf(r, 1, 4)).toMap
+      val internal = MinHashLSH.driverVerify(
+        MinHashLSH.driverSurvivors(newBands, newBands, threshold, geom,
+          selfJoin = true),
+        newSk.get, newSk.get, threshold)
+      val cand = MinHashLSH.driverSurvivors(newBands, seen, threshold,
+        geom, selfJoin = false)
+      val cross =
+        if (cand.isEmpty) Nil
+        else {
+          val ids = cand.map(_._2).distinct
+          val seenSk = readSketchBatches(catalog, stateTable,
+              catalog.listPartitions(stateTable, "batch_id")
+                .filter(_ != batchKey),
+              Some(ids.map(idPk).toSet))
+            .fold(Map.empty[Long, MinHashLSH.DriverSketch])(
+              fetchSketches(_, ids, batchKey))
+          MinHashLSH.driverVerify(cand, newSk.get, seenSk.get, threshold)
+        }
+      (internal, cross)
+    }
+  }
+
+  /** Step 5's cascade distributed — the path of a batch over the driver
+    * caps, or of a legacy state without a covering bands table. Returns
+    * (internal components, cross pairs collected up to MergeGraphCap +
+    * 1, whether they were over it, their frame). */
+  private def distributedCascade(spark: org.apache.spark.sql.SparkSession,
+      catalog: TableCatalog, stateTable: String, batchKey: String,
+      state: DataFrame, covered: Boolean, newSk: DataFrame,
+      newBands: DataFrame, fpForced: DataFrame, threshold: Double,
+      geom: graft.sim.LshGeometry)
+      : (Option[DataFrame], Array[(Long, Long)], Boolean, () => DataFrame) = {
+    import spark.implicits._
+    // the fused floor (collidedSurvivors): the size prune + agreement
+    // floor filter inside the band join's own stage, so the per-batch
+    // shuffle is linear in band rows — at scale the stored corpus's
+    // band side is the big one, and this is exactly the shape that
+    // keeps it from re-joining per candidate.
+    // Internal pairs are new×new: their sample/verify fetches touch
+    // only this batch's sketches, never the state (labelled: building
+    // the verify frame plans it, which starts its broadcast jobs)
+    val internalLabel = s"b$batchKey internal pairs + components"
+    val internal = jd(spark, internalLabel) {
+      MinHashLSH.verifySurvivors(
+          MinHashLSH.collidedSurvivors(newBands, newBands, threshold,
+            geom, selfJoin = true),
+          newSk, threshold, sb = Some(newSk.select(col("id"), col("sb"))))
+        .select(col("doc_a"), col("doc_b")) }
+    val crossPairs: DataFrame =
+      if (state == null) null
+      else jd(spark, s"b$batchKey cross pairs") {
+        val seenBands = jd(spark, s"b$batchKey seen bands") {
+          seenBandFrame(catalog, stateTable, batchKey, state, newBands,
+            geom, covered) }
+        def fullStateVerify(survivors: DataFrame): DataFrame = {
+          val sigs = newSk.unionByName(state.select(col("id"),
+            col("sh"), col("n"), col("sig"), col("sb")))
+          MinHashLSH.verifySurvivors(survivors, sigs, threshold,
+              sb = Some(sigs.select(col("id"), col("sb"))))
+            .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
+        }
+        val verified =
+          if (!covered)
+            // legacy not-covered path (pre-round-8 state, no bands
+            // table): the full-state fetch — it re-bands the full
+            // state anyway, and the one pair collect below evaluates
+            // the fused cascade exactly once
+            fullStateVerify(MinHashLSH.collidedSurvivors(newBands,
+              seenBands, threshold, geom, selfJoin = false))
+          else {
+            // the verify stage fetches `sh` arrays for the SEEN side
+            // of every candidate pair. Collect the candidates (band
+            // join + agreement floor — the cheap prefix of the
+            // cascade, NOT the array verify) up to the merge cap,
+            // with each seen id's sketch pk riding along in the same
+            // job; the fetch then reads only the colliding pk
+            // DIRECTORIES of the pk-split sketch partitions, and
+            // inside them only the row groups the (sorted-by-id)
+            // candidate id IN-filter survives — metadata-scale, where
+            // the round-12 first cut (pk set of every id in colliding
+            // band BUCKETS) saturated all 64 buckets on any batch
+            // with a few hundred collisions and pruned nothing (the
+            // former ProbeSketch measured split slower than plain). The
+            // verify re-joins the collected pairs as a broadcast
+            // LOCAL relation, so the cascade prefix still runs once.
+            // Over the cap — a pathological mass-collision batch —
+            // the cascade re-derives distributed against the full
+            // state, the same fallback shape as [[cappedComponents]].
+            val cand = MinHashLSH.collidedSurvivors(newBands, seenBands,
+              threshold, geom, selfJoin = false)
+            val candRows = jd(spark,
+                s"b$batchKey cross candidates") { cand
+              .select(col("doc_a").cast("long"),
+                col("doc_b").cast("long"),
+                emitPkCol(col("doc_b")).as("__pk"))
+              .limit(MergeGraphCap + 1).collect() }
+            if (candRows.length > MergeGraphCap)
+              fullStateVerify(cand)
+            else if (candRows.isEmpty)
+              // nothing survived the floor: no cross verify at all
+              null
+            else {
+              val ids = candRows.map(_.getLong(1)).distinct
+              val aIds = candRows.map(_.getLong(0)).distinct
+              val ipks = candRows.map(_.getLong(2)).toSet
+              val fetched = readSketchBatches(catalog, stateTable,
+                  catalog.listPartitions(stateTable, "batch_id")
+                    .filter(_ != batchKey),
+                  Some(ipks))
+                .map { f =>
+                  // the IN pushdown prunes row groups; past the cap
+                  // the literal list costs more than it prunes and
+                  // the directory pruning stands alone
+                  if (ids.length <= IsinCap)
+                    f.filter(col("id").isin(ids.toIndexedSeq: _*))
+                  else f
+                }
+                .getOrElse(state)
+              if (candRows.length <= DriverVerifyPairCap &&
+                  ids.length <= DriverVerifyIdCap &&
+                  aIds.length <= DriverVerifyIdCap) {
+                // driver fast path (see [[DriverVerifyIdCap]]): two
+                // bounded array collects, then the one per-pair check
+                // the driver cascade runs ([[MinHashLSH.pairVerifies]])
+                // — no distributed prune/verify joins for a
+                // metadata-scale candidate set
+                val kept = MinHashLSH.driverVerify(
+                  candRows.toSeq.map(r => (r.getLong(0), r.getLong(1))),
+                  fetchSketches(newSk, aIds.toSeq, batchKey).get,
+                  fetchSketches(fetched, ids.toSeq, batchKey).get,
+                  threshold)
+                if (kept.isEmpty) null
+                else kept.toDF("doc_a", "doc_b")
+              } else {
+                val sigs = newSk.unionByName(fetched.select(col("id"),
+                  col("sh"), col("n"), col("sig"), col("sb")))
+                val pairsLocal = candRows
+                  .map(r => (r.getLong(0), r.getLong(1))).toSeq
+                  .toDF("doc_a", "doc_b")
+                MinHashLSH.verifySurvivors(pairsLocal, sigs, threshold,
+                    sb = Some(sigs.select(col("id"), col("sb"))))
+                  .select(col("doc_a").cast("long"),
+                    col("doc_b").cast("long"))
+              }
+            }
+          }
+        (verified, fpForced) match {
+          case (null, null) => null
+          case (null, f) => f.distinct()
+          case (v, null) => v.distinct()
+          case (v, f) => v.unionByName(f).distinct()
+        }
+      }
+    // component resolution within the batch — the capped driver
+    // union-find ([[cappedComponents]]): a batch's internal near-dup
+    // graph is metadata-scale in the common case; a pathological
+    // mass-dup batch falls back to the distributed operator. Run after
+    // the cross cascade, not as a concurrent lane beside it: on dp03 at
+    // sf0.1 (4 cores, min of two, two runs each) the lane measured
+    // 39.3/37.5 s against 31.5/30.5 s in sequence.
+    val labels = jd(spark, internalLabel) {
+      cappedComponents(internal, "doc_a", "doc_b") }
+    // the capped PAIR collect is the one action on the cross cascade
+    // (round 11): a merge-bearing batch re-joins the collected pairs as
+    // a LOCAL relation, so the cascade evaluates exactly once
+    val pairRows: Array[(Long, Long)] =
+      if (crossPairs == null) Array.empty
+      else jd(spark, s"b$batchKey cross verify") {
+        crossPairs.limit(MergeGraphCap + 1).collect()
+          .map(r => (r.getLong(0), r.getLong(1))) }
+    (labels, pairRows,
+      pairRows.length > MergeGraphCap, () => crossPairs)
   }
 
   /** Each id's latest-`b` label row among `rows` (id, lbl, b). */
@@ -573,10 +887,12 @@ object CorpusStream {
       .select(col("id"), col("lbl"))
   }
 
-  /** Signature width of a stored state table: the parquet-persisted
-    * [[MinHashLSH.NumPermMetaKey]] field metadata when present (states
-    * written from round 8 on), else one bounded head-row probe (legacy
-    * states). None for an empty state. */
+  /** Signature width of a stored state table: the
+    * [[MinHashLSH.NumPermMetaKey]] field metadata the sketch read
+    * restores from the partitions' footers ([[footerSigWidth]] — states
+    * written from round 8 on, and folds since the width was carried
+    * through them), else one bounded head-row probe (legacy files
+    * without the key). None for an empty state. */
   private[streaming] def storedSigWidth(state: DataFrame): Option[Int] =
     MinHashLSH.sigWidthOf(state).orElse(
       state.select(size(col("sig")).as("__w"))
@@ -863,6 +1179,8 @@ object CorpusStream {
           catalog.listPartitions(stateTable, "batch_id")
             .filter(_ != batchKey),
           None).orNull
+    // (the width comes from the sketch files' footers; only legacy
+    // files without it cost a head-row probe job)
     if (state != null)
       jd(batch.sparkSession, s"b$batchKey state width") {
         requireCompatibleState(state, geom, stateTable, threshold) }
@@ -916,201 +1234,63 @@ object CorpusStream {
       graft.core.Fence(
         MinHashLSH.signatureFrame(newDocs, "doc_id", "text", 3, geom)
           .withColumn("sb", MinHashLSH.bottomKCol(col("sh")))) }
-    // materialize the signature checkpoint EAGERLY, before the two
-    // cascade lanes below fan out over it: concurrent first-touch of a
-    // lazy checkpoint can compute partitions twice (block-level dedup
-    // races — the bench's "already cached" WARNs), so one count here
-    // makes computed-exactly-once structural instead of resting on the
-    // pipeline's determinism. The count itself is not extra work: the
-    // write section below needs nSigs anyway (pk-split layout choice),
-    // and counting the materialized checkpoint later was a serial job
-    // between the merge bookkeeping and the sinks.
-    val nSigs = jd(batch.sparkSession, s"b$batchKey signatures count") {
-      newSigs.count() }
-    // sig-carrying band frames + the fused floor (collidedSurvivors):
-    // the size prune + agreement floor filter inside the band join's
-    // own stage, so the per-batch shuffle is linear in band rows —
-    // at scale the stored corpus's band side is the big one, and this
-    // is exactly the shape that keeps it from re-joining per candidate
-    val newBands = MinHashLSH.bandFrameWithSig(newSigs, geom)
     val newSk = newSigs.select(col("id"), col("sh"), col("n"),
       col("sig"), col("sb"))
-    // internal pairs are new×new: their sample/verify fetches touch
-    // only this batch's sketches, never the state (labelled: building
-    // the verify frame plans it, which starts its broadcast jobs)
-    val internalLabel = s"b$batchKey internal pairs + components"
-    val internal = jd(batch.sparkSession, internalLabel) {
-      MinHashLSH.verifySurvivors(
-          MinHashLSH.collidedSurvivors(newBands, newBands, threshold,
-            geom, selfJoin = true),
-          newSk, threshold, sb = Some(newSk.select(col("id"), col("sb"))))
-        .select(col("doc_a"), col("doc_b")) }
-    // cross PAIRS (new doc, seen doc), not just touched flags: merging
-    // needs to know WHICH seen components this batch connects. The
-    // forced fp-duplicate pairs union in here — same capped collect,
-    // same merge machinery, unconditional dethronement.
-    // Evaluated as a LANE concurrent with the internal-components
-    // collect below (guide §2.6): the two cascades are independent
-    // until the merge step consumes both (internal×internal vs
-    // new×seen), and each is several serial driver-latency-bound
-    // jobs over the same fenced signature frame.
-    val crossPairsThunk: () => DataFrame = () =>
-      if (state == null) null
-      else jd(batch.sparkSession, s"b$batchKey cross pairs") {
-        val covered = bandsCovered(catalog, stateTable, batchKey)
-        val seenBands = jd(batch.sparkSession, s"b$batchKey seen bands") {
-          seenBandFrame(catalog, stateTable, batchKey, state, newBands,
-            geom, covered) }
-        def fullStateVerify(survivors: DataFrame): DataFrame = {
-          val sigs = newSk.unionByName(state.select(col("id"),
-            col("sh"), col("n"), col("sig"), col("sb")))
-          MinHashLSH.verifySurvivors(survivors, sigs, threshold,
-              sb = Some(sigs.select(col("id"), col("sb"))))
-            .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-        }
-        val verified =
-          if (!covered)
-            // legacy not-covered path (pre-round-8 state, no bands
-            // table): the full-state fetch — it re-bands the full
-            // state anyway, and the one pair collect below evaluates
-            // the fused cascade exactly once
-            fullStateVerify(MinHashLSH.collidedSurvivors(newBands,
-              seenBands, threshold, geom, selfJoin = false))
+    // ONE job over the signature checkpoint ([[boundedCollect]]): its
+    // exact row count — the write section's layout choice — and, per
+    // partition, its first DriverVerifyIdCap + 1 rows, so a driver-small
+    // batch arrives whole and its cascade runs on the driver. The same
+    // job materializes the checkpoint EAGERLY, before the write lanes
+    // below fan out over it: concurrent first-touch of a lazy
+    // checkpoint can compute partitions twice (block-level dedup races
+    // — the bench's "already cached" WARNs).
+    val (nSigs, sigRows) =
+      jd(batch.sparkSession, s"b$batchKey signatures collect") {
+        boundedCollect(newSk, DriverVerifyIdCap) }
+    // the sig-carrying band frame: the `_bands` write's rows and the
+    // distributed cascade's input (lazy — the driver path never runs it)
+    val newBands = MinHashLSH.bandFrameWithSig(newSigs, geom)
+    // 5. the near-dup cascade: the batch's internal (new×new) near-dup
+    //    components, and its cross PAIRS (new doc, seen doc), not just
+    //    touched flags — merging needs to know WHICH seen components
+    //    this batch connects. The forced fp-duplicate pairs union into
+    //    the cross pairs — same merge machinery, unconditional
+    //    dethronement. A batch within the driver caps
+    //    ([[DriverVerifyIdCap]], [[DriverVerifyPairCap]]) runs the whole
+    //    cascade on the driver ([[driverCascade]]); a larger one, or a
+    //    legacy state whose bands table does not cover its sketches,
+    //    runs it distributed. Either way the cross pairs arrive as
+    //    driver rows (`pairRows`, up to MergeGraphCap + 1); `crossPairs`
+    //    re-derives their frame for an over-cap batch only.
+    val covered = state != null &&
+      bandsCovered(catalog, stateTable, batchKey)
+    val driverPairs =
+      if (nSigs > DriverVerifyIdCap || (state != null && !covered)) None
+      else driverCascade(catalog, stateTable, batchKey, sigRows,
+        state != null, threshold, geom)
+    val (labelsOpt, pairRows, overCap, crossPairs) = driverPairs match {
+      case Some((internalPairs, crossVerified)) =>
+        val spark = batch.sparkSession
+        import spark.implicits._
+        val (nForced, forced) =
+          if (fpForced == null) (0L, Array.empty[(Long, Long)])
           else {
-            // the verify stage fetches `sh` arrays for the SEEN side
-            // of every candidate pair. Collect the candidates (band
-            // join + agreement floor — the cheap prefix of the
-            // cascade, NOT the array verify) up to the merge cap,
-            // with each seen id's sketch pk riding along in the same
-            // job; the fetch then reads only the colliding pk
-            // DIRECTORIES of the pk-split sketch partitions, and
-            // inside them only the row groups the (sorted-by-id)
-            // candidate id IN-filter survives — metadata-scale, where
-            // the round-12 first cut (pk set of every id in colliding
-            // band BUCKETS) saturated all 64 buckets on any batch
-            // with a few hundred collisions and pruned nothing (the
-            // former ProbeSketch measured split slower than plain). The
-            // verify re-joins the collected pairs as a broadcast
-            // LOCAL relation, so the cascade prefix still runs once.
-            // Over the cap — a pathological mass-collision batch —
-            // the cascade re-derives distributed against the full
-            // state, the same fallback shape as [[cappedComponents]].
-            val cand = MinHashLSH.collidedSurvivors(newBands, seenBands,
-              threshold, geom, selfJoin = false)
-            val candRows = jd(batch.sparkSession,
-                s"b$batchKey cross candidates") { cand
-              .select(col("doc_a").cast("long"),
-                col("doc_b").cast("long"),
-                emitPkCol(col("doc_b")).as("__pk"))
-              .limit(MergeGraphCap + 1).collect() }
-            if (candRows.length > MergeGraphCap)
-              fullStateVerify(cand)
-            else if (candRows.isEmpty)
-              // nothing survived the floor: no cross verify at all
-              null
-            else {
-              val ids = candRows.map(_.getLong(1)).distinct
-              val aIds = candRows.map(_.getLong(0)).distinct
-              val ipks = candRows.map(_.getLong(2)).toSet
-              val fetched = readSketchBatches(catalog, stateTable,
-                  catalog.listPartitions(stateTable, "batch_id")
-                    .filter(_ != batchKey),
-                  Some(ipks))
-                .map { f =>
-                  // the IN pushdown prunes row groups; past the cap
-                  // the literal list costs more than it prunes and
-                  // the directory pruning stands alone
-                  if (ids.length <= IsinCap)
-                    f.filter(col("id").isin(ids.toIndexedSeq: _*))
-                  else f
-                }
-                .getOrElse(state)
-              val spark = batch.sparkSession
-              import spark.implicits._
-              if (candRows.length <= DriverVerifyPairCap &&
-                  ids.length <= DriverVerifyIdCap &&
-                  aIds.length <= DriverVerifyIdCap) {
-                // driver fast path (see [[DriverVerifyIdCap]]): two
-                // bounded array collects, then the shared scalar
-                // kernels decide each pair — no distributed
-                // prune/verify joins for a metadata-scale candidate
-                // set
-                def arrMap(df: DataFrame, sel: Seq[Long])
-                    : Map[Long, (Array[Long], Array[Long])] =
-                  jd(batch.sparkSession, s"b$batchKey verify fetch") {
-                  df.filter(col("id").isin(sel.toIndexedSeq: _*))
-                    .select(col("id"), col("sh"), col("sb"))
-                    .collect() }
-                    .flatMap { r =>
-                      if (r.isNullAt(1) || r.isNullAt(2)) None
-                      else Some(r.getLong(0) ->
-                        (r.getSeq[Long](1).toArray,
-                         r.getSeq[Long](2).toArray))
-                    }.toMap
-                val bArr = arrMap(fetched, ids.toSeq)
-                val aArr = arrMap(newSk, aIds.toSeq)
-                val floor = threshold - 0.05
-                val usePrune = threshold < MinHashLSH.SampleCutoff
-                val kept = candRows.iterator.flatMap { r =>
-                  val a = r.getLong(0); val b = r.getLong(1)
-                  (aArr.get(a), bArr.get(b)) match {
-                    case (Some((sha, sba)), Some((shb, sbb))) =>
-                      val pass = !usePrune || {
-                        val (inter, taken) = graft.sim.SetVerify
-                          .bottomKInterTaken(sba, sbb,
-                            MinHashLSH.BottomK)
-                        taken > 0 && inter.toDouble / taken >= floor
-                      }
-                      if (!pass) None
-                      else {
-                        val xs = sha.clone; java.util.Arrays.sort(xs)
-                        val ys = shb.clone; java.util.Arrays.sort(ys)
-                        val inter =
-                          graft.sim.SetVerify.sortedIntersect(xs, ys)
-                        val union = xs.length + ys.length - inter
-                        if (inter.toDouble / union >= threshold)
-                          Some((a, b))
-                        else None
-                      }
-                    case _ => None // an absent/null array never joins
-                  }
-                }.toSeq
-                if (kept.isEmpty) null
-                else kept.toDF("doc_a", "doc_b")
-              } else {
-                val sigs = newSk.unionByName(fetched.select(col("id"),
-                  col("sh"), col("n"), col("sig"), col("sb")))
-                val pairsLocal = candRows
-                  .map(r => (r.getLong(0), r.getLong(1))).toSeq
-                  .toDF("doc_a", "doc_b")
-                MinHashLSH.verifySurvivors(pairsLocal, sigs, threshold,
-                    sb = Some(sigs.select(col("id"), col("sb"))))
-                  .select(col("doc_a").cast("long"),
-                    col("doc_b").cast("long"))
-              }
-            }
+            val (n, rows) = jd(spark, s"b$batchKey cross verify") {
+              boundedCollect(fpForced, MergeGraphCap) }
+            (n, rows.map(r => (r.getLong(0), r.getLong(1))))
           }
-        (verified, fpForced) match {
-          case (null, null) => null
-          case (null, f) => f.distinct()
-          case (v, null) => v.distinct()
-          case (v, f) => v.unionByName(f).distinct()
-        }
-      }
-    // 5. component resolution within the batch — the capped driver
-    //    union-find ([[cappedComponents]]): a batch's internal
-    //    near-dup graph is metadata-scale in the common case, and the
-    //    iterative CC loop's per-round jobs were most of the chain's
-    //    job count; a pathological mass-dup batch falls back to the
-    //    distributed operator. Runs as a lane concurrent with the
-    //    cross-pair cascade (see crossPairsThunk) — independent
-    //    cascades over the shared fenced signatures, joined here.
-    val lanes = graft.core.Par.concurrently(Seq[() => Any](
-      crossPairsThunk,
-      () => jd(batch.sparkSession, internalLabel) {
-        cappedComponents(internal, "doc_a", "doc_b") }))
-    val crossPairs = lanes(0).asInstanceOf[DataFrame]
-    val labelsOpt = lanes(1).asInstanceOf[Option[DataFrame]]
+        val rows = (crossVerified ++ forced).distinct.toArray
+        (driverComponents(spark, internalPairs), rows,
+          nForced > MergeGraphCap || rows.length > MergeGraphCap,
+          () => {
+            val v = crossVerified.toDF("doc_a", "doc_b")
+            if (fpForced == null) v else v.unionByName(fpForced).distinct()
+          })
+      case None =>
+        distributedCascade(batch.sparkSession, catalog, stateTable,
+          batchKey, state, covered, newSk, newBands, fpForced, threshold,
+          geom)
+    }
     val labeled = labelsOpt match {
       case None => newDocs.withColumn("label", col("doc_id"))
       case Some(l) => newDocs.join(
@@ -1137,23 +1317,16 @@ object CorpusStream {
     //         retraction set and the anti-join is a no-op the second
     //         time). Labels only ever decrease, so a once-dropped doc
     //         can never need re-admission.
-    // the capped PAIR collect is the one action on the cross cascade
-    // (round 11): an empty result — the common batch, where band
-    // collisions exist but nothing verifies — short-circuits ALL merge
-    // bookkeeping including the label-state read and its window (the
+    // An empty pairRows — the common batch, where band collisions exist
+    // but nothing verifies — short-circuits ALL merge bookkeeping
+    // including the label-state read and its window (the
     // unconditional-convergence overhead ADVICE r10 measured at ~14%
     // per merge-free batch). A merge-bearing batch re-joins the
     // collected pairs as a broadcast-sized LOCAL relation, so the
-    // cascade still evaluates exactly once and the label joins run
-    // against a tiny build side. Over [[MergeGraphCap]] pairs (a
-    // pathological mass-merge batch) the cascade is re-derived
-    // distributed — fenced, so the CC fallback consumes it once.
-    val pairRows: Array[(Long, Long)] =
-      if (crossPairs == null) Array.empty
-      else jd(batch.sparkSession, s"b$batchKey cross verify") {
-        crossPairs.limit(MergeGraphCap + 1).collect()
-          .map(r => (r.getLong(0), r.getLong(1))) }
-    val overCap = pairRows.length > MergeGraphCap
+    // label joins run against a tiny build side. Over [[MergeGraphCap]]
+    // pairs (a pathological mass-merge batch) the pair frame is
+    // re-derived distributed — fenced, so the CC fallback consumes it
+    // once.
     val curLbls =
       if (pairRows.isEmpty) null
       else currentLabels(catalog, stateTable, batchKey)
@@ -1162,7 +1335,7 @@ object CorpusStream {
       import spark.implicits._
       val pairsSrc =
         if (!overCap) pairRows.toSeq.toDF("doc_a", "doc_b")
-        else { val f = graft.core.Fence.soft(crossPairs)
+        else { val f = graft.core.Fence.soft(crossPairs())
                release += f; f }
       val la = pairsSrc
         .join(labeled.select(col("doc_id").as("__na"), col("label")),

@@ -226,6 +226,116 @@ class StreamingSpec extends SparkSpec {
     assert(got == want)
   }
 
+  test("incremental corpus pipeline over small micro-batches (the " +
+       "driver cascade) with compaction equals batch dp01") {
+    val dir = "/root/testdata/sf0.001"
+    val docs = graft.core.Tables.load(spark, dir, "documents")
+      .select($"doc_id", $"text", $"lang")
+    val cat = new graft.catalog.TableCatalog(spark,
+      java.nio.file.Files.createTempDirectory("corpus_sm_").toString)
+    // 40-doc batches sit under DriverVerifyIdCap; a cadence of 4 folds
+    // the state into a `c` partition several times on the way
+    (0 until 500 by 40).zipWithIndex.foreach { case (lo, b) =>
+      CorpusStream.processBatch(
+        docs.filter($"doc_id" >= lo && $"doc_id" < lo + 40), cat,
+        "sm_seen", "sm_out", b.toLong, compactEvery = 4)
+    }
+    val got = CorpusStream.readOutput(cat, "sm_out")
+      .select($"doc_id", $"lang", $"n_toks")
+      .as[(Long, String, Int)].collect().toSet
+    val want = graft.queries.LlmQueries
+      .queries("dp01_corpus_pipeline")(spark, dir)
+      .as[(Long, String, Int)].collect().toSet
+    assert(got == want)
+  }
+
+  test("the driver near-dup cascade equals the distributed one: band " +
+       "keys, pk buckets, internal and new-vs-stored pairs at t=0.7 " +
+       "(sample prune on) and t=0.8 (off)") {
+    import graft.sim.MinHashLSH
+    // 12 seeded families of 4 variants each, the variants drifting from
+    // their base by 0-30% of words, so pairs straddle every stage's
+    // cut; plus an exact twin, null texts and texts under 3 chars (empty
+    // shingle sets, all-null signatures, one shared "" band key)
+    val rnd = new scala.util.Random(17)
+    val vocab = Vector.fill(80)((0 until 5)
+      .map(_ => ('a' + rnd.nextInt(26)).toChar).mkString)
+    val fams = (0 until 12).flatMap { f =>
+      val base = Vector.fill(40)(vocab(rnd.nextInt(vocab.size)))
+      (0 until 4).map { v =>
+        val words = base.map(w =>
+          if (rnd.nextDouble() < v * 0.1) vocab(rnd.nextInt(vocab.size))
+          else w)
+        ((f * 4 + v).toLong, words.mkString(" "))
+      }
+    }
+    val odd = Seq((100L, fams(0)._2), (101L, null), (102L, null),
+      (103L, ""), (104L, "a"), (105L, "ab"), (106L, "ab"))
+    val all = (fams ++ odd).toDF("doc_id", "text")
+    // new side: the even variants of every family and half the odd
+    // rows; stored side: the rest — every family straddles the two
+    val isNew = $"doc_id" % 2 === 0 || $"doc_id" >= 103
+    Seq(0.7, 0.8).foreach { t =>
+      val geom = MinHashLSH.geometryFor(t)
+      def signed(df: org.apache.spark.sql.DataFrame) = graft.core.Fence(
+        MinHashLSH.signatureFrame(df, "doc_id", "text", 3, geom)
+          .withColumn("sb", MinHashLSH.bottomKCol($"sh")))
+        .select($"id", $"sh", $"n", $"sig", $"sb")
+      val (newSk, seenSk) = (signed(all.filter(isNew)),
+        signed(all.filter(!isNew)))
+      val (newBands, seenBands) = (MinHashLSH.bandFrameWithSig(newSk, geom),
+        MinHashLSH.bandFrameWithSig(seenSk, geom))
+      assert(MinHashLSH.sigWidthOf(newSk) == Some(geom.numPerm))
+      val newRows = newSk.collect().toSeq
+      val driverNew = newRows.flatMap(r => MinHashLSH.driverBands(
+        r.getLong(0), CorpusStream.intOf(r, 2), CorpusStream.sigOf(r, 3),
+        geom))
+      // band keys and their pk buckets, against the frame and the
+      // state layout's own pk columns
+      assert(driverNew.map(b => (b.id, b.idx, b.key, CorpusStream
+          .bandKeyPk(b.key))).toSet ==
+        newBands.select($"id", $"band_idx", $"band_key",
+            CorpusStream.pkCol.as("pk"))
+          .as[(Long, Int, String, Long)].collect().toSet)
+      assert(newRows.map(r => (r.getLong(0), CorpusStream
+          .idPk(r.getLong(0)))).toSet ==
+        newSk.select($"id", CorpusStream.emitPkCol($"id"))
+          .as[(Long, Long)].collect().toSet)
+      assert(driverNew.exists(_.key.isEmpty))
+      val driverSeen = seenBands.collect().toSeq.map(r =>
+        MinHashLSH.BandRow(r.getLong(0), CorpusStream.intOf(r, 1),
+          CorpusStream.sigOf(r, 2), r.getInt(3), r.getString(4)))
+      def sketches(rows: Seq[org.apache.spark.sql.Row]) =
+        rows.map(r => r.getLong(0) -> CorpusStream.sketchOf(r, 1, 4)).toMap
+      val (skNew, skSeen) = (sketches(newRows), sketches(seenSk.collect()))
+      def distributed(a: org.apache.spark.sql.DataFrame,
+          b: org.apache.spark.sql.DataFrame, self: Boolean,
+          sk: org.apache.spark.sql.DataFrame) =
+        MinHashLSH.verifySurvivors(
+            MinHashLSH.collidedSurvivors(a, b, t, geom, selfJoin = self),
+            sk, t, sb = Some(sk.select($"id", $"sb")))
+          .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
+      // internal: new×new
+      val candIn = MinHashLSH.driverSurvivors(driverNew, driverNew, t,
+        geom, selfJoin = true)
+      val gotIn = MinHashLSH.driverVerify(candIn, skNew.get, skNew.get, t)
+      assert(candIn.toSet == MinHashLSH.collidedSurvivors(newBands,
+          newBands, t, geom, selfJoin = true)
+        .as[(Long, Long)].collect().toSet)
+      assert(gotIn.toSet == distributed(newBands, newBands, true, newSk))
+      // cross: new×stored
+      val candX = MinHashLSH.driverSurvivors(driverNew, driverSeen, t,
+        geom, selfJoin = false)
+      val gotX = MinHashLSH.driverVerify(candX, skNew.get, skSeen.get, t)
+      assert(gotX.toSet == distributed(newBands, seenBands, false,
+        newSk.unionByName(seenSk)))
+      // the fixture exercises every stage: pairs verify, and some
+      // floor survivors fail the verify tail
+      assert(gotIn.nonEmpty && gotX.nonEmpty, s"t=$t")
+      assert(candIn.size + candX.size > gotIn.size + gotX.size, s"t=$t")
+    }
+  }
+
   // ---- convergent-merge (retraction) fixtures: word families with
   // controlled TRIGRAM Jaccard overlap. Each family draws from its own
   // two-letter alphabet (family f uses only letters 2f and 2f+1),
@@ -1008,15 +1118,12 @@ class StreamingSpec extends SparkSpec {
     assert(rowsOf(cat) == rowsOf(ref))
   }
 
-  test("every job a chain batch starts carries its phase label, not " +
-       "only the batch-wide one") {
+  /** (spark.job.description, stage names) of every job `body` starts:
+    * a listener drained by a labelled sentinel job — one queue delivers
+    * a listener's events in order, so once the sentinel's start arrives
+    * every earlier job's start has too. */
+  private def jobsStartedBy(body: => Unit): Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
-    val dir = "/root/testdata/sf0.001"
-    val docs = graft.core.Tables.load(spark, dir, "documents")
-      .select($"doc_id", $"text", $"lang")
-    val cat = new graft.catalog.TableCatalog(spark,
-      java.nio.file.Files.createTempDirectory("corpus_jl_").toString)
-    // (description, stage names) of every job started while listening
     val started =
       new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -1030,14 +1137,7 @@ class StreamingSpec extends SparkSpec {
     val sentinel = "job-label-sentinel"
     sc.addSparkListener(listener)
     try {
-      // three batches with a cadence of 2: the third compacts first
-      (0 until 3).foreach { i =>
-        CorpusStream.processBatch(
-          docs.filter($"doc_id" >= i * 150 && $"doc_id" < (i + 1) * 150),
-          cat, "jl_seen", "jl_out", i.toLong, compactEvery = 2)
-      }
-      // one queue delivers a listener's events in order: once the
-      // sentinel job's start arrives, every batch job's start has too
+      body
       sc.setJobDescription(sentinel)
       try spark.range(1).count() finally sc.setJobDescription(null)
       val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
@@ -1046,10 +1146,69 @@ class StreamingSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
     val jobs = started.asScala.toSeq
     assert(jobs.exists(_._1 == sentinel), "listener never drained")
+    jobs.filter(_._1 != sentinel)
+  }
+
+  test("every job a chain batch starts carries its phase label, not " +
+       "only the batch-wide one") {
+    val dir = "/root/testdata/sf0.001"
+    val docs = graft.core.Tables.load(spark, dir, "documents")
+      .select($"doc_id", $"text", $"lang")
+    val cat = new graft.catalog.TableCatalog(spark,
+      java.nio.file.Files.createTempDirectory("corpus_jl_").toString)
+    val jobs = jobsStartedBy {
+      // three batches with a cadence of 2: the third compacts first
+      (0 until 3).foreach { i =>
+        CorpusStream.processBatch(
+          docs.filter($"doc_id" >= i * 150 && $"doc_id" < (i + 1) * 150),
+          cat, "jl_seen", "jl_out", i.toLong, compactEvery = 2)
+      }
+    }
     assert(jobs.exists(_._1.startsWith("CorpusStream: compact ")))
     val bare = jobs.filter(_._1.matches("CorpusStream: b\\d+ chain"))
     assert(bare.isEmpty, bare.mkString("\n"))
   }
+
+  test("a small merge-free batch over a compacted state runs its " +
+       "near-dup cascade on the driver: a bounded job count, no " +
+       "distributed cascade or state-width jobs") {
+    // 40 seeded random words per doc: trigram Jaccard between any two
+    // docs is ~0.01, so no near-dup pairs inside a batch or across
+    // batches and no merge bookkeeping runs
+    def batch(ids: Range) = ids.map { i =>
+        val rnd = new scala.util.Random(i)
+        (i.toLong, Seq.fill(40)((0 until 6)
+          .map(_ => ('a' + rnd.nextInt(26)).toChar).mkString)
+          .mkString(" "), "en")
+      }.toDF("doc_id", "text", "lang")
+    val cat = new graft.catalog.TableCatalog(spark,
+      java.nio.file.Files.createTempDirectory("corpus_jb_").toString)
+    // batch 2 compacts batches 0-1 first: the measured batch reads a
+    // compacted `c` partition beside one live partition
+    (0 until 3).foreach { b =>
+      CorpusStream.processBatch(batch(b * 20 until b * 20 + 20), cat,
+        "jb_seen", "jb_out", b.toLong, admit = df => df, compactEvery = 2)
+    }
+    assert(cat.listPartitions("jb_seen", "batch_id")
+      .exists(_.startsWith("c")))
+    val jobs = jobsStartedBy {
+      CorpusStream.processBatch(batch(60 until 80), cat, "jb_seen",
+        "jb_out", 3L, admit = df => df, compactEvery = 0)
+    }
+    val labels = jobs.map(_._1)
+    Seq("internal pairs + components", "cross candidates", "state width",
+        "merge components", "retract").foreach { l =>
+      assert(!labels.exists(_.endsWith(l)),
+        s"$l in\n${labels.mkString("\n")}")
+    }
+    assert(labels.exists(_.endsWith("b3 seen bands")))
+    assert(jobs.size <= MergeFreeBatchJobs, labels.mkString("\n"))
+    assert(CorpusStream.readState(cat, "jb_seen").count() == 80)
+  }
+
+  /** Jobs a merge-free 20-doc batch over a compacted state starts
+    * (measured: 12). */
+  private val MergeFreeBatchJobs = 12
 
   // three-batch seeded warehouse + the expected post-compaction state,
   // shared by the crash-recovery tests below
@@ -1461,6 +1620,27 @@ class StreamingSpec extends SparkSpec {
     graft.streaming.CorpusStream.processBatch(
       docs.filter($"doc_id" >= 250), cat, "geo_seen", "geo_out", 1L)
     assert(cat.listPartitions("geo_out", "batch_id").size == 2)
+    // a state whose only partition is a compacted `c`: the fold keeps
+    // the width in its footer, so the guard reads it driver-side —
+    // no head-row probe job
+    Seq(0L, 1L).foreach { b =>
+      CorpusStream.processBatch(
+        docs.filter($"doc_id" >= b * 150 && $"doc_id" < (b + 1) * 150),
+        cat, "geo_c", "geo_c_out", b, compactEvery = 0)
+    }
+    assert(CorpusStream.compactState(cat, "geo_c", "2"))
+    assert(cat.listPartitions("geo_c", "batch_id") == Seq("c1"))
+    assert(graft.sim.MinHashLSH.sigWidthOf(
+      CorpusStream.readState(cat, "geo_c")) == Some(48))
+    val jobs = jobsStartedBy {
+      val e2 = intercept[IllegalArgumentException] {
+        CorpusStream.processBatch(docs.filter($"doc_id" >= 300), cat,
+          "geo_c", "geo_c_out", 2L, threshold = 0.8)
+      }
+      assert(e2.getMessage.contains("geo_c"))
+    }
+    assert(!jobs.exists(_._1.endsWith("state width")),
+      jobs.map(_._1).mkString("\n"))
   }
 
   test("incremental corpus pipeline decontaminates each batch against " +
