@@ -544,37 +544,104 @@ object MinHashLSH {
       col(textCol).cast("string").as("__t")))
     val schema = StructType(Seq(base.schema.head,
       StructField("sh", ArrayType(LongType, true), true)))
-    val pow = TextHash.pow31.toArray
-    val cm = TextHash.CodeMod
+    val signer = new Signer(q, 0, Array.emptyLongArray)
     base.mapPartitions { rows =>
       rows.map { r =>
-        val txt = if (r.isNullAt(1)) null else r.getString(1)
-        if (txt == null) org.apache.spark.sql.Row(r.get(0), null)
-        else {
-          val cps = txt.codePoints().toArray
-          val seen = new java.util.LinkedHashSet[java.lang.Long]()
-          var i = 0
-          while (i + q <= cps.length) {
-            var h = 0L; var j = 0
-            while (j < q) {
-              h += cps(i + j).toLong % cm * pow(q - 1 - j); j += 1
-            }
-            seen.add(h); i += 1
-          }
-          val sh = new Array[Long](seen.size)
-          val it = seen.iterator(); var k = 0
-          while (it.hasNext) { sh(k) = it.next(); k += 1 }
-          org.apache.spark.sql.Row(r.get(0), sh)
-        }
+        org.apache.spark.sql.Row(r.get(0),
+          if (r.isNullAt(1)) null else signer.shingles(r.getString(1)))
       }
     }(org.apache.spark.sql.Encoders.row(schema))
   }
 
+  /** One doc's [[signatureFrame]] row: `sh` in the kernel's first-seen
+    * order, and `sig` (each element null when `sh` is empty, as the
+    * Column form's `array_min([])`); both null for a null text. */
+  private[graft] final case class Signed(sh: Array[Long],
+                                         sig: Array[java.lang.Long]) {
+    def n: java.lang.Integer =
+      if (sh == null) null else Int.box(sh.length)
+  }
+
+  /** The per-row kernel [[signatureFrame]]'s partitions and the
+    * incremental pipeline's driver both run, so the two cannot drift:
+    * the distinct q-gram shingle hashes of a text's code points (base-31
+    * over `code % CodeMod`, [[TextHash]]), minus `drop`, and their
+    * `numPerm` minhash signature. Serializable: the frame form ships it
+    * to the executors. */
+  private[graft] final class Signer(q: Int, numPerm: Int,
+      drop: Array[Long]) extends Serializable {
+    private val pow = TextHash.pow31.toArray
+    private val cm = TextHash.CodeMod
+    private val pa = Array.tabulate(numPerm)(permA)
+    private val pb = Array.tabulate(numPerm)(permB)
+    @transient private lazy val dropSet = {
+      val d = new java.util.HashSet[java.lang.Long](
+        math.max(16, drop.length * 2))
+      drop.foreach(d.add(_))
+      d
+    }
+
+    def shingles(txt: String): Array[Long] = {
+      val cps = txt.codePoints().toArray
+      val drops = dropSet
+      val seen = new java.util.LinkedHashSet[java.lang.Long]()
+      var i = 0
+      while (i + q <= cps.length) {
+        var h = 0L; var j = 0
+        while (j < q) {
+          h += cps(i + j).toLong % cm * pow(q - 1 - j); j += 1
+        }
+        if (!drops.contains(h)) seen.add(h)
+        i += 1
+      }
+      val sh = new Array[Long](seen.size)
+      val it = seen.iterator(); var k = 0
+      while (it.hasNext) { sh(k) = it.next(); k += 1 }
+      sh
+    }
+
+    def apply(txt: String): Signed =
+      if (txt == null) Signed(null, null)
+      else {
+        val sh = shingles(txt)
+        // minhash of an empty shingle set is null (array_min([]))
+        val sig: Array[java.lang.Long] =
+          if (sh.isEmpty) Array.fill[java.lang.Long](numPerm)(null)
+          else {
+            val out = new Array[java.lang.Long](numPerm)
+            var jj = 0
+            while (jj < numPerm) {
+              var m = Long.MaxValue; var x = 0
+              while (x < sh.length) {
+                val v = (pa(jj) * sh(x) + pb(jj)) % P
+                if (v < m) m = v
+                x += 1
+              }
+              out(jj) = m; jj += 1
+            }
+            out
+          }
+        Signed(sh, sig)
+      }
+  }
+
+  /** [[bottomKCol]] of one shingle array on the driver: its
+    * [[BottomK]] smallest values ascending; null for null. */
+  private[graft] def driverBottomK(sh: Array[Long]): Array[Long] =
+    if (sh == null) null
+    else { val s = sh.clone(); java.util.Arrays.sort(s); s.take(BottomK) }
+
+  /** The field metadata [[signatureFrame]] stamps on `sig`. */
+  private[graft] def sigMeta(numPerm: Int)
+      : org.apache.spark.sql.types.Metadata =
+    new org.apache.spark.sql.types.MetadataBuilder()
+      .putLong(NumPermMetaKey, numPerm.toLong).build()
+
   /** Kernel twin of shingling + [[minhash]]: one pass per row computing
     * (id, distinct q-gram shingle hashes, their count, the numPerm
-    * minhash signature). Exposed for the TextSimSpec pin against the
-    * Column form. `dropShingles` (the df-filter path — see
-    * [[nearDupPairs]]) removes the given hashes from every doc's
+    * minhash signature) through [[Signer]]. Exposed for the TextSimSpec
+    * pin against the Column form. `dropShingles` (the df-filter path —
+    * see [[nearDupPairs]]) removes the given hashes from every doc's
     * shingle set before counting or signing, as if the q-grams were
     * never in the text. */
   def signatureFrame(docs: DataFrame, idCol: String, textCol: String,
@@ -583,7 +650,6 @@ object MinHashLSH {
                      dropShingles: Option[Array[Long]] = None): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
       StructField, StructType}
-    val numPerm = geom.numPerm
     // spread the kernel (and the fence blocks every downstream
     // reference scans) across the configured parallelism: a small
     // local parquet plans as ONE split, serializing the signature
@@ -592,65 +658,23 @@ object MinHashLSH {
     // wide and this is a no-op
     val base = graft.core.Par.ensure(docs.select(col(idCol).as("id"),
       col(textCol).cast("string").as("__t")))
-    val sigMeta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong(NumPermMetaKey, numPerm.toLong).build()
+    val meta = sigMeta(geom.numPerm)
     val schema = StructType(Seq(base.schema.head,
       StructField("sh", ArrayType(LongType, true), true),
       StructField("n", IntegerType, true),
-      StructField("sig", ArrayType(LongType, true), true, sigMeta)))
-    val pow = TextHash.pow31.toArray
-    val cm = TextHash.CodeMod
-    val pa = Array.tabulate(numPerm)(permA)
-    val pb = Array.tabulate(numPerm)(permB)
-    val dropArr = dropShingles.getOrElse(Array.emptyLongArray)
+      StructField("sig", ArrayType(LongType, true), true, meta)))
+    val signer = new Signer(q, geom.numPerm,
+      dropShingles.getOrElse(Array.emptyLongArray))
     base.mapPartitions { rows =>
-      val dropSet = new java.util.HashSet[java.lang.Long](
-        math.max(16, dropArr.length * 2))
-      dropArr.foreach(dropSet.add(_))
       rows.map { r =>
-        val txt = if (r.isNullAt(1)) null else r.getString(1)
-        if (txt == null)
-          org.apache.spark.sql.Row(r.get(0), null, null, null)
-        else {
-          val cps = txt.codePoints().toArray
-          val seen = new java.util.LinkedHashSet[java.lang.Long]()
-          var i = 0
-          while (i + q <= cps.length) {
-            var h = 0L; var j = 0
-            while (j < q) {
-              h += cps(i + j).toLong % cm * pow(q - 1 - j); j += 1
-            }
-            if (!dropSet.contains(h)) seen.add(h)
-            i += 1
-          }
-          val sh = new Array[Long](seen.size)
-          val it = seen.iterator(); var k = 0
-          while (it.hasNext) { sh(k) = it.next(); k += 1 }
-          // minhash of an empty shingle set is null (array_min([]))
-          val sig: Array[java.lang.Long] =
-            if (sh.isEmpty) Array.fill[java.lang.Long](numPerm)(null)
-            else {
-              val out = new Array[java.lang.Long](numPerm)
-              var jj = 0
-              while (jj < numPerm) {
-                var m = Long.MaxValue; var x = 0
-                while (x < sh.length) {
-                  val v = (pa(jj) * sh(x) + pb(jj)) % P
-                  if (v < m) m = v
-                  x += 1
-                }
-                out(jj) = m; jj += 1
-              }
-              out
-            }
-          org.apache.spark.sql.Row(r.get(0), sh, sh.length, sig)
-        }
+        val s = signer(if (r.isNullAt(1)) null else r.getString(1))
+        org.apache.spark.sql.Row(r.get(0), s.sh, s.n, s.sig)
       }
     }(org.apache.spark.sql.Encoders.row(schema))
       // the row encoder's serializer drops field metadata: stamp the
       // width on the output column itself, where selects, joins,
       // fences and parquet writes carry it
-      .withColumn("sig", col("sig").as("sig", sigMeta))
+      .withColumn("sig", col("sig").as("sig", meta))
   }
 
   /** Oracle SQL for [[nearDupPairs]] over table `tbl`, generated from

@@ -285,14 +285,22 @@ object CorpusStream {
   /** Label the jobs a block's actions spawn (guide §1.5): thread-local,
     * restored on exit, so concurrent lanes keep their own labels. Pure
     * observability — `graft.tools.Trace` and the UI attribute chain
-    * cost by phase. */
+    * cost by phase. A batch that left the driver path appends why
+    * ([[FallbackKey]]), e.g. `b7 new docs [over id cap]`. */
   private def jd[T](spark: org.apache.spark.sql.SparkSession,
                     label: String)(f: => T): T = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"CorpusStream: $label")
+    val why = Option(sc.getLocalProperty(FallbackKey)).fold("")(w => s" [$w]")
+    sc.setJobDescription(s"CorpusStream: $label$why")
     try f finally sc.setJobDescription(prev)
   }
+
+  /** Thread-local property naming why the in-flight batch runs the
+    * distributed path: `over id cap`, `over pair cap` or `legacy bands`.
+    * Inherited by the write lanes' threads; cleared when the batch
+    * ends. */
+  private val FallbackKey = "graft.chain.fallback"
 
   /** Scope adaptive execution OFF around one micro-batch's work
     * (restored on exit).
@@ -504,7 +512,7 @@ object CorpusStream {
     * table's fp column — on a 10¹⁰-doc state that scan was linear in
     * the corpus every batch, however small the batch. A state written
     * by pre-index code is backfilled once from the sketch table's own
-    * fp column (see [[seenFpRows]]). */
+    * fp column (see [[fpIndexCovers]]). */
   private val FpState = PkTable("_fp", FpDataSchema, fpPkCol(col("fp")),
     pkStored = true, Seq("id"))
 
@@ -524,26 +532,35 @@ object CorpusStream {
     * prunes and the pk-directory pruning stands alone. */
   val IsinCap = 1 << 16
 
-  /** The driver caps of a micro-batch's near-dup cascade. A batch of at
-    * most [[DriverVerifyIdCap]] new signatures whose band keys collide
-    * with at most [[DriverVerifyPairCap]] stored band rows — the common
-    * small-batch-on-big-state shape — runs the WHOLE cascade on the
-    * driver ([[driverCascade]]): its signatures arrive in the job that
-    * counts them, the colliding stored band rows in one pruned read and
-    * the seen side's (sh, sb) arrays in one pruned fetch, and each pair
-    * runs the SAME scalar kernels the distributed cascade uses
-    * ([[MinHashLSH.pairVerifies]] over the shared
-    * [[graft.sim.SetVerify]] kernels — the paths cannot drift). That
-    * replaces the internal and cross Spark cascades' planning and
-    * broadcast jobs where the data is kilobytes anyway. Over either cap
-    * the cascade runs distributed ([[distributedCascade]]), whose cross
-    * verify still takes the driver fast path when its candidates fit
-    * the same caps. The pair cap bounds collected stored band rows
+  /** The driver caps of a micro-batch. A batch of at most
+    * [[DriverVerifyIdCap]] gated, batch-deduped docs whose band keys
+    * collide with at most [[DriverVerifyPairCap]] stored band rows (and
+    * whose fingerprints match at most [[MergeGraphCap]] stored `_fp`
+    * rows) — the common small-batch-on-big-state shape — stays on the
+    * driver from the exact-dedup gate through the state writes
+    * ([[driverBatch]]): its rows and fingerprints arrive in ONE job
+    * that also counts them, it is signed on the driver by the kernel
+    * [[MinHashLSH.signatureFrame]] runs ([[MinHashLSH.Signer]]), the
+    * colliding stored `_fp` and `_bands` rows arrive in ONE more job
+    * ([[seenState]]), the gate and the near-dup cascade run over those
+    * rows ([[driverCascade]]: the same scalar kernels the distributed
+    * cascade uses — [[MinHashLSH.pairVerifies]] over the shared
+    * [[graft.sim.SetVerify]] kernels — so the paths cannot drift), and
+    * the sketch, `_bands` and `_fp` rows are written from local
+    * relations. That replaces the anti-join, signature, forced-pair and
+    * internal/cross cascade jobs where the data is kilobytes anyway.
+    * Over either cap, or on a legacy state whose bands table does not
+    * cover its sketches, the batch runs distributed from the gate on
+    * ([[distributedBatch]]), its jobs labelled with why; that cascade's
+    * cross verify still takes a driver fast path when its candidates
+    * fit the same caps. The pair cap bounds collected stored band rows
     * (~1 KB each on the driver, and at most one sketch fetched per
     * row): 1024, because on a template-correlated corpus the colliding
     * rows grow with the state — the perfbench chain's 4–12-doc gated
     * batches collided with 115–260 stored rows over batches 12–20, so
-    * 256 sent some of them down the distributed path. */
+    * 256 sent some of them down the distributed path. It counts
+    * colliding rows, not the far fewer that survive the agreement
+    * floor. */
   val DriverVerifyIdCap = 64
   val DriverVerifyPairCap = 1024
 
@@ -607,19 +624,38 @@ object CorpusStream {
     }
   }
 
-  /** ONE job: `df`'s exact row count and, from each partition, its
-    * first `cap + 1` rows — every row when the count is at most `cap`,
-    * a bounded prefix otherwise. `limit(cap + 1).collect()` would scan
-    * the partitions in growing rounds of jobs and still leave the count
-    * to another job. */
-  private def boundedCollect(df: DataFrame, cap: Int): (Long, Array[Row]) = {
-    val parts = df.rdd.mapPartitions { it =>
-      val kept = scala.collection.mutable.ArrayBuffer.empty[Row]
-      var n = 0L
-      it.foreach { r => if (kept.length <= cap) kept += r; n += 1 }
-      Iterator.single((n, kept.toArray))
-    }.collect()
-    (parts.iterator.map(_._1).sum, parts.flatMap(_._2))
+  /** What [[boundedCollect]] brings back of one frame. */
+  private final case class Bounded(n: Long, rows: Array[Row],
+                                   keys: Set[Long])
+
+  /** ONE job over one or more frames, each with its cap: the frame's
+    * exact row count, from each of its partitions the first `cap + 1`
+    * rows — every row when the count is at most `cap`, a bounded prefix
+    * otherwise — and, with `key`, the distinct non-null longs of that
+    * column over ALL its rows. The frames' per-partition summaries come
+    * back through one `SparkContext.union`. `limit(cap + 1).collect()`
+    * would scan the partitions in growing rounds of jobs and still
+    * leave the count to another job. */
+  private def boundedCollect(frames: Seq[(DataFrame, Int)],
+                             key: Option[Int] = None): Seq[Bounded] = {
+    val sc = frames.head._1.sparkSession.sparkContext
+    val parts = sc.union(frames.zipWithIndex.map { case ((df, cap), i) =>
+      df.rdd.mapPartitions { it =>
+        val kept = scala.collection.mutable.ArrayBuffer.empty[Row]
+        val keys = scala.collection.mutable.HashSet.empty[Long]
+        var n = 0L
+        it.foreach { r =>
+          if (kept.length <= cap) kept += r
+          key.foreach(k => if (!r.isNullAt(k)) keys += r.getLong(k))
+          n += 1
+        }
+        Iterator.single((i, n, kept.toArray, keys.toSet))
+      }
+    }).collect()
+    frames.indices.map { i =>
+      val ps = parts.filter(_._1 == i)
+      Bounded(ps.map(_._2).sum, ps.flatMap(_._3), ps.flatMap(_._4).toSet)
+    }
   }
 
   /** [[pkCol]] of one band key on the driver: `xxhash64` (seed 42) of
@@ -654,69 +690,237 @@ object CorpusStream {
         .select(col("id"), col("sh"), col("sb")).collect() }
       .map(r => r.getLong(0) -> sketchOf(r, 1, 2)).toMap
 
-  /** Step 5's cascade on the driver for a batch whose signature rows
-    * `sigRows` (id, sh, n, sig, sb) all arrived — at most
-    * [[DriverVerifyIdCap]] of them. Internal pairs band, prune and
-    * verify among those rows. Cross pairs join them with the stored
-    * `_bands` rows their keys collide with — ONE pruned read collects
-    * those, its pk buckets computed on the driver ([[bandKeyPk]]) — and
-    * verify against ONE pruned fetch of the seen side's sketches. The
-    * math and null rules are the distributed cascade's
-    * ([[MinHashLSH.driverSurvivors]], [[MinHashLSH.pairVerifies]]).
-    * Returns (internal pairs, cross pairs), or None when more than
-    * [[DriverVerifyPairCap]] stored band rows collide — the caller then
-    * runs [[distributedCascade]]. A row with a null id is skipped: a null
-    * id verifies against nothing in the distributed cascade either. */
-  private def driverCascade(catalog: TableCatalog, stateTable: String,
-      batchKey: String, sigRows: Array[Row], withState: Boolean,
-      threshold: Double, geom: graft.sim.LshGeometry)
-      : Option[(Seq[(Long, Long)], Seq[(Long, Long)])] = {
-    val spark = catalog.spark
-    val docs = sigRows.toSeq.filterNot(_.isNullAt(0))
-    val newBands = docs.flatMap(r =>
-      MinHashLSH.driverBands(r.getLong(0), intOf(r, 2), sigOf(r, 3), geom))
-    val seenBands: Option[Seq[MinHashLSH.BandRow]] =
-      if (!withState || newBands.isEmpty) Some(Nil)
-      else {
-        val keys = newBands.map(_.key).distinct
-        prunedStateRead(catalog, BandsState, stateTable, batchKey,
-            keys.map(bandKeyPk).toSet)
-          .fold(Option(Seq.empty[MinHashLSH.BandRow])) { df =>
-            val (n, rows) = jd(spark, s"b$batchKey seen bands") {
-              boundedCollect(df.filter(col("band_key").isin(keys: _*)),
-                DriverVerifyPairCap) }
-            if (n > DriverVerifyPairCap) None
-            else Some(rows.toSeq.filterNot(_.isNullAt(0)).map(r =>
-              MinHashLSH.BandRow(r.getLong(0), intOf(r, 1), sigOf(r, 2),
-                r.getInt(3), r.getString(4))))
-          }
-      }
-    seenBands.map { seen =>
-      val newSk = docs.map(r => r.getLong(0) -> sketchOf(r, 1, 4)).toMap
-      val internal = MinHashLSH.driverVerify(
-        MinHashLSH.driverSurvivors(newBands, newBands, threshold, geom,
-          selfJoin = true),
-        newSk.get, newSk.get, threshold)
-      val cand = MinHashLSH.driverSurvivors(newBands, seen, threshold,
-        geom, selfJoin = false)
-      val cross =
-        if (cand.isEmpty) Nil
-        else {
-          val ids = cand.map(_._2).distinct
-          val seenSk = readSketchBatches(catalog, stateTable,
-              catalog.listPartitions(stateTable, "batch_id")
-                .filter(_ != batchKey),
-              Some(ids.map(idPk).toSet))
-            .fold(Map.empty[Long, MinHashLSH.DriverSketch])(
-              fetchSketches(_, ids, batchKey))
-          MinHashLSH.driverVerify(cand, newSk.get, seenSk.get, threshold)
-        }
-      (internal, cross)
-    }
+  /** The stored rows a driver-path batch is checked against: `_fp`
+    * rows (id, fp) matching its fingerprints and `_bands` rows colliding
+    * with its band keys. */
+  private final case class SeenState(fp: Seq[(Long, String)],
+                                     bands: Seq[MinHashLSH.BandRow])
+
+  /** [[SeenState]] of a batch in ONE job labelled `seen state`: the
+    * pk-pruned `_fp` rows filtered to `fp IN fps` (the full fp column of
+    * `state` when the fp index does not cover it) and the pk-pruned
+    * `_bands` rows filtered to `band_key IN keys`, brought back by one
+    * [[boundedCollect]]. None when more than [[MergeGraphCap]] fp rows
+    * or [[DriverVerifyPairCap]] band rows match — the batch then runs
+    * distributed. Rows with a null id are skipped: a null id matches
+    * nothing in the distributed joins either. */
+  private def seenState(catalog: TableCatalog, stateTable: String,
+      batchKey: String, state: DataFrame, fpCovered: Boolean,
+      fps: Seq[String], fpPks: Set[Long],
+      keys: Seq[String]): Option[SeenState] = {
+    val fpRows =
+      if (fps.isEmpty) None
+      else (if (fpCovered)
+              prunedStateRead(catalog, FpState, stateTable, batchKey, fpPks)
+            else Some(state))
+        .map(_.filter(col("fp").isin(fps: _*)).select(col("id"), col("fp")))
+    val bandRows =
+      if (keys.isEmpty) None
+      else prunedStateRead(catalog, BandsState, stateTable, batchKey,
+          keys.map(bandKeyPk).toSet)
+        .map(_.filter(col("band_key").isin(keys: _*)))
+    val frames = Seq(fpRows -> MergeGraphCap, bandRows -> DriverVerifyPairCap)
+    val present = frames.collect { case (Some(f), cap) => f -> cap }
+    val got =
+      if (present.isEmpty) Iterator.empty
+      else jd(catalog.spark, s"b$batchKey seen state") {
+        boundedCollect(present) }.iterator
+    val Seq(fp, bands) = frames.map { case (f, _) =>
+      if (f.isEmpty) Bounded(0L, Array.empty, Set.empty) else got.next() }
+    if (fp.n > MergeGraphCap || bands.n > DriverVerifyPairCap) None
+    else Some(SeenState(
+      fp.rows.toSeq.filterNot(_.isNullAt(0))
+        .map(r => (r.getLong(0), r.getString(1))),
+      bands.rows.toSeq.filterNot(_.isNullAt(0))
+        .map(r => MinHashLSH.BandRow(r.getLong(0), intOf(r, 1), sigOf(r, 2),
+          r.getInt(3), r.getString(4)))))
   }
 
-  /** Step 5's cascade distributed — the path of a batch over the driver
-    * caps, or of a legacy state without a covering bands table. Returns
+  /** The near-dup cascade on the driver over a driver-path batch's
+    * signed docs: `sketches` (id → (sh, sb)) and their band rows
+    * `newBands`, against the colliding stored band rows `seen`.
+    * Internal pairs band, prune and verify among the new docs; cross
+    * pairs join them with `seen` and verify against ONE pruned fetch of
+    * the seen side's sketches (`verify fetch`, the only job). The math
+    * and null rules are the distributed cascade's
+    * ([[MinHashLSH.driverSurvivors]], [[MinHashLSH.pairVerifies]]).
+    * Returns (internal pairs, cross pairs). */
+  private def driverCascade(catalog: TableCatalog, stateTable: String,
+      batchKey: String, sketches: Map[Long, MinHashLSH.DriverSketch],
+      newBands: Seq[MinHashLSH.BandRow], seen: Seq[MinHashLSH.BandRow],
+      threshold: Double, geom: graft.sim.LshGeometry)
+      : (Seq[(Long, Long)], Seq[(Long, Long)]) = {
+    val internal = MinHashLSH.driverVerify(
+      MinHashLSH.driverSurvivors(newBands, newBands, threshold, geom,
+        selfJoin = true),
+      sketches.get, sketches.get, threshold)
+    val cand = MinHashLSH.driverSurvivors(newBands, seen, threshold,
+      geom, selfJoin = false)
+    val cross =
+      if (cand.isEmpty) Nil
+      else {
+        val ids = cand.map(_._2).distinct
+        val seenSk = readSketchBatches(catalog, stateTable,
+            catalog.listPartitions(stateTable, "batch_id")
+              .filter(_ != batchKey),
+            Some(ids.map(idPk).toSet))
+          .fold(Map.empty[Long, MinHashLSH.DriverSketch])(
+            fetchSketches(_, ids, batchKey))
+        MinHashLSH.driverVerify(cand, sketches.get, seenSk.get, threshold)
+      }
+    (internal, cross)
+  }
+
+  /** What steps 3–5 hand the rest of a batch, on either path: the docs
+    * that passed the exact-dedup gate (doc_id, text, lang), their
+    * internal near-dup components, the cross pairs as driver rows (up
+    * to [[MergeGraphCap]] + 1, `overCap` past it, `crossPairs`
+    * re-deriving their frame), and the rows of the three per-doc state
+    * writes with the count that picks their layout. */
+  private final case class GatedBatch(newDocs: DataFrame,
+      labels: Option[DataFrame], pairRows: Array[(Long, Long)],
+      overCap: Boolean, crossPairs: () => DataFrame, nNew: Long,
+      sketchRows: DataFrame, bandRows: DataFrame, fpRows: DataFrame)
+
+  /** Steps 3–5 on the driver for a batch whose rows `rows` (doc_id,
+    * text, lang, fp) all arrived, already signed (`signed`, in row
+    * order) and checked against `seen`:
+    *  - the gate: a stored fp twin with id <= doc_id drops the doc, one
+    *    with a larger id becomes a FORCED pair; a null fp or id matches
+    *    nothing (the distributed joins' null rules);
+    *  - the cascade ([[driverCascade]]) over the surviving docs;
+    *  - the sketch, `_bands` and `_fp` rows and the surviving docs as
+    *    local relations, in the distributed frames' schemas (`sig`
+    *    keeps its [[MinHashLSH.NumPermMetaKey]], so the sketch footer
+    *    records the width). */
+  private def driverBatch(catalog: TableCatalog, stateTable: String,
+      batchKey: String, docSchema: StructType, rows: Seq[Row],
+      signed: Seq[MinHashLSH.Signed], seen: SeenState, threshold: Double,
+      geom: graft.sim.LshGeometry): GatedBatch = {
+    val spark = catalog.spark
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    def idOf(r: Row): Option[Long] =
+      if (r.isNullAt(0)) None else Some(r.getAs[Number](0).longValue)
+    def fpOf(r: Row): Option[String] = Option(r.getString(3))
+    val stored = seen.fp.groupBy(_._2).map { case (f, ps) => f -> ps.map(_._1) }
+    def twins(r: Row): Seq[(Long, Long)] = (for {
+      id <- idOf(r); f <- fpOf(r); ss <- stored.get(f)
+    } yield ss.map(id -> _)).getOrElse(Nil)
+    val gated = rows.zip(signed).filterNot { case (r, _) =>
+      twins(r).exists { case (id, s) => s <= id } }
+    val forced = gated.flatMap { case (r, _) =>
+      twins(r).filter { case (id, s) => s > id } }
+    val signedIds = gated.flatMap { case (r, s) => idOf(r).map(_ -> s) }
+    val (internal, cross) = driverCascade(catalog, stateTable, batchKey,
+      signedIds.map { case (id, s) => id ->
+        MinHashLSH.driverSketch(s.sh, MinHashLSH.driverBottomK(s.sh)) }.toMap,
+      signedIds.flatMap { case (id, s) =>
+        MinHashLSH.driverBands(id, s.n, s.sig, geom) },
+      seen.bands, threshold, geom)
+    val pairs = (cross ++ forced).distinct.toArray
+    val idType = docSchema("doc_id").dataType
+    val longs = ArrayType(LongType, true)
+    val sig = new StructType().add("sig", longs, true,
+      MinHashLSH.sigMeta(geom.numPerm))("sig")
+    def local(schema: StructType, rs: Seq[Row]): DataFrame =
+      spark.createDataFrame(rs.asJava, schema)
+    GatedBatch(
+      // one partition, so the output partition derived from it is one
+      // file (a local relation spreads over up to defaultParallelism)
+      newDocs = local(docSchema, gated.map { case (r, _) =>
+        Row(r.get(0), r.get(1), r.get(2)) }).coalesce(1),
+      labels = driverComponents(spark, internal),
+      // complete on the driver: the merge step re-joins them locally
+      pairRows = pairs, overCap = false,
+      crossPairs = () => pairs.toSeq.toDF("doc_a", "doc_b"),
+      nNew = gated.length,
+      sketchRows = local(new StructType().add("id", idType)
+          .add("fp", StringType).add("sh", longs).add("n", IntegerType)
+          .add(sig).add("sb", longs),
+        gated.map { case (r, s) => Row(r.get(0), r.get(3), s.sh, s.n,
+          s.sig, MinHashLSH.driverBottomK(s.sh)) }),
+      bandRows = local(new StructType().add("id", idType)
+          .add("n", IntegerType).add(sig).add("band_idx", IntegerType)
+          .add("band_key", StringType),
+        // every surviving doc's band rows, a null id included
+        gated.flatMap { case (r, s) =>
+          MinHashLSH.driverBands(0L, s.n, s.sig, geom)
+            .map(b => Row(r.get(0), b.n, b.sig, b.idx, b.key)) }),
+      fpRows = local(new StructType().add("id", idType)
+          .add("fp", StringType),
+        gated.map { case (r, _) => Row(r.get(0), r.get(3)) }))
+  }
+
+  /** Steps 3–5 distributed — the path of a batch over a driver cap, or
+    * of a legacy state whose bands table does not cover its sketches.
+    * Exact re-arrivals by stored fingerprint come from the pk-bucketed
+    * `_fp` index pruned to the batch's fp buckets `fpPks` (the full
+    * fp column of `state` when the index does not cover it). Two
+    * consumers, one read:
+    *  - a twin whose stored id is <= the arrival's drops at the
+    *    anti-join (ascending feeds: every re-delivery, as always);
+    *  - a twin whose stored id is LARGER becomes a FORCED merge pair
+    *    injected into the cross-pair graph (round 12, replacing round
+    *    11's route through the LSH cascade: fp hashes only a text
+    *    PREFIX, so fp-equality does not guarantee a verifiable J >= t
+    *    pair — a prefix-sharing divergent body, or a sub-shingle-length
+    *    doc, would never verify and the dethroned stored copy would
+    *    survive as a duplicate. The forced edge makes the dethronement
+    *    unconditional — exactly dp01's keep-smallest-id-per-fp rule.)
+    * No stored bucket colliding skips the anti-join entirely. The
+    * survivors are shingled and signed once and banded against their
+    * own bands and the stored ones ([[distributedCascade]]). Frames it
+    * persists join `release`. */
+  private def distributedBatch(catalog: TableCatalog, stateTable: String,
+      batchKey: String, state: DataFrame, bandsCovered: Boolean,
+      fpCovered: Boolean, fpPks: Set[Long], localDeduped: DataFrame,
+      release: scala.collection.mutable.ListBuffer[DataFrame],
+      threshold: Double, geom: graft.sim.LshGeometry): GatedBatch = {
+    val spark = catalog.spark
+    val seenFp =
+      if (state == null) None
+      else if (!fpCovered) Some(state)
+      else prunedStateRead(catalog, FpState, stateTable, batchKey, fpPks)
+    val seenFpCols = seenFp.map(_.select(col("fp").as("__seen_fp"),
+      col("id").as("__seen_id")))
+    // (fencing plans the frame, and planning starts its broadcast jobs)
+    val newDocs = jd(spark, s"b$batchKey new docs") {
+      graft.core.Fence(seenFpCols.fold(localDeduped)(sf =>
+        localDeduped.join(sf,
+          fp === col("__seen_fp") && col("__seen_id") <= col("doc_id"),
+          "left_anti"))) }
+    val fpForced = seenFpCols.map(sf => newDocs.join(sf,
+        fp === col("__seen_fp") && col("__seen_id") > col("doc_id"))
+      .select(col("doc_id").cast("long").as("doc_a"),
+        col("__seen_id").cast("long").as("doc_b"))).orNull
+    val newSigs = jd(spark, s"b$batchKey signatures") {
+      graft.core.Fence(
+        MinHashLSH.signatureFrame(newDocs, "doc_id", "text", 3, geom)
+          .withColumn("sb", MinHashLSH.bottomKCol(col("sh")))) }
+    val newSk = newSigs.select(col("id"), col("sh"), col("n"),
+      col("sig"), col("sb"))
+    // the exact row count — the write section's layout choice — in a
+    // job that also materializes the checkpoint EAGERLY, before the
+    // write lanes fan out over it: concurrent first-touch of a lazy
+    // checkpoint can compute partitions twice (block-level dedup races
+    // — the bench's "already cached" WARNs)
+    val nSigs = jd(spark, s"b$batchKey signatures count") { newSk.count() }
+    // the sig-carrying band frame: the cascade's input and the `_bands`
+    // write's rows
+    val newBands = MinHashLSH.bandFrameWithSig(newSigs, geom)
+    val (labels, pairRows, overCap, crossPairs) = distributedCascade(
+      spark, catalog, stateTable, batchKey, state, bandsCovered, newSk,
+      newBands, fpForced, threshold, geom)
+    val fpRows = newDocs.select(col("doc_id").as("id"), fp.as("fp"))
+    GatedBatch(newDocs, labels, pairRows, overCap, crossPairs, nSigs,
+      sketchRows = newSigs.join(fpRows, Seq("id"))
+        .select(col("id"), col("fp"), col("sh"), col("n"), col("sig"),
+          col("sb")),
+      bandRows = newBands, fpRows = fpRows)
+  }
+
+  /** [[distributedBatch]]'s near-dup cascade. Returns
     * (internal components, cross pairs collected up to MergeGraphCap +
     * 1, whether they were over it, their frame). */
   private def distributedCascade(spark: org.apache.spark.sql.SparkSession,
@@ -1184,113 +1388,69 @@ object CorpusStream {
     if (state != null)
       jd(batch.sparkSession, s"b$batchKey state width") {
         requireCompatibleState(state, geom, stateTable, threshold) }
-    // persist the local batch once it has several consumers: the fp-pk
-    // collect, the anti-join cascade and the forced-pair join below
-    // all read it (state == null leaves the single-consumer lazy form)
-    val localDeduped =
-      if (state == null) localDeduped0
-      else { val f = graft.core.Fence.soft(localDeduped0)
-             release += f; f }
-    // 3. exact re-arrivals by stored fingerprint, read from the
-    //    pk-bucketed `_fp` index pruned to THIS batch's fp buckets
-    //    (round 12 — [[seenFpRows]]; legacy states backfill or fall
-    //    back to the full fp-column scan). Two consumers, one read:
-    //      - a twin whose stored id is <= the arrival's drops at the
-    //        anti-join (ascending feeds: every re-delivery, as always);
-    //      - a twin whose stored id is LARGER becomes a FORCED merge
-    //        pair injected into the cross-pair graph below (round 12,
-    //        replacing round 11's route through the LSH cascade: fp
-    //        hashes only a text PREFIX, so fp-equality does not
-    //        guarantee a verifiable J >= t pair — a prefix-sharing
-    //        divergent body, or a sub-shingle-length doc, would never
-    //        verify and the dethroned stored copy would survive as a
-    //        duplicate. The forced edge makes the dethronement
-    //        unconditional — exactly dp01's keep-smallest-id-per-fp
-    //        rule.)
-    //    seenFp == null means no stored bucket collides — the common
-    //    batch skips the anti-join shuffle entirely, driver-decided.
-    val seenFp =
-      if (state == null) null
-      else jd(batch.sparkSession, s"b$batchKey seen fp") {
-        seenFpRows(catalog, stateTable, batchKey, state,
-          localDeduped, pkSplitMinRows) }
-    // (fencing plans the frame, and planning starts its broadcast jobs)
-    val newDocs = jd(batch.sparkSession, s"b$batchKey new docs") {
-      graft.core.Fence(
-        if (seenFp == null) localDeduped
-        else localDeduped.join(seenFp,
-          fp === col("__seen_fp") && col("__seen_id") <= col("doc_id"),
-          "left_anti")) }
-    val fpForced =
-      if (seenFp == null) null
-      else newDocs.join(seenFp,
-          fp === col("__seen_fp") && col("__seen_id") > col("doc_id"))
-        .select(col("doc_id").cast("long").as("doc_a"),
-                col("__seen_id").cast("long").as("doc_b"))
-    // 4. shingle + sign the NEW docs once; band them against their own
-    //    bands (internal pairs) and the STORED bands (cross pairs) —
-    //    seen docs are never re-shingled
-    val newSigs = jd(batch.sparkSession, s"b$batchKey signatures") {
-      graft.core.Fence(
-        MinHashLSH.signatureFrame(newDocs, "doc_id", "text", 3, geom)
-          .withColumn("sb", MinHashLSH.bottomKCol(col("sh")))) }
-    val newSk = newSigs.select(col("id"), col("sh"), col("n"),
-      col("sig"), col("sb"))
-    // ONE job over the signature checkpoint ([[boundedCollect]]): its
-    // exact row count — the write section's layout choice — and, per
-    // partition, its first DriverVerifyIdCap + 1 rows, so a driver-small
-    // batch arrives whole and its cascade runs on the driver. The same
-    // job materializes the checkpoint EAGERLY, before the write lanes
-    // below fan out over it: concurrent first-touch of a lazy
-    // checkpoint can compute partitions twice (block-level dedup races
-    // — the bench's "already cached" WARNs).
-    val (nSigs, sigRows) =
-      jd(batch.sparkSession, s"b$batchKey signatures collect") {
-        boundedCollect(newSk, DriverVerifyIdCap) }
-    // the sig-carrying band frame: the `_bands` write's rows and the
-    // distributed cascade's input (lazy — the driver path never runs it)
-    val newBands = MinHashLSH.bandFrameWithSig(newSigs, geom)
-    // 5. the near-dup cascade: the batch's internal (new×new) near-dup
-    //    components, and its cross PAIRS (new doc, seen doc), not just
-    //    touched flags — merging needs to know WHICH seen components
-    //    this batch connects. The forced fp-duplicate pairs union into
-    //    the cross pairs — same merge machinery, unconditional
-    //    dethronement. A batch within the driver caps
-    //    ([[DriverVerifyIdCap]], [[DriverVerifyPairCap]]) runs the whole
-    //    cascade on the driver ([[driverCascade]]); a larger one, or a
-    //    legacy state whose bands table does not cover its sketches,
-    //    runs it distributed. Either way the cross pairs arrive as
-    //    driver rows (`pairRows`, up to MergeGraphCap + 1); `crossPairs`
+    // persist the local batch: the batch collect below reads it, and a
+    // batch that leaves the driver path reads it again
+    val localDeduped = graft.core.Fence.soft(localDeduped0)
+    release += localDeduped
+    val spark = batch.sparkSession
+    // 3. the exact-dedup gate's inputs. The `_fp` index (round 12 —
+    //    [[fpIndexCovers]]) is backfilled first on a state written by
+    //    pre-index code; then ONE job ([[boundedCollect]], `batch
+    //    collect`) brings the batch's exact size, its first
+    //    DriverVerifyIdCap + 1 rows per partition with their
+    //    fingerprints, and the fp pk buckets the gate's `_fp` read
+    //    prunes to on either path (fp equality implies pk equality, so
+    //    the pruning loses no twin).
+    val fpCovered = state != null &&
+      fpIndexCovers(catalog, stateTable, batchKey, pkSplitMinRows)
+    val Seq(collected) = jd(spark, s"b$batchKey batch collect") {
+      boundedCollect(Seq(localDeduped.select(col("doc_id"), col("text"),
+          col("lang"), fp.as("fp"), fpPkCol(fp).as("__pk")) ->
+          DriverVerifyIdCap), key = Some(4)) }
+    // 4. the gate, signatures and the near-dup cascade. A batch within
+    //    [[DriverVerifyIdCap]] stays on the driver: it is signed here by
+    //    the frame's own kernel ([[MinHashLSH.Signer]]), ONE more job
+    //    ([[seenState]]) brings the stored fp twins and the stored band
+    //    rows colliding with the keys of every collected doc (a superset
+    //    of the gate's survivors'), and [[driverBatch]] runs the gate,
+    //    the cascade ([[driverCascade]]) and builds step 6's rows as
+    //    local relations. Past a cap, or on a legacy state whose bands
+    //    table does not cover its sketches, [[distributedBatch]] runs
+    //    the same steps as Spark jobs, each labelled with why
+    //    ([[FallbackKey]]). Either way the cross pairs arrive as driver
+    //    rows (`pairRows`, up to MergeGraphCap + 1); `crossPairs`
     //    re-derives their frame for an over-cap batch only.
-    val covered = state != null &&
-      bandsCovered(catalog, stateTable, batchKey)
-    val driverPairs =
-      if (nSigs > DriverVerifyIdCap || (state != null && !covered)) None
-      else driverCascade(catalog, stateTable, batchKey, sigRows,
-        state != null, threshold, geom)
-    val (labelsOpt, pairRows, overCap, crossPairs) = driverPairs match {
-      case Some((internalPairs, crossVerified)) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val (nForced, forced) =
-          if (fpForced == null) (0L, Array.empty[(Long, Long)])
-          else {
-            val (n, rows) = jd(spark, s"b$batchKey cross verify") {
-              boundedCollect(fpForced, MergeGraphCap) }
-            (n, rows.map(r => (r.getLong(0), r.getLong(1))))
-          }
-        val rows = (crossVerified ++ forced).distinct.toArray
-        (driverComponents(spark, internalPairs), rows,
-          nForced > MergeGraphCap || rows.length > MergeGraphCap,
-          () => {
-            val v = crossVerified.toDF("doc_a", "doc_b")
-            if (fpForced == null) v else v.unionByName(fpForced).distinct()
-          })
-      case None =>
-        distributedCascade(batch.sparkSession, catalog, stateTable,
-          batchKey, state, covered, newSk, newBands, fpForced, threshold,
+    val bandsCovered = state != null &&
+      bandsCover(catalog, stateTable, batchKey)
+    val onDriver: Either[String, GatedBatch] =
+      if (collected.n > DriverVerifyIdCap) Left("over id cap")
+      else if (state != null && !bandsCovered) Left("legacy bands")
+      else {
+        val signer = new MinHashLSH.Signer(3, geom.numPerm,
+          Array.emptyLongArray)
+        val rows = collected.rows.toSeq
+        val signed = rows.map(r => signer(r.getString(1)))
+        val seen =
+          if (state == null) Some(SeenState(Nil, Nil))
+          else seenState(catalog, stateTable, batchKey, state, fpCovered,
+            rows.flatMap(r => Option(r.getString(3))).distinct,
+            collected.keys,
+            signed.flatMap(s => MinHashLSH.driverBands(0L, s.n, s.sig, geom))
+              .map(_.key).distinct)
+        seen.map(driverBatch(catalog, stateTable, batchKey,
+            localDeduped.schema, rows, signed, _, threshold, geom))
+          .toRight("over pair cap")
+      }
+    val gb = onDriver.fold(why => {
+        spark.sparkContext.setLocalProperty(FallbackKey, why)
+        distributedBatch(catalog, stateTable, batchKey, state, bandsCovered,
+          fpCovered, collected.keys, localDeduped, release, threshold,
           geom)
-    }
+      }, identity)
+    val (newDocs, labelsOpt, pairRows) = (gb.newDocs, gb.labels,
+      gb.pairRows)
+    // 5. each new doc's component label from its internal near-dup
+    //    components...
     val labeled = labelsOpt match {
       case None => newDocs.withColumn("label", col("doc_id"))
       case Some(l) => newDocs.join(
@@ -1334,8 +1494,8 @@ object CorpusStream {
       val spark = batch.sparkSession
       import spark.implicits._
       val pairsSrc =
-        if (!overCap) pairRows.toSeq.toDF("doc_a", "doc_b")
-        else { val f = graft.core.Fence.soft(crossPairs())
+        if (!gb.overCap) pairRows.toSeq.toDF("doc_a", "doc_b")
+        else { val f = graft.core.Fence.soft(gb.crossPairs())
                release += f; f }
       val la = pairsSrc
         .join(labeled.select(col("doc_id").as("__na"), col("label")),
@@ -1386,29 +1546,25 @@ object CorpusStream {
     //    state — dropped docs still bridge future arrivals — beside its
     //    pre-banded rows (bucketed by band key, so later batches prune
     //    their cross join at the storage layer) and its fingerprint
-    //    (bucketed by fp, for the exact-dedup gate — [[seenFpRows]]).
-    //    All three take [[writeState]]'s granularity-aware layout: the
-    //    sketch's pk-split dirs let the cross-verify `sh` fetch above
-    //    prune at the directory level, and a small batch stays one file
-    //    sorted by id (round 13: skDf comes off a shuffle join, and the
+    //    (bucketed by fp, for the exact-dedup gate). A driver-path
+    //    batch's rows are local relations; a distributed one's come off
+    //    its signature checkpoint. All three take [[writeState]]'s
+    //    granularity-aware layout: the sketch's pk-split dirs let the
+    //    cross-verify `sh` fetch above prune at the directory level, and
+    //    a small batch stays one file sorted by id (round 13: the
+    //    distributed sketch rows come off a shuffle join, and the
     //    unfused write left ~32 hash-scattered files whose row-group id
     //    spans covered the whole partition).
-    val skDf = newSigs
-      .join(newDocs.select(col("doc_id").as("id"), fp.as("fp")),
-        Seq("id"))
-      .select(col("id"), col("fp"), col("sh"), col("n"), col("sig"),
-        col("sb"))
     def writeLane(t: PkTable, label: String, rows: DataFrame,
                   split: Boolean): () => Unit = () =>
-      jd(batch.sparkSession, s"b$batchKey write $label") {
+      jd(spark, s"b$batchKey write $label") {
         writeState(catalog, t, stateTable, batchKey, rows, split) }
-    val writeSketch = writeLane(SketchState, "sketch", skDf,
-      nSigs >= pkSplitMinRows)
-    val writeBands = writeLane(BandsState, "bands", newBands,
-      nSigs * geom.bands >= pkSplitMinRows)
-    val writeFp = writeLane(FpState, "fp",
-      newDocs.select(col("doc_id").as("id"), fp.as("fp")),
-      nSigs >= pkSplitMinRows)
+    val writeSketch = writeLane(SketchState, "sketch", gb.sketchRows,
+      gb.nNew >= pkSplitMinRows)
+    val writeBands = writeLane(BandsState, "bands", gb.bandRows,
+      gb.nNew * geom.bands >= pkSplitMinRows)
+    val writeFp = writeLane(FpState, "fp", gb.fpRows,
+      gb.nNew >= pkSplitMinRows)
     // 6b. label-state updates (see [[lblTableOf]]): new member docs of
     //     multi/merged components, dethroned canonicals, and stored
     //     members whose component merged — one latest-wins row each.
@@ -1478,7 +1634,7 @@ object CorpusStream {
     val writeEmit = writeLane(EmitState, "emit", outRows
         .select(col("doc_id").as("id"),
           lit(encodeEb(outEpoch, batchKey)).as("eb")),
-      nSigs >= pkSplitMinRows)
+      gb.nNew >= pkSplitMinRows)
     val writeEmitThenOut: () => Unit = () => {
       // in-lane ORDER preserved: the emit-index partition must commit
       // before the output partition (crash contract above)
@@ -1497,7 +1653,10 @@ object CorpusStream {
     // overwrites every one of them idempotently, exactly as before.
     graft.core.Par.concurrently(Seq(
       writeSketch, writeBands, writeFp, writeLbl, writeEmitThenOut))
-    } finally release.foreach(_.unpersist(false))
+    } finally {
+      release.foreach(_.unpersist(false))
+      batch.sparkSession.sparkContext.setLocalProperty(FallbackKey, null)
+    }
   }
 
   /** Remove `retr`'s ids (column `__r`) from every output partition
@@ -1702,7 +1861,7 @@ object CorpusStream {
     * set loses no colliding pair. Fallback (bands table missing or not
     * covering every sketch batch — a pre-round-8 state): re-band the
     * sketch state in memory, the old per-batch linear scan. */
-  private def bandsCovered(catalog: TableCatalog, stateTable: String,
+  private def bandsCover(catalog: TableCatalog, stateTable: String,
       batchKey: String): Boolean = {
     val bandsTable = BandsState.of(stateTable)
     catalog.tableExists(bandsTable) && {
@@ -1744,57 +1903,43 @@ object CorpusStream {
         catalog.listPartitions(stateTable, "batch_id"), None)
       .getOrElse(catalog.read(stateTable))
 
-  /** Stored `(__seen_fp, __seen_id)` rows that could fp-collide with
-    * this batch, from the pk-bucketed `_fp` index ([[FpState]])
-    * pruned to the pk buckets the batch's own fingerprints hash into —
-    * the collected pk set is bounded by [[StatePartitions]]. Returns
-    * null when no stored bucket collides (the caller then skips the
-    * anti-join entirely — driver-decided, no emptiness job).
+  /** Whether the pk-bucketed `_fp` index ([[FpState]]) covers every
+    * stored sketch batch, so the exact-dedup gate can read only the
+    * buckets a batch's own fingerprints hash into.
     *
     * A state written by pre-index code (sketch batches the fp table
     * does not cover) is BACKFILLED here, once, from the sketch rows'
     * own fp column — one column-pruned pass per missing batch, under
     * the state's writer lock so concurrent pipelines don't interleave
-    * overwrites; if the lock is held elsewhere, this batch falls back
-    * to the legacy full fp-column scan and the next one retries. */
-  private def seenFpRows(catalog: TableCatalog, stateTable: String,
-      batchKey: String, state: DataFrame, localDeduped: DataFrame,
-      pkSplitMinRows: Long): DataFrame = {
+    * overwrites; if the lock is held elsewhere this returns false, the
+    * batch's gate reads the full fp column, and the next one retries. */
+  private def fpIndexCovers(catalog: TableCatalog, stateTable: String,
+      batchKey: String, pkSplitMinRows: Long): Boolean = {
     val fpTable = FpState.of(stateTable)
     val skKeys = catalog.listPartitions(stateTable, "batch_id").toSet -
       batchKey
     val fpKeys =
       if (!catalog.tableExists(fpTable)) Set.empty[String]
       else catalog.listPartitions(fpTable, "batch_id").toSet - batchKey
-    var covered = skKeys.subsetOf(fpKeys)
-    if (!covered) {
+    skKeys.subsetOf(fpKeys) ||
       // heartbeated hold (round 13): a backfill over a 10^10-doc
       // pre-index state is one column-pruned pass per missing batch
       // and can outlive the 15-min lease — a bare acquire would let a
-      // waiter break the lock mid-write. Lock held elsewhere: fall
-      // back to the full fp scan; the next batch retries.
-      covered = catalog.withTableLockIfFree(stateTable) {
+      // waiter break the lock mid-write
+      catalog.withTableLockIfFree(stateTable) {
         // one fp row per sketch row, so the sketch partition's own
         // size picks the layout
         (skKeys -- fpKeys).foreach { b =>
-          writeState(catalog, FpState, stateTable, b,
-            catalog.readPaths(stateTable,
-                Seq(catalog.partitionPath(stateTable, "batch_id", b)),
-                FpDataSchema)
-              .select(col("id"), col("fp")),
-            splitLayoutFor(catalog, stateTable, Seq(b), pkSplitMinRows))
+          jd(catalog.spark, s"b$batchKey fp backfill") {
+            writeState(catalog, FpState, stateTable, b,
+              catalog.readPaths(stateTable,
+                  Seq(catalog.partitionPath(stateTable, "batch_id", b)),
+                  FpDataSchema)
+                .select(col("id"), col("fp")),
+              splitLayoutFor(catalog, stateTable, Seq(b), pkSplitMinRows))
+          }
         }
       }.isDefined
-    }
-    if (!covered)
-      state.select(col("fp").as("__seen_fp"), col("id").as("__seen_id"))
-    else {
-      val pks = localDeduped.select(fpPkCol(fp).as("pk")).distinct()
-        .collect().map(_.getLong(0)).toSet
-      prunedStateRead(catalog, FpState, stateTable, batchKey, pks)
-        .map(_.select(col("fp").as("__seen_fp"), col("id").as("__seen_id")))
-        .orNull
-    }
   }
 
   /** Launch the incremental pipeline over a streaming document frame

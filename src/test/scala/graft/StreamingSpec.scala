@@ -1197,18 +1197,178 @@ class StreamingSpec extends SparkSpec {
     }
     val labels = jobs.map(_._1)
     Seq("internal pairs + components", "cross candidates", "state width",
-        "merge components", "retract").foreach { l =>
+        "merge components", "retract", "new docs", "cross verify",
+        "signatures collect").foreach { l =>
       assert(!labels.exists(_.endsWith(l)),
         s"$l in\n${labels.mkString("\n")}")
     }
-    assert(labels.exists(_.endsWith("b3 seen bands")))
+    assert(labels.exists(_.endsWith("b3 batch collect")))
+    assert(labels.exists(_.endsWith("b3 seen state")))
+    assert(!labels.exists(_.endsWith("]")), labels.mkString("\n"))
     assert(jobs.size <= MergeFreeBatchJobs, labels.mkString("\n"))
     assert(CorpusStream.readState(cat, "jb_seen").count() == 80)
+    // the driver-path sketch partitions (batches 2 and 3) carry the sig
+    // width in their footers — the read restores it from every footer,
+    // which is why batch 3 ran no `state width` probe
+    assert(cat.listPartitions("jb_seen", "batch_id").toSet ==
+      Set("c1", "2", "3"))
+    // and the batch's output partition is one file, as a distributed
+    // small batch's is
+    assert(new java.io.File(cat.partitionPath("jb_out", "batch_id", "3"))
+      .list().count(_.endsWith(".parquet")) == 1)
+    assert(graft.sim.MinHashLSH.sigWidthOf(
+      CorpusStream.readState(cat, "jb_seen")) ==
+      Some(graft.sim.MinHashLSH.geometryFor(
+        graft.text.CorpusPipeline.NearDupThreshold).numPerm))
   }
 
   /** Jobs a merge-free 20-doc batch over a compacted state starts
-    * (measured: 12). */
-  private val MergeFreeBatchJobs = 12
+    * (measured: 7 — batch collect, seen state and the five writes). */
+  private val MergeFreeBatchJobs = 7
+
+  /** The batch dp01 chain (gate, exact dedup, near-dup clustering,
+    * sample, project) under the stream's admission and threshold: what
+    * a streamed run must converge to. */
+  private def batchChain(docs: org.apache.spark.sql.DataFrame,
+      admit: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      threshold: Double): Set[(Long, String, Int)] = {
+    import graft.text.CorpusPipeline
+    val deduped = graft.core.Fence(graft.ops.Dedup.exactDedup(admit(docs),
+      CorpusPipeline.fingerprintPrefix, $"doc_id"))
+    val pairs = graft.sim.MinHashLSH.nearDupPairs(deduped, "doc_id", "text",
+      threshold = threshold)
+    graft.ops.Dedup.clusterDedup(deduped, "doc_id", pairs, "doc_a", "doc_b")
+      .filter(CorpusPipeline.samplePredicate)
+      .select($"doc_id", $"lang",
+        size(graft.text.TextHash.tokens($"text")).as("n_toks"))
+      .as[(Long, String, Int)].collect().toSet
+  }
+
+  test("the driver path equals the distributed path row for row: an " +
+       "out-of-order feed with exact re-arrivals both ways, null and " +
+       "sub-3-char texts, run as <= 64-doc batches and as > 64-doc " +
+       "batches, writes identical sketch, _bands, _fp, _emit and _lbl " +
+       "rows and converges to batch dp01") {
+    import graft.text.CorpusPipeline
+    val dir = "/root/testdata/sf0.001"
+    val docs = graft.core.Tables.load(spark, dir, "documents")
+      .select($"doc_id", $"text", $"lang")
+      .as[(Long, String, String)].collect().toSeq
+    // dp01's gate, plus null and sub-3-char texts (which it rejects), so
+    // they reach the chain: one null (a null fp never matches, so a
+    // second one would survive beside it in the stream but not in a
+    // batch), and "ab" twice, an exact re-arrival under its threshold
+    val admit = (df: org.apache.spark.sql.DataFrame) =>
+      CorpusPipeline.gate(df).unionByName(
+        df.filter($"text".isNull || length($"text") < 3))
+    val rnd = new scala.util.Random(23)
+    val shuffled = rnd.shuffle(docs)
+    // batch 0: 300 docs, over the id cap on both runs; the rest in
+    // 40-doc batches of an out-of-order feed
+    val (first, rest) = shuffled.splitAt(300)
+    // one admitted batch-0 doc per 60-char fingerprint prefix
+    val admitted = spark.createDataset(first).toDF("doc_id", "text", "lang")
+      .transform(admit).as[(Long, String, String)].collect().toSeq
+      .filter(_._2 != null).groupBy(_._2.take(60)).values.map(_.minBy(_._1))
+      .toSeq.sortBy(_._1)
+    val kept = admitted.head
+    val dethroned = admitted(1)
+    // the smaller-id twin shares only the stored copy's 60-char
+    // fingerprint prefix; its body is another doc's, so only the forced
+    // pair (never the LSH verify) can dethrone the stored copy
+    val divergent = dethroned._2.take(60) + admitted(2)._2.drop(60)
+    val planted = Seq(
+      (kept._1 + 2000L, kept._2, kept._3), // stored id smaller: dropped
+      (-1L - dethroned._1, divergent, dethroned._3), // larger: forced
+      (3000L, null, "en"), (3001L, "", "en"), (3002L, "a", "en"),
+      (3003L, "ab", "en"), (3004L, "ab", "en"))
+    val feed = first +: (rest ++ planted.take(1)).grouped(40).toSeq
+      .zipWithIndex.map { case (b, i) =>
+        b ++ (if (i == 1) planted.slice(1, 6) else Nil) ++
+          (if (i == 3) planted.drop(6) else Nil) }
+    assert(feed.tail.forall(_.size <= CorpusStream.DriverVerifyIdCap))
+    assert(Seq((0L, divergent, dethroned._3)).toDF("doc_id", "text", "lang")
+      .transform(admit).count() == 1)
+    // the distributed run pads each later batch with 65 exact
+    // re-deliveries of batch-0 docs under larger ids: the gate drops
+    // them (no row written), but they lift the batch over the id cap
+    // while every batch keeps its id, so b and eb match too
+    val pads = admitted.take(65).map { case (id, t, l) =>
+      (id + 1000000L, t, l) }
+    assert(pads.size == 65)
+    def run(name: String, padded: Boolean) = {
+      val cat = new graft.catalog.TableCatalog(spark, java.nio.file.Files
+        .createTempDirectory(s"corpus_${name}_").toString)
+      val jobs = jobsStartedBy {
+        feed.zipWithIndex.foreach { case (b, i) =>
+          val rows = if (padded && i > 0) b ++ pads else b
+          CorpusStream.processBatch(
+            rows.toDF("doc_id", "text", "lang"), cat, "eq_seen", "eq_out",
+            i.toLong, admit = admit, compactEvery = 4)
+        }
+      }
+      (cat, jobs.map(_._1))
+    }
+    val (dCat, dLabels) = run("dp", padded = false)
+    val (xCat, xLabels) = run("dx", padded = true)
+    assert(dLabels.count(_.endsWith("[over id cap]")) > 0)
+    assert(!dLabels.exists(l => l.contains("[") && !l.contains(" b0 ")),
+      dLabels.mkString("\n"))
+    assert(xLabels.exists(_.endsWith("new docs [over id cap]")))
+    def rowsOf(cat: graft.catalog.TableCatalog, t: String) =
+      cat.read(t).collect().map(_.toSeq.map {
+        case a: scala.collection.Seq[_] => a.toList
+        case v => v
+      }).toSet
+    Seq("eq_seen", "eq_seen_bands", "eq_seen_fp", "eq_seen_emit",
+        "eq_seen_lbl").foreach { t =>
+      val d = rowsOf(dCat, t)
+      assert(d.nonEmpty, t)
+      assert(d == rowsOf(xCat, t), t)
+    }
+    // the forced merge dethroned the stored copy: it holds a label row
+    // naming the smaller-id re-arrival
+    val lbls = dCat.read("eq_seen_lbl").select($"id", $"lbl", $"b")
+      .as[(Long, Long, Long)].collect()
+      .groupBy(_._1).map { case (id, rs) => id -> rs.maxBy(_._3)._2 }
+    assert(lbls.get(dethroned._1).contains(-1L - dethroned._1))
+    val want = batchChain(feed.flatten.toDF("doc_id", "text", "lang"),
+      admit, CorpusPipeline.NearDupThreshold)
+    Seq(dCat, xCat).foreach { cat =>
+      assert(CorpusStream.readOutput(cat, "eq_out")
+        .select($"doc_id", $"lang", $"n_toks")
+        .as[(Long, String, Int)].collect().toSet == want)
+    }
+  }
+
+  test("a batch whose band keys collide with more than " +
+       "DriverVerifyPairCap stored rows runs distributed, its jobs " +
+       "labelled `over pair cap`, and converges to batch dp01") {
+    // 60 near-identical docs (distinct fingerprints, one shared body of
+    // 40 random words): at t = 0.45 (120 bands) every stored doc
+    // collides with a new one in most bands
+    val rnd = new scala.util.Random(5)
+    val body = Seq.fill(40)((0 until 6)
+      .map(_ => ('a' + rnd.nextInt(26)).toChar).mkString).mkString(" ")
+    def doc(id: Long) = (id, s"u$id $body", "en")
+    val stored = (0L until 60L).map(doc)
+    val cat = new graft.catalog.TableCatalog(spark,
+      java.nio.file.Files.createTempDirectory("corpus_pc_").toString)
+    def run(rows: Seq[(Long, String, String)], b: Long) =
+      CorpusStream.processBatch(rows.toDF("doc_id", "text", "lang"), cat,
+        "pc_seen", "pc_out", b, threshold = 0.45, admit = df => df)
+    run(stored, 0L)
+    val labels = jobsStartedBy(run(Seq(doc(100L), doc(101L)), 1L)).map(_._1)
+    assert(labels.exists(_.endsWith("b1 seen state")))
+    assert(labels.exists(_.endsWith("b1 new docs [over pair cap]")),
+      labels.mkString("\n"))
+    val want = batchChain((stored :+ doc(100L) :+ doc(101L))
+      .toDF("doc_id", "text", "lang"), df => df, 0.45)
+    assert(CorpusStream.readOutput(cat, "pc_out")
+      .select($"doc_id", $"lang", $"n_toks")
+      .as[(Long, String, Int)].collect().toSet == want)
+    assert(want.map(_._1).subsetOf(Set(0L)))
+  }
 
   // three-batch seeded warehouse + the expected post-compaction state,
   // shared by the crash-recovery tests below

@@ -649,6 +649,39 @@ class TextSimSpec extends SparkSpec {
     assert(viaKernel == viaColumns)
   }
 
+  test("the driver signature kernel equals signatureFrame's rows and " +
+       "its bottom-k equals bottomKCol, with and without dropShingles") {
+    val texts = Seq[String](null, "", "a", "ab",
+      "\uD83D\uDE00\uD83D\uDE00 x\uD834\uDD1E\uD834\uDD1Ey", // surrogate pairs
+      "the quick brown fox jumps over the lazy dog and the quick cat")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val geom = MinHashLSH.geometryFor(0.7)
+    // the normal text's first shingles, so the filtered form differs
+    val drop = MinHashLSH.signatureFrame(docs.filter($"doc_id" === 5L),
+      "doc_id", "text", 3, geom).head().getSeq[Long](1).take(4).toArray
+    Seq(None, Some(drop)).foreach { d =>
+      val frame = MinHashLSH.signatureFrame(docs, "doc_id", "text", 3,
+          geom, d)
+        .withColumn("sb", MinHashLSH.bottomKCol($"sh"))
+        .orderBy($"id").collect().toSeq
+      val signer = new MinHashLSH.Signer(3, geom.numPerm,
+        d.getOrElse(Array.emptyLongArray))
+      def seq(a: Array[_]) = Option(a).map(_.toSeq).orNull
+      texts.zip(frame).foreach { case (t, r) =>
+        val s = signer(t)
+        val want = (Option(r.getSeq[Long](1)).map(_.toSeq).orNull,
+          r.get(2), Option(r.getSeq[Any](3)).map(_.toSeq).orNull,
+          Option(r.getSeq[Long](4)).map(_.toSeq).orNull)
+        assert((seq(s.sh), s.n, seq(s.sig),
+          seq(MinHashLSH.driverBottomK(s.sh))) == want, s"text=$t d=$d")
+      }
+      // the fixture reaches every branch: null, empty, surrogate pairs
+      assert(signer(null).sh == null && signer("ab").sh.isEmpty)
+      assert(signer(texts(4)).sh.length == 5)
+    }
+  }
+
   test("the shared verify kernel equals the Column array_intersect " +
        "form on random doc sets (property)") {
     val rnd = new scala.util.Random(11)
