@@ -84,13 +84,19 @@ object Bench {
     spark
   }
 
-  /** Materialize one query through a noop write. */
+  /** Materialize one query through a noop write, inside its own
+    * [[graft.core.Scratch.scope]]; returns the seconds the query took.
+    * The gate's scratch is deleted after the clock stops. */
   private[graft] def run(spark: SparkSession, name: String,
-                         dir: String): Unit =
-    try SparkEntry.queries(name)(spark, dir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case e: Throwable =>
-      throw new RuntimeException(s"bench: query $name failed on $dir", e)
+                         dir: String): Double =
+    graft.core.Scratch.scope {
+      val t0 = System.nanoTime()
+      try SparkEntry.queries(name)(spark, dir)
+        .write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable =>
+        throw new RuntimeException(s"bench: query $name failed on $dir", e)
+      }
+      (System.nanoTime() - t0) / 1e9
     }
 
   /** Drop cached frames and Fence checkpoint blocks synchronously, then
@@ -158,9 +164,7 @@ object Bench {
       // 73 s mid-run vs 5.3 s in a fresh JVM). Unpersist them
       // synchronously, then GC so the cleaner drops broadcasts too.
       scrub(spark)
-      val t0 = System.nanoTime()
       run(spark, name, sfDir)
-      (System.nanoTime() - t0) / 1e9
     }
     // TWO timed passes per query, report the MIN: the same-HEAD spread
     // on this box (dp01 measured 16.45 s then 9.84 s back-to-back under
@@ -186,12 +190,11 @@ object Bench {
     // these are sub-second ops whose regressions of interest are
     // multiples, not percents). Failures propagate — a broken serving
     // path must fail the bench run, not report a fake timing.
-    val serving = {
+    val serving = graft.core.Scratch.scope {
       import org.apache.spark.sql.functions._
       scrub(spark)
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_bench_srv_").toString
-      val cat = new graft.catalog.TableCatalog(spark, wh)
+      val cat = new graft.catalog.TableCatalog(spark,
+        graft.core.Scratch.dir("graft_bench_srv_"))
       val e = graft.core.Tables.load(spark, sfDir, "embeddings")
       def timed(f: => Unit): Double = {
         val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

@@ -79,8 +79,7 @@ object SparkEntry {
     // translation (sql/get_products_id.sql:1-3 + update_open_data.py:
     // 59-61) — must be byte-identical to s06_param_scan's DataFrame form.
     "s06_template_scan" -> ((s, dir) => {
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_s06t_").toString
+      val stage = graft.core.Scratch.dir("graft_s06t_")
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$stage/get_open_orders.sql"),
         """SELECT o_orderkey AS key, o_totalprice AS price, o_orderpriority AS priority

@@ -29,8 +29,9 @@ import org.apache.spark.sql.DataFrame
   *
   *  - `table`: the production mode for long-lived deployments —
   *    materialize through a parquet spill table instead (one directory
-  *    per fence under `spark.graft.fence.dir`, default a per-JVM temp
-  *    dir removed on exit). Executor loss re-READS instead of
+  *    per fence under `spark.graft.fence.dir`; unconfigured, a
+  *    [[Scratch.dir]] removed with the enclosing [[Scratch.scope]], or
+  *    at JVM exit outside one). Executor loss re-READS instead of
   *    recomputing or failing; the cost is the eager write and the
   *    columnar round-trip (exact for every type the operators fence:
   *    parquet stores doubles/longs/strings/arrays bit-for-bit — the
@@ -70,20 +71,6 @@ object Fence {
 
   private val counter = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Per-JVM default spill root, removed on exit — "temp tables,
-    * dropped on session close" without requiring a configured dir. */
-  private lazy val defaultDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_fence_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import scala.jdk.CollectionConverters._
-      scala.util.Try {
-        java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-          .foreach(p => scala.util.Try(java.nio.file.Files.delete(p)))
-      }
-    }))
-    d.toString
-  }
-
   /** Cluster guard (round 16): `table` mode's UNCONFIGURED spill root
     * is driver-local temp — fine on local[n] (one machine, one
     * filesystem), but on a real cluster the executors cannot read the
@@ -111,8 +98,8 @@ object Fence {
     val spark = df.sparkSession
     val configured = spark.conf.getOption("spark.graft.fence.dir")
     requireSpillDirConfigured(spark.sparkContext.master, configured)
-    val base = configured.getOrElse(defaultDir)
-    val path = s"$base/f${counter.incrementAndGet()}"
+    val path = configured.fold(Scratch.dir("graft_fence_"))(base =>
+      s"$base/f${counter.incrementAndGet()}")
     df.write.mode("overwrite").parquet(path)
     spark.read.schema(df.schema).parquet(path)
   }

@@ -3,7 +3,11 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Hot-bucket containment for bucket equi-joins whose OUTPUT (not input)
+/** The salted-join rewrites: [[guardedPairs]] for bucket equi-joins
+  * whose OUTPUT goes quadratic in one task, [[saltedEquiJoin]] for a
+  * plain equi-join whose INPUT has one dominant key.
+  *
+  * Hot-bucket containment for bucket equi-joins whose OUTPUT (not input)
   * can go quadratic in a single task.
   *
   * An LSH band/bucket self-join produces `|bucket|²` pairs per bucket in
@@ -100,5 +104,51 @@ object SkewJoin {
     // shuffle of narrow band rows — the stage this operator budgets
     // for anyway.
     project(left.as("a").hint("merge").join(right.as("b"), cond))
+  }
+
+  /** Salted equi-join — the manual skew defense for when ONE key
+    * dominates a join's shuffle (the hot-customer / empty-string /
+    * default-value key): AQE's skew-join split handles sort-merge
+    * spills, but a key so hot that a single task cannot hold its build
+    * side needs the classic salting rewrite, and having it as a named
+    * operator keeps the rewrite CORRECT (the subtle bugs live in the
+    * join-type and null handling).
+    *
+    * Equi-joins `left` (probe side) with `right` (build side) on
+    * `keys`: each `left` row gets the salt bucket `saltExpr mod
+    * buckets`, each `right` row is replicated once per bucket, and the
+    * join keys grow the salt column, so the hot key's rows spread over
+    * `buckets` tasks instead of one. Row-for-row equal to the plain
+    * join BY CONSTRUCTION: each probe row carries exactly one salt
+    * value and meets exactly one replica of every matching build row.
+    * `saltExpr` must be a deterministic NON-NULL expression over
+    * `left`'s columns (a row id, a hash of one) — a NULL salt would
+    * silently drop the row from an inner join, so it raises per row
+    * instead. Join types are restricted to the ones replication cannot
+    * corrupt: `inner` and `left` (an unmatched probe row still appears
+    * exactly once; `right`/`full`/`semi`/`anti` would see build-side
+    * replicas as distinct unmatched rows — refused). */
+  def saltedEquiJoin(left: DataFrame, right: DataFrame,
+                     keys: Seq[String], saltExpr: Column,
+                     buckets: Int,
+                     joinType: String = "inner"): DataFrame = {
+    require(keys.nonEmpty, "saltedEquiJoin: need at least one key")
+    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
+    val jt = joinType.toLowerCase
+    require(jt == "inner" || jt == "left" || jt == "left_outer",
+      s"saltedEquiJoin: join type '$joinType' cannot be salted — " +
+        "build-side replication corrupts right/full/semi/anti joins; " +
+        "use inner or left")
+    require(!left.columns.contains("__salt") &&
+      !right.columns.contains("__salt"),
+      "saltedEquiJoin: reserved column name '__salt' already present")
+    val salted = left.withColumn("__salt",
+      when(saltExpr.isNull, raise_error(lit(
+        "saltedEquiJoin: NULL salt expression — a null salt would " +
+          "silently drop the row")).cast("int"))
+        .otherwise(pmod(saltExpr, lit(buckets)).cast("int")))
+    val replicated = right.withColumn("__salt",
+      explode(array((0 until buckets).map(lit): _*)))
+    salted.join(replicated, keys :+ "__salt", jt).drop("__salt")
   }
 }

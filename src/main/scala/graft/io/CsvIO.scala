@@ -1,12 +1,14 @@
 package graft.io
 
-import java.io.{File, FileOutputStream}
+import java.io.FileOutputStream
 import java.nio.file.{Files, Paths}
 import java.util.zip.ZipInputStream
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.core.Scratch
 
 /** CSV sources and sinks (SURVEY §2.1 S1/S2/S4, K4).
   *
@@ -15,7 +17,9 @@ import org.apache.spark.sql.functions._
   * are staged to a local file and read with the normal Spark CSV reader,
   * so schema inference, malformed-line dropping and encoding all behave
   * identically to a direct read — and at cluster scale the staging
-  * target would be shared storage, everything after unchanged.
+  * target would be shared storage, everything after unchanged. The
+  * staged copy is [[Scratch]] space: the returned frame reads it
+  * lazily, so it lives until the caller's [[Scratch.scope]] closes.
   */
 trait Fetcher extends Serializable {
   def fetch(url: String): Array[Byte]
@@ -49,7 +53,7 @@ class HttpCsvSource(fetcher: Fetcher) {
            encoding: String = "UTF-8",
            schema: Option[org.apache.spark.sql.types.StructType] = None)
       : DataFrame = {
-    val staged = Files.createTempFile("graft_csv_", ".csv")
+    val staged = Paths.get(Scratch.dir("graft_csv_"), "staged.csv")
     Files.write(staged, fetcher.fetch(url))
     val base = spark.read
       .option("header", "true").option("sep", sep)
@@ -66,8 +70,8 @@ class ZipCsvSource(fetcher: Fetcher) {
   def read(spark: SparkSession, url: String, sep: String = ";",
            encoding: String = "UTF-8",
            columns: Seq[String] = Nil): DataFrame = {
-    val dir = Files.createTempDirectory("graft_zip_").toFile
-    val dirPath = dir.toPath.toAbsolutePath.normalize()
+    val dir = Scratch.dir("graft_zip_")
+    val dirPath = Paths.get(dir).toAbsolutePath.normalize()
     val zin = new ZipInputStream(
       new java.io.ByteArrayInputStream(fetcher.fetch(url)))
     try {
@@ -93,7 +97,7 @@ class ZipCsvSource(fetcher: Fetcher) {
       .option("encoding", encoding).option("mode", "DROPMALFORMED")
       .option("inferSchema", "true")
       .option("recursiveFileLookup", "true") // nested zip entries
-      .csv(dir.toString)
+      .csv(dir)
     if (columns.isEmpty) df else df.select(columns.map(col).toIndexedSeq: _*)
   }
 }

@@ -1,11 +1,9 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 import graft.io.Connectors
 import graft.io.Connectors.{CsvSheetIO, StubFbResolver, StubGeocoder,
   StubSearchApi}
@@ -33,15 +31,12 @@ object ConnectorQueries {
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S8 sheet scan: a worksheet backed by header-CSV under the stub's
     // directory layout, read through the SheetIO interface
     // (assos_validation_retreatment.py g2d download).
     "s08_sheet_scan" -> ((s, dir) => {
-      val store = tmp("graft_s08_")
+      val store = Scratch.dir("graft_s08_")
       t(s, dir, "region").coalesce(1).orderBy(col("r_regionkey"))
         .write.option("header", "true").csv(s"$store/book/region")
       new CsvSheetIO(store).download(s, "book", "region")
@@ -52,7 +47,7 @@ object ConnectorQueries {
     // derived from its own download (the reference's clean=True replace
     // semantics) — a broken replace would duplicate or drop rows.
     "k05_sheet_sink" -> ((s, dir) => {
-      val io = new CsvSheetIO(tmp("graft_k05_"))
+      val io = new CsvSheetIO(Scratch.dir("graft_k05_"))
       io.upload(t(s, dir, "supplier")
         .select(col("s_suppkey"), col("s_name"), col("s_acctbal")),
         "book", "sup")

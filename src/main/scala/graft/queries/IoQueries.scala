@@ -8,13 +8,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.catalog.{TableCatalog, Versioned}
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 import graft.io.{CsvSink, ExcelSource, ExcelXlsx, FileFetcher,
   HttpCsvSource, ZipCsvSource}
 
 /** Oracle-checked queries for the source/sink layer (SURVEY §2.1 S1/S2/
   * S4/S7, K1-K4). Each query round-trips testdata through the IO path
-  * under a fresh temp dir; the oracle reads the original parquet — so a
+  * under a fresh Scratch dir; the oracle reads the original parquet — so a
   * lossy parse, a broken partition overwrite, or a non-idempotent write
   * fails the gate.
   */
@@ -22,13 +22,10 @@ object IoQueries {
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S1 staged (HTTP-shaped) CSV scan: fetch → stage → `;`-CSV parse
     "s01_http_csv" -> ((s, dir) => {
-      val stage = tmp("graft_s01_")
+      val stage = Scratch.dir("graft_s01_")
       t(s, dir, "region").coalesce(1).orderBy(col("r_regionkey"))
         .write.mode("overwrite").option("header", "true").option("sep", ";")
         .csv(s"$stage/out")
@@ -41,7 +38,7 @@ object IoQueries {
 
     // S2 zip multi-CSV scan: two members, concatenated natively
     "s02_zip_csv" -> ((s, dir) => {
-      val stage = tmp("graft_s02_")
+      val stage = Scratch.dir("graft_s02_")
       val nation = t(s, dir, "nation")
       def dump(df: DataFrame, name: String): File = {
         df.coalesce(1).orderBy(col("n_nationkey"))
@@ -68,7 +65,7 @@ object IoQueries {
     // fixture writer's, dim-table-bounded — the reader itself is the op
     // under test (custom_search_extraction.py:92-94).
     "s03_excel_scan" -> ((s, dir) => {
-      val stage = tmp("graft_s03_")
+      val stage = Scratch.dir("graft_s03_")
       val rows = t(s, dir, "region").orderBy(col("r_regionkey")).collect()
         .map(r => Seq[Any](r.getInt(0).toLong, r.getString(1))).toSeq
       ExcelXlsx.write(s"$stage/nomenclature.xlsx", "Feuil1",
@@ -79,7 +76,7 @@ object IoQueries {
 
     // S4 local CSV scan (update_open_data.py:68)
     "s04_local_csv" -> ((s, dir) => {
-      val stage = tmp("graft_s04_")
+      val stage = Scratch.dir("graft_s04_")
       t(s, dir, "supplier").coalesce(1).orderBy(col("s_suppkey"))
         .write.mode("overwrite").option("header", "true").csv(s"$stage/out")
       s.read.option("header", "true").option("inferSchema", "true")
@@ -89,7 +86,7 @@ object IoQueries {
     // S7 partition-metadata scan over a partitioned catalog table
     // (bulk-partitioned backfill write, then directory-only listing)
     "s07_partitions" -> ((s, dir) => {
-      val cat = new TableCatalog(s, tmp("graft_s07_"))
+      val cat = new TableCatalog(s, Scratch.dir("graft_s07_"))
       val ev = t(s, dir, "events")
         .withColumn("date_extract", col("ts").cast("date").cast("string"))
       cat.writePartitioned(ev, "events_p", "date_extract")
@@ -102,7 +99,7 @@ object IoQueries {
 
     // K1 full-table overwrite write, read back
     "k01_overwrite_write" -> ((s, dir) => {
-      val cat = new TableCatalog(s, tmp("graft_k01_"))
+      val cat = new TableCatalog(s, Scratch.dir("graft_k01_"))
       cat.writeFull(t(s, dir, "region"), "region_copy")
       cat.writeFull(t(s, dir, "region"), "region_copy") // overwrite = idempotent
       cat.read("region_copy").orderBy(col("r_regionkey"))
@@ -111,7 +108,7 @@ object IoQueries {
     // K2 partitioned idempotent write: same partition written twice must
     // not duplicate rows
     "k02_partitioned_write" -> ((s, dir) => {
-      val cat = new TableCatalog(s, tmp("graft_k02_"))
+      val cat = new TableCatalog(s, Scratch.dir("graft_k02_"))
       val ev = t(s, dir, "events")
         .withColumn("date_extract", col("ts").cast("date").cast("string"))
       val days = ev.select(col("date_extract")).distinct().collect()
@@ -126,7 +123,7 @@ object IoQueries {
 
     // K3 conditional write: second write must be a no-op
     "k03_conditional_write" -> ((s, dir) => {
-      val cat = new TableCatalog(s, tmp("graft_k03_"))
+      val cat = new TableCatalog(s, Scratch.dir("graft_k03_"))
       cat.writeIfAbsent(t(s, dir, "region"), "cond_tbl")
       cat.writeIfAbsent(t(s, dir, "region").limit(1), "cond_tbl")
       cat.read("cond_tbl").orderBy(col("r_regionkey"))
@@ -134,7 +131,7 @@ object IoQueries {
 
     // K4 `;`-CSV sink with pandas-style index column, read back
     "k04_csv_sink" -> ((s, dir) => {
-      val stage = tmp("graft_k04_")
+      val stage = Scratch.dir("graft_k04_")
       CsvSink.write(t(s, dir, "supplier"), s"$stage/out",
         Seq(col("s_suppkey")))
       s.read.option("header", "true").option("sep", ";")
@@ -150,7 +147,7 @@ object IoQueries {
     // desync a real corpus); a lossy escape (newlines/quotes/unicode in
     // text) or type drift fails the hash against the parquet oracle.
     "s11_jsonl_scan" -> ((s, dir) => {
-      val stage = tmp("graft_s11_")
+      val stage = Scratch.dir("graft_s11_")
       t(s, dir, "documents").coalesce(1)
         .write.mode("overwrite").json(s"$stage/out")
       val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -178,7 +175,7 @@ object IoQueries {
     // capabilities (pushdown, pruning) apply; the gate is the
     // fidelity check.
     "s12_orc_roundtrip" -> ((s, dir) => {
-      val stage = tmp("graft_s12_")
+      val stage = Scratch.dir("graft_s12_")
       t(s, dir, "documents").coalesce(1)
         .write.mode("overwrite").orc(s"$stage/out")
       s.read.orc(s"$stage/out")
@@ -199,7 +196,7 @@ object IoQueries {
     // from the wrong directory all break the hash. Crash-window and
     // vacuum semantics are CatalogIoSpec-pinned.
     "k08_versioned_tt" -> ((s, dir) => {
-      val cat = new TableCatalog(s, tmp("graft_k08_"))
+      val cat = new TableCatalog(s, Scratch.dir("graft_k08_"))
       val nation = t(s, dir, "nation")
       val v1 = nation.select(col("n_nationkey").as("key"),
         col("n_name").as("name"))
@@ -223,7 +220,7 @@ object IoQueries {
     // change is real) and appends shifted-key rows — all three ops
     // appear and any mis-classification breaks the hash.
     "k09_snapshot_diff" -> ((s, dir) => {
-      val cat = new TableCatalog(s, tmp("graft_k09_"))
+      val cat = new TableCatalog(s, Scratch.dir("graft_k09_"))
       val nation = t(s, dir, "nation")
       val v1 = nation.select(col("n_nationkey").as("key"),
         col("n_name").as("name"))
@@ -248,7 +245,7 @@ object IoQueries {
     // re-committing (current_version 1), rewrote history, or served
     // v2 breaks the hash.
     "k10_restore" -> ((s, dir) => {
-      val cat = new TableCatalog(s, tmp("graft_k10_"))
+      val cat = new TableCatalog(s, Scratch.dir("graft_k10_"))
       val nation = t(s, dir, "nation")
       val v1 = nation.select(col("n_nationkey").as("key"),
         col("n_name").as("name"))
@@ -271,7 +268,7 @@ object IoQueries {
     // pre-merge snapshot's unchanged time-travel read are
     // CatalogIoSpec-pinned.
     "k11_merge_upsert" -> ((s, dir) => {
-      val cat = new TableCatalog(s, tmp("graft_k11_"))
+      val cat = new TableCatalog(s, Scratch.dir("graft_k11_"))
       val nation = t(s, dir, "nation")
       Versioned.write(cat, nation.select(col("n_nationkey").as("key"),
         col("n_name").as("name")), "merge_v")
@@ -302,7 +299,7 @@ object IoQueries {
     // v1 rows, never a dropped row or a silently-cast value. Type
     // drift refusal is CatalogIoSpec-pinned.
     "k12_schema_evolution" -> ((s, dir) => {
-      val cat = new TableCatalog(s, tmp("graft_k12_"))
+      val cat = new TableCatalog(s, Scratch.dir("graft_k12_"))
       val nation = t(s, dir, "nation")
       Versioned.write(cat, nation.select(col("n_nationkey").as("key"),
         col("n_name").as("name")), "evo_v")

@@ -144,7 +144,7 @@ object JoinQueries {
     // drops one breaks the hash. Join-type and NULL-salt refusals are
     // OpsSpec-pinned.
     "j11_salted_join" -> ((s, dir) =>
-      graft.ops.SkewJoin.saltedEquiJoin(
+      graft.core.SkewJoin.saltedEquiJoin(
           t(s, dir, "lineitem")
             .select(col("l_suppkey").as("suppkey"), col("l_orderkey"),
               col("l_extendedprice")),

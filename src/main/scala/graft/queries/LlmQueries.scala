@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ann.Ann
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 import graft.multimodal.{Multimodal, Png, Wav}
 import graft.ops.Dedup
 import graft.sim.{JaccardJoin, MinHashLSH, SimHash}
@@ -18,8 +18,83 @@ import graft.text.{Decontaminate, SpanDedup, TextAnalysis, TextHash}
   * gate exactly.
   */
 object LlmQueries {
+  /** A catalog over a fresh [[Scratch]] warehouse. */
+  private def scratchCatalog(s: SparkSession, prefix: String)
+      : graft.catalog.TableCatalog =
+    new graft.catalog.TableCatalog(s, Scratch.dir(prefix))
+
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
+
+  /** dp06's and dp12's gate body: three feeds — the corpus chain, an
+    * SQ8 index and a BPE vocabulary trained with `alphabet` — run as
+    * concurrent lanes into one [[Scratch]] catalog whose tables carry
+    * the `tag` prefix, then the serving composition over them. */
+  private def servingComposition(s: SparkSession, dir: String,
+      tag: String, alphabet: String): DataFrame = {
+    import graft.streaming.CorpusStream
+    import graft.ann.AnnIndex
+    import graft.text.BpeIndex
+    val emb = t(s, dir, "embeddings")
+    val docs = t(s, dir, "documents")
+      .filter(pmod(col("doc_id"), lit(97)) =!= 0)
+      .select(col("doc_id"), col("text"), col("lang"))
+    val evalVecs = emb.filter(pmod(col("vec_id"), lit(97)) === 0)
+    val corpusVecs = emb.filter(pmod(col("vec_id"), lit(97)) =!= 0)
+    val b = docs.agg(org.apache.spark.sql.functions.min(col("doc_id")),
+      org.apache.spark.sql.functions.max(col("doc_id"))).head()
+    val lo = b.getLong(0); val hi = b.getLong(1)
+    val cut1 = lo + (hi - lo) / 3; val cut2 = lo + 2 * ((hi - lo) / 3)
+    val cat = scratchCatalog(s, s"graft_${tag}_")
+    val preds: Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column] =
+      Seq(c => c <= cut1, c => c > cut1 && c <= cut2, c => c > cut2)
+    // the three feeds are independent until the decon/encode joins
+    // below (disjoint tables: corpus state/out, ANN index, BPE
+    // vocabulary), and each is a chain of many small jobs — run them
+    // as concurrent lanes so each lane's driver latency and stage
+    // tails back-fill the others' idle slots (identical final
+    // tables; ordering within each lane is unchanged)
+    graft.core.Par.concurrently(Seq(
+      () => preds.zipWithIndex.foreach { case (p, i) =>
+        CorpusStream.processBatch(docs.filter(p(col("doc_id"))), cat,
+          s"${tag}_seen", s"${tag}_out", i.toLong, compactEvery = 2)
+      },
+      () => preds.zipWithIndex.foreach { case (p, i) =>
+        val vb = corpusVecs.filter(p(col("vec_id")))
+        if (i == 0)
+          AnnIndex.buildSq8(cat, vb, "vec_id", "embedding", s"${tag}_ann")
+        else
+          AnnIndex.ingestBatch(cat, vb, "vec_id", "embedding",
+            s"${tag}_ann", i.toLong, compactEvery = 2)
+      },
+      // vocabulary: trained once on the first batch, persisted;
+      // every doc after that only ever encodes off the loaded
+      // artifact
+      () => BpeIndex.build(cat, docs.filter(col("doc_id") <= cut1),
+        "text", s"${tag}_bpe", alphabet = alphabet)))
+    // decon hit list probed off the live index codes
+    val bad = AnnIndex.sq8MatchesFromIndex(cat, s"${tag}_ann", evalVecs,
+      "vec_id", "embedding", 460.0 / 1024.0)
+    val surv = cat.read(s"${tag}_out")
+      .select(col("doc_id"), col("lang"), col("n_toks"))
+      .join(bad.withColumnRenamed("id", "doc_id"), Seq("doc_id"),
+        "left_anti")
+    val enc = BpeIndex.encodeStatsFromIndex(cat, s"${tag}_bpe",
+      surv.select(col("doc_id"))
+        .join(docs.select(col("doc_id"), col("text")), Seq("doc_id")),
+      "doc_id", "text")
+    val withSub = graft.core.Fence(surv.join(
+      enc.select(col("doc_id"), col("n_sub")), Seq("doc_id")))
+    graft.text.Packing
+      .tokenChunks(withSub, "doc_id", col("n_sub"), 8000L)
+      .select(col("id").as("doc_id"), col("n_toks").as("n_sub"),
+        col("chunk"))
+      .join(withSub.select(col("doc_id"), col("lang"), col("n_toks")),
+        Seq("doc_id"))
+      .select(col("doc_id"), col("lang"), col("n_toks"),
+        col("n_sub"), col("chunk"))
+      .orderBy(col("doc_id"))
+  }
 
   /** The byte-BPE gates' derived UNICODE corpus: e→é (2-byte Latin),
     * a→α (2-byte Greek), i→€ (3-byte symbol) — real multi-byte UTF-8
@@ -238,9 +313,7 @@ object LlmQueries {
     // the probes differ, exactly how a deployment tunes a live store.
     "ann30_recall_tuning" -> ((s, dir) => {
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann30_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann30_")
       val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 5)
       AnnIndex.buildIvfPq(cat, e, "vec_id", "embedding", "ann_tune",
@@ -341,9 +414,7 @@ object LlmQueries {
     // half-corpus training and the full-corpus encode.
     "ts18_bpe_index" -> ((s, dir) => {
       import graft.text.BpeIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ts18_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ts18_")
       val docs = t(s, dir, "documents")
       BpeIndex.build(cat, docs.filter(pmod(col("doc_id"), lit(2)) === 0),
         "text", "bpe")
@@ -375,9 +446,7 @@ object LlmQueries {
 
     "ts21_bbpe_encode" -> ((s, dir) => {
       import graft.text.BpeIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ts21_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ts21_")
       val docs = uniDocs(t(s, dir, "documents"))
       BpeIndex.build(cat, docs, "text", "bbpe", alphabet = "bytes")
       BpeIndex.encodeStatsFromIndex(cat, "bbpe", docs, "doc_id", "text")
@@ -510,16 +579,14 @@ object LlmQueries {
       implicit val sqlCtx = s.sqlContext
       import graft.ops.CountMin
       val d = 2; val w = 1024
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ts25_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ts25_")
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text"))
         .orderBy(col("doc_id")).as[(Long, String)].collect()
       val n = docs.length
       val mem = MemoryStream[(Long, String)]
       val q = mem.toDF().toDF("doc_id", "text")
-        .writeStream.option("checkpointLocation", wh + "/_ckpt")
+        .writeStream.option("checkpointLocation", cat.tablePath("_ckpt"))
         .foreachBatch { (df: DataFrame, batchId: Long) =>
           CountMin.ingestSketchBatch(cat,
             df.select(explode(TextHash.tokens(col("text"))).as("tok")),
@@ -823,9 +890,7 @@ object LlmQueries {
     // chain instead of re-running it.
     "dp13_corpus_snapshots" -> ((s, dir) => {
       import graft.catalog.Versioned
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_dp13_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_dp13_")
       val gated = graft.text.CorpusPipeline.gate(t(s, dir, "documents"))
       val deduped = graft.core.Fence(Dedup.exactDedup(gated,
         graft.text.CorpusPipeline.fingerprintPrefix, col("doc_id")))
@@ -900,8 +965,7 @@ object LlmQueries {
     // shard, not just row counts. One partitioned write job; no
     // driver-side loop over shards.
     "dp08_shard_export" -> ((s, dir) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_dp08_").toString
+      val out = Scratch.dir("graft_dp08_")
       dp08Assigned(s, dir)
         .write.partitionBy("chunk").mode("overwrite").json(out)
       dp08ReadBack(s, out)
@@ -920,11 +984,8 @@ object LlmQueries {
     // chunk assignment — shards keep their identity, docs leave them.
     "dp09_export_purge" -> ((s, dir) => {
       import graft.text.ShardExport
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_dp09_").toString
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_dp09w_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val out = Scratch.dir("graft_dp09_")
+      val cat = scratchCatalog(s, "graft_dp09w_")
       ShardExport.exportJsonl(cat, dp08Assigned(s, dir), "dp09_exp",
         out)
       val doomed = t(s, dir, "documents")
@@ -944,18 +1005,17 @@ object LlmQueries {
     // the dp09 arithmetic, tagged per export.
     "dp11_purge_all" -> ((s, dir) => {
       import graft.text.ShardExport
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_dp11w_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
-      val outA = java.nio.file.Files
-        .createTempDirectory("graft_dp11a_").toString
-      val outB = java.nio.file.Files
-        .createTempDirectory("graft_dp11b_").toString
+      val cat = scratchCatalog(s, "graft_dp11w_")
+      val outA = Scratch.dir("graft_dp11a_")
+      val outB = Scratch.dir("graft_dp11b_")
       // the two exports differ only in chunk size: the heavy corpus
       // prefix (gate → dedup → near-dup cluster → token budget) is
       // computed ONCE (dp08Kept's fence) and the two chunk-assign +
       // write lanes run concurrently — they touch disjoint export
-      // tables, disjoint output dirs, and disjoint registry partitions
+      // tables, disjoint output dirs, and disjoint registry partitions.
+      // Unverified at 4 cores: at sf0.1 the lanes took 26.7/24.2 s and
+      // the sequential form 24.4/22.4 s (ROADMAP item 6); kept until a
+      // >= 32-core bench decides
       val kept = dp08Kept(s, dir)
       graft.core.Par.concurrently(Seq(
         () => ShardExport.exportJsonl(cat,
@@ -993,9 +1053,7 @@ object LlmQueries {
         org.apache.spark.sql.functions.max(col("doc_id"))).head()
       val lo = b.getLong(0); val hi = b.getLong(1)
       val cut1 = lo + (hi - lo) / 3; val cut2 = lo + 2 * ((hi - lo) / 3)
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_dp03_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_dp03_")
       Seq(docs.filter(col("doc_id") <= cut1),
           docs.filter(col("doc_id") > cut1 && col("doc_id") <= cut2),
           docs.filter(col("doc_id") > cut2))
@@ -1026,9 +1084,7 @@ object LlmQueries {
         org.apache.spark.sql.functions.max(col("doc_id"))).head()
       val lo = b.getLong(0); val hi = b.getLong(1)
       val cut1 = lo + (hi - lo) / 3; val cut2 = lo + 2 * ((hi - lo) / 3)
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_dp07_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_dp07_")
       Seq(docs.filter(col("doc_id") <= cut1),
           docs.filter(col("doc_id") > cut1 && col("doc_id") <= cut2),
           docs.filter(col("doc_id") > cut2))
@@ -1066,9 +1122,7 @@ object LlmQueries {
         org.apache.spark.sql.functions.max(col("doc_id"))).head()
       val lo = b.getLong(0); val hi = b.getLong(1)
       val cut1 = lo + (hi - lo) / 3; val cut2 = lo + 2 * ((hi - lo) / 3)
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_dp10_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_dp10_")
       def adds(p: org.apache.spark.sql.Column): DataFrame =
         docs.filter(p).select(lit("add").as("op"), col("doc_id"),
           col("text"), col("lang"))
@@ -1108,9 +1162,7 @@ object LlmQueries {
         org.apache.spark.sql.functions.max(col("doc_id"))).head()
       val lo = b.getLong(0); val hi = b.getLong(1)
       val cut1 = lo + (hi - lo) / 3; val cut2 = lo + 2 * ((hi - lo) / 3)
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_dp04_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_dp04_")
       Seq(docs.filter(col("doc_id") <= cut1),
           docs.filter(col("doc_id") > cut1 && col("doc_id") <= cut2),
           docs.filter(col("doc_id") > cut2))
@@ -1143,72 +1195,8 @@ object LlmQueries {
     // Ascending arrival keeps stream == batch exactly (the dp03
     // argument); quantization and encoding are per-row functions
     // under frozen fits — so the whole composition gates hash-exact.
-    "dp06_serving_pipeline" -> ((s, dir) => {
-      import graft.streaming.CorpusStream
-      import graft.ann.AnnIndex
-      import graft.text.BpeIndex
-      val emb = t(s, dir, "embeddings")
-      val docs = t(s, dir, "documents")
-        .filter(pmod(col("doc_id"), lit(97)) =!= 0)
-        .select(col("doc_id"), col("text"), col("lang"))
-      val evalVecs = emb.filter(pmod(col("vec_id"), lit(97)) === 0)
-      val corpusVecs = emb.filter(pmod(col("vec_id"), lit(97)) =!= 0)
-      val b = docs.agg(org.apache.spark.sql.functions.min(col("doc_id")),
-        org.apache.spark.sql.functions.max(col("doc_id"))).head()
-      val lo = b.getLong(0); val hi = b.getLong(1)
-      val cut1 = lo + (hi - lo) / 3; val cut2 = lo + 2 * ((hi - lo) / 3)
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_dp06_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
-      val preds: Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column] =
-        Seq(c => c <= cut1, c => c > cut1 && c <= cut2, c => c > cut2)
-      // the three feeds are independent until the decon/encode joins
-      // below (disjoint tables: corpus state/out, ANN index, BPE
-      // vocabulary), and each is a chain of many small jobs — run them
-      // as concurrent lanes so each lane's driver latency and stage
-      // tails back-fill the others' idle slots (identical final
-      // tables; ordering within each lane is unchanged)
-      graft.core.Par.concurrently(Seq(
-        () => preds.zipWithIndex.foreach { case (p, i) =>
-          CorpusStream.processBatch(docs.filter(p(col("doc_id"))), cat,
-            "dp06_seen", "dp06_out", i.toLong, compactEvery = 2)
-        },
-        () => preds.zipWithIndex.foreach { case (p, i) =>
-          val vb = corpusVecs.filter(p(col("vec_id")))
-          if (i == 0)
-            AnnIndex.buildSq8(cat, vb, "vec_id", "embedding", "dp06_ann")
-          else
-            AnnIndex.ingestBatch(cat, vb, "vec_id", "embedding",
-              "dp06_ann", i.toLong, compactEvery = 2)
-        },
-        // vocabulary: trained once on the first batch, persisted;
-        // every doc after that only ever encodes off the loaded
-        // artifact
-        () => BpeIndex.build(cat, docs.filter(col("doc_id") <= cut1),
-          "text", "dp06_bpe")))
-      // decon hit list probed off the live index codes
-      val bad = AnnIndex.sq8MatchesFromIndex(cat, "dp06_ann", evalVecs,
-        "vec_id", "embedding", 460.0 / 1024.0)
-      val surv = cat.read("dp06_out")
-        .select(col("doc_id"), col("lang"), col("n_toks"))
-        .join(bad.withColumnRenamed("id", "doc_id"), Seq("doc_id"),
-          "left_anti")
-      val enc = BpeIndex.encodeStatsFromIndex(cat, "dp06_bpe",
-        surv.select(col("doc_id"))
-          .join(docs.select(col("doc_id"), col("text")), Seq("doc_id")),
-        "doc_id", "text")
-      val withSub = graft.core.Fence(surv.join(
-        enc.select(col("doc_id"), col("n_sub")), Seq("doc_id")))
-      graft.text.Packing
-        .tokenChunks(withSub, "doc_id", col("n_sub"), 8000L)
-        .select(col("id").as("doc_id"), col("n_toks").as("n_sub"),
-          col("chunk"))
-        .join(withSub.select(col("doc_id"), col("lang"), col("n_toks")),
-          Seq("doc_id"))
-        .select(col("doc_id"), col("lang"), col("n_toks"),
-          col("n_sub"), col("chunk"))
-        .orderBy(col("doc_id"))
-    }),
+    "dp06_serving_pipeline" -> ((s, dir) =>
+      servingComposition(s, dir, "dp06", alphabet = "az")),
 
     // The serving composition under the BYTE tokenizer (round 16 —
     // closing "the serving story inherits the ASCII-only alphabet"):
@@ -1220,64 +1208,8 @@ object LlmQueries {
     // is ts20/ts21; this gate proves the byte path THROUGH the full
     // serving composition. Oracle = dp06's replay with the encode
     // stages swapped to the byte CTEs (same train-slice restriction).
-    "dp12_serving_bytes" -> ((s, dir) => {
-      import graft.streaming.CorpusStream
-      import graft.ann.AnnIndex
-      import graft.text.BpeIndex
-      val emb = t(s, dir, "embeddings")
-      val docs = t(s, dir, "documents")
-        .filter(pmod(col("doc_id"), lit(97)) =!= 0)
-        .select(col("doc_id"), col("text"), col("lang"))
-      val evalVecs = emb.filter(pmod(col("vec_id"), lit(97)) === 0)
-      val corpusVecs = emb.filter(pmod(col("vec_id"), lit(97)) =!= 0)
-      val b = docs.agg(org.apache.spark.sql.functions.min(col("doc_id")),
-        org.apache.spark.sql.functions.max(col("doc_id"))).head()
-      val lo = b.getLong(0); val hi = b.getLong(1)
-      val cut1 = lo + (hi - lo) / 3; val cut2 = lo + 2 * ((hi - lo) / 3)
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_dp12_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
-      val preds: Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column] =
-        Seq(c => c <= cut1, c => c > cut1 && c <= cut2, c => c > cut2)
-      // same three independent lanes as dp06 (see there): identical
-      // final tables, lanes overlap each other's per-job latency
-      graft.core.Par.concurrently(Seq(
-        () => preds.zipWithIndex.foreach { case (p, i) =>
-          CorpusStream.processBatch(docs.filter(p(col("doc_id"))), cat,
-            "dp12_seen", "dp12_out", i.toLong, compactEvery = 2)
-        },
-        () => preds.zipWithIndex.foreach { case (p, i) =>
-          val vb = corpusVecs.filter(p(col("vec_id")))
-          if (i == 0)
-            AnnIndex.buildSq8(cat, vb, "vec_id", "embedding", "dp12_ann")
-          else
-            AnnIndex.ingestBatch(cat, vb, "vec_id", "embedding",
-              "dp12_ann", i.toLong, compactEvery = 2)
-        },
-        () => BpeIndex.build(cat, docs.filter(col("doc_id") <= cut1),
-          "text", "dp12_bpe", alphabet = "bytes")))
-      val bad = AnnIndex.sq8MatchesFromIndex(cat, "dp12_ann", evalVecs,
-        "vec_id", "embedding", 460.0 / 1024.0)
-      val surv = cat.read("dp12_out")
-        .select(col("doc_id"), col("lang"), col("n_toks"))
-        .join(bad.withColumnRenamed("id", "doc_id"), Seq("doc_id"),
-          "left_anti")
-      val enc = BpeIndex.encodeStatsFromIndex(cat, "dp12_bpe",
-        surv.select(col("doc_id"))
-          .join(docs.select(col("doc_id"), col("text")), Seq("doc_id")),
-        "doc_id", "text")
-      val withSub = graft.core.Fence(surv.join(
-        enc.select(col("doc_id"), col("n_sub")), Seq("doc_id")))
-      graft.text.Packing
-        .tokenChunks(withSub, "doc_id", col("n_sub"), 8000L)
-        .select(col("id").as("doc_id"), col("n_toks").as("n_sub"),
-          col("chunk"))
-        .join(withSub.select(col("doc_id"), col("lang"), col("n_toks")),
-          Seq("doc_id"))
-        .select(col("doc_id"), col("lang"), col("n_toks"),
-          col("n_sub"), col("chunk"))
-        .orderBy(col("doc_id"))
-    }),
+    "dp12_serving_bytes" -> ((s, dir) =>
+      servingComposition(s, dir, "dp12", alphabet = "bytes")),
 
     // Corpus quality report — the per-language summary artifact every
     // corpus build emits: doc/token volumes, mean quality (scaled to
@@ -1421,9 +1353,7 @@ object LlmQueries {
     // ann06's / ann05's verbatim.
     "ann07_index_probe" -> ((s, dir) => {
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann07_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann07_")
       AnnIndex.buildLsh(cat, t(s, dir, "embeddings"), "vec_id",
         "embedding", "ann_idx", targetBucketRows = 1)
       AnnIndex.lshNeighborsFromIndex(cat, "ann_idx")
@@ -1432,9 +1362,7 @@ object LlmQueries {
 
     "ann08_ivf_index" -> ((s, dir) => {
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann08_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann08_")
       val e = t(s, dir, "embeddings")
       AnnIndex.buildIvf(cat, e, "vec_id", "embedding", "ann_ivf",
         numCells = 16, trainIters = 2)
@@ -1457,9 +1385,7 @@ object LlmQueries {
     // the two things a serving append must not drift on.
     "ann09_lsh_append" -> ((s, dir) => {
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann09_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann09_")
       val e = t(s, dir, "embeddings")
       val (first, rest) = (e.filter(pmod(col("vec_id"), lit(2)) === 0),
         e.filter(pmod(col("vec_id"), lit(2)) === 1))
@@ -1472,9 +1398,7 @@ object LlmQueries {
 
     "ann10_ivf_append" -> ((s, dir) => {
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann10_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann10_")
       val e = t(s, dir, "embeddings")
       val (first, rest) = (e.filter(pmod(col("vec_id"), lit(2)) === 0),
         e.filter(pmod(col("vec_id"), lit(2)) === 1))
@@ -1493,9 +1417,7 @@ object LlmQueries {
     // fit-inline ann11 — its oracle verbatim.
     "ann12_sq8_index" -> ((s, dir) => {
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann12_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann12_")
       val e = t(s, dir, "embeddings")
       val (first, rest) = (e.filter(pmod(col("vec_id"), lit(2)) === 0),
         e.filter(pmod(col("vec_id"), lit(2)) === 1))
@@ -1557,9 +1479,7 @@ object LlmQueries {
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann19_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann19_")
       val e = t(s, dir, "embeddings")
       AnnIndex.buildSq8(cat, e.filter(pmod(col("vec_id"), lit(4)) === 0),
         "vec_id", "embedding", "ann_s")
@@ -1571,7 +1491,7 @@ object LlmQueries {
       val mem = MemoryStream[(Long, Array[Float])]
       val q = mem.toDF().toDF("vec_id", "embedding")
         .writeStream
-        .option("checkpointLocation", wh + "/_ckpt")
+        .option("checkpointLocation", cat.tablePath("_ckpt"))
         .foreachBatch { (df: DataFrame, batchId: Long) =>
           AnnIndex.ingestBatch(cat, df, "vec_id", "embedding",
             "ann_s", batchId, compactEvery = 2)
@@ -1599,9 +1519,7 @@ object LlmQueries {
     // compactions.
     "ann21_delete" -> ((s, dir) => {
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann21_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann21_")
       val e = t(s, dir, "embeddings")
       AnnIndex.buildSq8(cat, e, "vec_id", "embedding", "ann_del")
       val doomed = e.filter(pmod(col("vec_id"), lit(7)) === 0)
@@ -1633,9 +1551,7 @@ object LlmQueries {
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann22_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann22_")
       val e = t(s, dir, "embeddings")
       AnnIndex.buildSq8(cat, e.filter(pmod(col("vec_id"), lit(4)) === 0),
         "vec_id", "embedding", "ann_c")
@@ -1655,7 +1571,7 @@ object LlmQueries {
       val mem = MemoryStream[(String, Long, Array[Float])]
       val q = mem.toDF().toDF("op", "vec_id", "embedding")
         .writeStream
-        .option("checkpointLocation", wh + "/_ckpt")
+        .option("checkpointLocation", cat.tablePath("_ckpt"))
         .foreachBatch { (df: DataFrame, batchId: Long) =>
           AnnIndex.ingestCdcBatch(cat, df, "vec_id", "embedding", "op",
             "ann_c", batchId, compactEvery = 2)
@@ -1681,9 +1597,7 @@ object LlmQueries {
     // the ann11 arithmetic with the same predicate on the corpus side.
     "ann23_filtered_topk" -> ((s, dir) => {
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann23_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann23_")
       val e = t(s, dir, "embeddings")
       AnnIndex.buildSq8(cat, e, "vec_id", "embedding", "ann_f")
       AnnIndex.sq8TopKFromIndex(cat, "ann_f",
@@ -1702,9 +1616,7 @@ object LlmQueries {
     // same predicate on its candidate set.
     "ann24_filtered_refine" -> ((s, dir) => {
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann24_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann24_")
       val e = t(s, dir, "embeddings")
       AnnIndex.buildIvfPq(cat, e, "vec_id", "embedding", "ann_fr",
         numCells = 16, trainIters = 2, pqIters = 2)
@@ -1727,9 +1639,7 @@ object LlmQueries {
     // predicate on its candidate set only.
     "ann25_filtered_ivf" -> ((s, dir) => {
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann25_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann25_")
       val e = t(s, dir, "embeddings")
       AnnIndex.buildIvf(cat, e, "vec_id", "embedding", "ann_fi",
         numCells = 16, trainIters = 2)
@@ -1753,9 +1663,7 @@ object LlmQueries {
     // byte-identical (scales cancel there and are never read).
     "ann26_sq8_ip" -> ((s, dir) => {
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann26_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann26_")
       val e = t(s, dir, "embeddings")
       AnnIndex.buildSq8(cat, e, "vec_id", "embedding", "ann_ip",
         metric = "ip")
@@ -1769,9 +1677,7 @@ object LlmQueries {
     // metric triple — all three now oracle-gated, not just spec-pinned.
     "ann27_sq8_l2" -> ((s, dir) => {
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann27_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann27_")
       val e = t(s, dir, "embeddings")
       AnnIndex.buildSq8(cat, e, "vec_id", "embedding", "ann_l2",
         metric = "l2")
@@ -1788,9 +1694,7 @@ object LlmQueries {
     // arithmetic — the oracle is the ann16 builder at corpus width.
     "ann18_ivfpq_bulk" -> ((s, dir) => {
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann18_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann18_")
       val e = t(s, dir, "embeddings")
       AnnIndex.buildIvfPq(cat, e, "vec_id", "embedding", "ann_bulk",
         numCells = 16, trainIters = 2, pqIters = 2)
@@ -1802,9 +1706,7 @@ object LlmQueries {
 
     "ann17_ivfpq_index" -> ((s, dir) => {
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann17_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann17_")
       val e = t(s, dir, "embeddings")
       val (first, rest) = (e.filter(pmod(col("vec_id"), lit(2)) === 0),
         e.filter(pmod(col("vec_id"), lit(2)) === 1))
@@ -1827,9 +1729,7 @@ object LlmQueries {
     // at the same shape, so ranks and scores gate bit-exact.
     "ann20_ivfpq_geom" -> ((s, dir) => {
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann20_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann20_")
       val g = Ann.Geom(32, 8, 16)
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"),
@@ -1858,9 +1758,7 @@ object LlmQueries {
     // an ip corpus silently.
     "ann28_ivfpq_l2" -> ((s, dir) => {
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann28_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann28_")
       val e = t(s, dir, "embeddings")
       AnnIndex.buildIvfPq(cat, e, "vec_id", "embedding", "ann_rawl2",
         numCells = 16, trainIters = 2, pqIters = 2, metric = "l2")
@@ -1894,9 +1792,7 @@ object LlmQueries {
     // fit-inline ann13 — its oracle verbatim.
     "ann14_pq_index" -> ((s, dir) => {
       import graft.ann.AnnIndex
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_ann14_").toString
-      val cat = new graft.catalog.TableCatalog(s, wh)
+      val cat = scratchCatalog(s, "graft_ann14_")
       val e = t(s, dir, "embeddings")
       val (first, rest) = (e.filter(pmod(col("vec_id"), lit(2)) === 0),
         e.filter(pmod(col("vec_id"), lit(2)) === 1))

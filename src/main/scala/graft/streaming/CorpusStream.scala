@@ -512,7 +512,7 @@ object CorpusStream {
     * table's fp column — on a 10¹⁰-doc state that scan was linear in
     * the corpus every batch, however small the batch. A state written
     * by pre-index code is backfilled once from the sketch table's own
-    * fp column (see [[fpIndexCovers]]). */
+    * fp column (see [[indexesCover]]). */
   private val FpState = PkTable("_fp", FpDataSchema, fpPkCol(col("fp")),
     pkStored = true, Seq("id"))
 
@@ -1393,16 +1393,18 @@ object CorpusStream {
     val localDeduped = graft.core.Fence.soft(localDeduped0)
     release += localDeduped
     val spark = batch.sparkSession
-    // 3. the exact-dedup gate's inputs. The `_fp` index (round 12 —
-    //    [[fpIndexCovers]]) is backfilled first on a state written by
-    //    pre-index code; then ONE job ([[boundedCollect]], `batch
+    // 3. the exact-dedup gate's inputs. The `_fp` and `_bands` indexes
+    //    ([[indexesCover]]) are backfilled first where they miss a
+    //    sketch batch; then ONE job ([[boundedCollect]], `batch
     //    collect`) brings the batch's exact size, its first
     //    DriverVerifyIdCap + 1 rows per partition with their
     //    fingerprints, and the fp pk buckets the gate's `_fp` read
     //    prunes to on either path (fp equality implies pk equality, so
     //    the pruning loses no twin).
-    val fpCovered = state != null &&
-      fpIndexCovers(catalog, stateTable, batchKey, pkSplitMinRows)
+    val (fpCovered, bandsCovered) =
+      if (state == null) (false, false)
+      else indexesCover(catalog, stateTable, batchKey, pkSplitMinRows,
+        geom)
     val Seq(collected) = jd(spark, s"b$batchKey batch collect") {
       boundedCollect(Seq(localDeduped.select(col("doc_id"), col("text"),
           col("lang"), fp.as("fp"), fpPkCol(fp).as("__pk")) ->
@@ -1414,14 +1416,12 @@ object CorpusStream {
     //    rows colliding with the keys of every collected doc (a superset
     //    of the gate's survivors'), and [[driverBatch]] runs the gate,
     //    the cascade ([[driverCascade]]) and builds step 6's rows as
-    //    local relations. Past a cap, or on a legacy state whose bands
-    //    table does not cover its sketches, [[distributedBatch]] runs
+    //    local relations. Past a cap, or when another writer holds the
+    //    lease a `_bands` backfill needs, [[distributedBatch]] runs
     //    the same steps as Spark jobs, each labelled with why
     //    ([[FallbackKey]]). Either way the cross pairs arrive as driver
     //    rows (`pairRows`, up to MergeGraphCap + 1); `crossPairs`
     //    re-derives their frame for an over-cap batch only.
-    val bandsCovered = state != null &&
-      bandsCover(catalog, stateTable, batchKey)
     val onDriver: Either[String, GatedBatch] =
       if (collected.n > DriverVerifyIdCap) Left("over id cap")
       else if (state != null && !bandsCovered) Left("legacy bands")
@@ -1858,21 +1858,10 @@ object CorpusStream {
     * size driver list, not data), and a batch whose keys cover few
     * buckets skips the rest of the stored corpus entirely; since
     * `pk` is a function of `band_key`, pruning by the new side's pk
-    * set loses no colliding pair. Fallback (bands table missing or not
-    * covering every sketch batch — a pre-round-8 state): re-band the
-    * sketch state in memory, the old per-batch linear scan. */
-  private def bandsCover(catalog: TableCatalog, stateTable: String,
-      batchKey: String): Boolean = {
-    val bandsTable = BandsState.of(stateTable)
-    catalog.tableExists(bandsTable) && {
-      val sk = catalog.listPartitions(stateTable, "batch_id").toSet -
-        batchKey
-      val bd = catalog.listPartitions(bandsTable, "batch_id").toSet -
-        batchKey
-      sk.subsetOf(bd)
-    }
-  }
-
+    * set loses no colliding pair. Fallback (bands table not covering
+    * every sketch batch and its backfill's lease held elsewhere, see
+    * [[indexesCover]]): re-band the sketch state in memory, the old
+    * per-batch linear scan. */
   private def seenBandFrame(catalog: TableCatalog, stateTable: String,
       batchKey: String, state: DataFrame, newBands: DataFrame,
       geom: graft.sim.LshGeometry, covered: Boolean): DataFrame = {
@@ -1903,43 +1892,65 @@ object CorpusStream {
         catalog.listPartitions(stateTable, "batch_id"), None)
       .getOrElse(catalog.read(stateTable))
 
-  /** Whether the pk-bucketed `_fp` index ([[FpState]]) covers every
-    * stored sketch batch, so the exact-dedup gate can read only the
-    * buckets a batch's own fingerprints hash into.
+  /** Whether the pk-bucketed `_fp` index ([[FpState]]) and `_bands`
+    * index ([[BandsState]]) cover every stored sketch batch: `_fp` lets
+    * the exact-dedup gate read only the buckets a batch's own
+    * fingerprints hash into, `_bands` lets the cascade read only its
+    * colliding band buckets.
     *
-    * A state written by pre-index code (sketch batches the fp table
-    * does not cover) is BACKFILLED here, once, from the sketch rows'
-    * own fp column — one column-pruned pass per missing batch, under
-    * the state's writer lock so concurrent pipelines don't interleave
-    * overwrites; if the lock is held elsewhere this returns false, the
-    * batch's gate reads the full fp column, and the next one retries. */
-  private def fpIndexCovers(catalog: TableCatalog, stateTable: String,
-      batchKey: String, pkSplitMinRows: Long): Boolean = {
-    val fpTable = FpState.of(stateTable)
-    val skKeys = catalog.listPartitions(stateTable, "batch_id").toSet -
-      batchKey
-    val fpKeys =
-      if (!catalog.tableExists(fpTable)) Set.empty[String]
-      else catalog.listPartitions(fpTable, "batch_id").toSet - batchKey
-    skKeys.subsetOf(fpKeys) ||
+    * A gap is BACKFILLED here from the sketch rows — `_fp` from their
+    * `fp` column, `_bands` by re-banding their (`id`, `n`, `sig`) —
+    * one column-pruned pass per missing batch, under the state's
+    * writer lock so concurrent pipelines don't interleave overwrites.
+    * Two shapes leave one: a state written by pre-index code, and a
+    * compaction killed after its sketch fold committed but before the
+    * index's own fold did (the backfilled `c` partition then sits
+    * beside the plain sources it duplicates, which that index's next
+    * fold collapses — [[compactState]]'s stranded-target dedup). If the
+    * lock is held elsewhere the gap stays: the gate reads the full fp
+    * column, the batch runs distributed (`legacy bands`), and the next
+    * batch retries. */
+  private def indexesCover(catalog: TableCatalog, stateTable: String,
+      batchKey: String, pkSplitMinRows: Long,
+      geom: graft.sim.LshGeometry): (Boolean, Boolean) = {
+    def keysOf(table: String): Set[String] =
+      if (!catalog.tableExists(table)) Set.empty
+      else catalog.listPartitions(table, "batch_id").toSet - batchKey
+    val skKeys = keysOf(stateTable)
+    val fpGap = skKeys -- keysOf(FpState.of(stateTable))
+    val bandsGap = skKeys -- keysOf(BandsState.of(stateTable))
+    if (fpGap.isEmpty && bandsGap.isEmpty) (true, true)
+    else
       // heartbeated hold (round 13): a backfill over a 10^10-doc
       // pre-index state is one column-pruned pass per missing batch
       // and can outlive the 15-min lease — a bare acquire would let a
       // waiter break the lock mid-write
       catalog.withTableLockIfFree(stateTable) {
-        // one fp row per sketch row, so the sketch partition's own
-        // size picks the layout
-        (skKeys -- fpKeys).foreach { b =>
+        def sketch(b: String, cols: String*): DataFrame =
+          catalog.readPaths(stateTable,
+              Seq(catalog.partitionPath(stateTable, "batch_id", b)),
+              SketchDataSchema)
+            .select(cols.map(col): _*)
+        // the live writes' layout rule: an fp row per sketch row, a
+        // band row per sketch row and band
+        def split(b: String, rowsPerDoc: Int): Boolean =
+          splitLayoutFor(catalog, stateTable, Seq(b),
+            (pkSplitMinRows + rowsPerDoc - 1) / rowsPerDoc)
+        fpGap.foreach { b =>
           jd(catalog.spark, s"b$batchKey fp backfill") {
             writeState(catalog, FpState, stateTable, b,
-              catalog.readPaths(stateTable,
-                  Seq(catalog.partitionPath(stateTable, "batch_id", b)),
-                  FpDataSchema)
-                .select(col("id"), col("fp")),
-              splitLayoutFor(catalog, stateTable, Seq(b), pkSplitMinRows))
+              sketch(b, "id", "fp"), split(b, 1))
           }
         }
-      }.isDefined
+        bandsGap.foreach { b =>
+          jd(catalog.spark, s"b$batchKey bands backfill") {
+            writeState(catalog, BandsState, stateTable, b,
+              MinHashLSH.bandFrameWithSig(sketch(b, "id", "n", "sig"), geom),
+              split(b, geom.bands))
+          }
+        }
+        (true, true)
+      }.getOrElse((fpGap.isEmpty, bandsGap.isEmpty))
   }
 
   /** Launch the incremental pipeline over a streaming document frame

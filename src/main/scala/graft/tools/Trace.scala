@@ -109,11 +109,7 @@ object Trace {
       Bench.run(spark, name, Bench.WarmDir)
       val passes = Seq.fill(2) {
         Bench.scrub(spark)
-        record(spark) {
-          val t0 = System.nanoTime()
-          Bench.run(spark, name, sfDir)
-          (System.nanoTime() - t0) / 1e9
-        }
+        record(spark)(Bench.run(spark, name, sfDir))
       }
       val (best, rec) = passes.minBy(_._1)
       val base = rec.jobs.headOption.map(_.start).getOrElse(0L)

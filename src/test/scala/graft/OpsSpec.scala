@@ -279,7 +279,7 @@ class OpsSpec extends SparkSpec {
   test("SkewJoin.saltedEquiJoin equals the plain join on a skewed " +
        "fixture (inner and left), refuses corrupting join types, " +
        "NULL salts and reserved names") {
-    import graft.ops.SkewJoin
+    import graft.core.SkewJoin
     // one hot key (k=1, 50 rows), some cold keys, an unmatched probe
     // row and an unmatched build row
     val left = ((0 until 50).map(i => (1, i.toLong)) ++

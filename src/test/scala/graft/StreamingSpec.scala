@@ -1370,6 +1370,54 @@ class StreamingSpec extends SparkSpec {
     assert(want.map(_._1).subsetOf(Set(0L)))
   }
 
+  test("a compaction killed between its sketch and _bands folds: the " +
+       "next batch backfills _bands from the sketch partition and stays " +
+       "on the driver path, converging to batch dp01") {
+    // 40 seeded random words per doc (no near-dups among them), plus
+    // batch 3's doc 95: doc 5's text behind one more word (another
+    // fingerprint), a near-dup the cascade finds only through the
+    // stored band rows
+    def text(i: Int) = {
+      val rnd = new scala.util.Random(i)
+      Seq.fill(40)((0 until 6).map(_ => ('a' + rnd.nextInt(26)).toChar)
+        .mkString).mkString(" ")
+    }
+    def rows(ids: Range) = ids.map(i => (i.toLong, text(i), "en"))
+    val batches = Seq(rows(0 until 10), rows(10 until 20), rows(20 until 30),
+      rows(30 until 39) :+ ((95L, "extra " + text(5), "en")))
+    val cat = new graft.catalog.TableCatalog(spark,
+      java.nio.file.Files.createTempDirectory("corpus_bf_").toString)
+    def run(b: Int) = CorpusStream.processBatch(
+      batches(b).toDF("doc_id", "text", "lang"), cat, "bf_seen", "bf_out",
+      b.toLong, admit = df => df, compactEvery = 3)
+    (0 until 3).foreach(run)
+    // the crash shape: the sketch fold committed, the _bands fold did
+    // not — _bands keeps its pre-compaction partitions
+    val bandsDir = java.nio.file.Paths.get(cat.tablePath("bf_seen_bands"))
+    val saved = java.nio.file.Files.createTempDirectory("corpus_bf_saved_")
+    org.apache.commons.io.FileUtils.copyDirectory(bandsDir.toFile,
+      saved.toFile)
+    assert(CorpusStream.compactState(cat, "bf_seen", "3"))
+    org.apache.commons.io.FileUtils.deleteDirectory(bandsDir.toFile)
+    org.apache.commons.io.FileUtils.copyDirectory(saved.toFile,
+      bandsDir.toFile)
+    assert(cat.listPartitions("bf_seen", "batch_id") == Seq("c2"))
+    assert(cat.listPartitions("bf_seen_bands", "batch_id").toSet ==
+      Set("0", "1", "2"))
+    val labels = jobsStartedBy(run(3)).map(_._1)
+    assert(labels.exists(_.endsWith("b3 bands backfill")),
+      labels.mkString("\n"))
+    assert(!labels.exists(_.endsWith("]")), labels.mkString("\n"))
+    val want = batchChain(batches.flatten.toDF("doc_id", "text", "lang"),
+      df => df, graft.text.CorpusPipeline.NearDupThreshold)
+    assert(!want.exists(_._1 == 95L))
+    assert(CorpusStream.readOutput(cat, "bf_out")
+      .select($"doc_id", $"lang", $"n_toks")
+      .as[(Long, String, Int)].collect().toSet == want)
+    assert(cat.listPartitions("bf_seen", "batch_id").toSet
+      .subsetOf(cat.listPartitions("bf_seen_bands", "batch_id").toSet))
+  }
+
   // three-batch seeded warehouse + the expected post-compaction state,
   // shared by the crash-recovery tests below
   private def seedCompactionState(): (graft.catalog.TableCatalog,
