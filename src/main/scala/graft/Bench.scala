@@ -247,11 +247,12 @@ object Bench {
       val passes = results.map { case (k, _, p1, p2) =>
         s""""$k":[${n3(p1)},${n3(p2)}]""" }.mkString("{", ",", "}")
       java.nio.file.Files.write(
-        java.nio.file.Paths.get("/tmp/graft_bench_passes.json"),
+        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+          "graft_bench_passes.json"),
         (s"""{"sf":"$sfDir","canary":[${n3(canaryStart)},""" +
          s"""${n3(canaryMid)},${n3(canaryEnd)}],"passes":$passes}""")
           .getBytes("UTF-8"))
-    } catch { case _: Throwable => () } // diagnostics only, never fatal
+    } catch { case scala.util.control.NonFatal(_) => () } // diagnostics only
     // JVM-inheritance evidence (round-8/9 drift forensics): the code
     // cache reserve is THE fix for the JDK-17 sweeper churn, and it only
     // helps if the driver's invocation path actually forks with

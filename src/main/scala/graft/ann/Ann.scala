@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sim.GroupCollapse
+
 /** Similarity search over an embedding column (`array<float>`).
   *
   * Cosine is computed in double with a strict left-to-right fold —
@@ -187,13 +189,31 @@ object Ann {
   def bucket(v: Column, planes: Int = Planes,
              dim: Int = Dim): Column = {
     require(planes >= 1 && planes <= 62, s"planes must be in [1,62]: $planes")
-    val m = if (dim == Dim && planes <= projections.length) projections
-      else projectionMatrix(planes, dim)
-    (0 until planes).map { j =>
-      when(dot(v, typedLit(m(j))) > 0, lit(1L << j))
-        .otherwise(lit(0L))
-    }.reduce(_ + _)
+    signBits(v, planeRows(planes, dim))
   }
+
+  /** The first `n` projection rows: the shared default matrix when it
+    * covers them, else a fresh prefix of the same stream. */
+  private def planeRows(n: Int, dim: Int = Dim): IndexedSeq[IndexedSeq[Double]] =
+    (if (dim == Dim && n <= projections.length) projections
+     else projectionMatrix(n, dim)).take(n)
+
+  /** The one sign-bit bucketing kernel: Σ 2^j over the planes whose
+    * [[dot]] with `v` is positive. */
+  private def signBits(v: Column, planes: Seq[IndexedSeq[Double]]): Column =
+    planes.indices.map { j =>
+      when(dot(v, typedLit(planes(j))) > 0, lit(1L << j)).otherwise(lit(0L))
+    }.reduce(_ + _)
+
+  /** [[signBits]]' DuckDB twin; `guard` (a plane-count expression) makes
+    * bit j contribute only while `j < guard`. */
+  private def signBitsSql(v: String, planes: Seq[IndexedSeq[Double]],
+                          guard: Option[String] = None): String =
+    planes.indices.map { j =>
+      val lits = planes(j).map(d => s"$d").mkString("[", ", ", "]::DOUBLE[]")
+      s"(CASE WHEN ${guard.fold("")(p => s"$j < ($p) AND ")}" +
+        s"${dotSql(v, lits)} > 0 THEN ${1L << j} ELSE 0 END)"
+    }.mkString("(", " + ", ")")
 
   /** Plane count that targets `targetBucketRows` expected rows per
     * bucket at a given corpus size (each plane halves the expected
@@ -212,14 +232,7 @@ object Ann {
     math.min(62, math.max(minPlanes, needed))
   }
 
-  def bucketSql(v: String): String = {
-    def lits(p: IndexedSeq[Double]) =
-      p.map(d => s"$d").mkString("[", ", ", "]::DOUBLE[]")
-    (0 until Planes).map { j =>
-      s"(CASE WHEN ${dotSql(v, lits(projections(j)))} > 0 " +
-        s"THEN ${1L << j} ELSE 0 END)"
-    }.mkString("(", " + ", ")")
-  }
+  def bucketSql(v: String): String = signBitsSql(v, planeRows(Planes))
 
   /** SQL twin of [[autoPlanes]] over a corpus-count expression — the
     * identical floor/cap/ceil-log2 formula, so an oracle can fit the
@@ -240,15 +253,12 @@ object Ann {
     * any fitted count up to `maxPlanes`. */
   def bucketSqlDynamic(v: String, maxPlanes: Int, pExpr: String): String = {
     require(maxPlanes >= 1 && maxPlanes <= 62)
-    val m = if (maxPlanes <= projections.length) projections
-      else projectionMatrix(maxPlanes)
-    def lits(p: IndexedSeq[Double]) =
-      p.map(d => s"$d").mkString("[", ", ", "]::DOUBLE[]")
-    (0 until maxPlanes).map { j =>
-      s"(CASE WHEN $j < ($pExpr) AND ${dotSql(v, lits(m(j)))} > 0 " +
-        s"THEN ${1L << j} ELSE 0 END)"
-    }.mkString("(", " + ", ")")
+    signBitsSql(v, planeRows(maxPlanes), Some(pExpr))
   }
+
+  /** Band `b`'s planes: NearDupPlanes consecutive projection rows. */
+  private def bandPlanes(band: Int): IndexedSeq[IndexedSeq[Double]] =
+    projections.slice(band * NearDupPlanes, (band + 1) * NearDupPlanes)
 
   /** Band-`b` near-dup bucket: sign bits of NearDupPlanes projections.
     * Deliberately the compact higher-order [[dot]]: unrolling all 32
@@ -257,24 +267,11 @@ object Ann {
     * slower than the interpreted-by-design HOF, which runs once per row
     * (not per pair) and is O(rows · planes · dim), never the hot path. */
   def nearDupBandBucket(v: Column, band: Int): Column =
-    (0 until NearDupPlanes).map { j =>
-      when(dot(v, typedLit(projections(band * NearDupPlanes + j))) > 0,
-        lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
+    signBits(v, bandPlanes(band))
 
-  def nearDupBandBucketSql(v: String, band: Int): String = {
-    def lits(p: IndexedSeq[Double]) =
-      p.map(d => s"$d").mkString("[", ", ", "]::DOUBLE[]")
-    (0 until NearDupPlanes).map { j =>
-      s"(CASE WHEN ${dotSql(v, lits(projections(band * NearDupPlanes + j)))} > 0 " +
-        s"THEN ${1L << j} ELSE 0 END)"
-    }.mkString("(", " + ", ")")
-  }
+  def nearDupBandBucketSql(v: String, band: Int): String =
+    signBitsSql(v, bandPlanes(band))
 
-  /** Embedding-cosine near-dup, exact form: every unordered pair with
-    * cosine >= minCos. Quadratic by definition — this is the correctness
-    * baseline the LSH form is judged against (the ann01/ann02 split,
-    * applied to dedup). Output: (id_a, id_b, cos), id_a < id_b. */
   /** Fail-fast dimension guard: [[dotUnrolled]] silently truncates longer
     * vectors and null-poisons shorter ones, so any frame feeding it gets
     * this check — a wrong-width embedding raises at evaluation instead of
@@ -284,54 +281,33 @@ object Ann {
       lit(s"Ann: expected $dim-dim embedding, got "),
       size(v).cast("string"), lit(" elements"))))
 
+  /** (id, `name`) with the vector width-checked and cast to double. */
+  private[ann] def checkedFrame(data: DataFrame, idCol: String,
+      vecCol: String, dim: Int, name: String = "v"): DataFrame =
+    data.select(col(idCol).as("id"),
+      checkedVec(toDouble(col(vecCol)), dim).as(name))
+
+  /** √(v·v) by the [[dotUnrolled]] fold. */
+  private[ann] def norm(v: String, dim: Int): Column =
+    sqrt(dotUnrolled(col(v), col(v), dim))
+
   /** Vectors + per-row norms, fenced so downstream references reuse the
     * computed columns. */
   private[ann] def withNorms(data: DataFrame, idCol: String,
                              vecCol: String,
                              dim: Int = Dim): DataFrame =
     graft.core.Fence(graft.core.Par.ensure(
-        data.select(col(idCol).as("id"),
-          checkedVec(toDouble(col(vecCol)), dim).as("v")))
-      .withColumn("nrm", sqrt(dotUnrolled(col("v"), col("v"), dim))))
+        checkedFrame(data, idCol, vecCol, dim))
+      .withColumn("nrm", norm("v", dim)))
 
-  /** Exact-cosine scoring of candidate id-pairs: two id-equi-joins attach
-    * (vector, norm) to each pair side, then a JIT'd `mapPartitions`
-    * kernel does the arithmetic.
+  /** Exact-cosine scoring kernel over any frame shaped
+    * (id_a LONG, id_b LONG, va, na, vb, nb) — the band-join pairs of
+    * [[embeddingNearDupLsh]] and [[semanticDecontaminate]].
     *
     * Why not SQL expressions: a 64-term dot in a join condition runs
     * interpreted (~60 µs/pair); in a projection it still falls out of
     * whole-stage codegen (Janino 64 KB limit) — measured 50-100× slower
-    * than this kernel. The arithmetic is the identical 0.0-seeded
-    * left-to-right fold as [[dot]] and the oracle's `list_aggregate`, so
-    * scores stay bit-exact.
-    *
-    * Scale: both joins are plain equi-joins — Catalyst/AQE picks
-    * broadcast-hash while the vector table fits the broadcast threshold
-    * (the small-corpus fast path, no driver state) and degrades to a
-    * shuffle join beyond it, so nothing here collects to the driver at
-    * any corpus size. The per-pair array shuffle is the price of
-    * unbounded scale; the banding stage upstream keeps |pairs| linear-ish
-    * in practice. */
-  private def scorePairs(d: DataFrame, pairs: DataFrame,
-                         minCos: Double): DataFrame = {
-    val joined = {
-      val a = d.select(col("id").as("id_a"), col("v").as("va"),
-        col("nrm").as("na"))
-      val b = d.select(col("id").as("id_b"), col("v").as("vb"),
-        col("nrm").as("nb"))
-      pairs
-        .select(col("id_a").cast("long"), col("id_b").cast("long"))
-        .join(a, Seq("id_a")).join(b, Seq("id_b"))
-        .select(col("id_a"), col("id_b"), col("va"), col("na"),
-                col("vb"), col("nb"))
-    }
-    scoreJoined(joined, minCos)
-  }
-
-  /** The scoring kernel over any frame shaped
-    * (id_a LONG, id_b LONG, va, na, vb, nb) — shared by the
-    * id-equi-join path ([[scorePairs]]) and the fused band-join path
-    * ([[embeddingNearDupLsh]]). */
+    * than this kernel. */
   private def scoreJoined(joined: DataFrame,
                           minCos: Double): DataFrame = {
     val spark = joined.sparkSession
@@ -370,23 +346,25 @@ object Ann {
           }
           val va = vecOf(cacheA, idA, 2); val na = row.getDouble(3)
           val vb = vecOf(cacheB, idB, 4); val nb = row.getDouble(5)
-          var s = 0.0; var i = 0
-          while (i < va.length) { s += va(i) * vb(i); i += 1 }
-          val cos = s / (na * nb)
+          val cos = cosOf(va, na, vb, nb)
           if (cos >= minCos)
             Iterator.single(org.apache.spark.sql.Row(idA, idB, cos))
           else Iterator.empty
         }
       }
     }
-    spark.createDataFrame(scored,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id_a",
-          org.apache.spark.sql.types.LongType, false),
-        org.apache.spark.sql.types.StructField("id_b",
-          org.apache.spark.sql.types.LongType, false),
-        org.apache.spark.sql.types.StructField("cos",
-          org.apache.spark.sql.types.DoubleType, false))))
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
+    spark.createDataFrame(scored, new StructType().add("id_a", LongType,
+      false).add("id_b", LongType, false).add("cos", DoubleType, false))
+  }
+
+  /** The kernels' pair cosine: the 0.0-seeded left-to-right dot of `a`
+    * and `b` (the [[dot]] fold) over the norm product. */
+  private def cosOf(a: Array[Double], na: Double, b: Array[Double],
+                    nb: Double): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { s += a(i) * b(i); i += 1 }
+    s / (na * nb)
   }
 
   /** Exact brute-force near-dup: the full (id, vector, norm) table is
@@ -415,9 +393,7 @@ object Ann {
         val va = vSeq.toArray
         val na = math.sqrt(selfDot(va))
         all.iterator.filter(_._1 > idA).flatMap { case (idB, vb, nb) =>
-          var s = 0.0; var i = 0
-          while (i < va.length) { s += va(i) * vb(i); i += 1 }
-          val cos = s / (na * nb)
+          val cos = cosOf(va, na, vb, nb)
           if (cos >= minCos) Some((idA, idB, cos)) else None
         }
       }
@@ -447,122 +423,58 @@ object Ann {
   def embeddingNearDupLsh(data: DataFrame, idCol: String, vecCol: String,
                           minCos: Double): DataFrame = {
     val d = withNorms(data, idCol, vecCol)
-    // GROUP-COLLAPSE (skew containment, exact): identical vectors share
-    // every band bucket and every pairwise cosine, so a group of g
-    // duplicates would put g rows into the SAME buckets and the
-    // self-join would enumerate O(g²) pairs inside one task — the
-    // embedding twin of the MinHash boilerplate problem. Banding only
-    // each group's smallest-id representative makes the degenerate case
-    // O(groups); member pairs are recovered exactly afterwards: a
-    // cross-group pair inherits its representatives' cosine verbatim
-    // (the kernel reads the identical arrays), and a within-group
-    // pair's cosine is dot(v,v)/(nrm·nrm) — computed once per distinct
-    // vector with [[dotUnrolled]], the same left-to-right fold the
-    // kernel runs, so the recovered scores are bit-identical to the
-    // uncollapsed join's. The group key is two independent xxhash64
-    // values over the vector (128 combined bits — the GroupCollapse
-    // fingerprint contract), so the grouping, the member joins and the
-    // guarded self-join all move 16-byte keys instead of the 256-byte
-    // float arrays; null-vector rows stay ungrouped (a null bucket
-    // equi-matches nothing, exactly as before). Only pairs touching a
-    // multi-member group pay the member-join chain — the non-skewed
-    // common case passes every verified pair through verbatim.
-    val vkey = struct(xxhash64(col("v")).as("h1"),
-      xxhash64(col("v"), lit(1)).as("h2"))
-    // CONDITIONAL, like GroupCollapse: collapse + recovery is
-    // pair-for-pair equivalent to the plain pipeline, so it is pure
-    // overhead until some duplicate-vector group could blow a band
-    // bucket past the salted join's per-task pair budget. One narrow
-    // aggregate measures the largest group; at or under the cap the
-    // plain plan runs verbatim. When active, the machinery moves
-    // NARROW bytes only: the group table aggregates (gk, id) — never
-    // the vectors — and reps is the input minus a broadcast anti-join
-    // against the non-representative duplicate ids, so the banded rows
-    // are the caller's own rows. The recovery chain below stays lazy,
-    // resolving its empty-vs-hot branches at runtime via AQE.
-    val maxGroupRow = d.filter(col("v").isNotNull)
-      .groupBy(xxhash64(col("v")).as("dk"))
-      .agg(count(lit(1)).as("c")).agg(max(col("c")).as("m")).collect()(0)
-    val active = !maxGroupRow.isNullAt(0) &&
-      maxGroupRow.getLong(0) > graft.sim.GroupCollapse.CollapseCap
-    val keyed = if (!active) null else
-      graft.core.Fence.soft(d.filter(col("v").isNotNull)
-        .select(col("id").cast("long").as("id"), vkey.as("gk")))
-    val groups = if (!active) null else
-      graft.core.Fence.soft(keyed.groupBy(col("gk"))
-        .agg(min(col("id")).as("rep_id"), count(lit(1)).as("g_n")))
-    val multi = if (!active) null else groups.filter(col("g_n") > 1)
-    val memMulti = if (!active) null else graft.core.Fence.soft(
-      keyed.join(multi.select(col("gk")), Seq("gk"), "left_semi"))
-    val reps = if (!active) d else {
-      val dropIds = memMulti
-        .join(multi.select(col("gk"), col("rep_id")), Seq("gk"))
-        .filter(col("id") =!= col("rep_id"))
-        .select(col("id").as("__did"))
-      d.join(dropIds, col("id").cast("long") === col("__did"),
-        "left_anti")
-    }
-    val bb = graft.core.Fence(reps.select(col("id"), col("v"), col("nrm"),
-      explode(array(
-        (0 until NearDupBands).map(b => struct(lit(b).as("band"),
-          nearDupBandBucket(col("v"), b).as("bucket"))): _*)).as("bb"))
+    // GROUP-COLLAPSE (skew containment, exact — [[GroupCollapse]] keyed
+    // on the vector): identical vectors share every band bucket and
+    // every pairwise cosine, so a group of g duplicates would make the
+    // band self-join enumerate O(g²) pairs inside one task. Only each
+    // group's smallest-id representative is banded; a cross-group pair
+    // inherits its representatives' cosine verbatim (the kernel reads the
+    // identical arrays), and a within-group pair's cosine is
+    // dot(v,v)/(nrm·nrm) — computed once per distinct vector with
+    // [[dotUnrolled]], the same left-to-right fold the kernel runs, and
+    // held to the kernel's `cos >= minCos` test: the kernel's 0/0 = NaN
+    // for a zero vector fails it, so a zero-norm group (null here — an
+    // ANSI division by zero would raise) or a NaN one emits no pair.
+    // Null vectors stay ungrouped.
+    val v = col("v")
+    val c = GroupCollapse.collapse(d, GroupCollapse.Key(v.isNotNull,
+      xxhash64(v), struct(xxhash64(v).as("h1"), xxhash64(v, lit(1)).as("h2"))))
+    GroupCollapse.expand(bandPairs(c.reps, None, minCos)
+        .distinct(), c, "cos", ("id_a", "id_b"), NearDupHotCap,
+        NearDupHotSalts, Some(multi => multi
+          .join(d.select(col("id").cast("long").as("rep_id"), v, col("nrm")),
+            Seq("rep_id"))
+          .select(col("gk"), when(col("nrm") * col("nrm") =!= 0.0,
+            dotUnrolled(v, v) / (col("nrm") * col("nrm"))).as("cos"))
+          .filter(col("cos") >= minCos && !isnan(col("cos")))))
+  }
+
+  /** (id, v, nrm, band, bucket): one row per near-dup band, fenced. */
+  private def bandFrame(d: DataFrame): DataFrame =
+    graft.core.Fence(d.select(col("id"), col("v"), col("nrm"),
+        explode(array((0 until NearDupBands).map(b =>
+          struct(lit(b).as("band"),
+            nearDupBandBucket(col("v"), b).as("bucket"))): _*)).as("bb"))
       .select(col("id"), col("v"), col("nrm"),
               col("bb.band").as("band"), col("bb.bucket").as("bucket")))
-    // hot buckets (16 values per band — population is linear in the
-    // corpus) run salted so no single task owns a whole bucket's pairs
-    val joined = graft.core.SkewJoin.guardedPairs(bb, bb,
-        Seq("band", "bucket"), selfJoin = true,
+
+  /** Verified (id_a, id_b, cos) pairs sharing a (band, bucket): the
+    * band self-join of `a` when `b` is None (id_a < id_b), else the
+    * bipartite `a` × `b` join with both ids cast to long. Hot buckets
+    * (16 values per band — population is linear in the corpus) run
+    * salted so no single task owns a whole bucket's pairs. */
+  private def bandPairs(a: DataFrame, b: Option[DataFrame],
+                        minCos: Double): DataFrame = {
+    val ba = bandFrame(a)
+    def id(side: String) =
+      if (b.isEmpty) col(s"$side.id") else col(s"$side.id").cast("long")
+    scoreJoined(graft.core.SkewJoin.guardedPairs(ba, b.fold(ba)(bandFrame),
+        Seq("band", "bucket"), selfJoin = b.isEmpty,
         NearDupHotCap, NearDupHotSalts) { j =>
-      j.select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+      j.select(id("a").as("id_a"), id("b").as("id_b"),
               col("a.v").as("va"), col("a.nrm").as("na"),
               col("b.v").as("vb"), col("b.nrm").as("nb"))
-    }
-    val repPairs = scoreJoined(joined, minCos).distinct()
-    if (!active) return repPairs
-      .select(col("id_a").cast("long").as("id_a"),
-              col("id_b").cast("long").as("id_b"), col("cos"))
-    // exact recovery, ONE join chain (no branch split, so the verify
-    // plan above executes once): each side left-tags its multi-group
-    // key — null for the untouched common case, and a null gk
-    // equi-matches no member — then left-joins the members per side,
-    // replicating by group size; `coalesce` passes untouched ids
-    // through verbatim. Within-group pairs ride the guarded self-join
-    // so a huge duplicate group emits its inherent O(g²) OUTPUT rows
-    // across salted tasks, with one dot per distinct vector.
-    val cross = repPairs
-      .select(col("id_a").cast("long").as("id_a"),
-              col("id_b").cast("long").as("id_b"), col("cos"))
-      .join(multi.select(col("rep_id").as("id_a"), col("gk").as("gk_a")),
-        Seq("id_a"), "left")
-      .join(multi.select(col("rep_id").as("id_b"), col("gk").as("gk_b")),
-        Seq("id_b"), "left")
-      .join(memMulti.select(col("gk").as("gk_a"), col("id").as("ma")),
-        Seq("gk_a"), "left")
-      .join(memMulti.select(col("gk").as("gk_b"), col("id").as("mb")),
-        Seq("gk_b"), "left")
-      .select(
-        least(coalesce(col("ma"), col("id_a")),
-              coalesce(col("mb"), col("id_b"))).as("id_a"),
-        greatest(coalesce(col("ma"), col("id_a")),
-                 coalesce(col("mb"), col("id_b"))).as("id_b"),
-        col("cos"))
-    // one dot per distinct duplicated vector: the rep's (v, nrm) come
-    // back from the banded frame by rep_id — a broadcast-sized join
-    // (bb holds the rep's rows; any band's row carries v and nrm)
-    val selfCos = multi
-      .join(bb.select(col("id").cast("long").as("rep_id"), col("v"),
-          col("nrm"))
-        .dropDuplicates("rep_id"), Seq("rep_id"))
-      .select(col("gk"),
-        (dotUnrolled(col("v"), col("v")) / (col("nrm") * col("nrm")))
-          .as("cos"))
-    val memC = memMulti.join(selfCos, Seq("gk"))
-    val within = graft.core.SkewJoin.guardedPairs(memC, memC, Seq("gk"),
-        selfJoin = true, NearDupHotCap, NearDupHotSalts) { j =>
-      j.select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.cos").as("cos"))
-    }.filter(col("cos") >= minCos)
-    cross.unionByName(within)
+    }, minCos)
   }
 
   /** Embedding-space decontamination — the SEMANTIC twin of
@@ -587,24 +499,8 @@ object Ann {
                             vecCol: String, evalSet: DataFrame,
                             evalIdCol: String, evalVecCol: String,
                             minCos: Double): DataFrame = {
-    val c = withNorms(corpus, idCol, vecCol)
-    val e = withNorms(evalSet, evalIdCol, evalVecCol)
-    def bandFrame(d: DataFrame): DataFrame =
-      graft.core.Fence(d.select(col("id"), col("v"), col("nrm"),
-          explode(array((0 until NearDupBands).map(b =>
-            struct(lit(b).as("band"),
-              nearDupBandBucket(col("v"), b).as("bucket"))): _*)).as("bb"))
-        .select(col("id"), col("v"), col("nrm"),
-                col("bb.band").as("band"), col("bb.bucket").as("bucket")))
-    val joined = graft.core.SkewJoin.guardedPairs(bandFrame(c),
-        bandFrame(e), Seq("band", "bucket"), selfJoin = false,
-        NearDupHotCap, NearDupHotSalts) { j =>
-      j.select(col("a.id").cast("long").as("id_a"),
-              col("b.id").cast("long").as("id_b"),
-              col("a.v").as("va"), col("a.nrm").as("na"),
-              col("b.v").as("vb"), col("b.nrm").as("nb"))
-    }
-    val contaminated = scoreJoined(joined, minCos)
+    val contaminated = bandPairs(withNorms(corpus, idCol, vecCol),
+      Some(withNorms(evalSet, evalIdCol, evalVecCol)), minCos)
       .select(col("id_a")).distinct()
     corpus.join(contaminated,
       corpus(idCol).cast("long") === contaminated("id_a"), "left_anti")
@@ -636,9 +532,7 @@ object Ann {
     require(numCells >= 1 && nprobe >= 1 && k >= 1 && trainIters >= 0)
     val d = withNorms(data, idCol, vecCol, dim)
     val cents = kmeansCentroids(d, numCells, trainIters)
-    val assigned = graft.core.Fence(d.withColumn("cell",
-      array_max(centroidScores(cents, col("v"), col("nrm")))
-        .getField("cell")))
+    val assigned = graft.core.Fence(d.withColumn("cell", cosineCell(cents)))
     ivfProbe(assigned, cents, queries, idCol, vecCol, k, nprobe, dim)
   }
 
@@ -650,12 +544,8 @@ object Ann {
       cents: Array[(Seq[Double], Double)], queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int,
       dim: Int = Dim): DataFrame = {
-    val q = withNorms(queries, idCol, vecCol, dim)
-      .select(col("id").as("q_id"), col("v").as("qv"),
-              col("nrm").as("qnrm"))
-    val probes = graft.core.Fence(q.withColumn("probe",
-        explode(slice(reverse(array_sort(
-          centroidScores(cents, col("qv"), col("qnrm")))), 1, nprobe)))
+    val probes = graft.core.Fence(cosineProbes(queries, idCol, vecCol,
+        cents, nprobe, dim)
       .select(col("q_id"), col("qv"), col("qnrm"),
               col("probe").getField("cell").as("cell")))
     val cand = probes.join(assigned, Seq("cell"))
@@ -680,6 +570,30 @@ object Ann {
         .as("cos"),
       lit(j).as("cell"))): _*)
 
+  /** The argmax cell of a per-cell score array. */
+  private[ann] def bestCell(scores: Column): Column =
+    array_max(scores).getField("cell")
+
+  /** The cosine cell of a (v, nrm) row against `cents`. */
+  private[ann] def cosineCell(cents: Array[(Seq[Double], Double)]): Column =
+    bestCell(centroidScores(cents, col("v"), col("nrm")))
+
+  /** One `probe` row per probed cell: the top `nprobe` of a per-cell
+    * score array, score descending, ties to the larger cell. */
+  private def probeCells(scores: Column, nprobe: Int): Column =
+    explode(slice(reverse(array_sort(scores)), 1, nprobe))
+
+  /** (q_id, qv, qnrm, probe) — each query's `nprobe` nearest cosine
+    * cells. */
+  private def cosineProbes(queries: DataFrame, idCol: String,
+      vecCol: String, cents: Array[(Seq[Double], Double)], nprobe: Int,
+      dim: Int): DataFrame =
+    withNorms(queries, idCol, vecCol, dim)
+      .select(col("id").as("q_id"), col("v").as("qv"),
+              col("nrm").as("qnrm"))
+      .withColumn("probe", probeCells(
+        centroidScores(cents, col("qv"), col("qnrm")), nprobe))
+
   /** Deterministic spherical k-means for the IVF coarse quantizer:
     * centroids start as the `numCells` smallest-id vectors (the
     * oracle-replicable seed) and run exactly `iters` Lloyd rounds —
@@ -698,17 +612,29 @@ object Ann {
     * itself). `iters` = 0 degrades to the untrained sample, so ann03's
     * plan is unchanged. */
   def kmeansCentroids(dWithNorms: DataFrame, numCells: Int,
-                      iters: Int): Array[(Seq[Double], Double)] = {
-    val seeds: Array[(Seq[Double], Double)] = dWithNorms
-      .orderBy(col("id")).limit(numCells).select(col("v"), col("nrm"))
-      .collect().map(r => (r.getSeq[Double](0), r.getDouble(1)))
+                      iters: Int): Array[(Seq[Double], Double)] =
+    lloydFit(dWithNorms, "v", Some("nrm"), numCells, iters,
+      v => math.sqrt(selfDot(v)))(cosineCell)
+
+  /** The k-means loop behind [[kmeansCentroids]] and
+    * [[kmeansCentroidsL2]]: seeds are the `numCells` smallest-id `vec`
+    * values, each paired with the frame's `seedAux` column when given,
+    * else with `aux` of its values; then `iters` [[lloydUpdate]] rounds
+    * under the `cell` assignment. */
+  private def lloydFit(frame: DataFrame, vec: String,
+      seedAux: Option[String], numCells: Int, iters: Int,
+      aux: Seq[Double] => Double)(
+      cell: Array[(Seq[Double], Double)] => Column)
+      : Array[(Seq[Double], Double)] = {
+    val seeds = frame.orderBy(col("id")).limit(numCells)
+      .select(col(vec) +: seedAux.map(col).toSeq: _*).collect().map { r =>
+        val v = r.getSeq[Double](0)
+        (v, if (seedAux.isDefined) r.getDouble(1) else aux(v))
+      }
     (0 until iters).foldLeft(seeds) { (cents, _) =>
-      lloydUpdate(dWithNorms
-          .withColumn("cell",
-            array_max(centroidScores(cents, col("v"), col("nrm")))
-              .getField("cell"))
-          .select(col("cell"), posexplode(col("v")).as(Seq("pos", "val"))),
-        Array(cents), v => math.sqrt(selfDot(v))).head
+      lloydUpdate(frame.withColumn("cell", cell(cents))
+          .select(col("cell"), posexplode(col(vec)).as(Seq("pos", "val"))),
+        Array(cents), aux).head
     }
   }
 
@@ -773,10 +699,9 @@ object Ann {
                          hotSalts: Int = NearDupHotSalts,
                          dim: Int = Dim): DataFrame =
     bucketNeighborsFrom(
-      graft.core.Fence(data.select(col(idCol).as("id"),
-        checkedVec(toDouble(col(vecCol)), dim).as("v"))
+      graft.core.Fence(checkedFrame(data, idCol, vecCol, dim)
         .withColumn("bucket", bucket(col("v"), planes, dim))
-        .withColumn("nrm", sqrt(dotUnrolled(col("v"), col("v"), dim)))),
+        .withColumn("nrm", norm("v", dim))),
       hotCap, hotSalts, dim)
 
   /** The within-bucket top-1 core over an already-bucketed frame
@@ -934,14 +859,7 @@ object Ann {
   private[ann] def sq8Matches(d: DataFrame, q: DataFrame,
                               minCos: Double, dim: Int): DataFrame =
     d.join(broadcast(q), lit(true))
-      .withColumn("qcos",
-        when(col("vec_id_qq") === lit(0L) || col("q_id_qq") === lit(0L),
-            lit(0.0))
-          .otherwise(
-            dotUnrolledLong(col("q_id_q"), col("vec_id_q"), dim)
-              .cast("double") /
-              (sqrt(col("vec_id_qq").cast("double")) *
-                sqrt(col("q_id_qq").cast("double")))))
+      .withColumn("qcos", sq8Score("cosine", dim))
       .filter(col("qcos") >= lit(minCos))
       .select(col("vec_id").as("id")).distinct()
 
@@ -1039,8 +957,9 @@ object Ann {
     * against centroid constants carried as (values, self-dot):
     * argmin ‖s−c‖² = argmax 2·s·c − c·c (the s·s term is constant per
     * row, and equal distances give equal scores, so ties break
-    * identically — to the larger cell, like the cosine form). */
-  /** Deliberately the interpreted HOF [[dot]], like [[centroidScores]]:
+    * identically — to the larger cell, like the cosine form).
+    *
+    * Deliberately the interpreted HOF [[dot]], like [[centroidScores]]:
     * assignment runs once per ROW, never per pair. Re-measured in r17:
     * 16 cells × 64 dim unrolled (1024 terms) overflows Janino's 64 KB
     * method limit inside hashAgg codegen (logged
@@ -1063,20 +982,9 @@ object Ann {
     * pairs (the self-dot is the assignment constant, computed with the
     * same left fold as the oracle's `list_aggregate`). */
   def kmeansCentroidsL2(dSub: DataFrame, numCells: Int,
-                        iters: Int): Array[(Seq[Double], Double)] = {
-    val seeds: Array[(Seq[Double], Double)] = dSub
-      .orderBy(col("id")).limit(numCells).select(col("s"))
-      .collect().map { r =>
-        val v = r.getSeq[Double](0); (v, selfDot(v))
-      }
-    (0 until iters).foldLeft(seeds) { (cents, _) =>
-      lloydUpdate(dSub
-          .withColumn("cell",
-            array_max(centroidScoresL2(cents, col("s"))).getField("cell"))
-          .select(col("cell"), posexplode(col("s")).as(Seq("pos", "val"))),
-        Array(cents), selfDot).head
-    }
-  }
+                        iters: Int): Array[(Seq[Double], Double)] =
+    lloydFit(dSub, "s", None, numCells, iters, selfDot(_))(
+      cents => bestCell(centroidScoresL2(cents, col("s"))))
 
   /** Train the M per-subspace codebooks over the unit-normalized
     * corpus. Scale shape: each Lloyd round per subspace is one linear
@@ -1086,8 +994,8 @@ object Ann {
   def pqTrain(data: DataFrame, idCol: String, vecCol: String,
               iters: Int = 2, geom: Geom = DefaultGeom)
       : Array[Array[(Seq[Double], Double)]] =
-    pqTrainOn(graft.core.Fence(withNorms(data, idCol, vecCol, geom.dim)
-      .withColumn("u", unitVec(col("v"), col("nrm")))), iters, geom)
+    pqTrainOn(graft.core.Fence(withUnit(data, idCol, vecCol, geom.dim)),
+      iters, geom)
 
   /** [[pqTrain]] over a prepared frame carrying the vector PQ should
     * encode as a materialized `u` column — the unit vectors for the
@@ -1107,11 +1015,7 @@ object Ann {
   def pqTrainOn(frame: DataFrame, iters: Int,
                 geom: Geom = DefaultGeom)
       : Array[Array[(Seq[Double], Double)]] = {
-    val sliced = (0 until geom.pqM).foldLeft(
-      frame.select(col("id"), col("u"))) { (df, m) =>
-      df.withColumn(s"__s$m",
-        slice(col("u"), m * geom.subDim + 1, geom.subDim))
-    }
+    val sliced = slices(frame.select(col("id"), col("u")), "u", "__s", geom)
     // seeds: the same smallest-id pqK rows for every subspace — one
     // job, sliced locally (identical to per-subspace orderBy/limit)
     val seedRows = frame.orderBy(col("id")).limit(geom.pqK)
@@ -1125,12 +1029,7 @@ object Ann {
         }
       }
     (0 until iters).foldLeft(seeds) { (books, _) =>
-      val withCells = (0 until geom.pqM).foldLeft(sliced) { (df, m) =>
-        df.withColumn(s"__c$m",
-          array_max(centroidScoresL2(books(m), col(s"__s$m")))
-            .getField("cell"))
-      }
-      lloydUpdate(withCells
+      lloydUpdate(subspaceCells(sliced, books, "__c", geom)
           .select(explode(array((0 until geom.pqM).map(m =>
             struct(lit(m).as("m"), col(s"__c$m").as("cell"),
               col(s"__s$m").as("s"))): _*)).as("e"))
@@ -1147,9 +1046,8 @@ object Ann {
   def pqEncode(data: DataFrame, idCol: String, vecCol: String,
                books: Array[Array[(Seq[Double], Double)]],
                geom: Geom = DefaultGeom): DataFrame =
-    pqEncodeOn(withNorms(data, idCol, vecCol, geom.dim)
-        .withColumn("u", unitVec(col("v"), col("nrm"))),
-      books, keep = Seq("id"), geom)
+    pqEncodeOn(withUnit(data, idCol, vecCol, geom.dim), books,
+      keep = Seq("id"), geom)
 
   /** [[pqEncode]] over a prepared frame (materialized `u` = the vector
     * to encode), keeping `keep` alongside the code columns — the
@@ -1157,53 +1055,62 @@ object Ann {
   def pqEncodeOn(frame: DataFrame,
                  books: Array[Array[(Seq[Double], Double)]],
                  keep: Seq[String],
-                 geom: Geom = DefaultGeom): DataFrame = {
-    val sliced = (0 until geom.pqM).foldLeft(frame) { (df, m) =>
-      df.withColumn(s"__s$m",
-        slice(col("u"), m * geom.subDim + 1, geom.subDim))
+                 geom: Geom = DefaultGeom): DataFrame =
+    subspaceCells(slices(frame, "u", "__s", geom), books, "c", geom)
+      .select(keep.map(col) ++ (0 until geom.pqM).map(m => col(s"c$m")): _*)
+
+  /** `prefix`0 … `prefix`{M−1}: the M subvector slices of `from`. */
+  private def slices(df: DataFrame, from: String, prefix: String,
+                     geom: Geom): DataFrame =
+    (0 until geom.pqM).foldLeft(df) { (d, m) =>
+      d.withColumn(s"$prefix$m",
+        slice(col(from), m * geom.subDim + 1, geom.subDim))
     }
-    (0 until geom.pqM).foldLeft(sliced) { (df, m) =>
-      df.withColumn(s"c$m",
-        array_max(centroidScoresL2(books(m), col(s"__s$m")))
-          .getField("cell"))
-    }.select(keep.map(col) ++
-      (0 until geom.pqM).map(m => col(s"c$m")): _*)
-  }
+
+  /** `prefix`m = the L2 cell of slice `__s`m under codebook m. */
+  private def subspaceCells(sliced: DataFrame,
+      books: Array[Array[(Seq[Double], Double)]], prefix: String,
+      geom: Geom): DataFrame =
+    (0 until geom.pqM).foldLeft(sliced) { (d, m) =>
+      d.withColumn(s"$prefix$m",
+        bestCell(centroidScoresL2(books(m), col(s"__s$m"))))
+    }
 
   /** Query side of ADC: (q_id, qs0 … qs_{M−1}) — the unit-normalized
     * query subvector slices, fenced and broadcast-sized. */
   private[ann] def pqQuerySlices(queries: DataFrame, idCol: String,
                                  vecCol: String,
                                  geom: Geom = DefaultGeom): DataFrame =
-    graft.core.Fence((0 until geom.pqM).foldLeft(
-      withNorms(queries, idCol, vecCol, geom.dim)
-        .withColumn("u", unitVec(col("v"), col("nrm")))
-        .select(col("id").as("q_id"), col("u"))) { (df, m) =>
-      df.withColumn(s"qs$m",
-        slice(col("u"), m * geom.subDim + 1, geom.subDim))
-    }.drop("u"))
+    graft.core.Fence(slices(withUnit(queries, idCol, vecCol, geom.dim)
+      .select(col("id").as("q_id"), col("u")), "u", "qs", geom).drop("u"))
 
   /** ADC scoring + rank over a candidate frame carrying the code
     * columns (id, c0 …) and the query slices (q_id, qs0 …): M
     * broadcast equi-joins against the K-row codebook frames — map-side
     * only, no shuffle until the per-query rank — summing the partial
     * dots in a fixed left fold. Shared by the brute-force, persisted-
-    * index, and IVF-pruned probes. */
+    * index, and IVF-pruned probes.
+    *
+    * `residual` is the IVFADC scoring: under a shared coarse cell,
+    * ‖qu − u‖² = ‖qr − r‖² exactly (the centroid cancels), so the
+    * code-approximated score is
+    * `−‖qr − r̂‖² = Σ_m (2·qr_m·cb_m − ‖cb_m‖²) − qr·qr` — comparable
+    * ACROSS a query's probed cells, unlike the plain cross term (fine
+    * there: the plain form has one global codebook space). The
+    * residual `cand` also carries the residual self-dot `qq`. */
   private[ann] def pqAdcRank(cand: DataFrame,
       books: Array[Array[(Seq[Double], Double)]], k: Int,
-      geom: Geom = DefaultGeom): DataFrame = {
-    val spark = cand.sparkSession
-    import spark.implicits._
+      geom: Geom = DefaultGeom, residual: Boolean = false): DataFrame = {
     val joined = (0 until geom.pqM).foldLeft(cand) { (df, m) =>
-      val cents = books(m).zipWithIndex
-        .map { case ((v, _), j) => (j, v) }.toSeq
-        .toDF(s"cell$m", s"cv$m")
-      df.join(broadcast(cents), col(s"c$m") === col(s"cell$m"))
+      df.join(centsToDf(cand.sparkSession, books(m), s"$m", residual),
+        col(s"c$m") === col(s"cell$m"))
     }
+    val sum = (0 until geom.pqM).map { m =>
+      val d = dotUnrolled(col(s"qs$m"), col(s"cv$m"), geom.subDim)
+      if (residual) lit(2.0) * d - col(s"cc$m") else d
+    }.reduceLeft(_ + _)
     topKPerQuery(joined.withColumn("score",
-        (0 until geom.pqM)
-          .map(m => dotUnrolled(col(s"qs$m"), col(s"cv$m"), geom.subDim))
-          .reduceLeft(_ + _)), "score", "id", k)
+        if (residual) sum - col("qq") else sum), "score", "id", k)
       .select(col("q_id"), col("rank"), col("id").as("vec_id"),
         col("score"))
   }
@@ -1246,9 +1153,7 @@ object Ann {
     // coarse: ann05's spherical k-means cells over the raw vectors
     val d = withNorms(data, idCol, vecCol, geom.dim)
     val cents = kmeansCentroids(d, numCells, trainIters)
-    val assigned = d.withColumn("cell",
-        array_max(centroidScores(cents, col("v"), col("nrm")))
-          .getField("cell"))
+    val assigned = d.withColumn("cell", cosineCell(cents))
       .select(col("id"), col("cell"))
     // fine: PQ codebooks + codes over the unit vectors
     val books = pqTrain(data, idCol, vecCol, pqIters, geom)
@@ -1257,12 +1162,8 @@ object Ann {
         .join(assigned, Seq("id")))
     // query probe cells (cos desc, cell desc — the ann05 order) joined
     // to the query's ADC slices
-    val q = withNorms(queries, idCol, vecCol, geom.dim)
-      .select(col("id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qnrm"))
-    val probes = q.withColumn("probe",
-        explode(slice(reverse(array_sort(
-          centroidScores(cents, col("qv"), col("qnrm")))), 1, nprobe)))
+    val probes = cosineProbes(queries, idCol, vecCol, cents, nprobe,
+        geom.dim)
       .select(col("q_id"), col("probe").getField("cell").as("cell"))
     val qWide = broadcast(graft.core.Fence(probes.join(
       pqQuerySlices(queries, idCol, vecCol, geom), Seq("q_id"))))
@@ -1290,13 +1191,18 @@ object Ann {
   private[ann] def vecSub(a: Column, b: Column): Column =
     zip_with(a, b, (x, y) => x - y)
 
+  /** [[withNorms]] plus the unit vector `u`. */
+  private def withUnit(data: DataFrame, idCol: String, vecCol: String,
+                       dim: Int): DataFrame =
+    withNorms(data, idCol, vecCol, dim)
+      .withColumn("u", unitVec(col("v"), col("nrm")))
+
   /** (id, u) unit-vector frame, fenced — the shared front of the
     * residual family (and the refine stage's exact-score source). */
   private[ann] def unitFrame(data: DataFrame, idCol: String,
                              vecCol: String,
                              dim: Int = Dim): DataFrame =
-    graft.core.Fence(withNorms(data, idCol, vecCol, dim)
-      .withColumn("u", unitVec(col("v"), col("nrm")))
+    graft.core.Fence(withUnit(data, idCol, vecCol, dim)
       .select(col("id"), col("u")))
 
   /** (id, u) frame under a named residual-family metric: the cosine
@@ -1314,10 +1220,8 @@ object Ann {
                                metric: String): DataFrame =
     metric match {
       case "cosine" => unitFrame(data, idCol, vecCol, dim)
-      case "l2" =>
-        graft.core.Fence(graft.core.Par.ensure(
-          data.select(col(idCol).as("id"),
-            checkedVec(toDouble(col(vecCol)), dim).as("u"))))
+      case "l2" => graft.core.Fence(graft.core.Par.ensure(
+        checkedFrame(data, idCol, vecCol, dim, "u")))
       case other => throw new IllegalArgumentException(
         s"Ann: residual IVF-PQ supports metrics 'cosine' and 'l2', " +
           s"got '$other' — inner-product corpora are served by the " +
@@ -1343,12 +1247,16 @@ object Ann {
           s"got '$other'")
     }
 
-  /** Broadcastable (cell, cv) frame of L2 centroid values. */
+  /** Broadcastable (cell, cv) frame of centroid values, the columns
+    * suffixed by `sfx`; `withAux` adds each centroid's constant `cc`. */
   private[ann] def centsToDf(spark: org.apache.spark.sql.SparkSession,
-      cents: Array[(Seq[Double], Double)]): DataFrame = {
+      cents: Array[(Seq[Double], Double)], sfx: String = "",
+      withAux: Boolean = false): DataFrame = {
     import spark.implicits._
-    broadcast(cents.zipWithIndex
-      .map { case ((v, _), j) => (j, v) }.toSeq.toDF("cell", "cv"))
+    val rows = cents.zipWithIndex.map { case ((v, cc), j) => (j, v, cc) }
+      .toSeq
+    broadcast(if (withAux) rows.toDF(s"cell$sfx", s"cv$sfx", s"cc$sfx")
+      else rows.map(r => (r._1, r._2)).toDF(s"cell$sfx", s"cv$sfx"))
   }
 
   /** Assign each unit vector to its L2 cell and subtract the cell
@@ -1358,40 +1266,10 @@ object Ann {
       cents: Array[(Seq[Double], Double)]): DataFrame = {
     val centDf = centsToDf(un.sparkSession, cents)
     graft.core.Fence(un.withColumn("cell",
-        array_max(centroidScoresL2(cents, col("u"))).getField("cell"))
+        bestCell(centroidScoresL2(cents, col("u"))))
       .join(centDf, Seq("cell"))
       .withColumn("ru", vecSub(col("u"), col("cv")))
       .select(col("id"), col("cell"), col("ru").as("u")))
-  }
-
-  /** ADC rank with the residual-correct L2 scoring. Under a shared
-    * coarse cell, ‖qu − u‖² = ‖qr − r‖² exactly (the centroid cancels),
-    * so the code-approximated score is
-    * `−‖qr − r̂‖² = Σ_m (2·qr_m·cb_m − ‖cb_m‖²) − qr·qr` — comparable
-    * ACROSS a query's probed cells, unlike the raw cross term
-    * [[pqAdcRank]] uses (fine there: the plain form has one global
-    * codebook space). `cand` carries the code columns (id, c0 …), the
-    * per-(query, cell) residual slices (qs0 …) and the materialized
-    * residual self-dot `qq`. */
-  private[ann] def pqAdcRankL2(cand: DataFrame,
-      books: Array[Array[(Seq[Double], Double)]], k: Int,
-      geom: Geom = DefaultGeom): DataFrame = {
-    val spark = cand.sparkSession
-    import spark.implicits._
-    val joined = (0 until geom.pqM).foldLeft(cand) { (df, m) =>
-      val cents = books(m).zipWithIndex
-        .map { case ((v, cc), j) => (j, v, cc) }.toSeq
-        .toDF(s"cell$m", s"cv$m", s"cc$m")
-      df.join(broadcast(cents), col(s"c$m") === col(s"cell$m"))
-    }
-    topKPerQuery(joined.withColumn("score",
-        (0 until geom.pqM)
-          .map(m => lit(2.0) *
-            dotUnrolled(col(s"qs$m"), col(s"cv$m"), geom.subDim) -
-            col(s"cc$m"))
-          .reduceLeft(_ + _) - col("qq")), "score", "id", k)
-      .select(col("q_id"), col("rank"), col("id").as("vec_id"),
-        col("score"))
   }
 
   /** Residual IVF-PQ with exact top-R re-rank. Candidate generation is
@@ -1456,25 +1334,20 @@ object Ann {
     val qUn = metricFrame(queries, idCol, vecCol, geom.dim, metric)
       .select(col("id").as("q_id"), col("u").as("qu"))
     val probes = qUn.withColumn("probe",
-        explode(slice(reverse(array_sort(
-          centroidScoresL2(cents, col("qu")))), 1, nprobe)))
+        probeCells(centroidScoresL2(cents, col("qu")), nprobe))
       .select(col("q_id"),
         col("probe").getField("cell").as("cell"), col("qu"))
     val qRes = probes.join(centDf, Seq("cell"))
       .withColumn("qr", vecSub(col("qu"), col("cv")))
-    val qSliced = (0 until geom.pqM).foldLeft(qRes) { (df, m) =>
-      df.withColumn(s"qs$m",
-        slice(col("qr"), m * geom.subDim + 1, geom.subDim))
-    }
-    val qWide = maybeBcast(graft.core.Fence(qSliced
+    val qWide = maybeBcast(graft.core.Fence(slices(qRes, "qr", "qs", geom)
       .withColumn("qq", (0 until geom.pqM)
         .map(m => dotUnrolled(col(s"qs$m"), col(s"qs$m"), geom.subDim))
         .reduceLeft(_ + _))
       .select(col("q_id") +: col("cell") +:
         (0 until geom.pqM).map(m => col(s"qs$m")) :+ col("qq"): _*)))
-    val adc = pqAdcRankL2(
+    val adc = pqAdcRank(
       codes.join(qWide, Seq("cell")).filter(col("id") =!= col("q_id")),
-      books, if (refine > 0) refine else k, geom)
+      books, if (refine > 0) refine else k, geom, residual = true)
     if (refine <= 0) adc
     else {
       val exact = adc.select(col("q_id"), col("vec_id"))

@@ -253,17 +253,19 @@ object AnnIndex {
                        metric: Option[String] = None): DataFrame = {
     val (m, _, live) = serve(catalog, indexTable, Sq8, allowStale = false,
       metric, allowedIds, allowedIdCol)
-    val baseCols = Seq(col("id").as("vec_id"), col("q").as("vec_id_q"),
-      col("qq").as("vec_id_qq"))
     // the scale column only exists on post-r16 layouts and is only
     // read when the metric needs it — cosine probes of an older index
     // keep working (and keep their byte-identical plans)
-    val cols = if (m.metric == "cosine") baseCols
-               else baseCols :+ col("sc").as("vec_id_sc")
+    val cols = if (m.metric == "cosine") sq8Cols
+               else sq8Cols :+ col("sc").as("vec_id_sc")
     Ann.sq8TopKFrom(live.select(cols: _*),
       Ann.sq8Quantized(queries, idCol, vecCol, "q_id", m.dim), k,
       m.dim, m.metric)
   }
+
+  /** The stored SQ8 columns under [[Ann.sq8Score]]'s corpus-side names. */
+  private def sq8Cols = Seq(col("id").as("vec_id"), col("q").as("vec_id_q"),
+    col("qq").as("vec_id_qq"))
 
   /** Semantic-decontamination hit list off the persisted SQ8 index:
     * DISTINCT ids of indexed vectors whose quantized cosine against
@@ -279,9 +281,7 @@ object AnnIndex {
     // a different scale entirely, so refuse rather than mis-threshold
     val (m, _, live) = serve(catalog, indexTable, Sq8, allowStale = false,
       Some("cosine"))
-    Ann.sq8Matches(
-      live.select(col("id").as("vec_id"), col("q").as("vec_id_q"),
-        col("qq").as("vec_id_qq")),
+    Ann.sq8Matches(live.select(sq8Cols: _*),
       Ann.sq8Quantized(queries, idCol, vecCol, "q_id", m.dim),
       minCos, m.dim)
   }
@@ -685,9 +685,8 @@ object AnnIndex {
   private val Lsh = IndexKind("lsh", "pk", fitted = true, "buildLsh")(
     (_, _) => Fits(),
     (data, idCol, vecCol, m, _) =>
-      data.select(col(idCol).as("id"),
-          Ann.checkedVec(Ann.toDouble(col(vecCol)), m.dim).as("v"))
-        .withColumn("nrm", sqrt(Ann.dotUnrolled(col("v"), col("v"), m.dim)))
+      Ann.checkedFrame(data, idCol, vecCol, m.dim)
+        .withColumn("nrm", Ann.norm("v", m.dim))
         .withColumn("bucket", Ann.bucket(col("v"), m.geometry, m.dim))
         .withColumn("pk", pmod(col("bucket"), lit(LshPkBuckets))))
 
@@ -698,9 +697,7 @@ object AnnIndex {
         .flatten)),
     (data, idCol, vecCol, m, fits) =>
       Ann.withNorms(data, idCol, vecCol, m.dim)
-        .withColumn("cell", array_max(
-          Ann.centroidScores(fits.cents.get, col("v"), col("nrm")))
-          .getField("cell")))
+        .withColumn("cell", Ann.cosineCell(fits.cents.get)))
 
   /** SQ8: (id, codes-as-tinyint, integer self-dot, scale, pk): codes
     * are always in [-127, 127] so the byte cast is lossless, and
@@ -754,29 +751,24 @@ object AnnIndex {
   // ---- the shared lifecycle -------------------------------------------
 
   /** The one build commit: under the assignment lock, flip an existing
-    * meta to the rebuild marker, then write the fit artifacts as
-    * concurrent lanes beside the new segment 0 (which drops every
-    * other segment and drains the tombstones — a new index generation
-    * starts from a clean slate), then the segment count, and the meta
-    * LAST. The lanes land in disjoint tables and nothing reads them
-    * until the meta commits (the marker refuses every probe until
-    * then). */
+    * meta to the rebuild marker, write the fit artifacts, then the new
+    * segment 0 (dropping every other segment and draining the
+    * tombstones — a new index generation starts from a clean slate),
+    * then the segment count, and the meta LAST (the marker refuses
+    * every probe until then). */
   private def commitBuild(catalog: TableCatalog, data: DataFrame,
                           idCol: String, vecCol: String,
                           indexTable: String, m: Meta, fits: Fits): Unit =
     catalog.withTableLock(assignTableOf(indexTable)) {
       markRebuilding(catalog, indexTable)
-      val fitLanes =
-        fits.cents.map(c => () =>
-          writeVecs(catalog, indexTable + "_cent", Seq(c), keyed = false)) ++
-        fits.books.map(b => () =>
-          writeVecs(catalog, indexTable + "_pqcent", b.toSeq, keyed = true))
-      graft.core.Par.concurrently(fitLanes.toSeq :+ (() => {
-        writeSeg(catalog, indexTable,
-          m.codec.assign(data, idCol, vecCol, m, fits), "0", m.codec.sub)
-        dropOtherSegs(catalog, indexTable, keep = "0")
-        drainDels(catalog, indexTable)
-      }))
+      fits.cents.foreach(c =>
+        writeVecs(catalog, indexTable + "_cent", Seq(c), keyed = false))
+      fits.books.foreach(b =>
+        writeVecs(catalog, indexTable + "_pqcent", b.toSeq, keyed = true))
+      writeSeg(catalog, indexTable,
+        m.codec.assign(data, idCol, vecCol, m, fits), "0", m.codec.sub)
+      dropOtherSegs(catalog, indexTable, keep = "0")
+      drainDels(catalog, indexTable)
       writeSegCounts(catalog, indexTable, Map("0" -> m.indexedN))
       writeMeta(catalog, indexTable, m)
     }

@@ -328,8 +328,9 @@ class TableCatalog(val spark: SparkSession, warehouse: String) {
   // invisible to Spark discovery.
   //
   // STORE CONTRACT. The lock's exclusivity rests on exactly two store
-  // primitives: (1) atomic create-if-absent (`fs.create(p, false)`
-  // fails when the file exists), and (2) read-after-write consistency
+  // primitives: (1) atomic create-if-absent (`createWith`: an O_EXCL
+  // create on the local filesystem, `fs.create(p, false)` elsewhere —
+  // it fails when the file exists), and (2) read-after-write consistency
   // (a reader immediately sees the file a writer just created). Both
   // hold on HDFS, POSIX filesystems, GCS, Azure ABFS, and S3 since its
   // 2020 strong-consistency change — but an S3A client older than the
@@ -372,10 +373,25 @@ class TableCatalog(val spark: SparkSession, warehouse: String) {
     try Some(fs.getFileStatus(p).getModificationTime)
     catch { case _: java.io.IOException => None }
 
+  /** Atomic create-if-absent of `p` holding `content`; false when `p`
+    * exists. On the local filesystem Hadoop's `create(p, false)` checks
+    * existence and then creates, so two racers can both "create" and
+    * interleave their data and `.crc` writes into a lock that fails its
+    * checksum for every reader; there the create is an O_EXCL
+    * `CREATE_NEW` (no `.crc` is written, and readers read unverified). */
   private def createWith(p: Path, content: String): Boolean =
     try {
-      val out = fs.create(p, /* overwrite = */ false)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
+      val bytes = content.getBytes("UTF-8")
+      if (fs.getUri.getScheme == "file") {
+        fs.mkdirs(p.getParent)
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(fs.makeQualified(p).toUri), bytes,
+          java.nio.file.StandardOpenOption.CREATE_NEW,
+          java.nio.file.StandardOpenOption.WRITE)
+      } else {
+        val out = fs.create(p, /* overwrite = */ false)
+        try out.write(bytes) finally out.close()
+      }
       true
     } catch { case _: java.io.IOException => false }
 

@@ -5,9 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Fence, SkewJoin}
 
-/** Exact group-collapse of shingle-set-identical documents — the shared
-  * skew containment of the set-similarity self-joins ([[MinHashLSH]],
-  * [[JaccardJoin]]).
+/** Exact group-collapse of identical rows — the shared skew containment
+  * of the set-similarity self-joins ([[MinHashLSH]], [[JaccardJoin]],
+  * keyed on the shingle set) and of the embedding near-dup band join
+  * ([[graft.ann.Ann.embeddingNearDupLsh]], keyed on the vector, scoring
+  * each group by its self-cosine).
   *
   * Docs with the same shingle SET are indistinguishable to every stage
   * of a set-similarity pipeline: signatures, band keys, prefix tokens,
@@ -55,12 +57,24 @@ private[graft] object GroupCollapse {
     * pair budget. */
   val CollapseCap = 32
 
-  /** Exact 128-bit set-identity key over a `sh` shingle-array column;
-    * null for null/empty sets (those rows stay ungrouped). */
-  def setKey: Column =
-    when(col("sh").isNotNull && size(col("sh")) > 0,
-      struct(xxhash64(array_sort(col("sh"))).as("h1"),
-             xxhash64(array_sort(col("sh")), lit(1)).as("h2")))
+  /** What makes rows duplicates of each other: `groupable` selects the
+    * rows that can group at all (the rest stay ungrouped and flow
+    * through unchanged), `probe` is the 64-bit hash the trigger
+    * aggregate groups by (collisions only ever ACTIVATE the machinery),
+    * and `exact` the 128-bit group key of the active path. */
+  final case class Key(groupable: Column, probe: Column, exact: Column)
+
+  /** Shingle-set identity over an `sh` column: null/empty sets stay
+    * ungrouped; the trigger hashes the precomputed signature when the
+    * frame carries one (no per-row sort; set-identical ⇒
+    * signature-identical, so it can only over-trigger), else the
+    * sorted shingle array. */
+  def setKey(frame: DataFrame): Key = Key(
+    col("sh").isNotNull && size(col("sh")) > 0,
+    if (frame.columns.contains("sig")) xxhash64(col("sig"))
+    else xxhash64(array_sort(col("sh"))),
+    struct(xxhash64(array_sort(col("sh"))).as("h1"),
+           xxhash64(array_sort(col("sh")), lit(1)).as("h2")))
 
   /** The collapse of one input frame. Inactive (largest duplicate
     * group at or under [[CollapseCap]]): `reps` IS the input and
@@ -71,29 +85,22 @@ private[graft] object GroupCollapse {
   final case class Collapsed(groups: DataFrame, reps: DataFrame,
                              memMulti: DataFrame, active: Boolean)
 
-  /** Largest duplicate-group size, by one narrow aggregate over the
-    * caller's fenced frame. Signature-hash based when available (no
-    * per-row sort; set-identical ⇒ signature-identical, so it can only
-    * over-trigger), shingle-set based otherwise. */
-  private def maxGroupSize(frame: DataFrame): Long = {
-    val detKey =
-      if (frame.columns.contains("sig")) xxhash64(col("sig"))
-      else xxhash64(array_sort(col("sh")))
-    val m = frame.filter(col("sh").isNotNull && size(col("sh")) > 0)
-      .groupBy(detKey.as("dk")).agg(count(lit(1)).as("c"))
-      .agg(max(col("c")).as("m")).collect()(0)
-    if (m.isNullAt(0)) 0L else m.getLong(0)
-  }
+  /** Collapse an (id, sh, …) frame by shingle set ([[setKey]]). */
+  def collapse(frame: DataFrame): Collapsed = collapse(frame, setKey(frame))
 
-  /** Collapse an (id, sh, …) frame. The caller's frame should already
-    * be fenced (both call sites fence their shingle frames). Ids must
-    * be integral ([[SetVerify.requireIntegralIds]] — enforced by
-    * callers). */
-  def collapse(frame: DataFrame): Collapsed = {
-    if (maxGroupSize(frame) <= CollapseCap)
+  /** Collapse an (id, …) frame under `k`. The largest duplicate-group
+    * size is measured first by one narrow aggregate over the caller's
+    * frame, which should already be fenced (every call site fences
+    * it). Ids must be integral ([[SetVerify.requireIntegralIds]] —
+    * enforced by callers). */
+  def collapse(frame: DataFrame, k: Key): Collapsed = {
+    val m = frame.filter(k.groupable)
+      .groupBy(k.probe.as("dk")).agg(count(lit(1)).as("c"))
+      .agg(max(col("c")).as("m")).collect()(0)
+    if (m.isNullAt(0) || m.getLong(0) <= CollapseCap)
       return Collapsed(null, frame, null, active = false)
     val keyed = Fence.soft(frame.select(col("id").cast("long").as("id"),
-      setKey.as("gk")))
+      when(k.groupable, k.exact).as("gk")))
     val groups = Fence.soft(keyed.filter(col("gk").isNotNull)
       .groupBy(col("gk"))
       .agg(min(col("id")).as("rep_id"), count(lit(1)).as("g_n")))
@@ -110,42 +117,51 @@ private[graft] object GroupCollapse {
   }
 
   /** Exact recovery: expand rep-level verified pairs
-    * (doc_a, doc_b, `scoreCol`) to member level — the identity when
-    * the collapse is inactive. Active: ONE lazy join chain (no branch
-    * split, so the verify plan upstream executes once) — each side
-    * left-tags its multi-group key (null for the untouched common
+    * (`pair._1`, `pair._2`, `scoreCol`) to member level — the identity
+    * when the collapse is inactive. Active: ONE lazy join chain (no
+    * branch split, so the verify plan upstream executes once) — each
+    * side left-tags its multi-group key (null for the untouched common
     * case, and a null gk equi-matches no member), then left-joins the
     * members per side, replicating by group size, never by pair volume
     * squared; `coalesce` passes untouched ids through verbatim.
-    * Within-group pairs ride the guarded gk self-join at score 1.0, so
-    * a huge duplicate group emits its inherent O(g²) OUTPUT rows
-    * across salted tasks. */
-  def expand(repPairs: DataFrame, c: Collapsed,
-             scoreCol: String): DataFrame = {
-    val asLong = repPairs.select(col("doc_a").cast("long").as("doc_a"),
-      col("doc_b").cast("long").as("doc_b"), col(scoreCol))
+    * Within-group pairs ride the guarded gk self-join (salted past
+    * `hotCap`), so a huge duplicate group emits its inherent O(g²)
+    * OUTPUT rows across salted tasks. Their score is 1.0 (identical
+    * non-empty sets) unless `groupScore` maps the multi-member groups
+    * (gk, rep_id, g_n) to (gk, `scoreCol`) rows — a group it drops
+    * emits no within-group pair. */
+  def expand(repPairs: DataFrame, c: Collapsed, scoreCol: String,
+             pair: (String, String) = ("doc_a", "doc_b"),
+             hotCap: Int = MinHashLSH.HotBucketCap,
+             hotSalts: Int = MinHashLSH.HotBucketSalts,
+             groupScore: Option[DataFrame => DataFrame] = None)
+      : DataFrame = {
+    val (pa, pb) = pair
+    val asLong = repPairs.select(col(pa).cast("long").as(pa),
+      col(pb).cast("long").as(pb), col(scoreCol))
     if (!c.active) return asLong
     val multi = c.groups.filter(col("g_n") > 1)
     val cross = asLong
-      .join(multi.select(col("rep_id").as("doc_a"), col("gk").as("gk_a")),
-        Seq("doc_a"), "left")
-      .join(multi.select(col("rep_id").as("doc_b"), col("gk").as("gk_b")),
-        Seq("doc_b"), "left")
-      .join(c.memMulti.select(col("gk").as("gk_a"), col("id").as("id_a")),
+      .join(multi.select(col("rep_id").as(pa), col("gk").as("gk_a")),
+        Seq(pa), "left")
+      .join(multi.select(col("rep_id").as(pb), col("gk").as("gk_b")),
+        Seq(pb), "left")
+      .join(c.memMulti.select(col("gk").as("gk_a"), col("id").as("__ma")),
         Seq("gk_a"), "left")
-      .join(c.memMulti.select(col("gk").as("gk_b"), col("id").as("id_b")),
+      .join(c.memMulti.select(col("gk").as("gk_b"), col("id").as("__mb")),
         Seq("gk_b"), "left")
       .select(
-        least(coalesce(col("id_a"), col("doc_a")),
-              coalesce(col("id_b"), col("doc_b"))).as("doc_a"),
-        greatest(coalesce(col("id_a"), col("doc_a")),
-                 coalesce(col("id_b"), col("doc_b"))).as("doc_b"),
+        least(coalesce(col("__ma"), col(pa)),
+              coalesce(col("__mb"), col(pb))).as(pa),
+        greatest(coalesce(col("__ma"), col(pa)),
+                 coalesce(col("__mb"), col(pb))).as(pb),
         col(scoreCol))
-    val within = SkewJoin.guardedPairs(c.memMulti, c.memMulti, Seq("gk"),
-        selfJoin = true, MinHashLSH.HotBucketCap,
-        MinHashLSH.HotBucketSalts) { j =>
-      j.select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
-        lit(1.0).as(scoreCol))
+    val members = groupScore.fold(c.memMulti)(f =>
+      c.memMulti.join(f(multi), Seq("gk")))
+    val within = SkewJoin.guardedPairs(members, members, Seq("gk"),
+        selfJoin = true, hotCap, hotSalts) { j =>
+      j.select(col("a.id").as(pa), col("b.id").as(pb),
+        groupScore.fold(lit(1.0))(_ => col(s"a.$scoreCol")).as(scoreCol))
     }
     cross.unionByName(within)
   }

@@ -198,4 +198,27 @@ class SkewSpec extends SparkSpec {
     assert(lsh.count { case (a, b, _) => a >= 100 && b >= 100 } == 5 * 4 / 2)
     assert(lsh.forall(_._3 > 0.999999))
   }
+
+  test("embeddingNearDupLsh: a duplicate group whose self-cosine fails " +
+       "minCos emits no within-group pair and matches the exact baseline") {
+    import graft.ann.Ann
+    val rnd = new scala.util.Random(5)
+    def randVec() = Seq.fill(Ann.Dim)(rnd.nextFloat() - 0.5f)
+    val base = randVec()
+    // 40 all-zero vectors > GroupCollapse.CollapseCap: the collapse is
+    // active, and the group's self-cosine dot(v,v)/(nrm·nrm) is 0/0 =
+    // NaN, which never reaches minCos — a literal 1.0 would emit all
+    // 40·39/2 member pairs
+    val vecs = ((0L until 40L).map(i => (i, Seq.fill(Ann.Dim)(0f))) ++
+      Seq((100L, base), (101L, base.map(_ * 2f)), (102L, randVec())))
+      .toDF("vec_id", "embedding")
+    val minCos = 0.9
+    val lsh = Ann.embeddingNearDupLsh(vecs, "vec_id", "embedding", minCos)
+      .as[(Long, Long, Double)].collect().toSet
+    val exact = Ann
+      .embeddingNearDupExact(vecs, "vec_id", "embedding", minCos)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(lsh.forall { case (a, b, _) => a >= 100 && b >= 100 }, lsh)
+    assert(lsh.nonEmpty && lsh == exact)
+  }
 }
