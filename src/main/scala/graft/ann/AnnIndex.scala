@@ -253,9 +253,8 @@ object AnnIndex {
                        metric: Option[String] = None): DataFrame = {
     val (m, _, live) = serve(catalog, indexTable, Sq8, allowStale = false,
       metric, allowedIds, allowedIdCol)
-    // the scale column only exists on post-r16 layouts and is only
-    // read when the metric needs it — cosine probes of an older index
-    // keep working (and keep their byte-identical plans)
+    // the scale column is only read when the metric needs it, so a
+    // cosine probe scans one column fewer
     val cols = if (m.metric == "cosine") sq8Cols
                else sq8Cols :+ col("sc").as("vec_id_sc")
     Ann.sq8TopKFrom(live.select(cols: _*),
@@ -849,11 +848,9 @@ object AnnIndex {
 
   /** The one meta read: refuses a missing meta (no build, or one that
     * crashed mid-write), the rebuild marker (a rebuild that crashed
-    * mid-write), and a kind other than `expected`. Older meta rows
-    * serve under the defaults of their time: no `indexed_n` (pre-round
-    * 13, never appended to: indexed == fitted), no `pq_m`/`pq_k`
-    * (pre-round 15: the compiled-in gate geometry), no `metric`
-    * (pre-round 16: cosine was the only metric). */
+    * mid-write), a kind other than `expected`, and a meta row missing
+    * a column of the current format ([[writeMeta]]'s), naming it —
+    * older metas are not read, and nothing upgrades them. */
   private def readMeta(catalog: TableCatalog, indexTable: String,
                        expected: Option[IndexKind]): Meta = {
     require(catalog.tableExists(indexTable),
@@ -869,14 +866,15 @@ object AnnIndex {
       s"AnnIndex: '$indexTable' is a '$k' index, expected '${e.name}'"))
     require(Kinds.exists(_.name == k),
       s"AnnIndex: '$indexTable' records unknown index kind '$k'")
-    def field[T](name: String, legacy: => T): T =
-      if (row.schema.fieldNames.contains(name)) row.getAs[T](name)
-      else legacy
-    val fitted = row.getLong(row.fieldIndex("fitted_n"))
-    Meta(k, row.getInt(row.fieldIndex("geometry")),
-      row.getInt(row.fieldIndex("dim")),
-      field("pq_m", Ann.PqSubspaces), field("pq_k", Ann.PqCodebook),
-      fitted, field("indexed_n", fitted), field("metric", "cosine"))
+    def field[T](name: String): T = {
+      require(row.schema.fieldNames.contains(name),
+        s"AnnIndex: the meta of '$indexTable' has no '$name' column — " +
+          "it predates the current index format, which is the only one " +
+          "this version reads; rebuild the index")
+      row.getAs[T](name)
+    }
+    Meta(k, field("geometry"), field("dim"), field("pq_m"), field("pq_k"),
+      field("fitted_n"), field("indexed_n"), field("metric"))
   }
 
   private def writeMeta(catalog: TableCatalog, indexTable: String,

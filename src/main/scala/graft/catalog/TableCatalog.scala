@@ -159,9 +159,8 @@ class TableCatalog(val spark: SparkSession, warehouse: String) {
     * caller statically knows (the incremental pipeline's state tables).
     * The supplied schema is the FULL output schema: partition-directory
     * columns are only recovered if present in it, and a declared column
-    * missing from a file reads as null (the mixed-layout escape hatch —
-    * e.g. `sb` on pre-bottom-k sketch partitions, healed by coalesce
-    * downstream). */
+    * missing from a file reads as null (callers that need every column
+    * check the footers first, as the corpus chain's sketch read does). */
   def readPaths(table: String, paths: Seq[String],
                 schema: StructType): DataFrame =
     spark.read.schema(schema).option("basePath", tablePath(table))
@@ -275,31 +274,19 @@ class TableCatalog(val spark: SparkSession, warehouse: String) {
     }
   }
 
-  /** Write a small metadata marker file under the table root, only if
-    * absent (idempotent under replay). Underscore-prefixed names stay
-    * invisible to Spark partition/file discovery. */
-  def writeMarkerIfAbsent(table: String, name: String,
-                          content: String): Unit = {
-    val p = new Path(tablePath(table), name)
-    if (!fs.exists(p)) {
-      val out = fs.create(p, /* overwrite = */ false)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-    }
-  }
-
-  /** Overwrite a small metadata marker file under the table root. The
-    * overwrite is not atomic on every store: a crash mid-write can
-    * leave a torn marker, so callers must treat an unparseable marker
-    * as ABSENT and degrade conservatively (the covered-keys reader
-    * does exactly that — lost coverage means a safe full-scan
-    * fallback, never a wrong answer). */
+  /** Overwrite a small metadata marker file under the table root.
+    * Underscore-prefixed names stay invisible to Spark partition/file
+    * discovery. The overwrite is not atomic on every store: a crash
+    * mid-write can leave a torn marker, so callers must reject an
+    * unparseable marker loudly or degrade conservatively (the
+    * `_current` pointer of [[Versioned]] refuses one by name). */
   def writeMarker(table: String, name: String, content: String): Unit = {
     val p = new Path(tablePath(table), name)
     val out = fs.create(p, /* overwrite = */ true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Read a marker written by [[writeMarkerIfAbsent]]; None if absent. */
+  /** Read a marker written by [[writeMarker]]; None if absent. */
   def readMarker(table: String, name: String): Option[String] = {
     val p = new Path(tablePath(table), name)
     if (!fs.exists(p)) None

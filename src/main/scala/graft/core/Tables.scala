@@ -81,12 +81,6 @@ object Tables {
     }
   }
 
-  /** Compatibility shim for the probe tooling/specs: does the file take
-    * the legacy-nanos decode path? */
-  private[graft] def tsStoredAsNanos(spark: SparkSession,
-                                     path: String): Boolean =
-    tsEncodingOf(spark, path) == TsEncoding.RawNanos
-
   /** One-footer probe for the `ts` decode path. Reads a single footer of
     * the first data file, so the probe cost is O(1) regardless of table
     * size; at cluster scale this is one metadata round-trip, not a scan.

@@ -74,8 +74,7 @@ object CorpusStream {
     * `pk=` sub-directories only when it holds at least this many rows,
     * so each pk file is substantial (≥ ~1k rows per pk on average);
     * smaller partitions are ONE plain file. The rule is the same for a
-    * live batch partition, the `_fp` backfill and a compaction fold's
-    * `c` partition. Without it, tiny frequent batches explode into
+    * live batch partition and a compaction fold's `c` partition. Without it, tiny frequent batches explode into
     * batches×64 near-empty files and the per-batch LISTING cost grows
     * faster than the scan the layout saves (measured with the former
     * ProbeStream: a 40-small-batch run regressed from flat to a
@@ -107,10 +106,7 @@ object CorpusStream {
     * reads (16 of dp03's ~158 jobs before this). Plain-layout
     * partitions additionally store `pk` as a data column
     * ([[PkSplitMinRows]]); pk-split partitions carry it as a
-    * directory, so the plain branches read [[withPk]] of these. A
-    * declared column missing from a legacy file (e.g. `sb` on
-    * pre-bottom-k sketches) reads as null and is healed downstream by
-    * coalesce — same contract as schema evolution. */
+    * directory, so the plain branches read [[withPk]] of these. */
   private[streaming] val FpDataSchema: StructType = new StructType()
     .add("id", LongType).add("fp", StringType)
   private[streaming] val EmitDataSchema: StructType = new StructType()
@@ -135,30 +131,25 @@ object CorpusStream {
     *  - `pk`, the bucket expression over the data columns;
     *  - `pkStored`, whether a plain partition stores pk as a data
     *    column (the sketch table computes it on read: it is a pure
-    *    function of id, so legacy plain sketch files need no backfill);
+    *    function of id);
     *  - `dedupKeys`, the row identity a fold over a stranded target
     *    deduplicates on;
     *  - `sortById`, files sorted by id (tight row-group id ranges for the
     *    sketch fetch's candidate-id IN filter);
-    *  - `heal`, per-column read fixes for legacy files;
-    *  - `sigWidth`, whether a read restores `sig`'s
-    *    [[MinHashLSH.NumPermMetaKey]] from the files' footers (the static
-    *    read schema carries no field metadata), so the geometry guard
-    *    needs no Spark job and a fold writes the width back out. */
+    *  - `sigWidth`, whether a read checks the files' footers
+    *    ([[requireCurrentFormat]]) and restores `sig`'s
+    *    [[MinHashLSH.NumPermMetaKey]] from them (the static read schema
+    *    carries no field metadata), so the geometry guard needs no Spark
+    *    job and a fold writes the width back out. */
   private case class PkTable(suffix: String, schema: StructType,
       pk: Column, pkStored: Boolean, dedupKeys: Seq[String],
-      sortById: Boolean = false, heal: Map[String, Column] = Map.empty,
-      sigWidth: Boolean = false) {
+      sortById: Boolean = false, sigWidth: Boolean = false) {
     def of(stateTable: String): String = stateTable + suffix
-    def cols: Seq[Column] = schema.fieldNames.toSeq.map(n =>
-      heal.get(n).fold(col(n))(_.as(n)))
   }
 
-  /** The per-doc sketch table itself. Legacy rows without the persisted
-    * bottom-k column read `sb` as null and heal from `sh`. */
+  /** The per-doc sketch table itself. */
   private val SketchState = PkTable("", SketchDataSchema,
     emitPkCol(col("id")), pkStored = false, Seq("id"), sortById = true,
-    heal = Map("sb" -> coalesce(col("sb"), MinHashLSH.bottomKCol(col("sh")))),
     sigWidth = true)
 
   /** Pre-banded sketch rows, bucketed by band key, so a batch's
@@ -166,9 +157,9 @@ object CorpusStream {
   private val BandsState = PkTable("_bands", BandsDataSchema, pkCol,
     pkStored = true, Seq("id", "band_idx"))
 
-  /** The one writer of the pk-bucketed state tables — the live sinks,
-    * the `_fp` backfill and every compaction fold. `rows` (data columns
-    * only) lands as batch partition `key` of `t`. With `split` — the
+  /** The one writer of the pk-bucketed state tables — the live sinks
+    * and every compaction fold. `rows` (data columns only) lands as
+    * batch partition `key` of `t`. With `split` — the
     * caller's "at least `pkSplitMinRows` rows" ([[PkSplitMinRows]]) —
     * it writes `pk=` sub-directories, repartitioned by pk first so each
     * bucket gets ~one file instead of one per shuffle task; otherwise
@@ -190,8 +181,7 @@ object CorpusStream {
   }
 
   /** The layout rule for a partition written from existing partitions
-    * `keys` of `table` (a fold's sources, a backfill's sketch batch):
-    * split when they hold at least `pkSplitMinRows` rows. A pk-split
+    * `keys` of `table` (a fold's sources): split when they hold at least `pkSplitMinRows` rows. A pk-split
     * source held that many alone; plain sources' counts come from their
     * parquet footers on the driver, so the choice costs no Spark job. */
   private def splitLayoutFor(catalog: TableCatalog, table: String,
@@ -212,7 +202,7 @@ object CorpusStream {
     * ones — small by [[PkSplitMinRows]] — are read whole and filtered
     * on pk. None when no partition holds a data file. A `sigWidth`
     * table's `sig` carries the width its footers agree on
-    * ([[footerSigWidth]]). */
+    * ([[requireCurrentFormat]]). */
   private def readPkTable(catalog: TableCatalog, t: PkTable,
       stateTable: String, keys: Seq[String],
       pks: Option[Set[Long]]): Option[DataFrame] = {
@@ -234,7 +224,7 @@ object CorpusStream {
       .map(path)
     val plainPk = if (t.pkStored) col("pk") else t.pk
     val width =
-      if (t.sigWidth) footerSigWidth(catalog, table, keys) else None
+      if (t.sigWidth) requireCurrentFormat(catalog, table, keys) else None
     val read = Seq(
       if (splitDirs.isEmpty) None
       else Some(catalog.readPaths(table, splitDirs, t.schema)),
@@ -243,29 +233,46 @@ object CorpusStream {
         val raw = catalog.readPaths(table, plainDirs,
           if (t.pkStored) withPk(t.schema) else t.schema)
         Some(pks.fold(raw)(ps => raw.filter(plainPk.isin(ps.toSeq: _*))))
-      }).flatten.map(_.select(t.cols: _*)).reduceOption(_ unionByName _)
+      }).flatten.map(_.select(t.schema.fieldNames.toSeq.map(col): _*))
+      .reduceOption(_ unionByName _)
     width.fold(read)(w => read.map(_.withColumn("sig", col("sig").as("sig",
       new org.apache.spark.sql.types.MetadataBuilder()
         .putLong(MinHashLSH.NumPermMetaKey, w.toLong).build()))))
   }
 
   /** The `sig` width recorded in the Spark row schema of each listed
-    * partition's parquet footer, read on the driver. None when a
-    * data-bearing partition's footer lacks it (written before the width
-    * was stamped, or by a fold that dropped it) or the partitions
-    * disagree — the guard then falls back to its head-row probe. */
-  private def footerSigWidth(catalog: TableCatalog, table: String,
-      keys: Seq[String]): Option[Int] = {
-    val widths = keys.flatMap(
-        catalog.partitionFooterMetadata(table, "batch_id", _))
-      .map(_.get(SparkRowSchemaKey)
-        .flatMap(j => scala.util.Try(
-          org.apache.spark.sql.types.DataType.fromJson(j)).toOption)
-        .collect { case s: StructType => s }
-        .flatMap(MinHashLSH.sigWidthOf))
-    if (widths.nonEmpty && widths.forall(_.isDefined) &&
-        widths.distinct.size == 1) widths.head
-    else None
+    * sketch partition's parquet footer, read on the driver; None when
+    * no partition holds a data file. Every sketch partition is written
+    * with that width and the `sb` column, and a fold carries both, so a
+    * footer lacking either, or partitions that disagree on the width,
+    * mean a state written before the current format. It is refused,
+    * naming the table and partition: no read path serves older layouts,
+    * and nothing upgrades them. */
+  private def requireCurrentFormat(catalog: TableCatalog,
+      stateTable: String, keys: Seq[String]): Option[Int] = {
+    def refuse(key: String, why: String): Nothing =
+      throw new IllegalStateException(s"CorpusStream: sketch partition " +
+        s"batch_id=$key of state table '$stateTable' $why — it predates " +
+        "the current state format, which is the only one this version " +
+        "reads; rebuild the state by streaming the corpus into a NEW " +
+        "state table")
+    val widths = keys.flatMap { k =>
+      catalog.partitionFooterMetadata(stateTable, "batch_id", k).map { m =>
+        val schema = m.get(SparkRowSchemaKey)
+          .flatMap(j => scala.util.Try(
+            org.apache.spark.sql.types.DataType.fromJson(j)).toOption)
+          .collect { case s: StructType => s }
+        if (!schema.exists(_.fieldNames.contains("sb")))
+          refuse(k, "has no `sb` column")
+        k -> schema.flatMap(MinHashLSH.sigWidthOf).getOrElse(refuse(k,
+          s"records no `sig` width (${MinHashLSH.NumPermMetaKey})"))
+      }
+    }
+    widths.find(_._2 != widths.head._2).foreach { case (k, w) =>
+      refuse(k, s"records a $w-perm `sig` width beside " +
+        s"${widths.head._2} in batch_id=${widths.head._1}")
+    }
+    widths.headOption.map(_._2)
   }
 
   /** The footer key under which Spark's parquet writer stores the row
@@ -297,7 +304,7 @@ object CorpusStream {
   }
 
   /** Thread-local property naming why the in-flight batch runs the
-    * distributed path: `over id cap`, `over pair cap` or `legacy bands`.
+    * distributed path: `over id cap` or `over pair cap`.
     * Inherited by the write lanes' threads; cleared when the batch
     * ends. */
   private val FallbackKey = "graft.chain.fallback"
@@ -359,69 +366,11 @@ object CorpusStream {
     * (labels only decrease, and a dethroned id never reappears as a
     * merge-graph node), so a stale row can at worst make a REPLAYED
     * retraction rewrite the same partitions again — idempotent.
-    * Coverage is checked STRUCTURALLY (round 12): an output partition
-    * is index-covered iff its emit partition exists or its key was
-    * recorded in the `_covered_keys` marker when a compaction folded
-    * it; anything else (a warehouse written by pre-index code) falls
-    * back to the full output scan. */
+    * The pk-pruned lookup is authoritative: every output partition's
+    * emit rows commit before it does, and emit rows are never deleted
+    * (a compaction folds them, `eb` included). */
   private val EmitState = PkTable("_emit", EmitDataSchema,
     emitPkCol(col("id")), pkStored = true, Seq("id"))
-
-  private val CoveredFromMarker = "_covered_from"
-  private val CoveredKeysMarker = "_covered_keys"
-
-  /** Range-set codec for the `_covered_keys` marker: batch ids whose
-    * emit rows were folded into a compacted partition (the fold loses
-    * the per-batch directories, so presence can no longer be checked
-    * structurally). Contiguous ids — the normal stream — encode as one
-    * `lo-hi` range, so the marker stays bytes-sized at any stream age.
-    * Unparseable tokens (a torn marker write) decode to nothing: lost
-    * coverage degrades to the safe full-scan fallback. */
-  private[graft] def parseRanges(s: String): Seq[(Long, Long)] =
-    s.split(",").iterator.map(_.trim).filter(_.nonEmpty).flatMap { tok =>
-      tok.split("-", 2) match {
-        case Array(a) =>
-          scala.util.Try { val v = a.trim.toLong; (v, v) }.toOption
-        case Array(a, b) =>
-          scala.util.Try((a.trim.toLong, b.trim.toLong)).toOption
-            .filter { case (lo, hi) => lo <= hi }
-        case _ => None
-      }
-    }.toSeq.sortBy(_._1)
-
-  private[graft] def encodeRanges(keys: Seq[(Long, Long)]): String = {
-    val sorted = keys.sortBy(_._1)
-    val merged = sorted.foldLeft(List.empty[(Long, Long)]) {
-      case ((lo, hi) :: rest, (a, b)) if a <= hi + 1 =>
-        (lo, math.max(hi, b)) :: rest
-      case (acc, r) => r :: acc
-    }.reverse
-    merged.map { case (lo, hi) =>
-      if (lo == hi) lo.toString else s"$lo-$hi" }.mkString(",")
-  }
-
-  private def rangesContain(rs: Seq[(Long, Long)], v: Long): Boolean =
-    rs.exists { case (lo, hi) => v >= lo && v <= hi }
-
-  /** The `_covered_keys` marker's on-disk form: the range-set plus a
-    * trailing `;` terminator. A torn write (the marker overwrite is
-    * not atomic on every store) truncates to a strict PREFIX of the
-    * intended bytes — and a prefix of a valid range-set can itself be
-    * valid-but-wrong (`100-120` torn to `10` claims coverage for a key
-    * that was never folded, and a wrongly-covered pre-index output
-    * partition would let a retraction skip the fallback scan). The
-    * terminator is the LAST byte, so no strict prefix carries it:
-    * [[decodeCoveredKeys]] treats a terminator-less marker — torn, or
-    * written by pre-round-13 code — as ABSENT, degrading to the safe
-    * full-scan fallback (and, at the next fold, to re-recording the
-    * still-listable keys). */
-  private[graft] def encodeCoveredKeys(keys: Seq[(Long, Long)]): String =
-    encodeRanges(keys) + ";"
-
-  private[graft] def decodeCoveredKeys(s: String): Option[Seq[(Long, Long)]] = {
-    val t = s.trim
-    if (!t.endsWith(";")) None else Some(parseRanges(t.dropRight(1)))
-  }
 
   private[graft] def emitPkCol(id: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column =
@@ -444,8 +393,8 @@ object CorpusStream {
   // in the current (and, at a boundary, the previous) epoch so it
   // rewrites in place instead of duplicating across the roll.
   // The emit index's `eb` column addresses the partition across
-  // epochs: plain `<batch>` for the base table (bit-compatible with
-  // pre-epoch warehouses), `e<k>:<batch>` for epoch k ≥ 1.
+  // epochs: plain `<batch>` for the base table, `e<k>:<batch>` for
+  // epoch k ≥ 1.
 
   private[graft] def epochTableName(outTable: String, k: Int): String =
     if (k == 0) outTable else s"${outTable}__e$k"
@@ -510,9 +459,7 @@ object CorpusStream {
     * fingerprints hash into (fp equality implies pk equality, so the
     * pruning loses no twin) instead of scanning the whole sketch
     * table's fp column — on a 10¹⁰-doc state that scan was linear in
-    * the corpus every batch, however small the batch. A state written
-    * by pre-index code is backfilled once from the sketch table's own
-    * fp column (see [[indexesCover]]). */
+    * the corpus every batch, however small the batch. */
   private val FpState = PkTable("_fp", FpDataSchema, fpPkCol(col("fp")),
     pkStored = true, Seq("id"))
 
@@ -549,8 +496,7 @@ object CorpusStream {
     * the sketch, `_bands` and `_fp` rows are written from local
     * relations. That replaces the anti-join, signature, forced-pair and
     * internal/cross cascade jobs where the data is kilobytes anyway.
-    * Over either cap, or on a legacy state whose bands table does not
-    * cover its sketches, the batch runs distributed from the gate on
+    * Over either cap the batch runs distributed from the gate on
     * ([[distributedBatch]]), its jobs labelled with why; that cascade's
     * cross verify still takes a driver fast path when its candidates
     * fit the same caps. The pair cap bounds collected stored band rows
@@ -697,22 +643,18 @@ object CorpusStream {
                                      bands: Seq[MinHashLSH.BandRow])
 
   /** [[SeenState]] of a batch in ONE job labelled `seen state`: the
-    * pk-pruned `_fp` rows filtered to `fp IN fps` (the full fp column of
-    * `state` when the fp index does not cover it) and the pk-pruned
+    * pk-pruned `_fp` rows filtered to `fp IN fps` and the pk-pruned
     * `_bands` rows filtered to `band_key IN keys`, brought back by one
     * [[boundedCollect]]. None when more than [[MergeGraphCap]] fp rows
     * or [[DriverVerifyPairCap]] band rows match — the batch then runs
     * distributed. Rows with a null id are skipped: a null id matches
     * nothing in the distributed joins either. */
   private def seenState(catalog: TableCatalog, stateTable: String,
-      batchKey: String, state: DataFrame, fpCovered: Boolean,
-      fps: Seq[String], fpPks: Set[Long],
+      batchKey: String, fps: Seq[String], fpPks: Set[Long],
       keys: Seq[String]): Option[SeenState] = {
     val fpRows =
       if (fps.isEmpty) None
-      else (if (fpCovered)
-              prunedStateRead(catalog, FpState, stateTable, batchKey, fpPks)
-            else Some(state))
+      else prunedStateRead(catalog, FpState, stateTable, batchKey, fpPks)
         .map(_.filter(col("fp").isin(fps: _*)).select(col("id"), col("fp")))
     val bandRows =
       if (keys.isEmpty) None
@@ -852,11 +794,9 @@ object CorpusStream {
         gated.map { case (r, _) => Row(r.get(0), r.get(3)) }))
   }
 
-  /** Steps 3–5 distributed — the path of a batch over a driver cap, or
-    * of a legacy state whose bands table does not cover its sketches.
+  /** Steps 3–5 distributed — the path of a batch over a driver cap.
     * Exact re-arrivals by stored fingerprint come from the pk-bucketed
-    * `_fp` index pruned to the batch's fp buckets `fpPks` (the full
-    * fp column of `state` when the index does not cover it). Two
+    * `_fp` index pruned to the batch's fp buckets `fpPks`. Two
     * consumers, one read:
     *  - a twin whose stored id is <= the arrival's drops at the
     *    anti-join (ascending feeds: every re-delivery, as always);
@@ -873,14 +813,13 @@ object CorpusStream {
     * own bands and the stored ones ([[distributedCascade]]). Frames it
     * persists join `release`. */
   private def distributedBatch(catalog: TableCatalog, stateTable: String,
-      batchKey: String, state: DataFrame, bandsCovered: Boolean,
-      fpCovered: Boolean, fpPks: Set[Long], localDeduped: DataFrame,
+      batchKey: String, state: DataFrame, fpPks: Set[Long],
+      localDeduped: DataFrame,
       release: scala.collection.mutable.ListBuffer[DataFrame],
       threshold: Double, geom: graft.sim.LshGeometry): GatedBatch = {
     val spark = catalog.spark
     val seenFp =
       if (state == null) None
-      else if (!fpCovered) Some(state)
       else prunedStateRead(catalog, FpState, stateTable, batchKey, fpPks)
     val seenFpCols = seenFp.map(_.select(col("fp").as("__seen_fp"),
       col("id").as("__seen_id")))
@@ -910,8 +849,8 @@ object CorpusStream {
     // write's rows
     val newBands = MinHashLSH.bandFrameWithSig(newSigs, geom)
     val (labels, pairRows, overCap, crossPairs) = distributedCascade(
-      spark, catalog, stateTable, batchKey, state, bandsCovered, newSk,
-      newBands, fpForced, threshold, geom)
+      spark, catalog, stateTable, batchKey, state, newSk, newBands,
+      fpForced, threshold, geom)
     val fpRows = newDocs.select(col("doc_id").as("id"), fp.as("fp"))
     GatedBatch(newDocs, labels, pairRows, overCap, crossPairs, nSigs,
       sketchRows = newSigs.join(fpRows, Seq("id"))
@@ -925,7 +864,7 @@ object CorpusStream {
     * 1, whether they were over it, their frame). */
   private def distributedCascade(spark: org.apache.spark.sql.SparkSession,
       catalog: TableCatalog, stateTable: String, batchKey: String,
-      state: DataFrame, covered: Boolean, newSk: DataFrame,
+      state: DataFrame, newSk: DataFrame,
       newBands: DataFrame, fpForced: DataFrame, threshold: Double,
       geom: graft.sim.LshGeometry)
       : (Option[DataFrame], Array[(Long, Long)], Boolean, () => DataFrame) = {
@@ -948,100 +887,87 @@ object CorpusStream {
     val crossPairs: DataFrame =
       if (state == null) null
       else jd(spark, s"b$batchKey cross pairs") {
+        // the seen corpus's sig-carrying band rows: the `_bands` table
+        // pruned to the `pk` sub-partitions this batch's own band keys
+        // hash into — a list bounded by [[StatePartitions]]; since `pk`
+        // is a function of `band_key`, pruning by the new side's pk set
+        // loses no colliding pair
         val seenBands = jd(spark, s"b$batchKey seen bands") {
-          seenBandFrame(catalog, stateTable, batchKey, state, newBands,
-            geom, covered) }
-        def fullStateVerify(survivors: DataFrame): DataFrame = {
-          val sigs = newSk.unionByName(state.select(col("id"),
-            col("sh"), col("n"), col("sig"), col("sb")))
-          MinHashLSH.verifySurvivors(survivors, sigs, threshold,
+          prunedStateRead(catalog, BandsState, stateTable, batchKey,
+              newBands.select(pkCol.as("pk")).distinct()
+                .collect().map(_.getLong(0)).toSet)
+            .getOrElse(newBands.limit(0)) }
+        // the verify stage fetches `sh` arrays for the SEEN side of
+        // every candidate pair. Collect the candidates (band join +
+        // agreement floor — the cheap prefix of the cascade, NOT the
+        // array verify) up to the merge cap, with each seen id's sketch
+        // pk riding along in the same job; the fetch then reads only
+        // the colliding pk DIRECTORIES of the pk-split sketch
+        // partitions, and inside them only the row groups the
+        // (sorted-by-id) candidate id IN-filter survives —
+        // metadata-scale, where the round-12 first cut (pk set of every
+        // id in colliding band BUCKETS) saturated all 64 buckets on any
+        // batch with a few hundred collisions and pruned nothing (the
+        // former ProbeSketch measured split slower than plain). The
+        // verify re-joins the collected pairs as a broadcast LOCAL
+        // relation, so the cascade prefix still runs once. Over the cap
+        // — a pathological mass-collision batch — the cascade
+        // re-derives distributed against the full state, the same
+        // fallback shape as [[cappedComponents]].
+        val cand = MinHashLSH.collidedSurvivors(newBands, seenBands,
+          threshold, geom, selfJoin = false)
+        val candRows = jd(spark, s"b$batchKey cross candidates") { cand
+          .select(col("doc_a").cast("long"), col("doc_b").cast("long"),
+            emitPkCol(col("doc_b")).as("__pk"))
+          .limit(MergeGraphCap + 1).collect() }
+        def verifyAgainst(pairs: DataFrame, seen: DataFrame): DataFrame = {
+          val sigs = newSk.unionByName(seen.select(col("id"), col("sh"),
+            col("n"), col("sig"), col("sb")))
+          MinHashLSH.verifySurvivors(pairs, sigs, threshold,
               sb = Some(sigs.select(col("id"), col("sb"))))
             .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
         }
         val verified =
-          if (!covered)
-            // legacy not-covered path (pre-round-8 state, no bands
-            // table): the full-state fetch — it re-bands the full
-            // state anyway, and the one pair collect below evaluates
-            // the fused cascade exactly once
-            fullStateVerify(MinHashLSH.collidedSurvivors(newBands,
-              seenBands, threshold, geom, selfJoin = false))
+          if (candRows.length > MergeGraphCap) verifyAgainst(cand, state)
+          else if (candRows.isEmpty)
+            // nothing survived the floor: no cross verify at all
+            null
           else {
-            // the verify stage fetches `sh` arrays for the SEEN side
-            // of every candidate pair. Collect the candidates (band
-            // join + agreement floor — the cheap prefix of the
-            // cascade, NOT the array verify) up to the merge cap,
-            // with each seen id's sketch pk riding along in the same
-            // job; the fetch then reads only the colliding pk
-            // DIRECTORIES of the pk-split sketch partitions, and
-            // inside them only the row groups the (sorted-by-id)
-            // candidate id IN-filter survives — metadata-scale, where
-            // the round-12 first cut (pk set of every id in colliding
-            // band BUCKETS) saturated all 64 buckets on any batch
-            // with a few hundred collisions and pruned nothing (the
-            // former ProbeSketch measured split slower than plain). The
-            // verify re-joins the collected pairs as a broadcast
-            // LOCAL relation, so the cascade prefix still runs once.
-            // Over the cap — a pathological mass-collision batch —
-            // the cascade re-derives distributed against the full
-            // state, the same fallback shape as [[cappedComponents]].
-            val cand = MinHashLSH.collidedSurvivors(newBands, seenBands,
-              threshold, geom, selfJoin = false)
-            val candRows = jd(spark,
-                s"b$batchKey cross candidates") { cand
-              .select(col("doc_a").cast("long"),
-                col("doc_b").cast("long"),
-                emitPkCol(col("doc_b")).as("__pk"))
-              .limit(MergeGraphCap + 1).collect() }
-            if (candRows.length > MergeGraphCap)
-              fullStateVerify(cand)
-            else if (candRows.isEmpty)
-              // nothing survived the floor: no cross verify at all
-              null
-            else {
-              val ids = candRows.map(_.getLong(1)).distinct
-              val aIds = candRows.map(_.getLong(0)).distinct
-              val ipks = candRows.map(_.getLong(2)).toSet
-              val fetched = readSketchBatches(catalog, stateTable,
-                  catalog.listPartitions(stateTable, "batch_id")
-                    .filter(_ != batchKey),
-                  Some(ipks))
-                .map { f =>
-                  // the IN pushdown prunes row groups; past the cap
-                  // the literal list costs more than it prunes and
-                  // the directory pruning stands alone
-                  if (ids.length <= IsinCap)
-                    f.filter(col("id").isin(ids.toIndexedSeq: _*))
-                  else f
-                }
-                .getOrElse(state)
-              if (candRows.length <= DriverVerifyPairCap &&
-                  ids.length <= DriverVerifyIdCap &&
-                  aIds.length <= DriverVerifyIdCap) {
-                // driver fast path (see [[DriverVerifyIdCap]]): two
-                // bounded array collects, then the one per-pair check
-                // the driver cascade runs ([[MinHashLSH.pairVerifies]])
-                // — no distributed prune/verify joins for a
-                // metadata-scale candidate set
-                val kept = MinHashLSH.driverVerify(
-                  candRows.toSeq.map(r => (r.getLong(0), r.getLong(1))),
-                  fetchSketches(newSk, aIds.toSeq, batchKey).get,
-                  fetchSketches(fetched, ids.toSeq, batchKey).get,
-                  threshold)
-                if (kept.isEmpty) null
-                else kept.toDF("doc_a", "doc_b")
-              } else {
-                val sigs = newSk.unionByName(fetched.select(col("id"),
-                  col("sh"), col("n"), col("sig"), col("sb")))
-                val pairsLocal = candRows
-                  .map(r => (r.getLong(0), r.getLong(1))).toSeq
-                  .toDF("doc_a", "doc_b")
-                MinHashLSH.verifySurvivors(pairsLocal, sigs, threshold,
-                    sb = Some(sigs.select(col("id"), col("sb"))))
-                  .select(col("doc_a").cast("long"),
-                    col("doc_b").cast("long"))
+            val ids = candRows.map(_.getLong(1)).distinct
+            val aIds = candRows.map(_.getLong(0)).distinct
+            val ipks = candRows.map(_.getLong(2)).toSet
+            val fetched = readSketchBatches(catalog, stateTable,
+                catalog.listPartitions(stateTable, "batch_id")
+                  .filter(_ != batchKey),
+                Some(ipks))
+              .map { f =>
+                // the IN pushdown prunes row groups; past the cap the
+                // literal list costs more than it prunes and the
+                // directory pruning stands alone
+                if (ids.length <= IsinCap)
+                  f.filter(col("id").isin(ids.toIndexedSeq: _*))
+                else f
               }
-            }
+              .getOrElse(state)
+            if (candRows.length <= DriverVerifyPairCap &&
+                ids.length <= DriverVerifyIdCap &&
+                aIds.length <= DriverVerifyIdCap) {
+              // driver fast path (see [[DriverVerifyIdCap]]): two
+              // bounded array collects, then the one per-pair check the
+              // driver cascade runs ([[MinHashLSH.pairVerifies]]) — no
+              // distributed prune/verify joins for a metadata-scale
+              // candidate set
+              val kept = MinHashLSH.driverVerify(
+                candRows.toSeq.map(r => (r.getLong(0), r.getLong(1))),
+                fetchSketches(newSk, aIds.toSeq, batchKey).get,
+                fetchSketches(fetched, ids.toSeq, batchKey).get,
+                threshold)
+              if (kept.isEmpty) null
+              else kept.toDF("doc_a", "doc_b")
+            } else
+              verifyAgainst(candRows
+                .map(r => (r.getLong(0), r.getLong(1))).toSeq
+                .toDF("doc_a", "doc_b"), fetched)
           }
         (verified, fpForced) match {
           case (null, null) => null
@@ -1091,27 +1017,18 @@ object CorpusStream {
       .select(col("id"), col("lbl"))
   }
 
-  /** Signature width of a stored state table: the
-    * [[MinHashLSH.NumPermMetaKey]] field metadata the sketch read
-    * restores from the partitions' footers ([[footerSigWidth]] — states
-    * written from round 8 on, and folds since the width was carried
-    * through them), else one bounded head-row probe (legacy files
-    * without the key). None for an empty state. */
-  private[streaming] def storedSigWidth(state: DataFrame): Option[Int] =
-    MinHashLSH.sigWidthOf(state).orElse(
-      state.select(size(col("sig")).as("__w"))
-        .filter(col("__w").isNotNull && col("__w") >= 0)
-        .limit(1).collect().headOption.map(_.getInt(0)))
-
   /** The ADVICE-r7 guard: a state table written at another threshold's
     * geometry would zip_with-null-pad against this batch's signatures,
     * cap agreement below the floor, and silently drop every cross-batch
     * candidate — dedup against the seen corpus would return nothing.
-    * Fail loudly at batch start instead. */
+    * Fail loudly at batch start instead. The stored width is the
+    * [[MinHashLSH.NumPermMetaKey]] the sketch read restores from the
+    * partitions' footers ([[requireCurrentFormat]]), so the guard costs
+    * no Spark job. */
   private def requireCompatibleState(state: DataFrame,
       geom: graft.sim.LshGeometry, stateTable: String,
       threshold: Double): Unit =
-    storedSigWidth(state).foreach { w =>
+    MinHashLSH.sigWidthOf(state).foreach { w =>
       require(w == geom.numPerm,
         s"CorpusStream: state table '$stateTable' stores $w-perm MinHash " +
           s"signatures but threshold=$threshold derives a " +
@@ -1141,9 +1058,9 @@ object CorpusStream {
     * tables' directory count (and so the per-batch listing cost) flat in
     * stream age. Row-content-neutral by construction: the target is the
     * exact union of the sources (latest-wins per id for the label
-    * table), and every consumer (the `fp` anti-join, `seenBandFrame`,
-    * `storedSigWidth`) reads the state by COLUMNS, not by which
-    * partition a row lives in. `excludeBatchKey` (the in-flight batch)
+    * table), and every consumer (the `fp` gate, the band join, the
+    * sketch fetch) reads the state by COLUMNS, not by which partition a
+    * row lives in. `excludeBatchKey` (the in-flight batch)
     * is never touched, so replay idempotence is preserved: a compacted
     * partition only ever contains batches committed before the current
     * one started. A pk-bucketed target takes the live writes' layout
@@ -1160,9 +1077,9 @@ object CorpusStream {
     * it from the still-present sources instead of trusting a half-write
     * and deleting the only complete copies. Each table compacts
     * independently with the same rule, so a crash between two tables'
-    * passes heals on the next trigger. Legacy sketch rows without the
-    * persisted bottom-k column are normalized during the rewrite.
-    * Returns true when anything moved.
+    * passes heals on the next trigger: until then a table's rows sit
+    * under their pre-fold keys, where reads that list every committed
+    * partition find them. Returns true when anything moved.
     *
     * Concurrent writers (round 11): the whole pass runs under the
     * state table's lease lock ([[TableCatalog.tryAcquireTableLock]] —
@@ -1221,14 +1138,13 @@ object CorpusStream {
       if (stranded) df.dropDuplicates(cols) else df
     }
     // One fold per table: `rewrite(srcs, key)` commits the target from
-    // the sources, `beforeDelete(srcs)` runs between the target's commit
-    // and the source deletes. The rewrite reads the sources only: a
-    // crashed half-written target is replaced wholesale by the overwrite
-    // (its intended content was exactly this union — sources are deleted
-    // strictly after the target commits, so they are all still here).
+    // the sources, which are deleted after it. The rewrite reads the
+    // sources only: a crashed half-written target is replaced wholesale
+    // by the overwrite (its intended content was exactly this union —
+    // sources are deleted strictly after the target commits, so they
+    // are all still here).
     def fold(table: String, stage: String,
-             rewrite: (Seq[String], String) => Unit,
-             beforeDelete: Seq[String] => Unit = _ => ()): () => Boolean =
+             rewrite: (Seq[String], String) => Unit): () => Boolean =
       () => jd(catalog.spark, s"compact $table") {
         val ks = sourcesOf(table)
         ks.size >= 2 && {
@@ -1238,7 +1154,6 @@ object CorpusStream {
               !catalog.partitionCommitted(table, "batch_id", key))
             rewrite(srcs, key)
           failpoint(s"$stage-target-written")
-          beforeDelete(srcs)
           srcs.foreach(catalog.deletePartition(table, "batch_id", _))
           true
         }
@@ -1246,15 +1161,13 @@ object CorpusStream {
     // the pk-bucketed tables: read shape-aware, dedup only a stranded
     // union, write through the one layout rule (a stale pk-split source
     // keeps the target split; plain sources are counted from footers)
-    def foldPk(t: PkTable, stage: String,
-               beforeDelete: Seq[String] => Unit = _ => ()) =
+    def foldPk(t: PkTable, stage: String) =
       fold(t.of(stateTable), stage, (srcs, key) =>
         readPkTable(catalog, t, stateTable, srcs, None).foreach(m =>
           writeState(catalog, t, stateTable, key,
             dedupIfStranded(m, srcs, t.dedupKeys),
             splitLayoutFor(catalog, t.of(stateTable), srcs,
-              pkSplitMinRows))),
-        beforeDelete)
+              pkSplitMinRows))))
     // label table: rows are UPDATES (latest `b` wins per id), so the
     // compacted partition keeps exactly each id's highest-b row — the
     // union-then-latest a reader would compute anyway, materialized
@@ -1266,29 +1179,6 @@ object CorpusStream {
           .withColumn("batch_id", lit(key))
           .coalesce(1),
         lblTable, "batch_id", key))
-    // emit-index table: `eb` is a data column, so folding many batch
-    // partitions into one `c` partition loses no mapping. The folded
-    // PLAIN-numeric batch keys are recorded in the covered-keys marker
-    // BEFORE their directories are deleted (re-folded `c` keys were
-    // recorded at their own fold): coverage stays structurally
-    // checkable after the fold. Crash windows are safe in both orders —
-    // keys both in the marker and still present just count twice in a
-    // union, and a crash before the append leaves the sources present
-    // (covered via the live listing) for the re-run to append again.
-    val emitTable = EmitState.of(stateTable)
-    val foldEmit = foldPk(EmitState, "emit", srcs => {
-      val folded = srcs.flatMap(k => scala.util.Try(k.toLong).toOption)
-      if (folded.nonEmpty) {
-        // a torn/legacy prior marker decodes to absent: its keys are
-        // re-recorded here only if their directories still exist (they
-        // do — this fold is what deletes them); already-deleted ones
-        // stay safely uncovered until the fallback scan ages them out
-        val prior = catalog.readMarker(emitTable, CoveredKeysMarker)
-          .flatMap(decodeCoveredKeys).getOrElse(Seq.empty)
-        catalog.writeMarker(emitTable, CoveredKeysMarker,
-          encodeCoveredKeys(prior ++ folded.map(k => (k, k))))
-      }
-    })
     // The five folds touch DISJOINT tables (all mutated only under this
     // state table's lock, so the outer lock covers them all) and each is
     // a self-contained write-target-then-delete-sources unit whose crash
@@ -1298,7 +1188,7 @@ object CorpusStream {
     // final state in any interleaving.
     graft.core.Par.concurrently(Seq(
         foldPk(SketchState, "sketch"), foldPk(BandsState, "bands"),
-        foldLbl, foldEmit, foldPk(FpState, "fp")))
+        foldLbl, foldPk(EmitState, "emit"), foldPk(FpState, "fp")))
       .exists(identity)
   }
 
@@ -1373,8 +1263,10 @@ object CorpusStream {
     // 2. sketch state from EARLIER batches (a replay of this batch
     //    excludes its own half-written partition, so reprocessing is
     //    idempotent end-to-end). Shape-aware lazy union (round 12 —
-    //    batch partitions may be pk-split); only the LEGACY fallbacks
-    //    below ever evaluate it fully, the hot paths read pruned.
+    //    batch partitions may be pk-split); only an over-cap cross
+    //    cascade evaluates it fully, the other paths read pruned. The
+    //    read refuses a state in an older format
+    //    ([[requireCurrentFormat]]) before anything is written.
     //    A table whose only partition is this batch's own reads as
     //    null — the fresh-state path, which a batch-0 replay re-takes.
     val state =
@@ -1383,28 +1275,19 @@ object CorpusStream {
           catalog.listPartitions(stateTable, "batch_id")
             .filter(_ != batchKey),
           None).orNull
-    // (the width comes from the sketch files' footers; only legacy
-    // files without it cost a head-row probe job)
     if (state != null)
-      jd(batch.sparkSession, s"b$batchKey state width") {
-        requireCompatibleState(state, geom, stateTable, threshold) }
+      requireCompatibleState(state, geom, stateTable, threshold)
     // persist the local batch: the batch collect below reads it, and a
     // batch that leaves the driver path reads it again
     val localDeduped = graft.core.Fence.soft(localDeduped0)
     release += localDeduped
     val spark = batch.sparkSession
-    // 3. the exact-dedup gate's inputs. The `_fp` and `_bands` indexes
-    //    ([[indexesCover]]) are backfilled first where they miss a
-    //    sketch batch; then ONE job ([[boundedCollect]], `batch
-    //    collect`) brings the batch's exact size, its first
+    // 3. the exact-dedup gate's inputs. ONE job ([[boundedCollect]],
+    //    `batch collect`) brings the batch's exact size, its first
     //    DriverVerifyIdCap + 1 rows per partition with their
     //    fingerprints, and the fp pk buckets the gate's `_fp` read
     //    prunes to on either path (fp equality implies pk equality, so
     //    the pruning loses no twin).
-    val (fpCovered, bandsCovered) =
-      if (state == null) (false, false)
-      else indexesCover(catalog, stateTable, batchKey, pkSplitMinRows,
-        geom)
     val Seq(collected) = jd(spark, s"b$batchKey batch collect") {
       boundedCollect(Seq(localDeduped.select(col("doc_id"), col("text"),
           col("lang"), fp.as("fp"), fpPkCol(fp).as("__pk")) ->
@@ -1416,15 +1299,13 @@ object CorpusStream {
     //    rows colliding with the keys of every collected doc (a superset
     //    of the gate's survivors'), and [[driverBatch]] runs the gate,
     //    the cascade ([[driverCascade]]) and builds step 6's rows as
-    //    local relations. Past a cap, or when another writer holds the
-    //    lease a `_bands` backfill needs, [[distributedBatch]] runs
-    //    the same steps as Spark jobs, each labelled with why
+    //    local relations. Past a cap, [[distributedBatch]] runs the
+    //    same steps as Spark jobs, each labelled with why
     //    ([[FallbackKey]]). Either way the cross pairs arrive as driver
     //    rows (`pairRows`, up to MergeGraphCap + 1); `crossPairs`
     //    re-derives their frame for an over-cap batch only.
     val onDriver: Either[String, GatedBatch] =
       if (collected.n > DriverVerifyIdCap) Left("over id cap")
-      else if (state != null && !bandsCovered) Left("legacy bands")
       else {
         val signer = new MinHashLSH.Signer(3, geom.numPerm,
           Array.emptyLongArray)
@@ -1432,7 +1313,7 @@ object CorpusStream {
         val signed = rows.map(r => signer(r.getString(1)))
         val seen =
           if (state == null) Some(SeenState(Nil, Nil))
-          else seenState(catalog, stateTable, batchKey, state, fpCovered,
+          else seenState(catalog, stateTable, batchKey,
             rows.flatMap(r => Option(r.getString(3))).distinct,
             collected.keys,
             signed.flatMap(s => MinHashLSH.driverBands(0L, s.n, s.sig, geom))
@@ -1443,9 +1324,8 @@ object CorpusStream {
       }
     val gb = onDriver.fold(why => {
         spark.sparkContext.setLocalProperty(FallbackKey, why)
-        distributedBatch(catalog, stateTable, batchKey, state, bandsCovered,
-          fpCovered, collected.keys, localDeduped, release, threshold,
-          geom)
+        distributedBatch(catalog, stateTable, batchKey, state,
+          collected.keys, localDeduped, release, threshold, geom)
       }, identity)
     val (newDocs, labelsOpt, pairRows) = (gb.newDocs, gb.labels,
       gb.pairRows)
@@ -1522,8 +1402,7 @@ object CorpusStream {
       .drop("label", "__fl")
     // dethroned canonicals leave the output before this batch commits.
     // Affected partitions come from the pk-pruned EMIT INDEX (round 11
-    // — [[EmitState]]; legacy warehouses fall back to the full
-    // output semi-join scan), are read by explicit path, and rewrite
+    // — [[EmitState]]), are read by explicit path, and rewrite
     // in ONE dynamic-overwrite job under the output table's writer
     // lock — a per-partition loop pays one serial Spark job per
     // directory (measured ~100 s/batch on a merge-heavy run of the
@@ -1707,7 +1586,9 @@ object CorpusStream {
     * change the corpus a consumer already trained on; if the cluster
     * itself must be reconsidered, re-run the batch pipeline over the
     * retained sources.) Idempotent — a second run, or an id that was
-    * never emitted (a dropped duplicate, an unknown id), is a no-op. */
+    * never emitted (a dropped duplicate, an unknown id), is a no-op. A
+    * state in an older format is refused before any output is touched
+    * ([[requireCurrentFormat]]). */
   def removeDocs(catalog: TableCatalog, stateTable: String,
                  outTable: String, ids: DataFrame,
                  idCol: String = "doc_id"): Unit = {
@@ -1725,6 +1606,8 @@ object CorpusStream {
           col(idCol).cast("string"),
           lit("' is not a long doc_id — the takedown would silently " +
             "miss it")))).otherwise(tryLong)
+    requireCurrentFormat(catalog, stateTable,
+      catalog.listPartitions(stateTable, "batch_id"))
     val retr = graft.core.Fence.soft(
       ids.select(asLong.as("__r")).distinct())
     // the sentinel matches no real batch key, so every committed
@@ -1777,64 +1660,20 @@ object CorpusStream {
   }
 
   /** Output partitions holding at least one retracted doc, grouped by
-    * the (epoch) table they live in. Fast path: the emit index
-    * ([[EmitState]]) pruned to the retracted ids' pk buckets — reads
-    * kilobytes of (id, eb) rows however large and however many epochs
-    * the output has grown. Fallback when the index doesn't cover every
-    * BASE-table partition (a warehouse whose early batches predate the
-    * index): the legacy column-pruned full semi-join over the base
-    * table only — epoch tables never need the fallback, because they
-    * are written exclusively by epoch-aware code whose emit rows
-    * precede every output partition. */
+    * the (epoch) table they live in: the emit index ([[EmitState]])
+    * pruned to the retracted ids' pk buckets — reads kilobytes of
+    * (id, eb) rows however large and however many epochs the output
+    * has grown. */
   private def affectedOutputPartitions(catalog: TableCatalog,
       stateTable: String, outTable: String, batchKey: String,
       retr: DataFrame): Seq[(String, Seq[String])] = {
-    val emitTable = EmitState.of(stateTable)
-    val baseKeys = catalog.listPartitions(outTable, "batch_id")
-      .filter(_ != batchKey)
-    // STRUCTURAL coverage (round 12 — replaces the `_covered_from`
-    // low-water id, whose "batch ids are monotone with processing
-    // order" assumption misclassified pre-index output partitions
-    // when a post-upgrade batch ran with a smaller id): an output
-    // partition is covered iff its emit partition still EXISTS, or
-    // its key was recorded by a compaction fold (`_covered_keys`).
-    // The legacy low-water marker is still honored for warehouses
-    // whose pre-round-12 compactions already folded their emit keys
-    // away — there the key list is unrecoverable and the documented
-    // monotonicity caveat stands until those partitions age out.
-    val liveEmit: Set[String] =
-      if (!catalog.tableExists(emitTable)) Set.empty
-      else catalog.listPartitions(emitTable, "batch_id").toSet - batchKey
-    val foldedKeys = catalog.readMarker(emitTable, CoveredKeysMarker)
-      .flatMap(decodeCoveredKeys).getOrElse(Seq.empty)
-    val coveredFrom = catalog.readMarker(emitTable, CoveredFromMarker)
-      .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
-    val baseCovered = baseKeys.forall(k =>
-      liveEmit.contains(k) ||
-        scala.util.Try(k.toLong).toOption.exists(n =>
-          rangesContain(foldedKeys, n) || coveredFrom.exists(n >= _)))
-    // the pk-pruned index lookup serves every epoch table's hits (and
-    // the base table's, when covered)
-    val idxHits: Seq[String] = {
-      val pks = retr.select(emitPkCol(col("__r")).as("pk"))
-        .distinct().collect().map(_.getLong(0)).toSet
-      prunedStateRead(catalog, EmitState, stateTable, batchKey,
-          pks) match {
-        case None => Seq.empty
-        case Some(em) =>
-          em.join(retr, col("id") === col("__r"), "left_semi")
-            .select(col("eb")).distinct()
-            .collect().map(_.getString(0)).toSeq
-      }
-    }
-    val ebHits =
-      if (baseCovered) idxHits
-      else idxHits.filter(EpochEb.matches) ++ (
-        if (baseKeys.isEmpty) Seq.empty
-        else catalog.read(outTable)
-          .filter(col("batch_id").cast("string") =!= batchKey)
-          .join(retr, col("doc_id") === col("__r"), "left_semi")
-          .select(col("batch_id").cast("string").as("eb")).distinct()
+    val pks = retr.select(emitPkCol(col("__r")).as("pk"))
+      .distinct().collect().map(_.getLong(0)).toSet
+    val ebHits: Seq[String] =
+      prunedStateRead(catalog, EmitState, stateTable, batchKey, pks)
+        .fold(Seq.empty[String])(_
+          .join(retr, col("id") === col("__r"), "left_semi")
+          .select(col("eb")).distinct()
           .collect().map(_.getString(0)).toSeq)
     // stale index rows may name partitions an earlier retraction
     // already deleted — keep only what each table actually has (one
@@ -1843,35 +1682,10 @@ object CorpusStream {
       .filter(_._2 != batchKey)
       .groupBy(_._1).toSeq.sortBy(_._1)
       .flatMap { case (tbl, pairs) =>
-        val existing =
-          (if (tbl == outTable) baseKeys
-           else catalog.listPartitions(tbl, "batch_id")).toSet
+        val existing = catalog.listPartitions(tbl, "batch_id").toSet
         val keys = pairs.map(_._2).distinct.filter(existing)
         if (keys.isEmpty) None else Some(tbl -> keys)
       }
-  }
-
-  /** The seen corpus's sig-carrying band rows for the cross-batch
-    * candidate join. Fast path: the `_bands` state table, pruned to the
-    * `pk` sub-partitions this batch's own band keys hash into — the
-    * collected pk list is bounded by [[StatePartitions]] (a constant-
-    * size driver list, not data), and a batch whose keys cover few
-    * buckets skips the rest of the stored corpus entirely; since
-    * `pk` is a function of `band_key`, pruning by the new side's pk
-    * set loses no colliding pair. Fallback (bands table not covering
-    * every sketch batch and its backfill's lease held elsewhere, see
-    * [[indexesCover]]): re-band the sketch state in memory, the old
-    * per-batch linear scan. */
-  private def seenBandFrame(catalog: TableCatalog, stateTable: String,
-      batchKey: String, state: DataFrame, newBands: DataFrame,
-      geom: graft.sim.LshGeometry, covered: Boolean): DataFrame = {
-    if (!covered) MinHashLSH.bandFrameWithSig(state, geom)
-    else {
-      val pks = newBands.select(pkCol.as("pk")).distinct()
-        .collect().map(_.getLong(0)).toSet
-      prunedStateRead(catalog, BandsState, stateTable, batchKey, pks)
-        .getOrElse(newBands.limit(0))
-    }
   }
 
   /** [[readPkTable]] of the sketch table's batch partitions `keys`:
@@ -1891,67 +1705,6 @@ object CorpusStream {
     readSketchBatches(catalog, stateTable,
         catalog.listPartitions(stateTable, "batch_id"), None)
       .getOrElse(catalog.read(stateTable))
-
-  /** Whether the pk-bucketed `_fp` index ([[FpState]]) and `_bands`
-    * index ([[BandsState]]) cover every stored sketch batch: `_fp` lets
-    * the exact-dedup gate read only the buckets a batch's own
-    * fingerprints hash into, `_bands` lets the cascade read only its
-    * colliding band buckets.
-    *
-    * A gap is BACKFILLED here from the sketch rows — `_fp` from their
-    * `fp` column, `_bands` by re-banding their (`id`, `n`, `sig`) —
-    * one column-pruned pass per missing batch, under the state's
-    * writer lock so concurrent pipelines don't interleave overwrites.
-    * Two shapes leave one: a state written by pre-index code, and a
-    * compaction killed after its sketch fold committed but before the
-    * index's own fold did (the backfilled `c` partition then sits
-    * beside the plain sources it duplicates, which that index's next
-    * fold collapses — [[compactState]]'s stranded-target dedup). If the
-    * lock is held elsewhere the gap stays: the gate reads the full fp
-    * column, the batch runs distributed (`legacy bands`), and the next
-    * batch retries. */
-  private def indexesCover(catalog: TableCatalog, stateTable: String,
-      batchKey: String, pkSplitMinRows: Long,
-      geom: graft.sim.LshGeometry): (Boolean, Boolean) = {
-    def keysOf(table: String): Set[String] =
-      if (!catalog.tableExists(table)) Set.empty
-      else catalog.listPartitions(table, "batch_id").toSet - batchKey
-    val skKeys = keysOf(stateTable)
-    val fpGap = skKeys -- keysOf(FpState.of(stateTable))
-    val bandsGap = skKeys -- keysOf(BandsState.of(stateTable))
-    if (fpGap.isEmpty && bandsGap.isEmpty) (true, true)
-    else
-      // heartbeated hold (round 13): a backfill over a 10^10-doc
-      // pre-index state is one column-pruned pass per missing batch
-      // and can outlive the 15-min lease — a bare acquire would let a
-      // waiter break the lock mid-write
-      catalog.withTableLockIfFree(stateTable) {
-        def sketch(b: String, cols: String*): DataFrame =
-          catalog.readPaths(stateTable,
-              Seq(catalog.partitionPath(stateTable, "batch_id", b)),
-              SketchDataSchema)
-            .select(cols.map(col): _*)
-        // the live writes' layout rule: an fp row per sketch row, a
-        // band row per sketch row and band
-        def split(b: String, rowsPerDoc: Int): Boolean =
-          splitLayoutFor(catalog, stateTable, Seq(b),
-            (pkSplitMinRows + rowsPerDoc - 1) / rowsPerDoc)
-        fpGap.foreach { b =>
-          jd(catalog.spark, s"b$batchKey fp backfill") {
-            writeState(catalog, FpState, stateTable, b,
-              sketch(b, "id", "fp"), split(b, 1))
-          }
-        }
-        bandsGap.foreach { b =>
-          jd(catalog.spark, s"b$batchKey bands backfill") {
-            writeState(catalog, BandsState, stateTable, b,
-              MinHashLSH.bandFrameWithSig(sketch(b, "id", "n", "sig"), geom),
-              split(b, geom.bands))
-          }
-        }
-        (true, true)
-      }.getOrElse((fpGap.isEmpty, bandsGap.isEmpty))
-  }
 
   /** Launch the incremental pipeline over a streaming document frame
     * (columns doc_id, text, lang). Output accumulates in `outTable`,

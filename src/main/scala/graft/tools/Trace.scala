@@ -18,7 +18,7 @@ import graft.Bench
   * `local[SPARK_GRAFT_CPUS]`. For the faster pass it prints every job
   * and its completed stages, then one row per `spark.job.description`
   * (jobs, stages, tasks, job-seconds) — the CorpusStream phase labels
-  * (`compact <table>`, `state width`, `signatures`, ...) become a
+  * (`compact <table>`, `seen state`, `signatures`, ...) become a
   * per-phase table.
   *
   * Usage: `runMain graft.tools.Trace <query>...`. For a conf A/B, pass

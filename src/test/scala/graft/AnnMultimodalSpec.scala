@@ -1296,19 +1296,23 @@ class AnnMultimodalSpec extends SparkSpec {
     val meta = cat.read(t).collect()(0)
     assert(meta.getString(0) == kc.kind)
     assert(meta.getLong(meta.fieldIndex("indexed_n")) == 24L)
-    // the legacy meta shapes readMeta still serves: no indexed_n
-    // (never appended), no pq_m/pq_k (the gate geometry), no metric
-    // (cosine) — rewritten in one row, the probe must not move
+    // older meta shapes (no indexed_n, no pq_m/pq_k, no metric) are
+    // refused by name, and the current row serves again once restored
     def canon() = kc.probe(cat, t, vecs).collect().map(_.toString)
       .sorted.toSeq
     val before = canon()
     assert(before.nonEmpty)
-    val legacy = cat.read(t).drop("indexed_n", "pq_m", "pq_k", "metric")
-    val legacyRows = legacy.collect()
-    cat.writeFull(spark.createDataFrame(
-      java.util.Arrays.asList(legacyRows: _*), legacy.schema), t)
-    assert(cat.read(t).columns.toSeq ==
-      Seq("kind", "geometry", "dim", "fitted_n"))
+    // (a local copy: each rewrite replaces the files the read lists)
+    val read = cat.read(t)
+    val current = spark.createDataFrame(
+      java.util.Arrays.asList(read.collect(): _*), read.schema)
+    for (missing <- Seq("indexed_n", "pq_m", "pq_k", "metric")) {
+      cat.writeFull(current.drop(missing), t)
+      assert(!cat.read(t).columns.contains(missing))
+      val ex = intercept[Exception](canon())
+      assert(causes(ex).contains(s"no '$missing' column"), causes(ex))
+    }
+    cat.writeFull(current, t)
     assert(canon() == before)
   }
 

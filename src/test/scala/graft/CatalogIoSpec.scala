@@ -279,9 +279,14 @@ class CatalogIoSpec extends SparkSpec {
     // than interleave with the holder's deletes
     val wh2 = tmp("catlock2_")
     val cat2 = new TableCatalog(spark, wh2)
+    // sketch rows in the current state format: `sig` carries its width
+    // and the bottom-k column `sb` is present
     def skRow(b: String, id: Long) =
-      Seq((b, id, s"fp$id", Seq(id, id + 1), 2, Seq(id, id + 1)))
-        .toDF("batch_id", "id", "fp", "sh", "n", "sig")
+      Seq((b, id, s"fp$id", Seq(id, id + 1), 2, Seq(id, id + 1),
+          Seq(id, id + 1)))
+        .toDF("batch_id", "id", "fp", "sh", "n", "sig", "sb")
+        .withColumn("sig",
+          $"sig".as("sig", graft.sim.MinHashLSH.sigMeta(2)))
     cat2.writePartition(skRow("0", 1L), "s", "batch_id", "0")
     cat2.writePartition(skRow("1", 2L), "s", "batch_id", "1")
     assert(cat2.tryAcquireTableLock("s", owner = "other-pipeline"))
@@ -411,8 +416,8 @@ class CatalogIoSpec extends SparkSpec {
     assert(b.withTableLockIfFree("t", owner = "B") {
       fail("must not enter under a foreign lock") }.isEmpty)
     a.releaseTableLock("t")
-    // free: the section runs past the lease (the fp-backfill /
-    // compaction shape) and the heartbeat keeps B out throughout
+    // free: the section runs past the lease (the compaction shape)
+    // and the heartbeat keeps B out throughout
     val r = a.withTableLockIfFree("t", owner = "A", leaseMs = 400) {
       Thread.sleep(600)
       val mid = b.tryAcquireTableLock("t", owner = "B", leaseMs = 400)

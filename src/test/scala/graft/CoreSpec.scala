@@ -138,7 +138,8 @@ class CoreSpec extends SparkSpec {
         (2L, nanos0 + 3600L * 1000000000L, 8L, "view", 2.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    assert(Tables.tsStoredAsNanos(spark, s"$dir/events.parquet"))
+    assert(Tables.tsEncodingOf(spark, s"$dir/events.parquet") ==
+      Tables.TsEncoding.RawNanos)
     val ev = Tables.load(spark, dir, "events")
     assert(ev.schema("ts").dataType ==
       org.apache.spark.sql.types.TimestampType)
@@ -155,7 +156,8 @@ class CoreSpec extends SparkSpec {
         "click", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$mdir/events.parquet")
-    assert(!Tables.tsStoredAsNanos(spark, s"$mdir/events.parquet"))
+    assert(Tables.tsEncodingOf(spark, s"$mdir/events.parquet") !=
+      Tables.TsEncoding.RawNanos)
     assert(Tables.load(spark, mdir, "events")
       .select(date_format($"ts", "yyyy-MM-dd")).as[String].collect()
       .toSeq == Seq("2024-03-01"))
@@ -174,7 +176,8 @@ class CoreSpec extends SparkSpec {
     }
     val micros = write(java.nio.file.Files
       .createTempDirectory("graft-evu").toString, 1709251200L * 1000000L)
-    assert(!Tables.tsStoredAsNanos(spark, s"$micros/events.parquet"))
+    assert(Tables.tsEncodingOf(spark, s"$micros/events.parquet") !=
+      Tables.TsEncoding.RawNanos)
     assert(Tables.load(spark, micros, "events")
       .select(date_format($"ts", "yyyy-MM-dd HH:mm:ss")).as[String]
       .collect().toSeq == Seq("2024-03-01 00:00:00"))

@@ -494,34 +494,6 @@ class StreamingSpec extends SparkSpec {
       .toSet == Set(33L))
   }
 
-  test("a pre-index state backfills the fp table from the sketch " +
-       "rows' own fp column, and the gate still converges") {
-    val P = fam(10, 12); val A = fam(11, 40); val U = fam(9, 40)
-    val tA = txt("docF", P, A); val tU = txt("docU", U)
-    val wh = java.nio.file.Files.createTempDirectory("corpus_fb_").toString
-    val cat = new graft.catalog.TableCatalog(spark, wh)
-    def run(id: Long, t: String, b: Long): Unit =
-      CorpusStream.processBatch(
-        Seq((id, t, "en")).toDF("doc_id", "text", "lang"),
-        cat, "fb_seen", "fb_out", b, threshold = 0.45, admit = df => df)
-    run(33L, tA, 0L)
-    run(21L, tU, 1L)
-    // simulate a warehouse written by pre-fp-index code
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(cat.tablePath("fb_seen_fp")))
-    assert(!cat.tableExists("fb_seen_fp"))
-    // larger-id fp twin: must drop at the (backfilled) gate
-    run(40L, tA, 2L)
-    assert(cat.read("fb_out").select($"doc_id").as[Long].collect()
-      .toSet == Set(33L, 21L))
-    // the backfill recreated coverage for the pre-index batches
-    assert(cat.listPartitions("fb_seen_fp", "batch_id").toSet
-      .intersect(Set("0", "1")) == Set("0", "1"))
-  }
-
   test("retraction rewrites only the affected partition: survivors " +
        "stay and an untouched output partition is preserved") {
     val S = fam(0, 40); val X = fam(1, 30); val Y = fam(2, 30)
@@ -570,8 +542,8 @@ class StreamingSpec extends SparkSpec {
           admit = df => df, pkSplitMinRows = minRows)
       run(21L, txt("docT", T), 0L)
       run(22L, txt("docV", U), 1L) // unrelated — zero-cross fast path
-      // plant an UNREADABLE data file in the unaffected partition: the
-      // legacy full-output semi-join would scan (and choke on) it; the
+      // plant an UNREADABLE data file in the unaffected partition: a
+      // full-output semi-join would scan (and choke on) it; the
       // emit-index path must never touch that partition
       java.nio.file.Files.write(
         java.nio.file.Paths.get(
@@ -590,83 +562,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("retraction falls back to the full output scan when the emit " +
-       "index does not cover the output (pre-index warehouse)") {
-    val T = fam(9, 60)
-    val wh = java.nio.file.Files.createTempDirectory("corpus_lf_").toString
-    val cat = new graft.catalog.TableCatalog(spark, wh)
-    def run(id: Long, t: String, b: Long): Unit =
-      CorpusStream.processBatch(
-        Seq((id, t, "en")).toDF("doc_id", "text", "lang"),
-        cat, "lf_seen", "lf_out", b, threshold = 0.45, admit = df => df)
-    run(21L, txt("docT", T), 0L)
-    // simulate a warehouse written by pre-index code: no emit table,
-    // no coverage marker
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(cat.tablePath("lf_seen_emit")))
-    assert(!cat.tableExists("lf_seen_emit"))
-    run(14L, txt("docU", T.drop(5)), 1L)
-    assert(cat.read("lf_out").select($"doc_id").as[Long].collect()
-      .toSet == Set(14L))
-  }
-
-  test("covered-keys range codec merges adjacency and drops junk " +
-       "tokens (torn marker writes degrade, never crash)") {
-    assert(CorpusStream.encodeRanges(
-      Seq((0L, 0L), (1L, 1L), (2L, 2L), (5L, 5L))) == "0-2,5")
-    assert(CorpusStream.parseRanges("0-2,5") == Seq((0L, 2L), (5L, 5L)))
-    assert(CorpusStream.parseRanges("junk, 7, 9-x, 3-4") ==
-      Seq((3L, 4L), (7L, 7L)))
-    assert(CorpusStream.encodeRanges(
-      CorpusStream.parseRanges("0-3,2-6")) == "0-6")
-    // the on-disk form carries a trailing terminator so a TORN write —
-    // a strict byte prefix, which can itself be a valid-but-wrong
-    // range-set ("100-120" torn to "10") — decodes as ABSENT, never as
-    // fabricated coverage
-    val enc = CorpusStream.encodeCoveredKeys(Seq((100L, 120L)))
-    assert(enc == "100-120;")
-    assert(CorpusStream.decodeCoveredKeys(enc) == Some(Seq((100L, 120L))))
-    (1 until enc.length).foreach { cut =>
-      assert(CorpusStream.decodeCoveredKeys(enc.take(cut)).isEmpty,
-        s"torn prefix '${enc.take(cut)}' must decode as absent")
-    }
-    // legacy (pre-terminator) markers also read as absent — the safe
-    // full-scan fallback, not a wrong answer
-    assert(CorpusStream.decodeCoveredKeys("0-2,5").isEmpty)
-  }
-
-  test("an output partition with no emit partition (pre-index) forces " +
-       "the fallback even when the new batch id is SMALLER — the " +
-       "low-water-id misclassification is gone") {
-    val T = fam(9, 60)
-    val wh = java.nio.file.Files.createTempDirectory("corpus_cv_").toString
-    val cat = new graft.catalog.TableCatalog(spark, wh)
-    def run(id: Long, t: String, b: Long): Unit =
-      CorpusStream.processBatch(
-        Seq((id, t, "en")).toDF("doc_id", "text", "lang"),
-        cat, "cv_seen", "cv_out", b, threshold = 0.45, admit = df => df)
-    // batch 5 emits doc 21; then erase its emit partition AND markers —
-    // the shape of a warehouse whose early batches predate the index
-    run(21L, txt("docT", T), 5L)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(
-      cat.partitionPath("cv_seen_emit", "batch_id", "5")))
-    // a post-upgrade batch with a SMALLER id (a new checkpoint over an
-    // old warehouse): with the round-11 low-water marker this batch
-    // would have stamped coveredFrom=2 and classified partition 5 as
-    // indexed — silently never retracting 21. The structural check
-    // sees no emit partition for outKey 5 and takes the full scan.
-    run(14L, txt("docU", T.drop(5)), 2L)
-    assert(cat.read("cv_out").select($"doc_id").as[Long].collect()
-      .toSet == Set(14L))
-  }
-
   test("coverage survives emit-table compaction via the folded-keys " +
        "marker, and the retraction still resolves through the " +
        "compacted emit rows") {
@@ -681,15 +576,11 @@ class StreamingSpec extends SparkSpec {
     run(21L, txt("docT", T), 0L)
     run(22L, txt("docV", U), 1L)
     // batch 2 first compacts (2 committed batches >= compactEvery):
-    // emit partitions 0 and 1 fold into c1 and their keys land in the
-    // marker; the retraction of 21 then resolves through the folded
-    // emit rows (eb rides as a data column)
+    // emit partitions 0 and 1 fold into c1; the retraction of 21 then
+    // resolves through the folded emit rows (eb rides as a data column)
     run(14L, txt("docU", T.drop(5)), 2L)
     assert(cat.listPartitions("ck_seen_emit", "batch_id")
       .forall(k => k == "c1" || k == "2"))
-    val mk = cat.readMarker("ck_seen_emit", "_covered_keys")
-    assert(mk.flatMap(CorpusStream.decodeCoveredKeys)
-      .contains(Seq((0L, 1L))), s"marker was $mk")
     assert(cat.read("ck_out").select($"doc_id").as[Long].collect()
       .toSet == Set(14L, 22L))
     assert(cat.listPartitions("ck_out", "batch_id").toSet == Set("1", "2"))
@@ -1209,7 +1100,7 @@ class StreamingSpec extends SparkSpec {
     assert(CorpusStream.readState(cat, "jb_seen").count() == 80)
     // the driver-path sketch partitions (batches 2 and 3) carry the sig
     // width in their footers — the read restores it from every footer,
-    // which is why batch 3 ran no `state width` probe
+    // so the width guard runs no Spark job
     assert(cat.listPartitions("jb_seen", "batch_id").toSet ==
       Set("c1", "2", "3"))
     // and the batch's output partition is one file, as a distributed
@@ -1370,52 +1261,145 @@ class StreamingSpec extends SparkSpec {
     assert(want.map(_._1).subsetOf(Set(0L)))
   }
 
-  test("a compaction killed between its sketch and _bands folds: the " +
-       "next batch backfills _bands from the sketch partition and stays " +
-       "on the driver path, converging to batch dp01") {
-    // 40 seeded random words per doc (no near-dups among them), plus
-    // batch 3's doc 95: doc 5's text behind one more word (another
-    // fingerprint), a near-dup the cascade finds only through the
-    // stored band rows
-    def text(i: Int) = {
-      val rnd = new scala.util.Random(i)
-      Seq.fill(40)((0 until 6).map(_ => ('a' + rnd.nextInt(26)).toChar)
-        .mkString).mkString(" ")
-    }
-    def rows(ids: Range) = ids.map(i => (i.toLong, text(i), "en"))
+  /** Four batches of 40-seeded-random-word docs (no near-dups among
+    * them), plus batch 3's doc 95: doc 5's text behind one more word
+    * (another fingerprint), a near-dup the cascade finds only through
+    * the stored band rows. Batches 0-2 run with a compaction cadence of
+    * 3; then a compaction is killed between its sketch and `_bands`
+    * folds: the sketch fold committed (`c2`), the `_bands` fold did not
+    * (its pre-fold partitions 0-2 remain). Returns the warehouse, its
+    * catalog, the batch runner and batch dp01's result over all four
+    * batches. */
+  private def killedBandsFold(name: String): (String,
+      graft.catalog.TableCatalog, Int => Unit, Set[(Long, String, Int)]) = {
+    def rows(ids: Range) = ids.map(i => (i.toLong, randomWords(i), "en"))
     val batches = Seq(rows(0 until 10), rows(10 until 20), rows(20 until 30),
-      rows(30 until 39) :+ ((95L, "extra " + text(5), "en")))
-    val cat = new graft.catalog.TableCatalog(spark,
-      java.nio.file.Files.createTempDirectory("corpus_bf_").toString)
+      rows(30 until 39) :+ ((95L, "extra " + randomWords(5), "en")))
+    val wh = java.nio.file.Files.createTempDirectory(s"corpus_${name}_")
+      .toString
+    val cat = new graft.catalog.TableCatalog(spark, wh)
     def run(b: Int) = CorpusStream.processBatch(
-      batches(b).toDF("doc_id", "text", "lang"), cat, "bf_seen", "bf_out",
-      b.toLong, admit = df => df, compactEvery = 3)
+      batches(b).toDF("doc_id", "text", "lang"), cat, s"${name}_seen",
+      s"${name}_out", b.toLong, admit = df => df, compactEvery = 3)
     (0 until 3).foreach(run)
-    // the crash shape: the sketch fold committed, the _bands fold did
-    // not — _bands keeps its pre-compaction partitions
-    val bandsDir = java.nio.file.Paths.get(cat.tablePath("bf_seen_bands"))
-    val saved = java.nio.file.Files.createTempDirectory("corpus_bf_saved_")
+    val bandsDir =
+      java.nio.file.Paths.get(cat.tablePath(s"${name}_seen_bands"))
+    val saved =
+      java.nio.file.Files.createTempDirectory(s"corpus_${name}_saved_")
     org.apache.commons.io.FileUtils.copyDirectory(bandsDir.toFile,
       saved.toFile)
-    assert(CorpusStream.compactState(cat, "bf_seen", "3"))
+    assert(CorpusStream.compactState(cat, s"${name}_seen", "3"))
     org.apache.commons.io.FileUtils.deleteDirectory(bandsDir.toFile)
     org.apache.commons.io.FileUtils.copyDirectory(saved.toFile,
       bandsDir.toFile)
-    assert(cat.listPartitions("bf_seen", "batch_id") == Seq("c2"))
-    assert(cat.listPartitions("bf_seen_bands", "batch_id").toSet ==
+    assert(cat.listPartitions(s"${name}_seen", "batch_id") == Seq("c2"))
+    assert(cat.listPartitions(s"${name}_seen_bands", "batch_id").toSet ==
       Set("0", "1", "2"))
-    val labels = jobsStartedBy(run(3)).map(_._1)
-    assert(labels.exists(_.endsWith("b3 bands backfill")),
-      labels.mkString("\n"))
-    assert(!labels.exists(_.endsWith("]")), labels.mkString("\n"))
     val want = batchChain(batches.flatten.toDF("doc_id", "text", "lang"),
       df => df, graft.text.CorpusPipeline.NearDupThreshold)
     assert(!want.exists(_._1 == 95L))
-    assert(CorpusStream.readOutput(cat, "bf_out")
+    (wh, cat, run, want)
+  }
+
+  /** 40 random six-letter words seeded by `i`: trigram Jaccard between
+    * two such docs is ~0.01. */
+  private def randomWords(i: Int): String = {
+    val rnd = new scala.util.Random(i)
+    Seq.fill(40)((0 until 6).map(_ => ('a' + rnd.nextInt(26)).toChar)
+      .mkString).mkString(" ")
+  }
+
+  private def streamedOutput(cat: graft.catalog.TableCatalog,
+      outTable: String): Set[(Long, String, Int)] =
+    CorpusStream.readOutput(cat, outTable)
       .select($"doc_id", $"lang", $"n_toks")
-      .as[(Long, String, Int)].collect().toSet == want)
-    assert(cat.listPartitions("bf_seen", "batch_id").toSet
-      .subsetOf(cat.listPartitions("bf_seen_bands", "batch_id").toSet))
+      .as[(Long, String, Int)].collect().toSet
+
+  test("a compaction killed between its sketch and _bands folds: the " +
+       "next batch reads _bands under their pre-fold keys on the driver " +
+       "path, converges to batch dp01, and the next compaction aligns " +
+       "the keys") {
+    val (_, cat, run, want) = killedBandsFold("bf")
+    val labels = jobsStartedBy(run(3)).map(_._1)
+    assert(!labels.exists(_.contains("backfill")), labels.mkString("\n"))
+    assert(!labels.exists(_.endsWith("]")), labels.mkString("\n"))
+    assert(labels.exists(_.endsWith("b3 seen state")), labels.mkString("\n"))
+    assert(streamedOutput(cat, "bf_out") == want)
+    assert(CorpusStream.compactState(cat, "bf_seen", "4"))
+    assert(cat.listPartitions("bf_seen", "batch_id") ==
+      cat.listPartitions("bf_seen_bands", "batch_id"))
+    assert(cat.listPartitions("bf_seen", "batch_id") == Seq("c3"))
+  }
+
+  test("a batch after a killed compaction stays on the driver path while " +
+       "another owner holds the state's lock, and converges") {
+    val (wh, cat, run, want) = killedBandsFold("bl")
+    val other = new graft.catalog.TableCatalog(spark, wh)
+    assert(other.tryAcquireTableLock("bl_seen", owner = "other"))
+    try {
+      val labels = jobsStartedBy(run(3)).map(_._1)
+      assert(!labels.exists(_.endsWith("]")), labels.mkString("\n"))
+      assert(labels.exists(_.endsWith("b3 seen state")),
+        labels.mkString("\n"))
+    } finally other.releaseTableLock("bl_seen")
+    assert(streamedOutput(cat, "bl_out") == want)
+  }
+
+  test("a sketch partition in an older format — no sig width in its " +
+       "footer, or no sb column — makes processBatch and removeDocs " +
+       "raise, naming the table, with no output partition changed") {
+    import org.apache.spark.sql.types.Metadata
+    import scala.jdk.CollectionConverters._
+    def batch(ids: Range) = ids.map(i => (i.toLong, randomWords(i), "en"))
+      .toDF("doc_id", "text", "lang")
+    val cat = new graft.catalog.TableCatalog(spark,
+      java.nio.file.Files.createTempDirectory("corpus_of_").toString)
+    def run(ids: Range, b: Long) = CorpusStream.processBatch(batch(ids),
+      cat, "of_seen", "of_out", b, admit = df => df)
+    run(0 until 10, 0L)
+    run(10 until 20, 1L)
+    val part = cat.partitionPath("of_seen", "batch_id", "1")
+    val read = spark.read.parquet(part)
+    // a local copy: the rewrites below replace the files `read` lists
+    val current = spark.createDataFrame(
+      java.util.Arrays.asList(read.collect(): _*), read.schema)
+    assert(graft.sim.MinHashLSH.sigWidthOf(current).nonEmpty)
+    assert(current.columns.contains("sb"))
+    def rewrite(df: org.apache.spark.sql.DataFrame): Unit =
+      df.coalesce(1).write.mode("overwrite").parquet(part)
+    def outFiles() = {
+      val root = java.nio.file.Paths.get(cat.tablePath("of_out"))
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => f.toString ->
+          java.nio.file.Files.getLastModifiedTime(f).toMillis).toSet
+      finally files.close()
+    }
+    val before = outFiles()
+    val emitted = streamedOutput(cat, "of_out")
+    assert(emitted.nonEmpty)
+    val older = Seq(
+      "records no `sig` width" -> current.withColumn("sig",
+        $"sig".as("sig", Metadata.empty)),
+      "has no `sb` column" -> current.drop("sb"))
+    for ((why, df) <- older) {
+      rewrite(df)
+      val exBatch = intercept[IllegalStateException](run(20 until 30, 2L))
+      val exRemove = intercept[IllegalStateException](
+        CorpusStream.removeDocs(cat, "of_seen", "of_out",
+          emitted.map(_._1).toSeq.toDF("doc_id")))
+      for (ex <- Seq(exBatch, exRemove)) {
+        assert(ex.getMessage.contains("'of_seen'"), ex.getMessage)
+        assert(ex.getMessage.contains("batch_id=1"), ex.getMessage)
+        assert(ex.getMessage.contains(why), ex.getMessage)
+      }
+      assert(outFiles() == before, why)
+      assert(streamedOutput(cat, "of_out") == emitted, why)
+    }
+    // the current format reads again
+    rewrite(current)
+    run(20 until 30, 2L)
+    assert(streamedOutput(cat, "of_out").size > emitted.size)
   }
 
   // three-batch seeded warehouse + the expected post-compaction state,
