@@ -847,6 +847,102 @@ object Ann {
       .select(col("q_id"), col("rank"), col("vec_id"), col(sn))
   }
 
+  /** One quantized side of [[sq8Score]] as the driver holds it: the
+    * codes (null when the array or any element is NULL, which makes the
+    * unrolled dot NULL), the integer self-dot and the scale, each NULL
+    * where its column is. */
+  private[ann] final case class Sq8Side(q: Array[Int], qq: java.lang.Long,
+                                        sc: java.lang.Double)
+
+  private[ann] object Sq8Side {
+    /** The side held in row `r` at columns `q`, `qq` and `sc`. `qq` -1:
+      * no self-dot column — it is [[sq8Quantized]]'s `<id>_qq`, the
+      * codes' long dot with themselves, an exact integer sum taken here.
+      * `sc` -1: no scale column, which only the cosine metric allows. */
+    def of(r: Row, q: Int, qq: Int, sc: Int): Sq8Side = {
+      val codes =
+        if (r.isNullAt(q)) null
+        else {
+          val s = r.getSeq[Any](q)
+          if (s.contains(null)) null
+          else s.iterator.map(_.asInstanceOf[Number].intValue).toArray
+        }
+      Sq8Side(codes,
+        if (qq < 0)
+          (if (codes == null) null
+           else Long.box(codes.iterator.map(c => c.toLong * c).sum))
+        else if (r.isNullAt(qq)) null
+        else Long.box(r.getLong(qq)),
+        if (sc < 0 || r.isNullAt(sc)) null else Double.box(r.getDouble(sc)))
+    }
+  }
+
+  /** [[sq8Score]] of one (corpus, query) pair on the driver: the same
+    * long dot over the first `dim` codes and the same association per
+    * metric, under SQL NULL semantics (None is NULL). */
+  private[ann] def sq8ScoreLocal(metric: String, dim: Int, d: Sq8Side,
+                                 q: Sq8Side): Option[Double] = {
+    val dot =
+      if (d.q == null || q.q == null) None
+      else {
+        var s = 0L; var i = 0
+        while (i < dim) { s += q.q(i).toLong * d.q(i); i += 1 }
+        Some(s.toDouble)
+      }
+    def long(x: java.lang.Long) = Option(x).map(_.longValue)
+    def dbl(x: java.lang.Double) = Option(x).map(_.doubleValue)
+    metric match {
+      case "cosine" =>
+        // the WHEN's OR under three-valued logic: only TRUE takes it
+        val zero = Seq(long(d.qq), long(q.qq)).map(_.map(_ == 0L))
+        if (zero.contains(Some(true))) Some(0.0)
+        else for (t <- dot; a <- long(d.qq); b <- long(q.qq))
+          yield t / (math.sqrt(a.toDouble) * math.sqrt(b.toDouble))
+      case "ip" =>
+        for (t <- dot; a <- dbl(d.sc); b <- dbl(q.sc))
+          yield (t * (a * b)) / 16129.0
+      case "l2" =>
+        for (t <- dot; dqq <- long(d.qq); qqq <- long(q.qq);
+             a <- dbl(d.sc); b <- dbl(q.sc))
+          yield -((dqq.toDouble * (a * a) + qqq.toDouble * (b * b)) -
+            t * (2.0 * (a * b))) / 16129.0
+      case other => throw new IllegalArgumentException(
+        s"Ann: unknown metric '$other' — use 'cosine', 'ip' or 'l2'")
+    }
+  }
+
+  /** [[sq8TopKFrom]] on the driver, row for row: every (corpus, query)
+    * pair with `vec_id != q_id` is scored by [[sq8ScoreLocal]]; each
+    * query id's pairs (duplicate query rows pool, as in the window's
+    * partition) are ordered by score descending — Spark's double
+    * ordering (`-0.0 == 0.0`, NaN largest), NULLs last — then `vec_id`
+    * ascending, and numbered 1..k. `d` is (vec_id, side); `q` is (the
+    * q_id value as emitted, the same id as a long, side). Rows come out
+    * as (q_id, rank, vec_id, score), ordered by q_id then rank. */
+  private[ann] def sq8TopKLocal(d: Seq[(Long, Sq8Side)],
+                                q: Seq[(Any, Long, Sq8Side)], k: Int,
+                                dim: Int, metric: String): Seq[Row] = {
+    val byScore: Ordering[(Long, Option[Double])] = (x, y) => {
+      val c = (x._2, y._2) match {
+        case (Some(a), Some(b)) =>
+          if (a == b) 0 else java.lang.Double.compare(b, a)
+        case (Some(_), None) => -1
+        case (None, Some(_)) => 1
+        case _ => 0
+      }
+      if (c != 0) c else java.lang.Long.compare(x._1, y._1)
+    }
+    q.groupBy(_._2).toSeq.sortBy(_._1).flatMap { case (qid, rows) =>
+      rows.flatMap { case (_, _, side) =>
+        d.collect { case (vid, ds) if vid != qid =>
+          (vid, sq8ScoreLocal(metric, dim, ds, side)) }
+      }.sorted(byScore).take(math.max(k, 0)).zipWithIndex.map {
+        case ((vid, score), i) =>
+          Row(rows.head._1, i + 1, vid, score.map(Double.box).orNull)
+      }
+    }
+  }
+
   /** Threshold form of [[sq8TopKFrom]] — the semantic-decontamination
     * hit list: DISTINCT ids of `d` rows whose quantized cosine against
     * ANY `q` row reaches `minCos`. Every (corpus, query) pair is

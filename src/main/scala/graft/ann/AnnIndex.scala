@@ -1,9 +1,12 @@
 package graft.ann
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType,
+  IntegerType, LongType, ShortType, StringType, StructType}
 
 import graft.catalog.TableCatalog
+import graft.core.{Bounded, Trace}
 
 /** Persisted ANN index artifacts. The fit — the corpus count +
   * [[Ann.autoPlanes]] geometry for the LSH path, the Lloyd rounds of
@@ -111,6 +114,14 @@ object AnnIndex {
     * plane and k-means-per-cell load doubles — past it the fit is
     * demonstrably for a different corpus. */
   val MaxDriftFactor = 2.0
+
+  /** Largest SQ8 index (its meta's `indexed_n`, and each of the code,
+    * tombstone and allowed-id frames a probe collects) that
+    * [[sq8TopKFromIndex]] scores on the driver. */
+  val DriverProbeRowCap = 8192
+
+  /** Most query rows [[sq8TopKFromIndex]] scores on the driver. */
+  val DriverProbeQueryCap = 64
 
   private def assignTableOf(indexTable: String) = indexTable + "_assign"
   private def segMetaTableOf(indexTable: String) = indexTable + "_segmeta"
@@ -244,27 +255,95 @@ object AnnIndex {
     * `metric` is served from the META, like the geometry: None = the
     * recorded one; an explicit request that disagrees with the build
     * is refused loudly (scoring a cosine corpus by inner product
-    * would silently return magnitude-ranked garbage). */
+    * would silently return magnitude-ranked garbage).
+    *
+    * A small probe runs on the driver: when the meta's `indexed_n` is
+    * within [[DriverProbeRowCap]], ONE job ([[Bounded.collect]]) brings
+    * back the stored codes, the tombstone ids, the quantized queries
+    * (at most [[DriverProbeQueryCap]] rows) and the checked allowed
+    * ids, and the driver scores and ranks them exactly as the
+    * distributed plan does ([[Ann.sq8TopKLocal]]). That path EVALUATES
+    * AT CALL TIME — it reads the committed files the probe serves then,
+    * and returns a local relation with the distributed plan's schema.
+    * Over either cap, or for a query id that is not an integral type,
+    * the lazy distributed plan is returned instead. Jobs started inside
+    * the call are labelled `AnnIndex: probe`; off the driver path, with
+    * why appended (`[over row cap]`, `[over query cap]`, `[query id
+    * type]`). */
   def sq8TopKFromIndex(catalog: TableCatalog, indexTable: String,
                        queries: DataFrame, idCol: String, vecCol: String,
                        k: Int,
                        allowedIds: Option[DataFrame] = None,
                        allowedIdCol: String = "id",
-                       metric: Option[String] = None): DataFrame = {
-    val (m, _, live) = serve(catalog, indexTable, Sq8, allowStale = false,
-      metric, allowedIds, allowedIdCol)
-    // the scale column is only read when the metric needs it, so a
-    // cosine probe scans one column fewer
-    val cols = if (m.metric == "cosine") sq8Cols
-               else sq8Cols :+ col("sc").as("vec_id_sc")
-    Ann.sq8TopKFrom(live.select(cols: _*),
-      Ann.sq8Quantized(queries, idCol, vecCol, "q_id", m.dim), k,
-      m.dim, m.metric)
+                       metric: Option[String] = None): DataFrame =
+    Trace.phase(catalog.spark, "AnnIndex: probe") {
+      val m = servedMeta(catalog, indexTable, Sq8, allowStale = false,
+        metric)
+      val q = Ann.sq8Quantized(queries, idCol, vecCol, "q_id", m.dim)
+      val local =
+        if (m.indexedN > DriverProbeRowCap) Left("over row cap")
+        else if (!Seq(LongType, IntegerType, ShortType, ByteType)
+            .contains(q.schema("q_id").dataType)) Left("query id type")
+        else driverSq8TopK(catalog, indexTable, m, q, k, allowedIds,
+          allowedIdCol)
+      local.fold(why =>
+        Trace.phase(catalog.spark, s"AnnIndex: probe [$why]") {
+          Ann.sq8TopKFrom(
+            restrictTo(liveAssign(catalog, indexTable), allowedIds,
+              allowedIdCol).select(sq8Cols(m.metric): _*),
+            q, k, m.dim, m.metric)
+        }, identity)
+    }
+
+  /** [[sq8TopKFromIndex]]'s driver path: Left(why) when a collected
+    * frame is over its cap. The live set is the stored rows minus the
+    * tombstoned ids, restricted to the allowed ids; a row with a NULL
+    * id scores nothing, as `vec_id != q_id` drops it in the plan. */
+  private def driverSq8TopK(catalog: TableCatalog, indexTable: String,
+                            m: Meta, q: DataFrame, k: Int,
+                            allowedIds: Option[DataFrame],
+                            allowedIdCol: String)
+      : Either[String, DataFrame] = {
+    val codes = catalog.readListed(assignTableOf(indexTable), Sq8CodeSchema)
+      .select(sq8Cols(m.metric): _*)
+    val Seq(c, d, qs, a) = Bounded.collectPresent(Seq(
+      Some(codes) -> DriverProbeRowCap,
+      Some(catalog.readListed(delsTableOf(indexTable), DelsSchema)) ->
+        DriverProbeRowCap,
+      Some(q.select(col("q_id"), col("q_id_q"), col("q_id_sc"))) ->
+        DriverProbeQueryCap,
+      allowedIds.map(_.select(checkedId(allowedIdCol, "allowed"))) ->
+        DriverProbeRowCap))
+    def ids(b: Bounded) =
+      b.rows.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet
+    if (qs.n > DriverProbeQueryCap) Left("over query cap")
+    else if (Seq(c, d, a).exists(_.n > DriverProbeRowCap))
+      Left("over row cap")
+    else {
+      val dead = ids(d)
+      val allowed = allowedIds.map(_ => ids(a))
+      val sc = if (m.metric == "cosine") -1 else 3
+      val live = c.rows.toSeq.filter(r => !r.isNullAt(0) &&
+          !dead(r.getLong(0)) && allowed.forall(_(r.getLong(0))))
+        .map(r => r.getLong(0) -> Ann.Sq8Side.of(r, 1, 2, sc))
+      val probes = qs.rows.toSeq.filterNot(_.isNullAt(0)).map(r =>
+        (r.get(0), r.get(0).asInstanceOf[Number].longValue,
+          Ann.Sq8Side.of(r, 1, -1, 2)))
+      // the schema the distributed plan has over these same inputs
+      val schema = Ann.sq8TopKFrom(codes, q, k, m.dim, m.metric).schema
+      import scala.jdk.CollectionConverters._
+      Right(catalog.spark.createDataFrame(
+        Ann.sq8TopKLocal(live, probes, k, m.dim, m.metric).asJava, schema))
+    }
   }
 
-  /** The stored SQ8 columns under [[Ann.sq8Score]]'s corpus-side names. */
-  private def sq8Cols = Seq(col("id").as("vec_id"), col("q").as("vec_id_q"),
-    col("qq").as("vec_id_qq"))
+  /** The stored SQ8 columns under [[Ann.sq8Score]]'s corpus-side names;
+    * the scale only when `metric` reads it, so a cosine probe scans one
+    * column fewer. */
+  private def sq8Cols(metric: String) =
+    Seq(col("id").as("vec_id"), col("q").as("vec_id_q"),
+      col("qq").as("vec_id_qq")) ++
+      (if (metric == "cosine") Nil else Seq(col("sc").as("vec_id_sc")))
 
   /** Semantic-decontamination hit list off the persisted SQ8 index:
     * DISTINCT ids of indexed vectors whose quantized cosine against
@@ -280,7 +359,7 @@ object AnnIndex {
     // a different scale entirely, so refuse rather than mis-threshold
     val (m, _, live) = serve(catalog, indexTable, Sq8, allowStale = false,
       Some("cosine"))
-    Ann.sq8Matches(live.select(sq8Cols: _*),
+    Ann.sq8Matches(live.select(sq8Cols("cosine"): _*),
       Ann.sq8Quantized(queries, idCol, vecCol, "q_id", m.dim),
       minCos, m.dim)
   }
@@ -692,8 +771,8 @@ object AnnIndex {
   /** IVF: (id, v, nrm) under the trained cosine cells. */
   private val Ivf = IndexKind("ivf", "cell", fitted = true, "buildIvf")(
     (catalog, t) => Fits(cents =
-      Some(readVecs(catalog, t + "_cent", v => math.sqrt(Ann.selfDot(v)))
-        .flatten)),
+      Some(readVecs(catalog, t + "_cent", keyed = false,
+        v => math.sqrt(Ann.selfDot(v))).flatten)),
     (data, idCol, vecCol, m, fits) =>
       Ann.withNorms(data, idCol, vecCol, m.dim)
         .withColumn("cell", Ann.cosineCell(fits.cents.get)))
@@ -728,7 +807,8 @@ object AnnIndex {
   private val IvfPq = IndexKind("ivfpq", "cell", fitted = true,
       "buildIvfPq")(
     (catalog, t) => Fits(
-      Some(readVecs(catalog, t + "_cent", Ann.selfDot).flatten),
+      Some(readVecs(catalog, t + "_cent", keyed = false, Ann.selfDot)
+        .flatten),
       Some(readBooks(catalog, t))),
     (data, idCol, vecCol, m, fits) =>
       Ann.pqEncodeOn(
@@ -822,17 +902,28 @@ object AnnIndex {
     }
 
   /** The one serving read every probe starts with: the meta (of the
-    * probe's kind, fresh unless `allowStale`), the requested `metric`
-    * checked against the RECORDED one (served from the META like the
-    * geometry — None serves the recorded one, a disagreeing request is
-    * refused loudly), the kind's loaded fits, and the LIVE assignment
-    * rows restricted to `allowedIds`. */
+    * probe's kind, fresh unless `allowStale`, [[servedMeta]]), the
+    * kind's loaded fits, and the LIVE assignment rows restricted to
+    * `allowedIds`. */
   private def serve(catalog: TableCatalog, indexTable: String,
                     kind: IndexKind, allowStale: Boolean,
                     metric: Option[String],
                     allowedIds: Option[DataFrame] = None,
                     allowedIdCol: String = "id")
       : (Meta, Fits, DataFrame) = {
+    val m = servedMeta(catalog, indexTable, kind, allowStale, metric)
+    (m, kind.load(catalog, indexTable),
+      restrictTo(liveAssign(catalog, indexTable), allowedIds,
+        allowedIdCol))
+  }
+
+  /** The meta a probe serves under: of the probe's kind, fresh unless
+    * `allowStale`, with the requested `metric` checked against the
+    * RECORDED one (served from the META like the geometry — None serves
+    * the recorded one, a disagreeing request is refused loudly). */
+  private def servedMeta(catalog: TableCatalog, indexTable: String,
+                         kind: IndexKind, allowStale: Boolean,
+                         metric: Option[String]): Meta = {
     val m = readMeta(catalog, indexTable, Some(kind))
     requireFresh(m, indexTable, allowStale)
     metric.foreach { req =>
@@ -841,24 +932,34 @@ object AnnIndex {
           s"but the probe requested '$req' — probes serve the " +
           "RECORDED metric; rebuild with the desired one")
     }
-    (m, kind.load(catalog, indexTable),
-      restrictTo(liveAssign(catalog, indexTable), allowedIds,
-        allowedIdCol))
+    m
   }
 
   /** The one meta read: refuses a missing meta (no build, or one that
     * crashed mid-write), the rebuild marker (a rebuild that crashed
     * mid-write), a kind other than `expected`, and a meta row missing
     * a column of the current format ([[writeMeta]]'s), naming it —
-    * older metas are not read, and nothing upgrades them. */
+    * older metas are not read, and nothing upgrades them. The read
+    * takes [[MetaSchema]], under which a missing column reads as NULL;
+    * [[writeMeta]] writes no NULL. */
   private def readMeta(catalog: TableCatalog, indexTable: String,
                        expected: Option[IndexKind]): Meta = {
-    require(catalog.tableExists(indexTable),
+    val rows =
+      if (!catalog.tableExists(indexTable)) Array.empty[Row]
+      else catalog.readListed(indexTable, MetaSchema).collect()
+    require(rows.nonEmpty,
       s"AnnIndex: no index meta at '$indexTable' — build (or seed-build) " +
         "it first; a missing meta also covers a build that crashed " +
         "mid-write")
-    val row = catalog.read(indexTable).collect()(0)
-    val k = row.getString(row.fieldIndex("kind"))
+    val row = rows(0)
+    def field[T](name: String): T = {
+      require(!row.isNullAt(row.fieldIndex(name)),
+        s"AnnIndex: the meta of '$indexTable' has no '$name' column — " +
+          "it predates the current index format, which is the only one " +
+          "this version reads; rebuild the index")
+      row.getAs[T](name)
+    }
+    val k = field[String]("kind")
     require(k != "rebuilding",
       s"AnnIndex: a rebuild of '$indexTable' crashed mid-write — " +
         "re-run the build before using it")
@@ -866,16 +967,30 @@ object AnnIndex {
       s"AnnIndex: '$indexTable' is a '$k' index, expected '${e.name}'"))
     require(Kinds.exists(_.name == k),
       s"AnnIndex: '$indexTable' records unknown index kind '$k'")
-    def field[T](name: String): T = {
-      require(row.schema.fieldNames.contains(name),
-        s"AnnIndex: the meta of '$indexTable' has no '$name' column — " +
-          "it predates the current index format, which is the only one " +
-          "this version reads; rebuild the index")
-      row.getAs[T](name)
-    }
     Meta(k, field("geometry"), field("dim"), field("pq_m"), field("pq_k"),
       field("fitted_n"), field("indexed_n"), field("metric"))
   }
+
+  /** Static read schemas of the index's own tables, so no read of
+    * them starts a footer-inference job: the meta ([[writeMeta]]),
+    * `_segmeta` ([[writeSegCounts]]), `_dels` ([[deleteIds]]), `_cent`
+    * and `_pqcent` ([[writeVecs]], `m` only when keyed), and the SQ8
+    * codes ([[Sq8]]'s encoding) a driver-path probe reads. */
+  private val MetaSchema = new StructType().add("kind", StringType)
+    .add("geometry", IntegerType).add("dim", IntegerType)
+    .add("pq_m", IntegerType).add("pq_k", IntegerType)
+    .add("fitted_n", LongType).add("indexed_n", LongType)
+    .add("metric", StringType)
+  private val SegMetaSchema = new StructType().add("seg", StringType)
+    .add("rows", LongType)
+  private val DelsSchema = new StructType().add("id", LongType)
+  private def vecsSchema(keyed: Boolean) =
+    (if (keyed) new StructType().add("m", IntegerType) else new StructType())
+      .add("cell", IntegerType).add("pos", IntegerType)
+      .add("val", DoubleType)
+  private val Sq8CodeSchema = new StructType().add("id", LongType)
+    .add("q", ArrayType(ByteType)).add("qq", LongType)
+    .add("sc", DoubleType)
 
   private def writeMeta(catalog: TableCatalog, indexTable: String,
                         m: Meta): Unit = {
@@ -930,15 +1045,15 @@ object AnnIndex {
     catalog.writeFull(if (keyed) df else df.drop("m"), table)
   }
 
-  /** [[writeVecs]]' reader: groups[m][cell] (a table without `m` is one
+  /** [[writeVecs]]' reader: groups[m][cell] (an unkeyed table is one
     * group), each vector in `pos` order and paired with `aux` of its
     * values — the norm or self-dot the assignment scorers expect,
     * recomputed with the fold training used. */
   private def readVecs(catalog: TableCatalog, table: String,
-                       aux: Seq[Double] => Double)
+                       keyed: Boolean, aux: Seq[Double] => Double)
       : Array[Array[(Seq[Double], Double)]] = {
-    val df = catalog.read(table)
-    val m = if (df.columns.contains("m")) col("m") else lit(0)
+    val df = catalog.readListed(table, vecsSchema(keyed))
+    val m = if (keyed) col("m") else lit(0)
     df.select(m, col("cell"), col("pos"), col("val")).collect()
       .groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (_, group) =>
         group.groupBy(_.getInt(1)).toSeq.sortBy(_._1).map { case (_, rows) =>
@@ -953,7 +1068,7 @@ object AnnIndex {
     * [[Ann.centroidScoresL2]] assigns against. */
   private def readBooks(catalog: TableCatalog,
       indexTable: String): Array[Array[(Seq[Double], Double)]] =
-    readVecs(catalog, indexTable + "_pqcent", Ann.selfDot)
+    readVecs(catalog, indexTable + "_pqcent", keyed = true, Ann.selfDot)
 
   // ---- segments and tombstones ----------------------------------------
 
@@ -989,7 +1104,7 @@ object AnnIndex {
         !catalog.listPartitions(delsTable, "dseg")
           .exists(catalog.partitionHasDataFiles(delsTable, "dseg", _)))
       None
-    else Some(catalog.read(delsTable).select(col("id")).distinct())
+    else Some(catalog.readListed(delsTable, DelsSchema).distinct())
   }
 
   /** The caller's id column as the index's long id — raising per row,
@@ -1068,7 +1183,8 @@ object AnnIndex {
     val assignTable = assignTableOf(indexTable)
     val known: Map[String, Long] =
       if (!catalog.tableExists(segMetaTableOf(indexTable))) Map.empty
-      else catalog.read(segMetaTableOf(indexTable)).collect()
+      else catalog.readListed(segMetaTableOf(indexTable), SegMetaSchema)
+        .collect()
         .map(r => (r.getString(r.fieldIndex("seg")),
           r.getLong(r.fieldIndex("rows")))).toMap
     val onDisk = catalog.listPartitions(assignTable, "seg")

@@ -166,6 +166,34 @@ class TableCatalog(val spark: SparkSession, warehouse: String) {
     spark.read.schema(schema).option("basePath", tablePath(table))
       .parquet(paths: _*)
 
+  /** Every visible data file of a table, read under `schema` — the
+    * scan for a small table whose schema the caller statically knows.
+    * The files are listed here on the driver (every level, skipping the
+    * names Spark's own listing skips), so the read starts no
+    * footer-inference job and no parallel-listing job, however many
+    * partition directories one level holds (Spark lists with a job past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold`). The
+    * files themselves are read inside the scan's tasks. Partition
+    * directory values are not recovered: `schema` names data columns
+    * only. A missing table reads as no rows. */
+  def readListed(table: String, schema: StructType): DataFrame = {
+    def files(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      listStatusOrEmpty(p).filterNot { st =>
+        val n = st.getPath.getName
+        (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+          n.endsWith("._COPYING_")
+      }.sortBy(_.getPath.getName).flatMap { st =>
+        if (st.isDirectory) files(st.getPath) else Seq(st)
+      }
+    val root = new Path(tablePath(table))
+    spark.baseRelationToDataFrame(
+      org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+        new TableCatalog.ListedFiles(root, files(root)), new StructType(),
+        schema, None,
+        new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetFileFormat(), Map.empty)(spark))
+  }
+
   /** Remove one partition directory — the cleanup half of a compaction
     * pass ([[graft.streaming.CorpusStream.compactState]]): the merged
     * target partition is written AND commit-verified
@@ -564,4 +592,27 @@ class TableCatalog(val spark: SparkSession, warehouse: String) {
 
   private def listStatusOrEmpty(p: Path) =
     if (fs.exists(p)) fs.listStatus(p).toSeq else Seq.empty
+}
+
+object TableCatalog {
+  import org.apache.hadoop.fs.FileStatus
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.Expression
+  import org.apache.spark.sql.execution.datasources.{FileIndex,
+    FileStatusWithMetadata, PartitionDirectory}
+
+  /** [[TableCatalog.readListed]]'s file index: the files the catalog
+    * listed, as one unpartitioned directory. */
+  private final class ListedFiles(root: Path, files: Seq[FileStatus])
+      extends FileIndex {
+    def rootPaths: Seq[Path] = Seq(root)
+    def listFiles(partitionFilters: Seq[Expression],
+                  dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty,
+        files.map(FileStatusWithMetadata(_))))
+    def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = files.map(_.getLen).sum
+    def partitionSchema: StructType = new StructType()
+  }
 }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.catalog.TableCatalog
+import graft.core.Bounded
 import graft.ops.Dedup
 import graft.sim.MinHashLSH
 import graft.text.{CorpusPipeline, TextHash}
@@ -296,11 +297,9 @@ object CorpusStream {
     * ([[FallbackKey]]), e.g. `b7 new docs [over id cap]`. */
   private def jd[T](spark: org.apache.spark.sql.SparkSession,
                     label: String)(f: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    val why = Option(sc.getLocalProperty(FallbackKey)).fold("")(w => s" [$w]")
-    sc.setJobDescription(s"CorpusStream: $label$why")
-    try f finally sc.setJobDescription(prev)
+    val why = Option(spark.sparkContext.getLocalProperty(FallbackKey))
+      .fold("")(w => s" [$w]")
+    graft.core.Trace.phase(spark, s"CorpusStream: $label$why")(f)
   }
 
   /** Thread-local property naming why the in-flight batch runs the
@@ -570,40 +569,6 @@ object CorpusStream {
     }
   }
 
-  /** What [[boundedCollect]] brings back of one frame. */
-  private final case class Bounded(n: Long, rows: Array[Row],
-                                   keys: Set[Long])
-
-  /** ONE job over one or more frames, each with its cap: the frame's
-    * exact row count, from each of its partitions the first `cap + 1`
-    * rows — every row when the count is at most `cap`, a bounded prefix
-    * otherwise — and, with `key`, the distinct non-null longs of that
-    * column over ALL its rows. The frames' per-partition summaries come
-    * back through one `SparkContext.union`. `limit(cap + 1).collect()`
-    * would scan the partitions in growing rounds of jobs and still
-    * leave the count to another job. */
-  private def boundedCollect(frames: Seq[(DataFrame, Int)],
-                             key: Option[Int] = None): Seq[Bounded] = {
-    val sc = frames.head._1.sparkSession.sparkContext
-    val parts = sc.union(frames.zipWithIndex.map { case ((df, cap), i) =>
-      df.rdd.mapPartitions { it =>
-        val kept = scala.collection.mutable.ArrayBuffer.empty[Row]
-        val keys = scala.collection.mutable.HashSet.empty[Long]
-        var n = 0L
-        it.foreach { r =>
-          if (kept.length <= cap) kept += r
-          key.foreach(k => if (!r.isNullAt(k)) keys += r.getLong(k))
-          n += 1
-        }
-        Iterator.single((i, n, kept.toArray, keys.toSet))
-      }
-    }).collect()
-    frames.indices.map { i =>
-      val ps = parts.filter(_._1 == i)
-      Bounded(ps.map(_._2).sum, ps.flatMap(_._3), ps.flatMap(_._4).toSet)
-    }
-  }
-
   /** [[pkCol]] of one band key on the driver: `xxhash64` (seed 42) of
     * its UTF-8 bytes, `pmod` [[StatePartitions]]. */
   private[graft] def bandKeyPk(key: String): Long = Math.floorMod(
@@ -645,7 +610,7 @@ object CorpusStream {
   /** [[SeenState]] of a batch in ONE job labelled `seen state`: the
     * pk-pruned `_fp` rows filtered to `fp IN fps` and the pk-pruned
     * `_bands` rows filtered to `band_key IN keys`, brought back by one
-    * [[boundedCollect]]. None when more than [[MergeGraphCap]] fp rows
+    * [[Bounded.collect]]. None when more than [[MergeGraphCap]] fp rows
     * or [[DriverVerifyPairCap]] band rows match — the batch then runs
     * distributed. Rows with a null id are skipped: a null id matches
     * nothing in the distributed joins either. */
@@ -661,14 +626,9 @@ object CorpusStream {
       else prunedStateRead(catalog, BandsState, stateTable, batchKey,
           keys.map(bandKeyPk).toSet)
         .map(_.filter(col("band_key").isin(keys: _*)))
-    val frames = Seq(fpRows -> MergeGraphCap, bandRows -> DriverVerifyPairCap)
-    val present = frames.collect { case (Some(f), cap) => f -> cap }
-    val got =
-      if (present.isEmpty) Iterator.empty
-      else jd(catalog.spark, s"b$batchKey seen state") {
-        boundedCollect(present) }.iterator
-    val Seq(fp, bands) = frames.map { case (f, _) =>
-      if (f.isEmpty) Bounded(0L, Array.empty, Set.empty) else got.next() }
+    val Seq(fp, bands) = jd(catalog.spark, s"b$batchKey seen state") {
+      Bounded.collectPresent(Seq(fpRows -> MergeGraphCap,
+        bandRows -> DriverVerifyPairCap)) }
     if (fp.n > MergeGraphCap || bands.n > DriverVerifyPairCap) None
     else Some(SeenState(
       fp.rows.toSeq.filterNot(_.isNullAt(0))
@@ -1282,14 +1242,14 @@ object CorpusStream {
     val localDeduped = graft.core.Fence.soft(localDeduped0)
     release += localDeduped
     val spark = batch.sparkSession
-    // 3. the exact-dedup gate's inputs. ONE job ([[boundedCollect]],
+    // 3. the exact-dedup gate's inputs. ONE job ([[Bounded.collect]],
     //    `batch collect`) brings the batch's exact size, its first
     //    DriverVerifyIdCap + 1 rows per partition with their
     //    fingerprints, and the fp pk buckets the gate's `_fp` read
     //    prunes to on either path (fp equality implies pk equality, so
     //    the pruning loses no twin).
     val Seq(collected) = jd(spark, s"b$batchKey batch collect") {
-      boundedCollect(Seq(localDeduped.select(col("doc_id"), col("text"),
+      Bounded.collect(Seq(localDeduped.select(col("doc_id"), col("text"),
           col("lang"), fp.as("fp"), fpPkCol(fp).as("__pk")) ->
           DriverVerifyIdCap), key = Some(4)) }
     // 4. the gate, signatures and the near-dup cascade. A batch within

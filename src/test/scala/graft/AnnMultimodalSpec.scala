@@ -268,7 +268,7 @@ class AnnMultimodalSpec extends SparkSpec {
     val vecs = (0 until 40).map(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
-    val wh = java.nio.file.Files.createTempDirectory("annidx_").toString
+    val wh = graft.core.Scratch.dir("annidx_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     // LSH: fitted planes persist; the from-index result equals the
     // fit-inline form row for row (scores bit-exact)
@@ -393,7 +393,7 @@ class AnnMultimodalSpec extends SparkSpec {
     val vecs = (0 until 30).map(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
-    val wh = java.nio.file.Files.createTempDirectory("annpq_").toString
+    val wh = graft.core.Scratch.dir("annpq_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"q_id", $"rank")
@@ -439,7 +439,7 @@ class AnnMultimodalSpec extends SparkSpec {
     val vecs = (0 until 30).map(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
-    val wh = java.nio.file.Files.createTempDirectory("annivfpq_").toString
+    val wh = graft.core.Scratch.dir("annivfpq_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"q_id", $"rank")
@@ -489,7 +489,7 @@ class AnnMultimodalSpec extends SparkSpec {
     val vecs = (0 until 30).map(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
-    val wh = java.nio.file.Files.createTempDirectory("annsq8_").toString
+    val wh = graft.core.Scratch.dir("annsq8_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"q_id", $"rank")
@@ -521,7 +521,7 @@ class AnnMultimodalSpec extends SparkSpec {
     val vecs = (0 until 20).map(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
-    val wh = java.nio.file.Files.createTempDirectory("annsm_").toString
+    val wh = graft.core.Scratch.dir("annsm_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def indexedN: Long = {
       val r = cat.read("sm").collect()(0)
@@ -568,7 +568,7 @@ class AnnMultimodalSpec extends SparkSpec {
     val vecs = (0 until 12).map(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
-    val wh = java.nio.file.Files.createTempDirectory("anncw_").toString
+    val wh = graft.core.Scratch.dir("anncw_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def indexedN: Long = {
       val r = cat.read("cw").collect()(0)
@@ -632,7 +632,7 @@ class AnnMultimodalSpec extends SparkSpec {
     val vecs = (0 until 24).map(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
-    val wh = java.nio.file.Files.createTempDirectory("anncp_").toString
+    val wh = graft.core.Scratch.dir("anncp_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"q_id", $"rank")
@@ -687,7 +687,7 @@ class AnnMultimodalSpec extends SparkSpec {
     val vecs = (0 until 24).map(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
-    val wh = java.nio.file.Files.createTempDirectory("anndel_").toString
+    val wh = graft.core.Scratch.dir("anndel_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"q_id", $"rank")
@@ -759,7 +759,7 @@ class AnnMultimodalSpec extends SparkSpec {
     val vecs = (0 until 20).map(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
-    val wh = java.nio.file.Files.createTempDirectory("annreb_").toString
+    val wh = graft.core.Scratch.dir("annreb_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"q_id", $"rank")
@@ -796,7 +796,7 @@ class AnnMultimodalSpec extends SparkSpec {
     val vecs = (0 until 30).map(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
-    val wh = java.nio.file.Files.createTempDirectory("anndel2_").toString
+    val wh = graft.core.Scratch.dir("anndel2_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     val q = vecs.filter($"vec_id" < 2)
     def canon(df: org.apache.spark.sql.DataFrame) =
@@ -828,7 +828,7 @@ class AnnMultimodalSpec extends SparkSpec {
     val vecs = (0 until 30).map(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
-    val wh = java.nio.file.Files.createTempDirectory("annfil_").toString
+    val wh = graft.core.Scratch.dir("annfil_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     val q = vecs.filter($"vec_id" < 2)
     val even = vecs.filter($"vec_id" % 2 === 0)
@@ -848,9 +848,13 @@ class AnnMultimodalSpec extends SparkSpec {
     assert(filtered.filter($"vec_id" % 2 =!= 0).isEmpty)
     // plan contract: unrestricted probes carry NO semi-join; the
     // filtered probe's restriction is an equi semi-join, no cartesian
-    val p0 = AnnIndex.sq8TopKFromIndex(cat, "fx", q, "vec_id",
-      "embedding", 5).queryExecution.executedPlan.toString
-    val p1 = filtered.queryExecution.executedPlan.toString
+    // (the distributed plan: these probes are over the query cap)
+    val p0 = AnnIndex.sq8TopKFromIndex(cat, "fx", overQueryCap(q),
+      "vec_id", "embedding", 5).queryExecution.executedPlan.toString
+    val p1 = AnnIndex.sq8TopKFromIndex(cat, "fx", overQueryCap(q),
+        "vec_id", "embedding", 5, allowedIds = Some(even.select($"vec_id")),
+        allowedIdCol = "vec_id")
+      .queryExecution.executedPlan.toString
     assert(!p0.contains("LeftSemi"), p0.take(800))
     assert(p1.contains("LeftSemi"), p1.take(800))
     assert(!p1.contains("CartesianProduct"), p1.take(800))
@@ -879,6 +883,226 @@ class AnnMultimodalSpec extends SparkSpec {
         q, "vec_id", "embedding", 5, nprobe = 2, refine = 8)))
   }
 
+  // ---- the SQ8 probe's driver path ---------------------------------------
+  //
+  // A probe within AnnIndex.DriverProbeRowCap / DriverProbeQueryCap is
+  // scored on the driver; each test below compares it with the
+  // distributed plan, reached through the caps themselves.
+
+  /** `q` plus DriverProbeQueryCap more query rows (copies of one of its
+    * vectors under ids from [[PadId]] up): a probe with it is over the
+    * query cap, and its rows for `q`'s ids are those `q` alone gets. */
+  private def overQueryCap(q: org.apache.spark.sql.DataFrame) = {
+    import graft.ann.AnnIndex
+    q.unionByName(q.limit(1).select($"embedding")
+      .crossJoin(spark.range(AnnIndex.DriverProbeQueryCap.toLong))
+      .select(($"id" + PadId).cast(q.schema("vec_id").dataType)
+        .as("vec_id"), $"embedding"))
+  }
+  private val PadId = 1000000L
+
+  /** The rows of a probe result in (q_id, rank) order, without the
+    * padding queries of [[overQueryCap]]. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame) =
+    df.filter($"q_id" < PadId).orderBy($"q_id", $"rank").collect().toSeq
+
+  /** A probe on both paths: the driver path's result (asserting it
+    * started only unlabelled-by-fallback jobs) and the distributed
+    * plan's over the same index, queries and filter. */
+  private def bothPaths(cat: graft.catalog.TableCatalog, index: String,
+      q: org.apache.spark.sql.DataFrame, k: Int,
+      allowed: Option[org.apache.spark.sql.DataFrame] = None) = {
+    import graft.ann.AnnIndex
+    def probe(qs: org.apache.spark.sql.DataFrame) =
+      AnnIndex.sq8TopKFromIndex(cat, index, qs, "vec_id", "embedding", k,
+        allowedIds = allowed, allowedIdCol = "vec_id")
+    var local: org.apache.spark.sql.DataFrame = null
+    val labels = jobsStartedBy { local = probe(q); local.collect() }
+      .map(_._1)
+    assert(labels.nonEmpty && labels.forall(_ == "AnnIndex: probe"),
+      labels)
+    val dist = probe(overQueryCap(q))
+    assert(dist.schema == local.schema,
+      s"${dist.schema.treeString} vs ${local.schema.treeString}")
+    assert(rowsOf(local) == rowsOf(dist))
+    (rowsOf(local), rowsOf(dist))
+  }
+
+  test("driver-path SQ8 probes equal the distributed plan row for row " +
+       "and in schema under each metric, with duplicate query ids, a " +
+       "query id equal to an indexed id, tied scores and k past the " +
+       "live set") {
+    import graft.ann.AnnIndex
+    val rnd = new scala.util.Random(71)
+    // ids 20-23 repeat vector 3 (tied scores for every query), 24 is
+    // the zero vector (score 0 against every query under cosine) and 25
+    // is orthogonal to the query it copies the sign pattern of
+    val base = (0 until 20).map(i =>
+      (i.toLong, Array.fill(64)((rnd.nextFloat() - 0.5f) * (1 + i % 3))))
+    val vecs = (base ++ (20 until 24).map(i => (i.toLong, base(3)._2)) ++
+        Seq((24L, Array.fill(64)(0f)),
+          (25L, Array.tabulate(64)(j => if (j % 2 == 0) 1f else -1f)),
+          (26L, Array.tabulate(64)(j => if (j < 32) 1f else 0f))))
+      .toDF("vec_id", "embedding")
+    val wh = graft.core.Scratch.dir("anndrv_")
+    val cat = new graft.catalog.TableCatalog(spark, wh)
+    // query 0 and query 3 are indexed ids; query 7 comes twice, with
+    // two different vectors, and pools both rows' pairs; query 26
+    // (all ones then zeros) is orthogonal to 25
+    val q = vecs.filter($"vec_id".isin(0L, 3L, 26L))
+      .unionByName(Seq((7L, base(7)._2), (7L, base(9)._2))
+        .toDF("vec_id", "embedding"))
+    for (metric <- Seq("cosine", "ip", "l2")) {
+      AnnIndex.buildSq8(cat, vecs, "vec_id", "embedding", s"d_$metric",
+        metric = metric)
+      for (k <- Seq(5, 40)) {
+        val (local, _) = bothPaths(cat, s"d_$metric", q, k)
+        val byQ = local.groupBy(_.getLong(0))
+        // the self-match is excluded: 26 scored vectors per query row
+        // (both rows of the duplicated query id pool), cut at k
+        assert(byQ(0L).size == math.min(k, 26) &&
+          byQ(7L).size == math.min(k, 52), s"$metric $k")
+        assert(!byQ(3L).exists(_.getLong(2) == 3L))
+      }
+    }
+    // the ties: 3 and its four copies score alike for every query, so
+    // they rank in vec_id order wherever they fall in query 0's list
+    val cos = bothPaths(cat, "d_cosine", q, 40)._1
+      .filter(_.getLong(0) == 0L)
+    val tied = cos.filter(r => Set(3L, 20L, 21L, 22L, 23L)(r.getLong(2)))
+    assert(tied.map(_.getLong(2)) == Seq(3L, 20L, 21L, 22L, 23L))
+    assert(tied.map(_.getDouble(3)).distinct.size == 1)
+    assert(tied.map(_.getInt(1)) == (tied.head.getInt(1) until
+      tied.head.getInt(1) + 5))
+    // query 26 against 24 (zero vector) and 25 (orthogonal): both 0.0
+    val zeros = bothPaths(cat, "d_cosine", q, 40)._1
+      .filter(r => r.getLong(0) == 26L && r.getDouble(3) == 0.0)
+    assert(zeros.map(_.getLong(2)) == Seq(24L, 25L))
+  }
+
+  test("driver-path SQ8 probes equal the distributed plan over two " +
+       "segments with tombstones, filtered, with an empty allowed set, " +
+       "and in the compactSegs crash shape (duplicate rows come back " +
+       "twice); a plain probe of a compacted index is at most 2 jobs") {
+    import graft.ann.AnnIndex
+    val rnd = new scala.util.Random(73)
+    val vecs = (0 until 40).map(i =>
+      (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
+    val wh = graft.core.Scratch.dir("anndrv2_")
+    val cat = new graft.catalog.TableCatalog(spark, wh)
+    val q = vecs.filter($"vec_id".isin(1L, 2L, 30L))
+    val even = Some(vecs.filter($"vec_id" % 2 === 0).select($"vec_id"))
+    AnnIndex.buildSq8(cat, vecs.filter($"vec_id" < 24), "vec_id",
+      "embedding", "t2")
+    AnnIndex.appendSq8(cat, vecs.filter($"vec_id" >= 24), "vec_id",
+      "embedding", "t2")
+    AnnIndex.deleteIds(cat, Seq(4L, 6L, 31L).toDF("vec_id"), "vec_id",
+      "t2")
+    AnnIndex.deleteIds(cat, Seq(8L, 33L).toDF("vec_id"), "vec_id", "t2")
+    assert(cat.listPartitions("t2_assign", "seg").size == 2)
+    val (plain, _) = bothPaths(cat, "t2", q, 10)
+    assert(!plain.exists(r => Set(4L, 6L, 8L, 31L, 33L)(r.getLong(2))))
+    val (filtered, _) = bothPaths(cat, "t2", q, 10, even)
+    assert(filtered.nonEmpty && filtered.forall(_.getLong(2) % 2 == 0))
+    assert(!filtered.exists(r => Set(4L, 6L, 8L)(r.getLong(2))))
+    val (none, _) = bothPaths(cat, "t2", q, 10,
+      Some(vecs.filter($"vec_id" < 0).select($"vec_id")))
+    assert(none.isEmpty)
+    // compacted: the plain probe is the meta read and one collect
+    AnnIndex.compactSegs(cat, "t2")
+    var compacted = Seq.empty[org.apache.spark.sql.Row]
+    val jobs = jobsStartedBy {
+      compacted = AnnIndex.sq8TopKFromIndex(cat, "t2", q, "vec_id",
+        "embedding", 10).collect().toSeq
+    }
+    assert(jobs.size <= 2, jobs)
+    assert(compacted.sortBy(r => (r.getLong(0), r.getInt(1))) == plain)
+    // the crash shape: a leftover copy of seg 0 duplicates every row
+    val src = java.nio.file.Paths.get(wh, "t2_assign", "seg=0")
+    val dst = java.nio.file.Paths.get(wh, "t2_assign", "seg=9")
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(src).iterator().asScala.toSeq.foreach { p =>
+      java.nio.file.Files.copy(p, dst.resolve(src.relativize(p)),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    val (dup, _) = bothPaths(cat, "t2", q, 10)
+    val byQ = dup.groupBy(_.getLong(0))
+    assert(byQ.values.forall(rs =>
+      rs.map(_.getLong(2)).grouped(2).forall(p => p.size == 2 &&
+        p.head == p(1))), dup)
+  }
+
+  test("driver-path SQ8 probes raise what the distributed plan raises " +
+       "on a NULL allowed id, a non-long allowed id and a wrong-width " +
+       "query") {
+    import graft.ann.AnnIndex
+    val rnd = new scala.util.Random(79)
+    val vecs = (0 until 12).map(i =>
+      (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
+    val cat = new graft.catalog.TableCatalog(spark,
+      graft.core.Scratch.dir("anndrv3_"))
+    AnnIndex.buildSq8(cat, vecs, "vec_id", "embedding", "e")
+    val q = vecs.filter($"vec_id" < 2)
+    def root(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq.last
+        .getMessage
+    def raised(qs: org.apache.spark.sql.DataFrame,
+               allowed: Option[org.apache.spark.sql.DataFrame]) =
+      root(intercept[Exception](AnnIndex.sq8TopKFromIndex(cat, "e", qs,
+        "vec_id", "embedding", 3, allowedIds = allowed,
+        allowedIdCol = "vec_id").collect()))
+    val nullId = Some(Seq[java.lang.Long](1L, null).toDF("vec_id"))
+    val notLong = Some(Seq("5", "x").toDF("vec_id"))
+    val wide = Seq((1L, Array.fill(65)(0.1f))).toDF("vec_id", "embedding")
+    for ((qs, allowed, msg) <- Seq((q, nullId, "allowed id is NULL"),
+        (q, notLong, "'x' is not a long"), (wide, None, "expected 64-dim"))) {
+      val local = raised(qs, allowed)
+      assert(local.contains(msg), local)
+      assert(raised(overQueryCap(qs), allowed) == local)
+    }
+  }
+
+  test("SQ8 probes over a cap run the distributed plan and label its " +
+       "jobs with why: an index over the row cap equals the fit-inline " +
+       "top-k; a query frame over the query cap, or with a string id, " +
+       "says so") {
+    import graft.ann.AnnIndex
+    val rnd = new scala.util.Random(83)
+    val n = AnnIndex.DriverProbeRowCap + 1
+    val vecs = (0 until n).map(i =>
+      (i.toLong, Array.fill(4)(rnd.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
+    val cat = new graft.catalog.TableCatalog(spark,
+      graft.core.Scratch.dir("annover_"))
+    AnnIndex.buildSq8(cat, vecs, "vec_id", "embedding", "big", dim = 4)
+    val q = vecs.filter($"vec_id" < 3)
+    var got = Seq.empty[org.apache.spark.sql.Row]
+    val labels = jobsStartedBy {
+      got = rowsOf(AnnIndex.sq8TopKFromIndex(cat, "big", q, "vec_id",
+        "embedding", 5))
+    }.map(_._1)
+    assert(labels.contains("AnnIndex: probe [over row cap]"), labels)
+    assert(got == rowsOf(Ann.sq8TopK(vecs, q, "vec_id", "embedding", 5,
+      dim = 4)))
+    AnnIndex.buildSq8(cat, vecs.filter($"vec_id" < 50), "vec_id",
+      "embedding", "small", dim = 4)
+    val overQ = jobsStartedBy {
+      AnnIndex.sq8TopKFromIndex(cat, "small", overQueryCap(q), "vec_id",
+        "embedding", 5).collect()
+    }.map(_._1)
+    assert(overQ.contains("AnnIndex: probe [over query cap]"), overQ)
+    // a query id that is not an integral type compares under Spark's
+    // coercion rules, which the distributed plan keeps
+    val byString = jobsStartedBy {
+      AnnIndex.sq8TopKFromIndex(cat, "small",
+        q.select($"vec_id".cast("string").as("vec_id"), $"embedding"),
+        "vec_id", "embedding", 5).collect()
+    }.map(_._1)
+    assert(byString.contains("AnnIndex: probe [query id type]"), byString)
+  }
+
   test("filtered search on the IVF / PQ / LSH paths: each equals an " +
        "index of the allowed subset under shared fits, adds no join " +
        "when unrestricted, and composes with deletion") {
@@ -887,7 +1111,7 @@ class AnnMultimodalSpec extends SparkSpec {
     val vecs = (0 until 30).map(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
-    val wh = java.nio.file.Files.createTempDirectory("annfil2_").toString
+    val wh = graft.core.Scratch.dir("annfil2_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     val q = vecs.filter($"vec_id" < 2)
     val even = vecs.filter($"vec_id" % 2 === 0)
@@ -961,7 +1185,7 @@ class AnnMultimodalSpec extends SparkSpec {
       (i.toLong, Array.fill(64)((rnd.nextFloat() - 0.5f) * scale))
     }.toDF("vec_id", "embedding")
     val q = vecs.filter($"vec_id" < 2)
-    val wh = java.nio.file.Files.createTempDirectory("annmet_").toString
+    val wh = graft.core.Scratch.dir("annmet_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"q_id", $"rank")
@@ -1019,7 +1243,7 @@ class AnnMultimodalSpec extends SparkSpec {
       (i.toLong, Array.fill(64)((rnd.nextFloat() - 0.5f) * scale))
     }.toDF("vec_id", "embedding")
     val q = vecs.filter($"vec_id" < 2)
-    val wh = java.nio.file.Files.createTempDirectory("annl2_").toString
+    val wh = graft.core.Scratch.dir("annl2_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"q_id", $"rank")
@@ -1080,7 +1304,7 @@ class AnnMultimodalSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val first = vecs.filter($"vec_id" % 2 === 0)
     val rest = vecs.filter($"vec_id" % 2 === 1)
-    val wh = java.nio.file.Files.createTempDirectory("annlc_").toString
+    val wh = graft.core.Scratch.dir("annlc_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"vec_id")
@@ -1149,7 +1373,7 @@ class AnnMultimodalSpec extends SparkSpec {
       (i.toLong, Array.fill(dim)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
     val v32 = mk(32, 40)
-    val wh = java.nio.file.Files.createTempDirectory("anngm_").toString
+    val wh = graft.core.Scratch.dir("anngm_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     val g = Ann.Geom(32, 8, 16)
     AnnIndex.buildIvfPq(cat, v32, "vec_id", "embedding", "g32",
@@ -1258,7 +1482,7 @@ class AnnMultimodalSpec extends SparkSpec {
       "a probe is unchanged under a legacy meta row") {
     import graft.ann.AnnIndex
     val vecs = kindVecs(53)
-    val wh = java.nio.file.Files.createTempDirectory("annfmt_").toString
+    val wh = graft.core.Scratch.dir("annfmt_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     val t = "fx"
     kc.build(cat, vecs.filter($"vec_id" < 16), t)
@@ -1321,7 +1545,7 @@ class AnnMultimodalSpec extends SparkSpec {
       "the index is unchanged") {
     import graft.ann.AnnIndex
     val vecs = kindVecs(59)
-    val wh = java.nio.file.Files.createTempDirectory("annbad_").toString
+    val wh = graft.core.Scratch.dir("annbad_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     kc.build(cat, vecs.filter($"vec_id" < 16), "bx")
     val before = kc.probe(cat, "bx", vecs).collect().map(_.toString)

@@ -102,7 +102,7 @@ class BpeSpec extends SparkSpec {
       (2L, "ananas bandana nab"),
       (3L, "nab nab banana banana")
     ).toDF("doc_id", "text")
-    val wh = java.nio.file.Files.createTempDirectory("bpeidx_").toString
+    val wh = graft.core.Scratch.dir("bpeidx_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     val trained = BpeIndex.build(cat, docs, "text", "voc",
       numMerges = 6, maxWords = 8)
@@ -196,7 +196,7 @@ class BpeSpec extends SparkSpec {
       (2L, "banana αβ αβ"),
       (3L, "éé αβ banana banana")
     ).toDF("doc_id", "text")
-    val wh = java.nio.file.Files.createTempDirectory("bbpeidx_").toString
+    val wh = graft.core.Scratch.dir("bbpeidx_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     val trained = BpeIndex.build(cat, docs, "text", "bvoc",
       numMerges = 6, maxWords = 16, alphabet = "bytes")

@@ -16,7 +16,7 @@ import graft.ops.Enrich
 class CatalogIoSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
+  private def tmp(p: String) = graft.core.Scratch.dir(p)
 
   test("SchemaRegistry parses the BigQuery-JSON format") {
     val json =
@@ -125,7 +125,7 @@ class CatalogIoSpec extends SparkSpec {
   }
 
   test("HttpCsvSource drops malformed lines under a declared schema") {
-    val p = Files.createTempFile("csv_", ".csv")
+    val p = java.nio.file.Paths.get(tmp("csv_"), "in.csv")
     Files.write(p, "a;b\n1;x\nnot-an-int;y\n2;z".getBytes("UTF-8"))
     val schema = StructType(Seq(StructField("a", IntegerType, true),
       StructField("b", StringType, true)))

@@ -16,7 +16,8 @@ import graft.runner.Runner
 class ChainPipelinesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(p: String) = Files.createTempDirectory(p)
+  private def tmp(p: String) =
+    java.nio.file.Paths.get(graft.core.Scratch.dir(p))
 
   private def writeZip(path: String, members: (String, String)*): Unit = {
     val z = new ZipOutputStream(new FileOutputStream(path))

@@ -132,7 +132,7 @@ class CoreSpec extends SparkSpec {
        "probe (the other legal encoding)") {
     // synthesize the nanos-producer shape: a bare INT64 ts column (no
     // logical type annotation) holding epoch nanos
-    val dir = java.nio.file.Files.createTempDirectory("graft-ev").toString
+    val dir = graft.core.Scratch.dir("graft-ev")
     val nanos0 = 1709251200L * 1000000000L // 2024-03-01T00:00:00Z
     Seq((1L, nanos0, 7L, "click", 1.0, "{}"),
         (2L, nanos0 + 3600L * 1000000000L, 8L, "view", 2.0, "{}"))
@@ -151,7 +151,7 @@ class CoreSpec extends SparkSpec {
     // fixture, not the live testdata: the loader must accept whichever
     // legal encoding the driver regenerates, so the suite must not
     // re-pin the current corpus's encoding (ADVICE r9)
-    val mdir = java.nio.file.Files.createTempDirectory("graft-evm").toString
+    val mdir = graft.core.Scratch.dir("graft-evm")
     Seq((1L, java.sql.Timestamp.valueOf("2024-03-01 00:00:00"), 7L,
         "click", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -174,23 +174,21 @@ class CoreSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
       dir
     }
-    val micros = write(java.nio.file.Files
-      .createTempDirectory("graft-evu").toString, 1709251200L * 1000000L)
+    val micros = write(graft.core.Scratch.dir("graft-evu"),
+      1709251200L * 1000000L)
     assert(Tables.tsEncodingOf(spark, s"$micros/events.parquet") !=
       Tables.TsEncoding.RawNanos)
     assert(Tables.load(spark, micros, "events")
       .select(date_format($"ts", "yyyy-MM-dd HH:mm:ss")).as[String]
       .collect().toSeq == Seq("2024-03-01 00:00:00"))
     // plain epoch millis
-    val millis = write(java.nio.file.Files
-      .createTempDirectory("graft-evl").toString, 1709251200L * 1000L)
+    val millis = write(graft.core.Scratch.dir("graft-evl"), 1709251200L * 1000L)
     assert(Tables.load(spark, millis, "events")
       .select(date_format($"ts", "yyyy-MM-dd HH:mm:ss")).as[String]
       .collect().toSeq == Seq("2024-03-01 00:00:00"))
     // a magnitude outside every plausible band fails loudly instead of
     // decoding into the wrong century
-    val junk = write(java.nio.file.Files
-      .createTempDirectory("graft-evj").toString, 12345L)
+    val junk = write(graft.core.Scratch.dir("graft-evj"), 12345L)
     val e = intercept[IllegalArgumentException] {
       Tables.load(spark, junk, "events").count()
     }

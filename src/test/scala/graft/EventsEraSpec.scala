@@ -22,8 +22,9 @@ class EventsEraSpec extends SparkSpec {
   private def at(h: Int, m: Int) =
     new Timestamp(base + (h * 3600L + m * 60L) * 1000L)
 
-  private lazy val fixtureDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-era").toString
+  // made per use: each test's scratch is deleted when the test ends
+  private def fixtureDir: String = {
+    val dir = graft.core.Scratch.dir("graft-era")
     Seq(
       // user 1: click 10:00, purchase 10:15 (same session, asof → the
       // click), click 11:30 (75-min gap → new session)

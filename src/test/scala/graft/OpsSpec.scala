@@ -321,7 +321,7 @@ class OpsSpec extends SparkSpec {
     import graft.catalog.TableCatalog
     val d = 2; val w = 64
     val cat = new TableCatalog(spark,
-      java.nio.file.Files.createTempDirectory("cmsst_").toString)
+      graft.core.Scratch.dir("cmsst_"))
     val rows = Seq.fill(40)("v0") ++ Seq.fill(20)("v1") ++
       (0 until 10).map(i => s"t$i")
     val df = rows.toDF("v")

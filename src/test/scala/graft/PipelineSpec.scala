@@ -33,7 +33,7 @@ class PipelineSpec extends SparkSpec {
     ).mkString("\n")
 
   test("events pipeline end-to-end on a fixture (SURVEY §7.2 slice)") {
-    val stage = Files.createTempDirectory("pipe_")
+    val stage = java.nio.file.Paths.get(graft.core.Scratch.dir("pipe_"))
     val csv = stage.resolve("events.csv")
     Files.write(csv, fixtureCsv.getBytes("UTF-8"))
     val cat = new TableCatalog(spark, stage.resolve("wh").toString)

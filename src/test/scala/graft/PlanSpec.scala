@@ -227,8 +227,7 @@ class PlanSpec extends SparkSpec {
     // the rolled layout directly (the real roll + cross-epoch
     // retraction runs under the dp04 oracle gate; this pin is about
     // the READ plan): base epoch + two rolled tables
-    val wh = java.nio.file.Files
-      .createTempDirectory("plan_epoch_").toString
+    val wh = graft.core.Scratch.dir("plan_epoch_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     Seq(0, 1, 2).foreach { k =>
       cat.writePartition(
@@ -246,7 +245,7 @@ class PlanSpec extends SparkSpec {
     // fresh warehouse (no epoch table yet): the empty-table fallback,
     // not an empty-reduce crash (ADVICE r12)
     val cat2 = new graft.catalog.TableCatalog(spark,
-      java.nio.file.Files.createTempDirectory("plan_epoch2_").toString)
+      graft.core.Scratch.dir("plan_epoch2_"))
     cat2.createFromSchema("fresh_out", out.schema)
     assert(graft.streaming.CorpusStream.readOutput(cat2, "fresh_out")
       .isEmpty)
@@ -354,7 +353,7 @@ class PlanSpec extends SparkSpec {
     val vecs = (0 until 30).map(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
-    val wh = java.nio.file.Files.createTempDirectory("plandc_").toString
+    val wh = graft.core.Scratch.dir("plandc_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     AnnIndex.buildSq8(cat, vecs.filter(col("vec_id") >= 5), "vec_id",
       "embedding", "dc")

@@ -10,6 +10,10 @@ import graft.io.{FileFetcher, HttpCsvSource, ZipCsvSource}
 class ScratchSpec extends SparkSpec {
   import spark.implicits._
 
+  // these tests open and close scopes themselves, and one of them makes
+  // a directory outside any scope: no per-test scope around them
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome = test()
+
   private def exists(d: String) = new File(d).exists()
 
   /** `graft_*` entries of the temp dir. */
@@ -108,7 +112,7 @@ class ScratchSpec extends SparkSpec {
     assert(ok.isEmpty, ok)
     // an sf dir without tables: each gate makes its scratch first, then
     // fails loading its input
-    val empty = Files.createTempDirectory("sf_empty_").toString
+    val empty = Scratch.dir("sf_empty_")
     try {
       val failed = leftBy(gates.foreach { g =>
         val e = intercept[RuntimeException](Bench.run(spark, g, empty))

@@ -9,7 +9,7 @@ class SqlTemplatesSpec extends SparkSpec {
   import spark.implicits._
 
   test("readSql substitutes positional params") {
-    val dir = Files.createTempDirectory("sqlt_")
+    val dir = java.nio.file.Paths.get(graft.core.Scratch.dir("sqlt_"))
     val p = dir.resolve("q.sql")
     Files.write(p, "SELECT * FROM t WHERE a = '{0}' AND b = '{1}'"
       .getBytes("UTF-8"))
@@ -30,7 +30,7 @@ class SqlTemplatesSpec extends SparkSpec {
   }
 
   test("template path equals the DataFrame form over a catalog") {
-    val wh = Files.createTempDirectory("sqlt_wh_").toString
+    val wh = graft.core.Scratch.dir("sqlt_wh_")
     val cat = new TableCatalog(spark, wh)
     val df = Seq(("a", "2021-06-01", 1), ("b", "2021-06-01", 2),
       ("c", "2021-06-02", 3)).toDF("k", "date_extract", "v")
@@ -38,7 +38,7 @@ class SqlTemplatesSpec extends SparkSpec {
       cat.writePartition(df, "custom_search", "date_extract", d))
     SqlTemplates.registerCatalog(spark, cat, wh)
 
-    val dir = Files.createTempDirectory("sqlt_q_")
+    val dir = java.nio.file.Paths.get(graft.core.Scratch.dir("sqlt_q_"))
     Files.write(dir.resolve("get_data.sql"),
       """SELECT k, v
         |FROM `graft.main.custom_search`
@@ -94,7 +94,7 @@ class SqlTemplatesSpec extends SparkSpec {
 
     // warehouse-backed custom_search/similarity so the two legacy
     // [p:d.t$__PARTITIONS_SUMMARY__] scans hit real metadata-only listings
-    val wh = Files.createTempDirectory("sqlt_refwh_").toString
+    val wh = graft.core.Scratch.dir("sqlt_refwh_")
     val cat = new TableCatalog(spark, wh)
     val cs = orders.select(col("o_orderkey").as("k"),
       col("o_totalprice").as("v"),

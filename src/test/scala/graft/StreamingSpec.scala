@@ -204,8 +204,8 @@ class StreamingSpec extends SparkSpec {
     val docs = graft.core.Tables.load(spark, dir, "documents")
       .select($"doc_id", $"text", $"lang")
       .orderBy($"doc_id").as[(Long, String, String)].collect()
-    val wh = java.nio.file.Files.createTempDirectory("corpus_wh_").toString
-    val cp = java.nio.file.Files.createTempDirectory("corpus_cp_").toString
+    val wh = graft.core.Scratch.dir("corpus_wh_")
+    val cp = graft.core.Scratch.dir("corpus_cp_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     val mem = MemoryStream[(Long, String, String)]
     val q = graft.streaming.CorpusStream.incremental(
@@ -232,7 +232,7 @@ class StreamingSpec extends SparkSpec {
     val docs = graft.core.Tables.load(spark, dir, "documents")
       .select($"doc_id", $"text", $"lang")
     val cat = new graft.catalog.TableCatalog(spark,
-      java.nio.file.Files.createTempDirectory("corpus_sm_").toString)
+      graft.core.Scratch.dir("corpus_sm_"))
     // 40-doc batches sit under DriverVerifyIdCap; a cadence of 4 folds
     // the state into a `c` partition several times on the way
     (0 until 500 by 40).zipWithIndex.foreach { case (lo, b) =>
@@ -359,7 +359,7 @@ class StreamingSpec extends SparkSpec {
        "to batch clusterDedup, and replaying the bridge batch is a " +
        "no-op") {
     val S = fam(0, 40); val X = fam(1, 30); val Y = fam(2, 30)
-    val wh = java.nio.file.Files.createTempDirectory("corpus_rt_").toString
+    val wh = graft.core.Scratch.dir("corpus_rt_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     val b0 = Seq((11L, txt("docA", S, X), "en"),
                  (20L, txt("docB", S, Y), "en"))
@@ -387,7 +387,7 @@ class StreamingSpec extends SparkSpec {
   test("out-of-order arrival elects the smaller-id near-dup and " +
        "retracts the earlier doc") {
     val T = fam(4, 60)
-    val wh = java.nio.file.Files.createTempDirectory("corpus_oo_").toString
+    val wh = graft.core.Scratch.dir("corpus_oo_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     CorpusStream.processBatch(
       Seq((21L, txt("docT", T), "en")).toDF("doc_id", "text", "lang"),
@@ -408,7 +408,7 @@ class StreamingSpec extends SparkSpec {
        "converges: the smaller id wins and the stored copy is " +
        "retracted; a larger-id re-delivery still drops at the gate") {
     val T = fam(5, 40)
-    val wh = java.nio.file.Files.createTempDirectory("corpus_oe_").toString
+    val wh = graft.core.Scratch.dir("corpus_oe_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     val text = txt("docX", T)
     def run(id: Long, b: Long): Unit =
@@ -443,7 +443,7 @@ class StreamingSpec extends SparkSpec {
     val P = fam(10, 12); val A = fam(11, 60); val B = fam(12, 60)
     val tA = txt("docF", P, A); val tB = txt("docF", P, B)
     assert(tA.take(60) == tB.take(60)) // identical fingerprint
-    val wh = java.nio.file.Files.createTempDirectory("corpus_fd_").toString
+    val wh = graft.core.Scratch.dir("corpus_fd_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def run(id: Long, t: String, b: Long): Unit =
       CorpusStream.processBatch(
@@ -470,7 +470,7 @@ class StreamingSpec extends SparkSpec {
        "index: a junk file planted in another bucket is never touched") {
     val P = fam(10, 12); val A = fam(11, 40)
     val tA = txt("docF", P, A)
-    val wh = java.nio.file.Files.createTempDirectory("corpus_fq_").toString
+    val wh = graft.core.Scratch.dir("corpus_fq_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def run(id: Long, t: String, b: Long): Unit =
       CorpusStream.processBatch(
@@ -498,7 +498,7 @@ class StreamingSpec extends SparkSpec {
        "stay and an untouched output partition is preserved") {
     val S = fam(0, 40); val X = fam(1, 30); val Y = fam(2, 30)
     val U = fam(6, 40)
-    val wh = java.nio.file.Files.createTempDirectory("corpus_sp_").toString
+    val wh = graft.core.Scratch.dir("corpus_sp_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def part(p: String) = spark.read
       .parquet(cat.partitionPath("sp_out", "batch_id", p))
@@ -532,8 +532,7 @@ class StreamingSpec extends SparkSpec {
        "the rest of the output table, in both emit layouts") {
     for (minRows <- Seq(CorpusStream.PkSplitMinRows, 1L)) {
       val T = fam(7, 60); val U = fam(8, 40)
-      val wh = java.nio.file.Files
-        .createTempDirectory("corpus_ei_").toString
+      val wh = graft.core.Scratch.dir("corpus_ei_")
       val cat = new graft.catalog.TableCatalog(spark, wh)
       def run(id: Long, t: String, b: Long): Unit =
         CorpusStream.processBatch(
@@ -566,7 +565,7 @@ class StreamingSpec extends SparkSpec {
        "marker, and the retraction still resolves through the " +
        "compacted emit rows") {
     val T = fam(9, 60); val U = fam(8, 40)
-    val wh = java.nio.file.Files.createTempDirectory("corpus_ck_").toString
+    val wh = graft.core.Scratch.dir("corpus_ck_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def run(id: Long, t: String, b: Long): Unit =
       CorpusStream.processBatch(
@@ -591,7 +590,7 @@ class StreamingSpec extends SparkSpec {
        "its own epoch in place") {
     val T = fam(9, 60); val U = fam(8, 40); val V = fam(7, 40)
     val W = fam(6, 40)
-    val wh = java.nio.file.Files.createTempDirectory("corpus_ep_").toString
+    val wh = graft.core.Scratch.dir("corpus_ep_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def run(id: Long, t: String, b: Long): Unit =
       CorpusStream.processBatch(
@@ -639,7 +638,7 @@ class StreamingSpec extends SparkSpec {
        "merges and label-table compaction") {
     val S = fam(0, 40); val X = fam(1, 30); val Y = fam(2, 30)
     val P = fam(3, 8)
-    val wh = java.nio.file.Files.createTempDirectory("corpus_ml_").toString
+    val wh = graft.core.Scratch.dir("corpus_ml_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def run(id: Long, t: String, batch: Long): Unit =
       CorpusStream.processBatch(
@@ -683,7 +682,7 @@ class StreamingSpec extends SparkSpec {
       .select($"doc_id", $"text", $"lang")
     val first = docs.filter($"doc_id" < 250)
     val second = docs.filter($"doc_id" >= 250)
-    val wh = java.nio.file.Files.createTempDirectory("corpus_rp_").toString
+    val wh = graft.core.Scratch.dir("corpus_rp_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     graft.streaming.CorpusStream.processBatch(first, cat,
       "corpus_seen", "corpus_sampled", 0L)
@@ -709,7 +708,7 @@ class StreamingSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val docs = graft.core.Tables.load(spark, dir, "documents")
       .select($"doc_id", $"text", $"lang")
-    val wh = java.nio.file.Files.createTempDirectory("corpus_td_").toString
+    val wh = graft.core.Scratch.dir("corpus_td_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     Seq(docs.filter($"doc_id" < 250), docs.filter($"doc_id" >= 250))
       .zipWithIndex.foreach { case (b, i) =>
@@ -754,7 +753,7 @@ class StreamingSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val docs = graft.core.Tables.load(spark, dir, "documents")
       .select($"doc_id", $"text", $"lang")
-    val wh = java.nio.file.Files.createTempDirectory("corpus_cdc_").toString
+    val wh = graft.core.Scratch.dir("corpus_cdc_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def adds(df: org.apache.spark.sql.DataFrame) =
       df.select(lit("add").as("op"), $"doc_id", $"text", $"lang")
@@ -763,7 +762,7 @@ class StreamingSpec extends SparkSpec {
         lit(null).cast("string").as("text"),
         lit(null).cast("string").as("lang"))
     // reference: same two add batches, takedown applied at the end
-    val whR = java.nio.file.Files.createTempDirectory("corpus_cdcr_").toString
+    val whR = graft.core.Scratch.dir("corpus_cdcr_")
     val catR = new graft.catalog.TableCatalog(spark, whR)
     Seq(docs.filter($"doc_id" < 250), docs.filter($"doc_id" >= 250))
       .zipWithIndex.foreach { case (b, i) =>
@@ -818,8 +817,8 @@ class StreamingSpec extends SparkSpec {
     import graft.text.ShardExport
     val docs = (0L until 40L).map(i =>
       (i, i / 10, s"doc-$i body ${i * 31}")).toDF("id", "chunk", "text")
-    val out = java.nio.file.Files.createTempDirectory("shexp_").toString
-    val wh = java.nio.file.Files.createTempDirectory("shexp_wh_").toString
+    val out = graft.core.Scratch.dir("shexp_")
+    val wh = graft.core.Scratch.dir("shexp_wh_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     ShardExport.exportJsonl(cat, docs, "exp", out)
     val meta = cat.read("exp").collect()(0)
@@ -858,7 +857,7 @@ class StreamingSpec extends SparkSpec {
     assert(ShardExport.purgeAll(cat, Seq(16L).toDF("id")) == Seq("exp"))
     assert(readIds == wantLeft - 16L)
     // no registry at all (fresh warehouse): purgeAll is an empty no-op
-    val whE = java.nio.file.Files.createTempDirectory("shexp_e_").toString
+    val whE = graft.core.Scratch.dir("shexp_e_")
     assert(ShardExport.purgeAll(
       new graft.catalog.TableCatalog(spark, whE),
       Seq(1L).toDF("id")).isEmpty)
@@ -899,8 +898,7 @@ class StreamingSpec extends SparkSpec {
       docs.filter($"doc_id" >= 400))
     def run(every: Int): (Set[(Long, String, Int)], Set[(Long, String)],
         Int, graft.catalog.TableCatalog) = {
-      val wh = java.nio.file.Files
-        .createTempDirectory("corpus_cm_").toString
+      val wh = graft.core.Scratch.dir("corpus_cm_")
       val cat = new graft.catalog.TableCatalog(spark, wh)
       slices.zipWithIndex.foreach { case (b, i) =>
         CorpusStream.processBatch(b, cat, "cm_seen", "cm_out", i.toLong,
@@ -969,7 +967,7 @@ class StreamingSpec extends SparkSpec {
     val slices = (0 until 5).map(i =>
       docs.filter($"doc_id" >= i * 100 && $"doc_id" < (i + 1) * 100))
     def catalog() = new graft.catalog.TableCatalog(spark,
-      java.nio.file.Files.createTempDirectory("corpus_rf_").toString)
+      graft.core.Scratch.dir("corpus_rf_"))
     def batch(cat: graft.catalog.TableCatalog, i: Int): Unit =
       CorpusStream.processBatch(slices(i), cat, "rf_seen", "rf_out",
         i.toLong, compactEvery = 0)
@@ -1009,44 +1007,13 @@ class StreamingSpec extends SparkSpec {
     assert(rowsOf(cat) == rowsOf(ref))
   }
 
-  /** (spark.job.description, stage names) of every job `body` starts:
-    * a listener drained by a labelled sentinel job — one queue delivers
-    * a listener's events in order, so once the sentinel's start arrives
-    * every earlier job's start has too. */
-  private def jobsStartedBy(body: => Unit): Seq[(String, String)] = {
-    import scala.jdk.CollectionConverters._
-    val started =
-      new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        started.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("") -> e.stageInfos.map(_.name).mkString("; "))
-    }
-    val sc = spark.sparkContext
-    val sentinel = "job-label-sentinel"
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription(sentinel)
-      try spark.range(1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!started.asScala.exists(_._1 == sentinel) &&
-          System.nanoTime() < deadline) Thread.sleep(50)
-    } finally sc.removeSparkListener(listener)
-    val jobs = started.asScala.toSeq
-    assert(jobs.exists(_._1 == sentinel), "listener never drained")
-    jobs.filter(_._1 != sentinel)
-  }
-
   test("every job a chain batch starts carries its phase label, not " +
        "only the batch-wide one") {
     val dir = "/root/testdata/sf0.001"
     val docs = graft.core.Tables.load(spark, dir, "documents")
       .select($"doc_id", $"text", $"lang")
     val cat = new graft.catalog.TableCatalog(spark,
-      java.nio.file.Files.createTempDirectory("corpus_jl_").toString)
+      graft.core.Scratch.dir("corpus_jl_"))
     val jobs = jobsStartedBy {
       // three batches with a cadence of 2: the third compacts first
       (0 until 3).foreach { i =>
@@ -1073,7 +1040,7 @@ class StreamingSpec extends SparkSpec {
           .mkString(" "), "en")
       }.toDF("doc_id", "text", "lang")
     val cat = new graft.catalog.TableCatalog(spark,
-      java.nio.file.Files.createTempDirectory("corpus_jb_").toString)
+      graft.core.Scratch.dir("corpus_jb_"))
     // batch 2 compacts batches 0-1 first: the measured batch reads a
     // compacted `c` partition beside one live partition
     (0 until 3).foreach { b =>
@@ -1188,8 +1155,8 @@ class StreamingSpec extends SparkSpec {
       (id + 1000000L, t, l) }
     assert(pads.size == 65)
     def run(name: String, padded: Boolean) = {
-      val cat = new graft.catalog.TableCatalog(spark, java.nio.file.Files
-        .createTempDirectory(s"corpus_${name}_").toString)
+      val cat = new graft.catalog.TableCatalog(spark,
+        graft.core.Scratch.dir(s"corpus_${name}_"))
       val jobs = jobsStartedBy {
         feed.zipWithIndex.foreach { case (b, i) =>
           val rows = if (padded && i > 0) b ++ pads else b
@@ -1244,7 +1211,7 @@ class StreamingSpec extends SparkSpec {
     def doc(id: Long) = (id, s"u$id $body", "en")
     val stored = (0L until 60L).map(doc)
     val cat = new graft.catalog.TableCatalog(spark,
-      java.nio.file.Files.createTempDirectory("corpus_pc_").toString)
+      graft.core.Scratch.dir("corpus_pc_"))
     def run(rows: Seq[(Long, String, String)], b: Long) =
       CorpusStream.processBatch(rows.toDF("doc_id", "text", "lang"), cat,
         "pc_seen", "pc_out", b, threshold = 0.45, admit = df => df)
@@ -1275,8 +1242,7 @@ class StreamingSpec extends SparkSpec {
     def rows(ids: Range) = ids.map(i => (i.toLong, randomWords(i), "en"))
     val batches = Seq(rows(0 until 10), rows(10 until 20), rows(20 until 30),
       rows(30 until 39) :+ ((95L, "extra " + randomWords(5), "en")))
-    val wh = java.nio.file.Files.createTempDirectory(s"corpus_${name}_")
-      .toString
+    val wh = graft.core.Scratch.dir(s"corpus_${name}_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     def run(b: Int) = CorpusStream.processBatch(
       batches(b).toDF("doc_id", "text", "lang"), cat, s"${name}_seen",
@@ -1285,7 +1251,8 @@ class StreamingSpec extends SparkSpec {
     val bandsDir =
       java.nio.file.Paths.get(cat.tablePath(s"${name}_seen_bands"))
     val saved =
-      java.nio.file.Files.createTempDirectory(s"corpus_${name}_saved_")
+      java.nio.file.Paths.get(
+        graft.core.Scratch.dir(s"corpus_${name}_saved_"))
     org.apache.commons.io.FileUtils.copyDirectory(bandsDir.toFile,
       saved.toFile)
     assert(CorpusStream.compactState(cat, s"${name}_seen", "3"))
@@ -1353,7 +1320,7 @@ class StreamingSpec extends SparkSpec {
     def batch(ids: Range) = ids.map(i => (i.toLong, randomWords(i), "en"))
       .toDF("doc_id", "text", "lang")
     val cat = new graft.catalog.TableCatalog(spark,
-      java.nio.file.Files.createTempDirectory("corpus_of_").toString)
+      graft.core.Scratch.dir("corpus_of_"))
     def run(ids: Range, b: Long) = CorpusStream.processBatch(batch(ids),
       cat, "of_seen", "of_out", b, admit = df => df)
     run(0 until 10, 0L)
@@ -1413,7 +1380,7 @@ class StreamingSpec extends SparkSpec {
       docs.filter($"doc_id" < 150),
       docs.filter($"doc_id" >= 150 && $"doc_id" < 300),
       docs.filter($"doc_id" >= 300))
-    val wh = java.nio.file.Files.createTempDirectory("corpus_cr_").toString
+    val wh = graft.core.Scratch.dir("corpus_cr_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     slices.zipWithIndex.foreach { case (b, i) =>
       CorpusStream.processBatch(b, cat, "cr_seen", "cr_out", i.toLong,
@@ -1443,8 +1410,7 @@ class StreamingSpec extends SparkSpec {
     def batchOf(i: Int) =
       vecs.filter($"vec_id" >= 10 + 10 * i && $"vec_id" < 20 + 10 * i)
     def run(every: Int) = {
-      val wh = java.nio.file.Files
-        .createTempDirectory("ann_ing_").toString
+      val wh = graft.core.Scratch.dir("ann_ing_")
       val cat = new graft.catalog.TableCatalog(spark, wh)
       AnnIndex.buildSq8(cat, vecs.filter($"vec_id" < 10), "vec_id",
         "embedding", "ing")
@@ -1493,7 +1459,7 @@ class StreamingSpec extends SparkSpec {
       df.orderBy($"q_id", $"rank")
         .select($"q_id".cast("long"), $"rank", $"vec_id".cast("long"),
           $"qcos").collect().toSeq
-    val wh = java.nio.file.Files.createTempDirectory("ann_cdc_").toString
+    val wh = graft.core.Scratch.dir("ann_cdc_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     AnnIndex.buildSq8(cat, vecs.filter($"vec_id" < 10), "vec_id",
       "embedding", "cdc")
@@ -1586,14 +1552,14 @@ class StreamingSpec extends SparkSpec {
         "vec_id", "embedding", 5, nprobe = 2, refine = 8))
     // reference: everything bulk-loaded under fits trained on the
     // full corpus
-    val whA = java.nio.file.Files.createTempDirectory("ing_a_").toString
+    val whA = graft.core.Scratch.dir("ing_a_")
     val catA = new graft.catalog.TableCatalog(spark, whA)
     AnnIndex.buildIvfPq(catA, vecs, "vec_id", "embedding", "r",
       numCells = 4, trainIters = 1, pqIters = 1)
     // streamed: seed-build a quarter (fits still trained on the full
     // corpus — the planned-capacity production shape), then 3
     // micro-batches through the generic sink with the cadence
-    val whB = java.nio.file.Files.createTempDirectory("ing_b_").toString
+    val whB = graft.core.Scratch.dir("ing_b_")
     val catB = new graft.catalog.TableCatalog(spark, whB)
     AnnIndex.buildIvfPq(catB, vecs.filter($"vec_id" < 12), "vec_id",
       "embedding", "r", numCells = 4, trainIters = 1, pqIters = 1,
@@ -1703,8 +1669,7 @@ class StreamingSpec extends SparkSpec {
     val docs = graft.core.Tables.load(spark, dir, "documents")
       .select($"doc_id", $"text", $"lang")
     def run(split: Boolean): (Set[(Long, String, Int)], String) = {
-      val wh = java.nio.file.Files
-        .createTempDirectory("corpus_pk_").toString
+      val wh = graft.core.Scratch.dir("corpus_pk_")
       val cat = new graft.catalog.TableCatalog(spark, wh)
       val minRows = if (split) 1L else CorpusStream.PkSplitMinRows
       Seq(docs.filter($"doc_id" < 200),
@@ -1735,7 +1700,7 @@ class StreamingSpec extends SparkSpec {
        "cross-batch near-dups verify across shapes and compaction " +
        "heals to one pk-split partition") {
     val T = fam(6, 60)
-    val wh = java.nio.file.Files.createTempDirectory("corpus_mx_").toString
+    val wh = graft.core.Scratch.dir("corpus_mx_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     // batch 0 PLAIN (default threshold), batch 1 SPLIT (forced): the
     // split batch's near-dup (J ~ 0.9) must still verify against the
@@ -1795,7 +1760,7 @@ class StreamingSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val docs = graft.core.Tables.load(spark, dir, "documents")
       .select($"doc_id", $"text", $"lang")
-    val wh = java.nio.file.Files.createTempDirectory("corpus_gw_").toString
+    val wh = graft.core.Scratch.dir("corpus_gw_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     // t=0.7 → 8x6 = 48-perm state
     graft.streaming.CorpusStream.processBatch(
@@ -1843,7 +1808,7 @@ class StreamingSpec extends SparkSpec {
     // held-out set = the same slice dd08 uses
     val bench = docs.filter($"doc_id" % 97 === 0)
     val corpus = docs.filter($"doc_id" % 97 =!= 0)
-    val wh = java.nio.file.Files.createTempDirectory("corpus_dc_").toString
+    val wh = graft.core.Scratch.dir("corpus_dc_")
     val cat = new graft.catalog.TableCatalog(spark, wh)
     graft.streaming.CorpusStream.processBatch(corpus, cat,
       "corpus_state", "corpus_sampled", 0L, benchmark = Some(bench))

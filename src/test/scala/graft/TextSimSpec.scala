@@ -779,8 +779,7 @@ class TextSimSpec extends SparkSpec {
 
   test("dp02 corpus report keeps a language whose docs are all under " +
        "3 tokens: NULL shingle estimate, never a dropped row") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dp02fix_").toString
+    val dir = graft.core.Scratch.dir("graft_dp02fix_")
     Seq(
       (1L, "alpha beta gamma delta", "en", "web", 22L),
       (2L, "one two three four five six", "en", "web", 27L),
