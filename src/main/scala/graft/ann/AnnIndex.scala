@@ -70,20 +70,11 @@ import graft.core.{Bounded, Trace}
   *                     loudly (an id-level tombstone cannot tell the
   *                     old row from the new one — serving would
   *                     silently hide the re-insert).
-  *   `<index>_segmeta` one (seg, rows) row per segment (round 14) —
-  *                     the O(#segments) counts that make an append's
-  *                     `indexed_n` update O(batch) instead of a
-  *                     corpus-sized recount; reconciled against the
-  *                     on-disk `seg=` partitions so a crash between
-  *                     the segment write and the count write (or a
-  *                     pre-r14 index) costs one O(that-segment)
-  *                     recount, never a full-table pass. A recorded
-  *                     count is never stale (round 15): any write that
-  *                     OVERWRITES an existing segment — a replayed
-  *                     append, a compaction rewrite — tombstones that
-  *                     segment's count first, so a crash mid-overwrite
-  *                     routes the segment through the recount path
-  *                     instead of serving the pre-crash count.
+  *
+  * No side table records segment sizes: an append sums the other
+  * committed segments' row counts from their parquet footers
+  * ([[TableCatalog.partitionRowCount]], no Spark job), so `indexed_n`
+  * counts whatever the last write actually committed, after any crash.
   *
   * Vectors and norms round-trip parquet exactly (doubles are stored
   * bit-for-bit), so a probe over the loaded index is bit-identical to
@@ -124,7 +115,6 @@ object AnnIndex {
   val DriverProbeQueryCap = 64
 
   private def assignTableOf(indexTable: String) = indexTable + "_assign"
-  private def segMetaTableOf(indexTable: String) = indexTable + "_segmeta"
   private def delsTableOf(indexTable: String) = indexTable + "_dels"
 
   /** Build + persist the LSH bucket index: fits the plane count to the
@@ -176,9 +166,9 @@ object AnnIndex {
     * assignment segment. Runs under the assignment table's writer
     * lock; `segKey` (default: next numeric segment) makes a replaying
     * caller overwrite its own segment instead of duplicating.
-    * `indexed_n` is recounted from the table after the write, so the
-    * meta stays exact under replay; past [[MaxDriftFactor]] the append
-    * fails loudly (the fit no longer covers the corpus) unless
+    * `indexed_n` is the other segments' committed rows plus the batch,
+    * so the meta stays exact under replay; past [[MaxDriftFactor]] the
+    * append fails loudly (the fit no longer covers the corpus) unless
     * `allowStale` overrides. */
   def appendLsh(catalog: TableCatalog, data: DataFrame, idCol: String,
                 vecCol: String, indexTable: String,
@@ -660,17 +650,10 @@ object AnnIndex {
         // structural. The count is also the self-heal point:
         // compaction recounts after any crashed append (orphan
         // segment) or crashed prior compaction (duplicates the
-        // distinct just collapsed).
+        // distinct just collapsed), and it is the new seg 0's count.
         val n = all.count()
-        // same tombstone discipline as the append: seg 0 is about to be
-        // overwritten, so its recorded count must go first — a crash
-        // mid-rewrite then recounts seg 0 from disk instead of
-        // trusting a count for data that may be half-replaced
-        writeSegCounts(catalog, indexTable,
-          readSegCounts(catalog, indexTable) - "0")
         writeSeg(catalog, indexTable, all, "0", m.codec.sub)
         dropOtherSegs(catalog, indexTable, keep = "0")
-        writeSegCounts(catalog, indexTable, Map("0" -> n))
         writeMeta(catalog, indexTable, m.copy(indexedN = n))
       }
       // drain the tombstones LAST: their rows are already gone from
@@ -833,8 +816,7 @@ object AnnIndex {
     * meta to the rebuild marker, write the fit artifacts, then the new
     * segment 0 (dropping every other segment and draining the
     * tombstones — a new index generation starts from a clean slate),
-    * then the segment count, and the meta LAST (the marker refuses
-    * every probe until then). */
+    * and the meta LAST (the marker refuses every probe until then). */
   private def commitBuild(catalog: TableCatalog, data: DataFrame,
                           idCol: String, vecCol: String,
                           indexTable: String, m: Meta, fits: Fits): Unit =
@@ -848,17 +830,17 @@ object AnnIndex {
         m.codec.assign(data, idCol, vecCol, m, fits), "0", m.codec.sub)
       dropOtherSegs(catalog, indexTable, keep = "0")
       drainDels(catalog, indexTable)
-      writeSegCounts(catalog, indexTable, Map("0" -> m.indexedN))
       writeMeta(catalog, indexTable, m)
     }
 
   /** The one append: under the assignment lock, read the meta (of
     * `expected` kind, or whichever kind it records), encode the batch
     * under the kind's LOADED fits, and land it as one segment `segKey`
-    * (default: the next numeric one). `indexed_n` is the sum of the
-    * OTHER segments' recorded counts plus the batch — exact under
-    * replay (a replayed segKey overwrites itself, so its old count
-    * drops out of the sum). */
+    * (default: the next numeric one). `indexed_n` is the OTHER
+    * committed segments' footer row counts plus the batch — exact under
+    * replay (a replayed segKey overwrites itself, so its old rows drop
+    * out of the sum) and after a crash at any write, since the footers
+    * describe exactly the files a probe reads. */
   private def append(catalog: TableCatalog, data: DataFrame,
                      idCol: String, vecCol: String, indexTable: String,
                      expected: Option[IndexKind], segKey: Option[String],
@@ -868,13 +850,15 @@ object AnnIndex {
       val assigned = m.codec.assign(data, idCol, vecCol, m,
         m.codec.load(catalog, indexTable))
       val incoming = data.count()
-      val key = segKey.getOrElse(
-        nextKey(catalog, assignTableOf(indexTable), "seg"))
+      val assignTable = assignTableOf(indexTable)
+      val key = segKey.getOrElse(nextKey(catalog, assignTable, "seg"))
       // checked BEFORE the write — a refused append must not leave
       // orphan segment rows that probes (which read the whole table,
       // not the meta's count) would silently serve
-      val prior = readSegCounts(catalog, indexTable)
-      val indexed = (prior - key).values.sum + incoming
+      val indexed = catalog.listPartitions(assignTable, "seg")
+        .filter(_ != key)
+        .map(catalog.partitionRowCount(assignTable, "seg", _)).sum +
+        incoming
       requireFresh(m.copy(indexedN = indexed), indexTable, allowStale)
       // re-insert guard: an id-level tombstone (deleteIds) cannot tell a
       // deleted row from a newer row under the same id — appending one
@@ -889,15 +873,7 @@ object AnnIndex {
             "currently delete-tombstoned — run AnnIndex.compactSegs to " +
             "purge the tombstones before re-inserting a deleted id")
       }
-      // replay tombstone: drop the key's recorded count BEFORE rewriting
-      // its segment, so a crash mid-overwrite leaves a segment that
-      // readSegCounts RECOUNTS from disk (exact for whatever the crash
-      // actually left committed) instead of a stale recorded count that
-      // silently misstates indexed_n until the batch is replayed
-      if (prior.contains(key))
-        writeSegCounts(catalog, indexTable, prior - key)
       writeSeg(catalog, indexTable, assigned, key, m.codec.sub)
-      writeSegCounts(catalog, indexTable, prior - key + (key -> incoming))
       writeMeta(catalog, indexTable, m.copy(indexedN = indexed))
     }
 
@@ -973,16 +949,14 @@ object AnnIndex {
 
   /** Static read schemas of the index's own tables, so no read of
     * them starts a footer-inference job: the meta ([[writeMeta]]),
-    * `_segmeta` ([[writeSegCounts]]), `_dels` ([[deleteIds]]), `_cent`
-    * and `_pqcent` ([[writeVecs]], `m` only when keyed), and the SQ8
-    * codes ([[Sq8]]'s encoding) a driver-path probe reads. */
+    * `_dels` ([[deleteIds]]), `_cent` and `_pqcent` ([[writeVecs]], `m`
+    * only when keyed), and the SQ8 codes ([[Sq8]]'s encoding) a
+    * driver-path probe reads. */
   private val MetaSchema = new StructType().add("kind", StringType)
     .add("geometry", IntegerType).add("dim", IntegerType)
     .add("pq_m", IntegerType).add("pq_k", IntegerType)
     .add("fitted_n", LongType).add("indexed_n", LongType)
     .add("metric", StringType)
-  private val SegMetaSchema = new StructType().add("seg", StringType)
-    .add("rows", LongType)
   private val DelsSchema = new StructType().add("id", LongType)
   private def vecsSchema(keyed: Boolean) =
     (if (keyed) new StructType().add("m", IntegerType) else new StructType())
@@ -1163,46 +1137,6 @@ object AnnIndex {
       assigned.withColumn("seg", lit(segKey))
         .repartition(col(subField)),
       assignTableOf(indexTable), "seg", segKey, subField)
-
-  /** Per-segment row counts, the O(#segments) metadata that makes an
-    * append O(batch): `indexed_n` is the sum of the OTHER segments'
-    * recorded counts plus the incoming batch — never a corpus-sized
-    * recount of the assignment table (the r13 form read and counted
-    * the whole table on every append). The `_segmeta` table holds one
-    * (seg, rows) row per segment and is fully rewritten inside the
-    * table lock on every build/append — O(#segments), tiny.
-    *
-    * Reconciliation keeps the count exact without trusting `_segmeta`
-    * blindly: any `seg=` partition present on disk but absent from the
-    * table (a pre-r14 index, or a crash between the segment write and
-    * the `_segmeta` write) is counted directly — partition pruning
-    * makes that O(that segment), and under the replay contract it
-    * happens at most once per such segment. */
-  private def readSegCounts(catalog: TableCatalog,
-                            indexTable: String): Map[String, Long] = {
-    val assignTable = assignTableOf(indexTable)
-    val known: Map[String, Long] =
-      if (!catalog.tableExists(segMetaTableOf(indexTable))) Map.empty
-      else catalog.readListed(segMetaTableOf(indexTable), SegMetaSchema)
-        .collect()
-        .map(r => (r.getString(r.fieldIndex("seg")),
-          r.getLong(r.fieldIndex("rows")))).toMap
-    val onDisk = catalog.listPartitions(assignTable, "seg")
-    val unrecorded = onDisk.filterNot(known.contains)
-    known.view.filterKeys(onDisk.contains).toMap ++
-      unrecorded.map { s =>
-        s -> catalog.read(assignTable)
-          .filter(col("seg").cast("string") === s).count()
-      }.toMap
-  }
-
-  private def writeSegCounts(catalog: TableCatalog, indexTable: String,
-                             counts: Map[String, Long]): Unit = {
-    import catalog.spark.implicits._
-    catalog.writeFull(
-      counts.toSeq.sortBy(_._1).toDF("seg", "rows"),
-      segMetaTableOf(indexTable))
-  }
 
   private def dropOtherSegs(catalog: TableCatalog, indexTable: String,
                             keep: String): Unit =

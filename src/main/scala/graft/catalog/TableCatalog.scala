@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -114,35 +114,28 @@ class TableCatalog(val spark: SparkSession, warehouse: String) {
   /** Read a table; partition columns are recovered from directory names.
     * A fresh schema-only table (no partitions written yet) reads as an
     * empty frame with the declared schema from the `_schema` anchor. */
-  def read(table: String): DataFrame = {
-    val hasData = listStatusOrEmpty(new Path(tablePath(table)))
-      .exists { st =>
-        val n = st.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-    if (hasData)
+  def read(table: String): DataFrame =
+    if (hasData(table))
       spark.read.option("basePath", tablePath(table))
         .parquet(tablePath(table))
     else
       spark.read.parquet(tablePath(table) + "/_schema")
-  }
 
   /** [[read]] with a caller-supplied schema (see the schema-bearing
     * [[readPaths]] overload for why): skips the footer-inference job
     * and pins partition-column types (a directory set like `2`, `7`
     * would otherwise infer as int one day and string the next). */
-  def read(table: String, schema: StructType): DataFrame = {
-    val hasData = listStatusOrEmpty(new Path(tablePath(table)))
-      .exists { st =>
-        val n = st.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-    if (hasData)
+  def read(table: String, schema: StructType): DataFrame =
+    if (hasData(table))
       spark.read.schema(schema).option("basePath", tablePath(table))
         .parquet(tablePath(table))
     else
       spark.read.schema(schema).parquet(tablePath(table) + "/_schema")
-  }
+
+  /** True when the table root holds a visible entry (a data file or a
+    * partition directory), i.e. more than its `_schema` anchor. */
+  private def hasData(table: String): Boolean =
+    listStatusOrEmpty(new Path(tablePath(table))).exists(visible)
 
   /** Read an explicit subset of a table's partition directories,
     * partition columns recovered relative to the table root — the
@@ -177,18 +170,11 @@ class TableCatalog(val spark: SparkSession, warehouse: String) {
     * directory values are not recovered: `schema` names data columns
     * only. A missing table reads as no rows. */
   def readListed(table: String, schema: StructType): DataFrame = {
-    def files(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      listStatusOrEmpty(p).filterNot { st =>
-        val n = st.getPath.getName
-        (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
-          n.endsWith("._COPYING_")
-      }.sortBy(_.getPath.getName).flatMap { st =>
-        if (st.isDirectory) files(st.getPath) else Seq(st)
-      }
     val root = new Path(tablePath(table))
     spark.baseRelationToDataFrame(
       org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-        new TableCatalog.ListedFiles(root, files(root)), new StructType(),
+        new TableCatalog.ListedFiles(root, dataFilesUnder(root).toSeq),
+        new StructType(),
         schema, None,
         new org.apache.spark.sql.execution.datasources.parquet
           .ParquetFileFormat(), Map.empty)(spark))
@@ -245,61 +231,65 @@ class TableCatalog(val spark: SparkSession, warehouse: String) {
   }
 
   /** True when the partition directory holds at least one visible data
-    * file (non-underscore, non-dot) — distinguishes a plain single-file
-    * batch partition from an empty or marker-only directory. */
+    * file — distinguishes a plain single-file batch partition from an
+    * empty or marker-only directory. */
   def partitionHasDataFiles(table: String, partField: String,
                             partValue: String): Boolean =
     listStatusOrEmpty(new Path(partitionPath(table, partField, partValue)))
-      .exists { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
+      .exists(st => st.isFile && visible(st))
 
-  /** Rows in a plain partition's visible data files, summed from their
-    * parquet footers on the driver — a metadata read per file, no Spark
-    * job. Sub-directories (a `subField=` split partition) are not
-    * descended into. */
+  /** Rows in a partition's visible data files, sub-directories (a
+    * `subField=` split partition) included, summed from their parquet
+    * footers on the driver — a metadata read per file, no Spark job. */
   def partitionRowCount(table: String, partField: String,
-                        partValue: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    listStatusOrEmpty(new Path(partitionPath(table, partField, partValue)))
-      .filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      .map { st =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-        try r.getRecordCount finally r.close()
-      }.sum
-  }
+                        partValue: String): Long =
+    dataFilesUnder(new Path(partitionPath(table, partField, partValue)))
+      .map(withFooter(_)(_.getRecordCount)).sum
 
   /** Key-value metadata of one visible data file's parquet footer in a
-    * partition — a plain file, else the first file of the first
-    * sub-directory (one write stamps every file with the same keys) —
-    * read on the driver like [[partitionRowCount]], no Spark job. None
-    * when the partition holds no data file. */
+    * partition — the first in name order, so a plain file, else the
+    * first file of the first sub-directory (one write stamps every file
+    * with the same keys) — read on the driver like
+    * [[partitionRowCount]], no Spark job. None when the partition holds
+    * no data file. */
   def partitionFooterMetadata(table: String, partField: String,
       partValue: String): Option[Map[String, String]] = {
-    def visible(st: org.apache.hadoop.fs.FileStatus) = {
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-    def dataFiles(p: Path) =
-      listStatusOrEmpty(p).filter(st => st.isFile && visible(st))
-    val dir = new Path(partitionPath(table, partField, partValue))
-    val file = dataFiles(dir).headOption.orElse(
-      listStatusOrEmpty(dir).filter(st => st.isDirectory && visible(st))
-        .sortBy(_.getPath.getName).iterator
-        .flatMap(d => dataFiles(d.getPath).headOption).nextOption())
-    file.map { st =>
-      import scala.jdk.CollectionConverters._
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st,
-          spark.sparkContext.hadoopConfiguration))
-      try r.getFooter.getFileMetaData.getKeyValueMetaData.asScala.toMap
-      finally r.close()
-    }
+    import scala.jdk.CollectionConverters._
+    dataFilesUnder(new Path(partitionPath(table, partField, partValue)))
+      .nextOption().map(withFooter(_)(
+        _.getFooter.getFileMetaData.getKeyValueMetaData.asScala.toMap))
+  }
+
+  /** Spark's listing rule for what a table directory holds: `_` names
+    * without `=` (`_SUCCESS`, `_temporary`, `_schema`), `.` names
+    * (checksums) and in-flight `._COPYING_` uploads are not data. Every
+    * listing here uses it, so counts and reads agree on which files
+    * exist. */
+  private def visible(st: FileStatus): Boolean = {
+    val n = st.getPath.getName
+    !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+      n.endsWith("._COPYING_"))
+  }
+
+  /** Every visible data file under `dir`, every level, in name order;
+    * lazy, so a caller that needs the first file lists one branch. */
+  private def dataFilesUnder(dir: Path): Iterator[FileStatus] =
+    listStatusOrEmpty(dir).filter(visible).sortBy(_.getPath.getName)
+      .iterator.flatMap { st =>
+        if (st.isDirectory) dataFilesUnder(st.getPath) else Iterator(st)
+      }
+
+  /** Open one data file's parquet footer, apply `f`, close it. The
+    * read options wrap the session's Hadoop conf: the one-argument
+    * `ParquetFileReader.open` builds a fresh configuration for every
+    * file, which costs more than reading the footer. */
+  private def withFooter[T](st: FileStatus)(
+      f: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+    try f(r) finally r.close()
   }
 
   /** Overwrite a small metadata marker file under the table root.
@@ -595,7 +585,6 @@ class TableCatalog(val spark: SparkSession, warehouse: String) {
 }
 
 object TableCatalog {
-  import org.apache.hadoop.fs.FileStatus
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.catalyst.expressions.Expression
   import org.apache.spark.sql.execution.datasources.{FileIndex,

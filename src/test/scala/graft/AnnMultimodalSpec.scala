@@ -513,12 +513,13 @@ class AnnMultimodalSpec extends SparkSpec {
       "vec_id", "embedding", 5)) == once)
   }
 
-  test("ANN append bookkeeping is O(batch): per-segment counts keep " +
-       "indexed_n exact under replay, and a missing _segmeta (pre-r14 " +
-       "index or crash before the count write) reconciles per-segment") {
+  test("ANN append bookkeeping is O(batch): footer counts keep " +
+       "indexed_n exact under replay and after a crash between the " +
+       "segment write and the meta write") {
     import graft.ann.AnnIndex
+    import scala.jdk.CollectionConverters._
     val rnd = new scala.util.Random(7)
-    val vecs = (0 until 20).map(i =>
+    val vecs = (0 until 24).map(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
     val wh = graft.core.Scratch.dir("annsm_")
@@ -527,37 +528,55 @@ class AnnMultimodalSpec extends SparkSpec {
       val r = cat.read("sm").collect()(0)
       r.getLong(r.fieldIndex("indexed_n"))
     }
-    AnnIndex.buildSq8(cat, vecs.filter($"vec_id" < 10), "vec_id",
-      "embedding", "sm")
-    assert(indexedN == 10)
-    val batch = vecs.filter($"vec_id" >= 10 && $"vec_id" < 15)
-    AnnIndex.appendSq8(cat, batch, "vec_id", "embedding", "sm",
-      segKey = Some("1"))
-    assert(indexedN == 15)
-    // re-delivered segKey: the old seg-1 count drops out of the sum,
-    // the overwrite lands, indexed_n stays exact (not 20)
-    AnnIndex.appendSq8(cat, batch, "vec_id", "embedding", "sm",
-      segKey = Some("1"))
-    assert(indexedN == 15)
-    // simulate the crash window between the segment write and the
-    // count write (equivalently: a pre-r14 index with no _segmeta) —
-    // the next append reconciles the unrecorded segments from their
-    // own partitions, never a corpus recount
-    def rmrf(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.delete)
+    def assignN: Long = spark.read.parquet(s"$wh/sm_assign").count()
+    def exact(n: Long): Unit = {
+      assert(indexedN == n)
+      assert(assignN == n)
     }
-    rmrf(java.nio.file.Paths.get(wh, "sm_segmeta"))
-    AnnIndex.appendSq8(cat, vecs.filter($"vec_id" >= 15), "vec_id",
-      "embedding", "sm", segKey = Some("2"))
-    assert(indexedN == 20)
-    // and the rebuilt counts carry every segment: one more replay of
-    // seg 2 keeps the total exact
-    AnnIndex.appendSq8(cat, vecs.filter($"vec_id" >= 15), "vec_id",
-      "embedding", "sm", segKey = Some("2"))
-    assert(indexedN == 20)
+    def ids(lo: Int, hi: Int) = vecs.filter($"vec_id" >= lo && $"vec_id" < hi)
+    def append(lo: Int, hi: Int, seg: String): Unit =
+      AnnIndex.appendSq8(cat, ids(lo, hi), "vec_id", "embedding", "sm",
+        segKey = Some(seg))
+    AnnIndex.buildSq8(cat, ids(0, 10), "vec_id", "embedding", "sm")
+    exact(10)
+    append(10, 15, "1")
+    exact(15)
+    // re-delivered segKey: the old seg-1 rows drop out of the sum, the
+    // overwrite lands, indexed_n stays exact (not 20)
+    append(10, 15, "1")
+    exact(15)
+    // the crash window between the segment write and the meta write:
+    // the append commits its segment, then the meta it wrote is put
+    // back to the one before it, as if the meta write never landed
+    def tree(p: java.nio.file.Path) =
+      java.nio.file.Files.walk(p).iterator().asScala.toSeq
+    def copyTree(src: java.nio.file.Path,
+                 dst: java.nio.file.Path): Unit =
+      tree(src).foreach(f => java.nio.file.Files.copy(f,
+        dst.resolve(src.relativize(f).toString)))
+    def crashedAppend(lo: Int, hi: Int, seg: String): Unit = {
+      val meta = java.nio.file.Paths.get(wh, "sm")
+      val aside = java.nio.file.Paths.get(
+        graft.core.Scratch.dir("annsm_meta_"), "sm")
+      copyTree(meta, aside)
+      append(lo, hi, seg)
+      tree(meta).reverse.foreach(java.nio.file.Files.delete)
+      copyTree(aside, meta)
+    }
+    crashedAppend(15, 18, "2")
+    assert(indexedN == 15 && assignN == 18)
+    // a replay of the crashed append counts the other segments from
+    // their footers and overwrites its own: exact
+    append(15, 18, "2")
+    exact(18)
+    crashedAppend(18, 21, "3")
+    assert(indexedN == 18 && assignN == 21)
+    // the next append counts the committed-but-unrecorded seg 3 from
+    // its footers: exact without a replay of seg 3
+    append(21, 24, "4")
+    exact(24)
+    append(21, 24, "4")
+    exact(24)
   }
 
   test("crashed overwrites stay honest: a replayed append that dies " +
@@ -583,8 +602,8 @@ class AnnMultimodalSpec extends SparkSpec {
     // a REPLAY of b1 that crashes mid-write: one row carries a
     // wrong-length vector, so the up-front data.count() passes
     // (column-pruned) and the failure lands INSIDE the segment
-    // rewrite — after the r15 tombstone dropped b1's recorded count
-    // (ANSI element_at past the array end raises in the quantizer)
+    // rewrite (ANSI element_at past the array end raises in the
+    // quantizer)
     def poisoned(df: org.apache.spark.sql.DataFrame) =
       df.withColumn("embedding", when($"vec_id" === 7L,
           array(lit(0.25f))).otherwise($"embedding"))
@@ -592,20 +611,18 @@ class AnnMultimodalSpec extends SparkSpec {
       AnnIndex.appendSq8(cat, poisoned(batch), "vec_id", "embedding",
         "cw", segKey = Some("b1"))
     }
-    // _segmeta no longer records b1 — the crash window holds no stale
-    // count for a segment whose directory might be half-replaced
-    assert(!cat.read("cw_segmeta").select($"seg")
-      .as[String].collect().contains("b1"))
     // the failed job never committed, so probes still see the
-    // pre-crash b1 rows, and the NEXT append recounts b1 from disk:
-    // indexed_n lands exact without the batch being replayed first
+    // pre-crash b1 rows, and the NEXT append counts b1 from its
+    // footers: indexed_n lands exact without the batch being replayed
     AnnIndex.appendSq8(cat, vecs.filter($"vec_id" >= 10), "vec_id",
       "embedding", "cw", segKey = Some("b2"))
     assert(indexedN == 12)
-    // replaying b1 for real restores its recorded count; total exact
+    assert(spark.read.parquet(s"$wh/cw_assign").count() == 12)
+    // replaying b1 for real keeps the total exact
     AnnIndex.appendSq8(cat, batch, "vec_id", "embedding", "cw",
       segKey = Some("b1"))
     assert(indexedN == 12)
+    assert(spark.read.parquet(s"$wh/cw_assign").count() == 12)
     // a crashed REBUILD over the live index: the meta was flipped to
     // the 'rebuilding' marker first, so every read path fails loudly
     // instead of serving mixed-fit rows under the stale meta
@@ -657,6 +674,7 @@ class AnnMultimodalSpec extends SparkSpec {
     AnnIndex.compactSegs(cat, "cp")
     assert(cat.listPartitions("cp_assign", "seg") == Seq("0"))
     assert(indexedN == 24)
+    assert(spark.read.parquet(s"$wh/cp_assign").count() == 24)
     assert(canon(AnnIndex.sq8TopKFromIndex(cat, "cp", q,
       "vec_id", "embedding", 5)) == before)
     // simulate the crash window: a leftover pre-compaction segment
@@ -674,8 +692,36 @@ class AnnMultimodalSpec extends SparkSpec {
     AnnIndex.compactSegs(cat, "cp")
     assert(cat.listPartitions("cp_assign", "seg") == Seq("0"))
     assert(indexedN == 24) // duplicates collapsed, count self-healed
+    assert(spark.read.parquet(s"$wh/cp_assign").count() == 24)
     assert(canon(AnnIndex.sq8TopKFromIndex(cat, "cp", q,
       "vec_id", "embedding", 5)) == before)
+  }
+
+  test("ANN index writes keep no side table: an SQ8 append onto a " +
+       "built index starts 6 jobs, a compaction 10, and they leave " +
+       "only the meta, _assign and _dels") {
+    import graft.ann.AnnIndex
+    val vecs = kindVecs(61)
+    val wh = graft.core.Scratch.dir("annjobs_")
+    val cat = new graft.catalog.TableCatalog(spark, wh)
+    AnnIndex.buildSq8(cat, vecs.filter($"vec_id" < 12), "vec_id",
+      "embedding", "jb")
+    val append = jobsStartedBy {
+      AnnIndex.appendSq8(cat, vecs.filter($"vec_id" >= 12), "vec_id",
+        "embedding", "jb")
+    }
+    AnnIndex.deleteIds(cat, Seq(3L).toDF("vec_id"), "vec_id", "jb")
+    val compact = jobsStartedBy(AnnIndex.compactSegs(cat, "jb"))
+    // neither write reads or writes a row-count table: the append sums
+    // the other segments' footers on the driver, and the compaction's
+    // count of its live set is the new seg 0's count
+    assert(append.size == 6, append)
+    assert(compact.size == 10, compact)
+    assert(cat.listTablesWithPrefix("jb").toSet ==
+      Set("jb", "jb_assign", "jb_dels"))
+    val r = cat.read("jb").collect()(0)
+    assert(r.getLong(r.fieldIndex("indexed_n")) == 23)
+    assert(spark.read.parquet(s"$wh/jb_assign").count() == 23)
   }
 
   test("ANN index deletion: tombstoned ids vanish from every probe " +
@@ -1491,7 +1537,7 @@ class AnnMultimodalSpec extends SparkSpec {
     AnnIndex.deleteIds(cat, Seq(5L).toDF("vec_id"), "vec_id", t)
     // the table set
     assert(cat.listTablesWithPrefix(t).toSet ==
-      (Set("", "_assign", "_segmeta", "_dels") ++ kc.fits.keySet)
+      (Set("", "_assign", "_dels") ++ kc.fits.keySet)
         .map(t + _))
     // partition directories: seg, then the kind's sub-layout; dseg
     assert(cat.listPartitions(t + "_assign", "seg") == Seq("0", "b1"))
@@ -1509,8 +1555,6 @@ class AnnMultimodalSpec extends SparkSpec {
     assert(assignRead.takeRight(2) == Seq("seg", kc.sub), assignRead)
     assert(dataCols(t + "_assign", Set("seg", kc.sub)) == kc.assign)
     assert(dataCols(t + "_dels", Set("dseg")) == "struct<id:bigint>")
-    assert(dataCols(t + "_segmeta", Set.empty) ==
-      "struct<seg:string,rows:bigint>")
     kc.fits.foreach { case (suffix, schema) =>
       assert(dataCols(t + suffix, Set.empty) == schema, suffix)
     }

@@ -234,6 +234,32 @@ class CatalogIoSpec extends SparkSpec {
     assert(cat.read("t").count() == 1)
   }
 
+  test("partitionRowCount sums the footers under a sub-partitioned " +
+       "partition and of a plain one, skipping what reads skip") {
+    val wh = tmp("catrows_")
+    val cat = new TableCatalog(spark, wh)
+    val df = (0 until 40).map(i => ("a", i.toLong % 5, i))
+      .toDF("d", "pk", "v")
+    cat.writeSubPartitioned(df.repartition(3), "t2", "d", "a", "pk")
+    assert(cat.listSubPartitions("t2", "d", "a", "pk").size == 5)
+    assert(cat.partitionRowCount("t2", "d", "a") ==
+      spark.read.parquet(cat.partitionPath("t2", "d", "a")).count())
+    assert(cat.partitionRowCount("t2", "d", "a") == 40)
+    cat.writePartition(df.repartition(2), "t", "d", "a")
+    assert(!cat.partitionHasDataFiles("t2", "d", "a"))
+    assert(cat.partitionHasDataFiles("t", "d", "a"))
+    assert(cat.partitionRowCount("t", "d", "a") == 40)
+    // a half-copied upload is invisible to reads and counts alike
+    val dir = new File(cat.partitionPath("t", "d", "a"))
+    val part = dir.listFiles().find(_.getName.startsWith("part-")).get
+    Files.copy(part.toPath, new File(dir, part.getName + "._COPYING_")
+      .toPath)
+    assert(cat.partitionRowCount("t", "d", "a") ==
+      cat.read("t").count())
+    assert(cat.partitionRowCount("t", "d", "a") == 40)
+    assert(cat.partitionRowCount("t", "d", "absent") == 0)
+  }
+
   test("partitionCommitted rejects a crashed half-write") {
     val cat = new TableCatalog(spark, tmp("catcommit_"))
     cat.writePartition(Seq(("a", 1)).toDF("d", "v"), "t", "d", "a")
