@@ -373,11 +373,7 @@ object EventQueries {
           datediff(to_date(col("o_orderdate")), lit("1970-01-01")))
         .orderBy(col("o_orderkey"))
         .as[(Long, Int)].collect()
-      // the two window-feed collects are independent scans of the same
-      // table — run them as concurrent lanes (guide §2.6)
-      val seeds = graft.core.Par.concurrently(
-        Seq(() => winRows(97), () => winRows(101)))
-      val (aRows, bRows) = (seeds(0), seeds(1))
+      val (aRows, bRows) = (winRows(97), winRows(101))
       val memA = MemoryStream[(Long, Int)]
       val memB = MemoryStream[(Long, Int)]
       def winDf(mem: MemoryStream[(Long, Int)], id: String, lo: String,

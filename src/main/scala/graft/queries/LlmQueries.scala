@@ -1010,18 +1010,13 @@ object LlmQueries {
       val outB = Scratch.dir("graft_dp11b_")
       // the two exports differ only in chunk size: the heavy corpus
       // prefix (gate → dedup → near-dup cluster → token budget) is
-      // computed ONCE (dp08Kept's fence) and the two chunk-assign +
-      // write lanes run concurrently — they touch disjoint export
-      // tables, disjoint output dirs, and disjoint registry partitions.
-      // Unverified at 4 cores: at sf0.1 the lanes took 26.7/24.2 s and
-      // the sequential form 24.4/22.4 s (ROADMAP item 6); kept until a
-      // >= 32-core bench decides
+      // computed ONCE (dp08Kept's fence). They run one after the other:
+      // as concurrent lanes they measured no faster (ROADMAP item 6)
       val kept = dp08Kept(s, dir)
-      graft.core.Par.concurrently(Seq(
-        () => ShardExport.exportJsonl(cat,
-          dp08AssignedFrom(s, dir, kept, 500L), "dp11_a", outA),
-        () => ShardExport.exportJsonl(cat,
-          dp08AssignedFrom(s, dir, kept, 900L), "dp11_b", outB)))
+      ShardExport.exportJsonl(cat,
+        dp08AssignedFrom(s, dir, kept, 500L), "dp11_a", outA)
+      ShardExport.exportJsonl(cat,
+        dp08AssignedFrom(s, dir, kept, 900L), "dp11_b", outB)
       val doomed = t(s, dir, "documents")
         .filter(pmod(col("doc_id"), lit(7)) === 3)
         .select(col("doc_id").as("id"))

@@ -22,13 +22,14 @@ import graft.text.{CorpusPipeline, TextHash}
   * (`TableCatalog.writePartition`), so replaying a failed batch
   * overwrites its own partition instead of duplicating it.
   *
-  * Cross-batch state is one compact table of per-doc sketches —
-  * (id, exact-dedup fingerprint, shingle hashes, MinHash signature),
-  * one partition per batch. New docs are shingled/signed ONCE, on
-  * arrival; later batches band their new signatures against the stored
-  * ones (`MinHashLSH.bandFrame` over the state table is a cheap
-  * projection), so per-batch work is O(new docs + band collisions),
-  * never O(corpus). Raw text is not retained.
+  * Cross-batch state is one compact table of per-doc sketches — (id,
+  * shingle hashes, their bottom-k sample), what a verify reads — one
+  * partition per batch, beside its `_bands` key index (each doc's band
+  * keys with its MinHash signature, and its exact-dedup fingerprint as
+  * band −1). New docs are shingled/signed ONCE, on arrival; later
+  * batches join their new band keys against the stored ones, so
+  * per-batch work is O(new docs + band collisions), never O(corpus).
+  * Raw text is not retained.
   *
   * Cross-batch semantics (the part a row-local twin can't fake):
   *  - exact dedup CONVERGES to dp01's global keep-smallest-id even on
@@ -103,13 +104,11 @@ object CorpusStream {
   /** Static DATA schemas of the pipeline's own state tables, supplied
     * to every pruned read so Spark skips the per-read footer-inference
     * job — on a minutes-cadence stream that job is a fixed per-batch
-    * driver round-trip repeated for each of the fp/bands/emit/sketch
+    * driver round-trip repeated for each of the bands/emit/sketch
     * reads (16 of dp03's ~158 jobs before this). Plain-layout
     * partitions additionally store `pk` as a data column
     * ([[PkSplitMinRows]]); pk-split partitions carry it as a
     * directory, so the plain branches read [[withPk]] of these. */
-  private[streaming] val FpDataSchema: StructType = new StructType()
-    .add("id", LongType).add("fp", StringType)
   private[streaming] val EmitDataSchema: StructType = new StructType()
     .add("id", LongType).add("eb", StringType)
   private[streaming] val BandsDataSchema: StructType = new StructType()
@@ -117,16 +116,15 @@ object CorpusStream {
     .add("sig", ArrayType(LongType)).add("band_idx", IntegerType)
     .add("band_key", StringType)
   private[streaming] val SketchDataSchema: StructType = new StructType()
-    .add("id", LongType).add("fp", StringType)
-    .add("sh", ArrayType(LongType)).add("n", IntegerType)
-    .add("sig", ArrayType(LongType)).add("sb", ArrayType(LongType))
+    .add("id", LongType).add("sh", ArrayType(LongType))
+    .add("sb", ArrayType(LongType))
   private[streaming] val LblSchema: StructType = new StructType()
     .add("id", LongType).add("lbl", LongType).add("b", LongType)
     .add("batch_id", StringType)
   private def withPk(s: StructType): StructType = s.add("pk", LongType)
 
   /** Layout facts of one pk-bucketed state table — the sketch table and
-    * its `_bands`, `_fp` and `_emit` siblings. The four share one layout
+    * its `_bands` and `_emit` siblings. The three share one layout
     * rule and writer ([[writeState]]), one shape-aware reader
     * ([[readPkTable]]) and one compaction fold; only these facts differ:
     *  - `pk`, the bucket expression over the data columns;
@@ -136,27 +134,36 @@ object CorpusStream {
     *  - `dedupKeys`, the row identity a fold over a stranded target
     *    deduplicates on;
     *  - `sortById`, files sorted by id (tight row-group id ranges for the
-    *    sketch fetch's candidate-id IN filter);
-    *  - `sigWidth`, whether a read checks the files' footers
-    *    ([[requireCurrentFormat]]) and restores `sig`'s
-    *    [[MinHashLSH.NumPermMetaKey]] from them (the static read schema
-    *    carries no field metadata), so the geometry guard needs no Spark
-    *    job and a fold writes the width back out. */
+    *    sketch fetch's candidate-id IN filter). */
   private case class PkTable(suffix: String, schema: StructType,
       pk: Column, pkStored: Boolean, dedupKeys: Seq[String],
-      sortById: Boolean = false, sigWidth: Boolean = false) {
+      sortById: Boolean = false) {
     def of(stateTable: String): String = stateTable + suffix
   }
 
-  /** The per-doc sketch table itself. */
+  /** The per-doc sketch table itself: (id, sh, sb), what a verify
+    * reads. */
   private val SketchState = PkTable("", SketchDataSchema,
-    emitPkCol(col("id")), pkStored = false, Seq("id"), sortById = true,
-    sigWidth = true)
+    emitPkCol(col("id")), pkStored = false, Seq("id"), sortById = true)
 
-  /** Pre-banded sketch rows, bucketed by band key, so a batch's
-    * cross-batch candidate join reads only its colliding buckets. */
+  /** The key index: each doc's band rows (id, n, sig, band_idx,
+    * band_key), bucketed by band key, so a batch's cross-batch candidate
+    * join reads only its colliding buckets — plus, as band
+    * [[FpBand]], one row (id, null, null, −1, fp) per doc with a
+    * fingerprint (round 12 — closes the per-batch linear fp-column scan,
+    * the last stated O(state)-per-batch term). The exact-dedup gate
+    * reads ONLY the buckets this batch's own fingerprints hash into (fp
+    * equality implies pk equality, so the pruning loses no twin) instead
+    * of scanning every stored fingerprint — on a 10¹⁰-doc state that
+    * scan was linear in the corpus every batch, however small the
+    * batch. Every candidate join matches on (band_idx, band_key), so a
+    * fingerprint row never collides with a band row; the cascade's reads
+    * take `band_idx >= 0` all the same. */
   private val BandsState = PkTable("_bands", BandsDataSchema, pkCol,
     pkStored = true, Seq("id", "band_idx"))
+
+  /** The `_bands` band index of a fingerprint row. */
+  private val FpBand = -1
 
   /** The one writer of the pk-bucketed state tables — the live sinks
     * and every compaction fold. `rows` (data columns only) lands as
@@ -201,9 +208,7 @@ object CorpusStream {
     * discovery never sees conflicting directory depths. With `pks`
     * set, pk-split partitions prune at the DIRECTORY level and plain
     * ones — small by [[PkSplitMinRows]] — are read whole and filtered
-    * on pk. None when no partition holds a data file. A `sigWidth`
-    * table's `sig` carries the width its footers agree on
-    * ([[requireCurrentFormat]]). */
+    * on pk. None when no partition holds a data file. */
   private def readPkTable(catalog: TableCatalog, t: PkTable,
       stateTable: String, keys: Seq[String],
       pks: Option[Set[Long]]): Option[DataFrame] = {
@@ -224,9 +229,7 @@ object CorpusStream {
       .filter(catalog.partitionHasDataFiles(table, "batch_id", _))
       .map(path)
     val plainPk = if (t.pkStored) col("pk") else t.pk
-    val width =
-      if (t.sigWidth) requireCurrentFormat(catalog, table, keys) else None
-    val read = Seq(
+    Seq(
       if (splitDirs.isEmpty) None
       else Some(catalog.readPaths(table, splitDirs, t.schema)),
       if (plainDirs.isEmpty) None
@@ -236,45 +239,64 @@ object CorpusStream {
         Some(pks.fold(raw)(ps => raw.filter(plainPk.isin(ps.toSeq: _*))))
       }).flatten.map(_.select(t.schema.fieldNames.toSeq.map(col): _*))
       .reduceOption(_ unionByName _)
-    width.fold(read)(w => read.map(_.withColumn("sig", col("sig").as("sig",
-      new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong(MinHashLSH.NumPermMetaKey, w.toLong).build()))))
   }
 
   /** The `sig` width recorded in the Spark row schema of each listed
-    * sketch partition's parquet footer, read on the driver; None when
-    * no partition holds a data file. Every sketch partition is written
-    * with that width and the `sb` column, and a fold carries both, so a
-    * footer lacking either, or partitions that disagree on the width,
-    * mean a state written before the current format. It is refused,
-    * naming the table and partition: no read path serves older layouts,
-    * and nothing upgrades them. */
-  private def requireCurrentFormat(catalog: TableCatalog,
-      stateTable: String, keys: Seq[String]): Option[Int] = {
-    def refuse(key: String, why: String): Nothing =
-      throw new IllegalStateException(s"CorpusStream: sketch partition " +
-        s"batch_id=$key of state table '$stateTable' $why — it predates " +
-        "the current state format, which is the only one this version " +
-        "reads; rebuild the state by streaming the corpus into a NEW " +
-        "state table")
-    val widths = keys.flatMap { k =>
-      catalog.partitionFooterMetadata(stateTable, "batch_id", k).map { m =>
-        val schema = m.get(SparkRowSchemaKey)
-          .flatMap(j => scala.util.Try(
-            org.apache.spark.sql.types.DataType.fromJson(j)).toOption)
-          .collect { case s: StructType => s }
-        if (!schema.exists(_.fieldNames.contains("sb")))
-          refuse(k, "has no `sb` column")
-        k -> schema.flatMap(MinHashLSH.sigWidthOf).getOrElse(refuse(k,
-          s"records no `sig` width (${MinHashLSH.NumPermMetaKey})"))
-      }
-    }
+    * `_bands` partition's parquet footer, read on the driver; None when
+    * no partition holds a data file. Every `_bands` partition is written
+    * with that width and a fold carries it, so a footer lacking it, or
+    * partitions that disagree on it, mean a state written before the
+    * current format, refused ([[refuseOlder]]). */
+  private def footerSigWidth(catalog: TableCatalog, stateTable: String,
+      keys: Seq[String]): Option[Int] = {
+    val table = BandsState.of(stateTable)
+    val widths = keys.flatMap(k => footerSchema(catalog, table, k).map(s =>
+      k -> MinHashLSH.sigWidthOf(s).getOrElse(refuseOlder(table, k,
+        s"records no `sig` width (${MinHashLSH.NumPermMetaKey})"))))
     widths.find(_._2 != widths.head._2).foreach { case (k, w) =>
-      refuse(k, s"records a $w-perm `sig` width beside " +
+      refuseOlder(table, k, s"records a $w-perm `sig` width beside " +
         s"${widths.head._2} in batch_id=${widths.head._1}")
     }
     widths.headOption.map(_._2)
   }
+
+  /** The Spark row schema in the footer of one of a partition's data
+    * files (empty when it records none), read on the driver; None when
+    * the partition holds no data file. */
+  private def footerSchema(catalog: TableCatalog, table: String,
+      key: String): Option[StructType] =
+    catalog.partitionFooterMetadata(table, "batch_id", key).map(
+      _.get(SparkRowSchemaKey)
+        .flatMap(j => scala.util.Try(
+          org.apache.spark.sql.types.DataType.fromJson(j)).toOption)
+        .collect { case s: StructType => s }.getOrElse(new StructType()))
+
+  /** Refuse a state written before the current format, before anything
+    * is written: a sketch partition whose files store other columns than
+    * (id, sh, sb) — such as the `fp`, `n` and `sig` an older sketch
+    * carried — or a `_bands` partition whose footers record no agreed
+    * `sig` width ([[footerSigWidth]]). Checks every partition of both
+    * tables but `exclude` (the in-flight batch) on the driver, and
+    * returns the stored width. */
+  private def requireCurrentFormat(catalog: TableCatalog,
+      stateTable: String, exclude: String): Option[Int] = {
+    def keys(table: String) =
+      catalog.listPartitions(table, "batch_id").filter(_ != exclude)
+    val want = SketchDataSchema.fieldNames.mkString(", ")
+    keys(stateTable).foreach(k => footerSchema(catalog, stateTable, k)
+      .map(_.fieldNames.mkString(", ")).filter(_ != want).foreach(got =>
+        refuseOlder(stateTable, k, s"stores columns ($got), not ($want)")))
+    footerSigWidth(catalog, stateTable, keys(BandsState.of(stateTable)))
+  }
+
+  /** The refusal of an older-format state, naming the table and
+    * partition: no read path serves older layouts, and nothing upgrades
+    * them. */
+  private def refuseOlder(table: String, key: String, why: String): Nothing =
+    throw new IllegalStateException(s"CorpusStream: partition " +
+      s"batch_id=$key of state table '$table' $why — it predates the " +
+      "current state format, which is the only one this version reads; " +
+      "rebuild the state by streaming the corpus into a NEW state table")
 
   /** The footer key under which Spark's parquet writer stores the row
     * schema, field metadata included. */
@@ -450,22 +472,6 @@ object CorpusStream {
       .getOrElse(catalog.read(outTable))
   }
 
-  /** Fingerprint-index state (round 12 — closes the per-batch linear
-    * fp-column scan, the last stated O(state)-per-batch term): one row
-    * `(id, fp)` per stored doc, bucketed by `pk = xxhash64(fp) mod
-    * StatePartitions` with the band tables' granularity-aware layout.
-    * The exact-dedup gate reads ONLY the buckets this batch's own
-    * fingerprints hash into (fp equality implies pk equality, so the
-    * pruning loses no twin) instead of scanning the whole sketch
-    * table's fp column — on a 10¹⁰-doc state that scan was linear in
-    * the corpus every batch, however small the batch. */
-  private val FpState = PkTable("_fp", FpDataSchema, fpPkCol(col("fp")),
-    pkStored = true, Seq("id"))
-
-  private def fpPkCol(f: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
-    pmod(xxhash64(f), lit(StatePartitions.toLong))
-
   /** Edge cap for the driver-side merge-graph fast path. 1M edges of
     * two longs is ~16 MB of driver memory — far past any real batch's
     * merge graph, whose nodes are component LABELS (touched
@@ -481,19 +487,19 @@ object CorpusStream {
   /** The driver caps of a micro-batch. A batch of at most
     * [[DriverVerifyIdCap]] gated, batch-deduped docs whose band keys
     * collide with at most [[DriverVerifyPairCap]] stored band rows (and
-    * whose fingerprints match at most [[MergeGraphCap]] stored `_fp`
-    * rows) — the common small-batch-on-big-state shape — stays on the
-    * driver from the exact-dedup gate through the state writes
-    * ([[driverBatch]]): its rows and fingerprints arrive in ONE job
+    * whose fingerprints match at most [[MergeGraphCap]] stored
+    * fingerprint rows) — the common small-batch-on-big-state shape —
+    * stays on the driver from the exact-dedup gate through the state
+    * writes ([[driverBatch]]): its rows and fingerprints arrive in ONE job
     * that also counts them, it is signed on the driver by the kernel
     * [[MinHashLSH.signatureFrame]] runs ([[MinHashLSH.Signer]]), the
-    * colliding stored `_fp` and `_bands` rows arrive in ONE more job
+    * matching stored fingerprint and band rows arrive in ONE more job
     * ([[seenState]]), the gate and the near-dup cascade run over those
     * rows ([[driverCascade]]: the same scalar kernels the distributed
     * cascade uses — [[MinHashLSH.pairVerifies]] over the shared
     * [[graft.sim.SetVerify]] kernels — so the paths cannot drift), and
-    * the sketch, `_bands` and `_fp` rows are written from local
-    * relations. That replaces the anti-join, signature, forced-pair and
+    * the sketch and `_bands` rows are written from local relations.
+    * That replaces the anti-join, signature, forced-pair and
     * internal/cross cascade jobs where the data is kilobytes anyway.
     * Over either cap the batch runs distributed from the gate on
     * ([[distributedBatch]]), its jobs labelled with why; that cascade's
@@ -601,31 +607,34 @@ object CorpusStream {
         .select(col("id"), col("sh"), col("sb")).collect() }
       .map(r => r.getLong(0) -> sketchOf(r, 1, 2)).toMap
 
-  /** The stored rows a driver-path batch is checked against: `_fp`
-    * rows (id, fp) matching its fingerprints and `_bands` rows colliding
-    * with its band keys. */
+  /** The stored rows a driver-path batch is checked against: the
+    * fingerprint rows (id, fp) matching its fingerprints and the band
+    * rows colliding with its band keys, both from `_bands`. */
   private final case class SeenState(fp: Seq[(Long, String)],
                                      bands: Seq[MinHashLSH.BandRow])
 
-  /** [[SeenState]] of a batch in ONE job labelled `seen state`: the
-    * pk-pruned `_fp` rows filtered to `fp IN fps` and the pk-pruned
-    * `_bands` rows filtered to `band_key IN keys`, brought back by one
-    * [[Bounded.collect]]. None when more than [[MergeGraphCap]] fp rows
-    * or [[DriverVerifyPairCap]] band rows match — the batch then runs
+  /** [[SeenState]] of a batch in ONE job labelled `seen state`: two
+    * frames over one read of `_bands` pruned to the buckets of the
+    * batch's fingerprints `fps` (`fpPks`) and band keys `keys` — the
+    * fingerprint rows filtered to `fp IN fps` and the band rows to
+    * `band_key IN keys` — brought back by one [[Bounded.collect]]. None
+    * when more than [[MergeGraphCap]] fingerprint rows or
+    * [[DriverVerifyPairCap]] band rows match — the batch then runs
     * distributed. Rows with a null id are skipped: a null id matches
     * nothing in the distributed joins either. */
   private def seenState(catalog: TableCatalog, stateTable: String,
       batchKey: String, fps: Seq[String], fpPks: Set[Long],
       keys: Seq[String]): Option[SeenState] = {
-    val fpRows =
-      if (fps.isEmpty) None
-      else prunedStateRead(catalog, FpState, stateTable, batchKey, fpPks)
-        .map(_.filter(col("fp").isin(fps: _*)).select(col("id"), col("fp")))
-    val bandRows =
-      if (keys.isEmpty) None
+    val stored =
+      if (fps.isEmpty && keys.isEmpty) None
       else prunedStateRead(catalog, BandsState, stateTable, batchKey,
-          keys.map(bandKeyPk).toSet)
-        .map(_.filter(col("band_key").isin(keys: _*)))
+        fpPks ++ keys.map(bandKeyPk))
+    def rows(band: Column, in: Seq[String]) =
+      if (in.isEmpty) None
+      else stored.map(_.filter(band && col("band_key").isin(in: _*)))
+    val fpRows = rows(col("band_idx") === FpBand, fps)
+      .map(_.select(col("id"), col("band_key")))
+    val bandRows = rows(col("band_idx") >= 0, keys)
     val Seq(fp, bands) = jd(catalog.spark, s"b$batchKey seen state") {
       Bounded.collectPresent(Seq(fpRows -> MergeGraphCap,
         bandRows -> DriverVerifyPairCap)) }
@@ -677,12 +686,12 @@ object CorpusStream {
     * that passed the exact-dedup gate (doc_id, text, lang), their
     * internal near-dup components, the cross pairs as driver rows (up
     * to [[MergeGraphCap]] + 1, `overCap` past it, `crossPairs`
-    * re-deriving their frame), and the rows of the three per-doc state
-    * writes with the count that picks their layout. */
+    * re-deriving their frame), and the rows of the two per-doc state
+    * writes with the doc count that picks their layout. */
   private final case class GatedBatch(newDocs: DataFrame,
       labels: Option[DataFrame], pairRows: Array[(Long, Long)],
       overCap: Boolean, crossPairs: () => DataFrame, nNew: Long,
-      sketchRows: DataFrame, bandRows: DataFrame, fpRows: DataFrame)
+      sketchRows: DataFrame, bandRows: DataFrame)
 
   /** Steps 3–5 on the driver for a batch whose rows `rows` (doc_id,
     * text, lang, fp) all arrived, already signed (`signed`, in row
@@ -691,10 +700,10 @@ object CorpusStream {
     *    with a larger id becomes a FORCED pair; a null fp or id matches
     *    nothing (the distributed joins' null rules);
     *  - the cascade ([[driverCascade]]) over the surviving docs;
-    *  - the sketch, `_bands` and `_fp` rows and the surviving docs as
-    *    local relations, in the distributed frames' schemas (`sig`
-    *    keeps its [[MinHashLSH.NumPermMetaKey]], so the sketch footer
-    *    records the width). */
+    *  - the sketch and `_bands` rows (fingerprint rows included) and the
+    *    surviving docs as local relations, in the distributed frames'
+    *    schemas (`sig` keeps its [[MinHashLSH.NumPermMetaKey]], so the
+    *    `_bands` footer records the width). */
   private def driverBatch(catalog: TableCatalog, stateTable: String,
       batchKey: String, docSchema: StructType, rows: Seq[Row],
       signed: Seq[MinHashLSH.Signed], seen: SeenState, threshold: Double,
@@ -738,25 +747,23 @@ object CorpusStream {
       crossPairs = () => pairs.toSeq.toDF("doc_a", "doc_b"),
       nNew = gated.length,
       sketchRows = local(new StructType().add("id", idType)
-          .add("fp", StringType).add("sh", longs).add("n", IntegerType)
-          .add(sig).add("sb", longs),
-        gated.map { case (r, s) => Row(r.get(0), r.get(3), s.sh, s.n,
-          s.sig, MinHashLSH.driverBottomK(s.sh)) }),
+          .add("sh", longs).add("sb", longs),
+        gated.map { case (r, s) =>
+          Row(r.get(0), s.sh, MinHashLSH.driverBottomK(s.sh)) }),
       bandRows = local(new StructType().add("id", idType)
           .add("n", IntegerType).add(sig).add("band_idx", IntegerType)
           .add("band_key", StringType),
-        // every surviving doc's band rows, a null id included
+        // every surviving doc's band rows, a null id included, and its
+        // fingerprint row when it has a fingerprint
         gated.flatMap { case (r, s) =>
           MinHashLSH.driverBands(0L, s.n, s.sig, geom)
-            .map(b => Row(r.get(0), b.n, b.sig, b.idx, b.key)) }),
-      fpRows = local(new StructType().add("id", idType)
-          .add("fp", StringType),
-        gated.map { case (r, _) => Row(r.get(0), r.get(3)) }))
+            .map(b => Row(r.get(0), b.n, b.sig, b.idx, b.key)) ++
+            fpOf(r).map(f => Row(r.get(0), null, null, FpBand, f)) }))
   }
 
   /** Steps 3–5 distributed — the path of a batch over a driver cap.
-    * Exact re-arrivals by stored fingerprint come from the pk-bucketed
-    * `_fp` index pruned to the batch's fp buckets `fpPks`. Two
+    * Exact re-arrivals by stored fingerprint come from the fingerprint
+    * rows of `_bands` pruned to the batch's fp buckets `fpPks`. Two
     * consumers, one read:
     *  - a twin whose stored id is <= the arrival's drops at the
     *    anti-join (ascending feeds: every re-delivery, as always);
@@ -778,11 +785,12 @@ object CorpusStream {
       release: scala.collection.mutable.ListBuffer[DataFrame],
       threshold: Double, geom: graft.sim.LshGeometry): GatedBatch = {
     val spark = catalog.spark
-    val seenFp =
+    val seenFpCols =
       if (state == null) None
-      else prunedStateRead(catalog, FpState, stateTable, batchKey, fpPks)
-    val seenFpCols = seenFp.map(_.select(col("fp").as("__seen_fp"),
-      col("id").as("__seen_id")))
+      else prunedStateRead(catalog, BandsState, stateTable, batchKey, fpPks)
+        .map(_.filter(col("band_idx") === FpBand)
+          .select(col("band_key").as("__seen_fp"),
+            col("id").as("__seen_id")))
     // (fencing plans the frame, and planning starts its broadcast jobs)
     val newDocs = jd(spark, s"b$batchKey new docs") {
       graft.core.Fence(seenFpCols.fold(localDeduped)(sf =>
@@ -797,8 +805,7 @@ object CorpusStream {
       graft.core.Fence(
         MinHashLSH.signatureFrame(newDocs, "doc_id", "text", 3, geom)
           .withColumn("sb", MinHashLSH.bottomKCol(col("sh")))) }
-    val newSk = newSigs.select(col("id"), col("sh"), col("n"),
-      col("sig"), col("sb"))
+    val newSk = newSigs.select(col("id"), col("sh"), col("sb"))
     // the exact row count — the write section's layout choice — in a
     // job that also materializes the checkpoint EAGERLY, before the
     // write lanes fan out over it: concurrent first-touch of a lazy
@@ -811,12 +818,12 @@ object CorpusStream {
     val (labels, pairRows, overCap, crossPairs) = distributedCascade(
       spark, catalog, stateTable, batchKey, state, newSk, newBands,
       fpForced, threshold, geom)
-    val fpRows = newDocs.select(col("doc_id").as("id"), fp.as("fp"))
     GatedBatch(newDocs, labels, pairRows, overCap, crossPairs, nSigs,
-      sketchRows = newSigs.join(fpRows, Seq("id"))
-        .select(col("id"), col("fp"), col("sh"), col("n"), col("sig"),
-          col("sb")),
-      bandRows = newBands, fpRows = fpRows)
+      sketchRows = newSk,
+      bandRows = newBands.unionByName(newDocs.filter(fp.isNotNull)
+        .select(col("doc_id").as("id"), lit(null).cast(IntegerType).as("n"),
+          lit(null).cast(ArrayType(LongType)).as("sig"),
+          lit(FpBand).as("band_idx"), fp.as("band_key"))))
   }
 
   /** [[distributedBatch]]'s near-dup cascade. Returns
@@ -856,6 +863,7 @@ object CorpusStream {
           prunedStateRead(catalog, BandsState, stateTable, batchKey,
               newBands.select(pkCol.as("pk")).distinct()
                 .collect().map(_.getLong(0)).toSet)
+            .map(_.filter(col("band_idx") >= 0))
             .getOrElse(newBands.limit(0)) }
         // the verify stage fetches `sh` arrays for the SEEN side of
         // every candidate pair. Collect the candidates (band join +
@@ -882,7 +890,7 @@ object CorpusStream {
           .limit(MergeGraphCap + 1).collect() }
         def verifyAgainst(pairs: DataFrame, seen: DataFrame): DataFrame = {
           val sigs = newSk.unionByName(seen.select(col("id"), col("sh"),
-            col("n"), col("sig"), col("sb")))
+            col("sb")))
           MinHashLSH.verifySurvivors(pairs, sigs, threshold,
               sb = Some(sigs.select(col("id"), col("sb"))))
             .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
@@ -981,14 +989,13 @@ object CorpusStream {
     * geometry would zip_with-null-pad against this batch's signatures,
     * cap agreement below the floor, and silently drop every cross-batch
     * candidate — dedup against the seen corpus would return nothing.
-    * Fail loudly at batch start instead. The stored width is the
-    * [[MinHashLSH.NumPermMetaKey]] the sketch read restores from the
-    * partitions' footers ([[requireCurrentFormat]]), so the guard costs
-    * no Spark job. */
-  private def requireCompatibleState(state: DataFrame,
+    * Fail loudly at batch start instead. The stored `width` is the
+    * [[MinHashLSH.NumPermMetaKey]] the `_bands` footers record
+    * ([[requireCurrentFormat]]), so the guard costs no Spark job. */
+  private def requireCompatibleState(width: Option[Int],
       geom: graft.sim.LshGeometry, stateTable: String,
       threshold: Double): Unit =
-    MinHashLSH.sigWidthOf(state).foreach { w =>
+    width.foreach { w =>
       require(w == geom.numPerm,
         s"CorpusStream: state table '$stateTable' stores $w-perm MinHash " +
           s"signatures but threshold=$threshold derives a " +
@@ -1012,20 +1019,22 @@ object CorpusStream {
   private def fp = md5(CorpusPipeline.fingerprintPrefix)
 
   /** Merge every committed batch partition of each state table (the
-    * sketch and its `_bands`, `_fp`, `_lbl` and `_emit` siblings) into
+    * sketch and its `_bands`, `_lbl` and `_emit` siblings) into
     * ONE compacted partition per table (`batch_id=c<maxBatch>`),
     * deleting the sources — the periodic pass that keeps the state
     * tables' directory count (and so the per-batch listing cost) flat in
     * stream age. Row-content-neutral by construction: the target is the
     * exact union of the sources (latest-wins per id for the label
-    * table), and every consumer (the `fp` gate, the band join, the
-    * sketch fetch) reads the state by COLUMNS, not by which partition a
+    * table), and every consumer (the fingerprint gate, the band join,
+    * the sketch fetch) reads the state by COLUMNS, not by which partition a
     * row lives in. `excludeBatchKey` (the in-flight batch)
     * is never touched, so replay idempotence is preserved: a compacted
     * partition only ever contains batches committed before the current
     * one started. A pk-bucketed target takes the live writes' layout
     * rule ([[PkSplitMinRows]], overridable by `pkSplitMinRows`): pk-split
     * once the folded rows reach the threshold, one plain file below it.
+    * A state in an older format is refused before anything moves
+    * ([[requireCurrentFormat]]).
     *
     * Idempotent and crash-safe: the target key is a pure function of the
     * source keys (`c` + max numeric key — never equal to a real numeric
@@ -1070,6 +1079,7 @@ object CorpusStream {
                                  excludeBatchKey: String,
                                  failpoint: String => Unit,
                                  pkSplitMinRows: Long): Boolean = {
+    val width = requireCurrentFormat(catalog, stateTable, excludeBatchKey)
     def numOf(key: String): Option[Long] =
       scala.util.Try(key.stripPrefix("c").toLong).toOption
     def sourcesOf(table: String): Seq[String] =
@@ -1086,7 +1096,7 @@ object CorpusStream {
     // batch; replays overwrite their own partition), or a re-fold of
     // one committed `cK` with only LATER batches — the union is
     // already duplicate-free and the dedup was a pure-overhead
-    // exchange per fold, five per compaction pass (§2.4). The window
+    // exchange per fold, four per compaction pass (§2.4). The window
     // fold (lbl) is untouched: its latest-wins collapse is real work
     // on every path.
     def dedupIfStranded(df: DataFrame, srcs: Seq[String],
@@ -1120,14 +1130,21 @@ object CorpusStream {
       }
     // the pk-bucketed tables: read shape-aware, dedup only a stranded
     // union, write through the one layout rule (a stale pk-split source
-    // keeps the target split; plain sources are counted from footers)
+    // keeps the target split; plain sources are counted from footers).
+    // `sig` gets back the width its footers agree on: the static read
+    // schema carries no field metadata, and the target's footer must
+    // record it
     def foldPk(t: PkTable, stage: String) =
       fold(t.of(stateTable), stage, (srcs, key) =>
-        readPkTable(catalog, t, stateTable, srcs, None).foreach(m =>
+        readPkTable(catalog, t, stateTable, srcs, None).foreach { m =>
+          val rows = width.filter(_ => m.columns.contains("sig")).fold(m)(
+            w => m.withColumn("sig", col("sig").as("sig",
+              MinHashLSH.sigMeta(w))))
           writeState(catalog, t, stateTable, key,
-            dedupIfStranded(m, srcs, t.dedupKeys),
+            dedupIfStranded(rows, srcs, t.dedupKeys),
             splitLayoutFor(catalog, t.of(stateTable), srcs,
-              pkSplitMinRows))))
+              pkSplitMinRows))
+        })
     // label table: rows are UPDATES (latest `b` wins per id), so the
     // compacted partition keeps exactly each id's highest-b row — the
     // union-then-latest a reader would compute anyway, materialized
@@ -1139,7 +1156,7 @@ object CorpusStream {
           .withColumn("batch_id", lit(key))
           .coalesce(1),
         lblTable, "batch_id", key))
-    // The five folds touch DISJOINT tables (all mutated only under this
+    // The four folds touch DISJOINT tables (all mutated only under this
     // state table's lock, so the outer lock covers them all) and each is
     // a self-contained write-target-then-delete-sources unit whose crash
     // recovery never consults a sibling table. Run them as concurrent
@@ -1148,7 +1165,7 @@ object CorpusStream {
     // final state in any interleaving.
     graft.core.Par.concurrently(Seq(
         foldPk(SketchState, "sketch"), foldPk(BandsState, "bands"),
-        foldLbl, foldPk(EmitState, "emit"), foldPk(FpState, "fp")))
+        foldLbl, foldPk(EmitState, "emit")))
       .exists(identity)
   }
 
@@ -1193,6 +1210,9 @@ object CorpusStream {
     // cross-batch candidate
     val geom = MinHashLSH.geometryFor(threshold)
     val batchKey = batchId.toString
+    // a state in an older format is refused before anything is written,
+    // compaction included; the `_bands` footers give the stored width
+    val width = requireCurrentFormat(catalog, stateTable, batchKey)
     // periodic state compaction BEFORE the state is opened: runs only on
     // committed earlier batches (the in-flight key is excluded), so a
     // replay of this batch sees the identical seen-corpus either way
@@ -1224,9 +1244,7 @@ object CorpusStream {
     //    excludes its own half-written partition, so reprocessing is
     //    idempotent end-to-end). Shape-aware lazy union (round 12 —
     //    batch partitions may be pk-split); only an over-cap cross
-    //    cascade evaluates it fully, the other paths read pruned. The
-    //    read refuses a state in an older format
-    //    ([[requireCurrentFormat]]) before anything is written.
+    //    cascade evaluates it fully, the other paths read pruned.
     //    A table whose only partition is this batch's own reads as
     //    null — the fresh-state path, which a batch-0 replay re-takes.
     val state =
@@ -1236,7 +1254,7 @@ object CorpusStream {
             .filter(_ != batchKey),
           None).orNull
     if (state != null)
-      requireCompatibleState(state, geom, stateTable, threshold)
+      requireCompatibleState(width, geom, stateTable, threshold)
     // persist the local batch: the batch collect below reads it, and a
     // batch that leaves the driver path reads it again
     val localDeduped = graft.core.Fence.soft(localDeduped0)
@@ -1245,12 +1263,13 @@ object CorpusStream {
     // 3. the exact-dedup gate's inputs. ONE job ([[Bounded.collect]],
     //    `batch collect`) brings the batch's exact size, its first
     //    DriverVerifyIdCap + 1 rows per partition with their
-    //    fingerprints, and the fp pk buckets the gate's `_fp` read
-    //    prunes to on either path (fp equality implies pk equality, so
-    //    the pruning loses no twin).
+    //    fingerprints, and the fp pk buckets the gate's read of the
+    //    `_bands` fingerprint rows prunes to on either path (a
+    //    fingerprint is band −1's key, so fp equality implies pk
+    //    equality and the pruning loses no twin).
     val Seq(collected) = jd(spark, s"b$batchKey batch collect") {
       Bounded.collect(Seq(localDeduped.select(col("doc_id"), col("text"),
-          col("lang"), fp.as("fp"), fpPkCol(fp).as("__pk")) ->
+          col("lang"), fp.as("band_key")).withColumn("__pk", pkCol) ->
           DriverVerifyIdCap), key = Some(4)) }
     // 4. the gate, signatures and the near-dup cascade. A batch within
     //    [[DriverVerifyIdCap]] stays on the driver: it is signed here by
@@ -1383,11 +1402,11 @@ object CorpusStream {
     }
     // 6. every new doc's sketch (kept or cluster-dropped) joins the
     //    state — dropped docs still bridge future arrivals — beside its
-    //    pre-banded rows (bucketed by band key, so later batches prune
-    //    their cross join at the storage layer) and its fingerprint
-    //    (bucketed by fp, for the exact-dedup gate). A driver-path
-    //    batch's rows are local relations; a distributed one's come off
-    //    its signature checkpoint. All three take [[writeState]]'s
+    //    pre-banded rows and its fingerprint row (bucketed by band key,
+    //    so later batches prune their cross join and the exact-dedup
+    //    gate at the storage layer). A driver-path batch's rows are
+    //    local relations; a distributed one's come off its signature
+    //    checkpoint. Both take [[writeState]]'s
     //    granularity-aware layout: the sketch's pk-split dirs let the
     //    cross-verify `sh` fetch above prune at the directory level, and
     //    a small batch stays one file sorted by id (round 13: the
@@ -1401,9 +1420,7 @@ object CorpusStream {
     val writeSketch = writeLane(SketchState, "sketch", gb.sketchRows,
       gb.nNew >= pkSplitMinRows)
     val writeBands = writeLane(BandsState, "bands", gb.bandRows,
-      gb.nNew * geom.bands >= pkSplitMinRows)
-    val writeFp = writeLane(FpState, "fp", gb.fpRows,
-      gb.nNew >= pkSplitMinRows)
+      gb.nNew * (geom.bands + 1) >= pkSplitMinRows)
     // 6b. label-state updates (see [[lblTableOf]]): new member docs of
     //     multi/merged components, dethroned canonicals, and stored
     //     members whose component merged — one latest-wins row each.
@@ -1484,14 +1501,14 @@ object CorpusStream {
         epochTableName(outTable, outEpoch), "batch_id", batchKey)
       }
     }
-    // the five sinks above land in DISJOINT tables/partitions and every
+    // the four sinks above land in DISJOINT tables/partitions and every
     // consumer of a sibling table runs in a LATER batch — run them as
     // concurrent lanes (guide §2.6); the only ordered pair (emit before
     // out) stays sequential inside its lane. A crash now leaves an
     // arbitrary subset of partitions instead of a prefix; the replay
     // overwrites every one of them idempotently, exactly as before.
     graft.core.Par.concurrently(Seq(
-      writeSketch, writeBands, writeFp, writeLbl, writeEmitThenOut))
+      writeSketch, writeBands, writeLbl, writeEmitThenOut))
     } finally {
       release.foreach(_.unpersist(false))
       batch.sparkSession.sparkContext.setLocalProperty(FallbackKey, null)
@@ -1504,13 +1521,12 @@ object CorpusStream {
   private def retractFromOutput(catalog: TableCatalog,
       stateTable: String, outTable: String, batchKey: String,
       retr: DataFrame): Unit = {
-    val affected = affectedOutputPartitions(catalog, stateTable,
-      outTable, batchKey, retr)
-    // one lane per affected table — tables are disjoint (base + epoch
-    // generations), each rewrite is self-contained under its own lock,
-    // and at takedown scale each is a couple of small serial jobs
-    // whose driver latency the lanes overlap (guide §2.6)
-    graft.core.Par.concurrently(affected.map { case (tbl, keys) => () =>
+    // one rewrite per affected table (base + epoch generations), each
+    // self-contained under its own lock. In sequence, not as lanes:
+    // without an epoch roll there is one table, and a lane per call
+    // measured no faster (ROADMAP item 6)
+    affectedOutputPartitions(catalog, stateTable, outTable, batchKey, retr)
+      .foreach { case (tbl, keys) =>
       catalog.withTableLock(tbl) {
         // materialize before the self-overwrite: the rewritten rows
         // must not be read lazily from the files being replaced
@@ -1530,7 +1546,7 @@ object CorpusStream {
         (keys.toSet -- surviving).foreach(
           catalog.deletePartition(tbl, "batch_id", _))
       }
-    })
+    }
   }
 
   /** Operator-facing takedown for the streamed corpus: every given doc
@@ -1539,7 +1555,7 @@ object CorpusStream {
     * same locked dynamic-overwrite jobs the merge-retraction path
     * uses, so the cost scales with the AFFECTED partitions, never the
     * corpus. Content removal, not history rewrite: the doc's state
-    * rows (sketch, bands, fingerprint, label) deliberately REMAIN — it
+    * rows (sketch, bands and fingerprint, label) deliberately REMAIN — it
     * keeps suppressing its near-duplicates, and a re-ingested copy of
     * the removed content still dies against the state instead of
     * resurrecting. (Re-admitting suppressed near-dupes would silently
@@ -1566,17 +1582,16 @@ object CorpusStream {
           col(idCol).cast("string"),
           lit("' is not a long doc_id — the takedown would silently " +
             "miss it")))).otherwise(tryLong)
-    requireCurrentFormat(catalog, stateTable,
-      catalog.listPartitions(stateTable, "batch_id"))
-    val retr = graft.core.Fence.soft(
-      ids.select(asLong.as("__r")).distinct())
     // the sentinel matches no real batch key, so every committed
     // partition is in scope (processBatch passes its own in-flight key
-    // to keep the uncommitted batch out of the rewrite)
+    // to keep the uncommitted batch out of the check and the rewrite)
+    val sentinel = "__takedown__"
+    requireCurrentFormat(catalog, stateTable, sentinel)
+    val retr = graft.core.Fence.soft(
+      ids.select(asLong.as("__r")).distinct())
     try jd(ids.sparkSession, "removeDocs") {
       withBatchAqe(ids.sparkSession) {
-        retractFromOutput(catalog, stateTable, outTable,
-          "__takedown__", retr)
+        retractFromOutput(catalog, stateTable, outTable, sentinel, retr)
       }
     } finally retr.unpersist(false)
   }

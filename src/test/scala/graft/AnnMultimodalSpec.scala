@@ -964,7 +964,6 @@ class AnnMultimodalSpec extends SparkSpec {
         allowedIds = allowed, allowedIdCol = "vec_id")
     var local: org.apache.spark.sql.DataFrame = null
     val labels = jobsStartedBy { local = probe(q); local.collect() }
-      .map(_._1)
     assert(labels.nonEmpty && labels.forall(_ == "AnnIndex: probe"),
       labels)
     val dist = probe(overQueryCap(q))
@@ -1128,7 +1127,7 @@ class AnnMultimodalSpec extends SparkSpec {
     val labels = jobsStartedBy {
       got = rowsOf(AnnIndex.sq8TopKFromIndex(cat, "big", q, "vec_id",
         "embedding", 5))
-    }.map(_._1)
+    }
     assert(labels.contains("AnnIndex: probe [over row cap]"), labels)
     assert(got == rowsOf(Ann.sq8TopK(vecs, q, "vec_id", "embedding", 5,
       dim = 4)))
@@ -1137,7 +1136,7 @@ class AnnMultimodalSpec extends SparkSpec {
     val overQ = jobsStartedBy {
       AnnIndex.sq8TopKFromIndex(cat, "small", overQueryCap(q), "vec_id",
         "embedding", 5).collect()
-    }.map(_._1)
+    }
     assert(overQ.contains("AnnIndex: probe [over query cap]"), overQ)
     // a query id that is not an integral type compares under Spark's
     // coercion rules, which the distributed plan keeps
@@ -1145,7 +1144,7 @@ class AnnMultimodalSpec extends SparkSpec {
       AnnIndex.sq8TopKFromIndex(cat, "small",
         q.select($"vec_id".cast("string").as("vec_id"), $"embedding"),
         "vec_id", "embedding", 5).collect()
-    }.map(_._1)
+    }
     assert(byString.contains("AnnIndex: probe [query id type]"), byString)
   }
 

@@ -305,14 +305,10 @@ class CatalogIoSpec extends SparkSpec {
     // than interleave with the holder's deletes
     val wh2 = tmp("catlock2_")
     val cat2 = new TableCatalog(spark, wh2)
-    // sketch rows in the current state format: `sig` carries its width
-    // and the bottom-k column `sb` is present
+    // sketch rows in the current state format: (id, sh, sb)
     def skRow(b: String, id: Long) =
-      Seq((b, id, s"fp$id", Seq(id, id + 1), 2, Seq(id, id + 1),
-          Seq(id, id + 1)))
-        .toDF("batch_id", "id", "fp", "sh", "n", "sig", "sb")
-        .withColumn("sig",
-          $"sig".as("sig", graft.sim.MinHashLSH.sigMeta(2)))
+      Seq((b, id, Seq(id, id + 1), Seq(id, id + 1)))
+        .toDF("batch_id", "id", "sh", "sb")
     cat2.writePartition(skRow("0", 1L), "s", "batch_id", "0")
     cat2.writePartition(skRow("1", 2L), "s", "batch_id", "1")
     assert(cat2.tryAcquireTableLock("s", owner = "other-pipeline"))

@@ -466,8 +466,9 @@ class StreamingSpec extends SparkSpec {
     assert(out() == Set(14L))
   }
 
-  test("the fp gate reads only the colliding pk buckets of the fp " +
-       "index: a junk file planted in another bucket is never touched") {
+  test("the fp gate reads only the colliding pk buckets of _bands' " +
+       "fingerprint rows: a junk file planted in another bucket is " +
+       "never touched") {
     val P = fam(10, 12); val A = fam(11, 40)
     val tA = txt("docF", P, A)
     val wh = graft.core.Scratch.dir("corpus_fq_")
@@ -478,17 +479,22 @@ class StreamingSpec extends SparkSpec {
         cat, "fq_seen", "fq_out", b, threshold = 0.45,
         admit = df => df, pkSplitMinRows = 1L) // force the pk-split layout
     run(33L, tA, 0L)
-    val subs = cat.listSubPartitions("fq_seen_fp", "batch_id", "0", "pk")
-    assert(subs.nonEmpty) // split layout in effect
-    val other = (subs.head.toLong + 1) % CorpusStream.StatePartitions
+    val subs = cat.listSubPartitions("fq_seen_bands", "batch_id", "0", "pk")
+    // split layout in effect, the fingerprint row in its own fp's bucket
+    val Seq((33L, fp)) = fpRows(cat, "fq_seen").toSeq
+    assert(subs.contains(CorpusStream.bandKeyPk(fp).toString), subs)
+    // a bucket neither the re-delivery's fingerprint nor its band keys
+    // (the same doc's) hash into, listed after the partition's first
+    // bucket (whose footer the format check reads)
+    val other = (0 until CorpusStream.StatePartitions).map(_.toString)
+      .find(p => !subs.contains(p) && p > subs.head).get
     val junkDir = java.nio.file.Paths.get(
-      cat.partitionPath("fq_seen_fp", "batch_id", "0"), s"pk=$other")
+      cat.partitionPath("fq_seen_bands", "batch_id", "0"), s"pk=$other")
     java.nio.file.Files.createDirectories(junkDir)
     java.nio.file.Files.write(
       junkDir.resolve("part-00000-junk.snappy.parquet"),
       "not a parquet file".getBytes("UTF-8"))
-    // the re-delivery's fp hashes into subs.head, not `other`: the
-    // pruned read must skip the junk bucket (a full fp read chokes)
+    // the pruned read must skip the junk bucket (a full read chokes)
     run(40L, tA, 1L)
     assert(cat.read("fq_out").select($"doc_id").as[Long].collect()
       .toSet == Set(33L))
@@ -906,9 +912,8 @@ class StreamingSpec extends SparkSpec {
       }
       val out = cat.read("cm_out").select($"doc_id", $"lang", $"n_toks")
         .as[(Long, String, Int)].collect().toSet
-      val state = CorpusStream.readState(cat, "cm_seen").select($"id", $"fp")
-        .as[(Long, String)].collect().toSet
-      (out, state, cat.listPartitions("cm_seen", "batch_id").size, cat)
+      (out, fpRows(cat, "cm_seen"),
+        cat.listPartitions("cm_seen", "batch_id").size, cat)
     }
     val (plainOut, plainState, plainDirs, plainCat) = run(every = 0)
     val (compOut, compState, compDirs, compCat) = run(every = 2)
@@ -920,9 +925,7 @@ class StreamingSpec extends SparkSpec {
     assert(compDirs <= 3, s"expected <=3 state dirs, got $compDirs")
     // a further compaction over the final state is idempotent
     assert(CorpusStream.compactState(compCat, "cm_seen", "99"))
-    val again = CorpusStream.readState(compCat, "cm_seen").select($"id", $"fp")
-      .as[(Long, String)].collect().toSet
-    assert(again == plainState)
+    assert(fpRows(compCat, "cm_seen") == plainState)
     assert(compCat.listPartitions("cm_seen", "batch_id").size == 1)
     assert(compCat.listPartitions("cm_seen_bands", "batch_id").size == 1)
     // a default-threshold fold of small batches takes the live writes'
@@ -941,12 +944,22 @@ class StreamingSpec extends SparkSpec {
       val Seq(c) = plainCat.listPartitions(t, "batch_id")
       assert(pkDirs(plainCat, t, c).nonEmpty, t)
     }
-    assert(CorpusStream.readState(plainCat, "cm_seen").select($"id", $"fp")
-      .as[(Long, String)].collect().toSet == plainState)
+    assert(fpRows(plainCat, "cm_seen") == plainState)
   }
 
   private def pkTables(state: String): Seq[String] =
-    Seq(state, s"${state}_bands", s"${state}_fp", s"${state}_emit")
+    Seq(state, s"${state}_bands", s"${state}_emit")
+
+  /** A state's fingerprint rows (id, fp): the band −1 rows of its
+    * `_bands` table, read partition by partition so plain and pk-split
+    * partitions mix. */
+  private def fpRows(cat: graft.catalog.TableCatalog,
+      state: String): Set[(Long, String)] =
+    cat.listPartitions(s"${state}_bands", "batch_id").flatMap { k =>
+      spark.read.parquet(cat.partitionPath(s"${state}_bands", "batch_id", k))
+        .filter($"band_idx" === -1).select($"id", $"band_key")
+        .as[(Long, String)].collect()
+    }.toSet
 
   private def pkDirs(cat: graft.catalog.TableCatalog, table: String,
                      key: String): Seq[String] =
@@ -973,12 +986,11 @@ class StreamingSpec extends SparkSpec {
         i.toLong, compactEvery = 0)
     def rowsOf(cat: graft.catalog.TableCatalog) = (
       cat.read("rf_out").select($"doc_id").as[Long].collect().toSet,
-      CorpusStream.readState(cat, "rf_seen").select($"id", $"fp")
-        .as[(Long, String)].collect().toSet,
+      CorpusStream.readState(cat, "rf_seen").select($"id")
+        .as[Long].collect().toSet,
+      fpRows(cat, "rf_seen"),
       cat.read("rf_seen_bands").select($"id", $"band_idx", $"band_key")
         .as[(Long, Int, String)].collect().toSet,
-      cat.read("rf_seen_fp").select($"id", $"fp")
-        .as[(Long, String)].collect().toSet,
       cat.read("rf_seen_emit").select($"id", $"eb")
         .as[(Long, String)].collect().toSet)
     val ref = catalog()
@@ -1022,8 +1034,8 @@ class StreamingSpec extends SparkSpec {
           cat, "jl_seen", "jl_out", i.toLong, compactEvery = 2)
       }
     }
-    assert(jobs.exists(_._1.startsWith("CorpusStream: compact ")))
-    val bare = jobs.filter(_._1.matches("CorpusStream: b\\d+ chain"))
+    assert(jobs.exists(_.startsWith("CorpusStream: compact ")))
+    val bare = jobs.filter(_.matches("CorpusStream: b\\d+ chain"))
     assert(bare.isEmpty, bare.mkString("\n"))
   }
 
@@ -1049,40 +1061,47 @@ class StreamingSpec extends SparkSpec {
     }
     assert(cat.listPartitions("jb_seen", "batch_id")
       .exists(_.startsWith("c")))
-    val jobs = jobsStartedBy {
+    val labels = jobsStartedBy {
       CorpusStream.processBatch(batch(60 until 80), cat, "jb_seen",
         "jb_out", 3L, admit = df => df, compactEvery = 0)
     }
-    val labels = jobs.map(_._1)
     Seq("internal pairs + components", "cross candidates", "state width",
         "merge components", "retract", "new docs", "cross verify",
-        "signatures collect").foreach { l =>
+        "signatures collect", "write fp").foreach { l =>
       assert(!labels.exists(_.endsWith(l)),
         s"$l in\n${labels.mkString("\n")}")
     }
     assert(labels.exists(_.endsWith("b3 batch collect")))
     assert(labels.exists(_.endsWith("b3 seen state")))
     assert(!labels.exists(_.endsWith("]")), labels.mkString("\n"))
-    assert(jobs.size <= MergeFreeBatchJobs, labels.mkString("\n"))
+    assert(labels.size <= MergeFreeBatchJobs, labels.mkString("\n"))
     assert(CorpusStream.readState(cat, "jb_seen").count() == 80)
-    // the driver-path sketch partitions (batches 2 and 3) carry the sig
-    // width in their footers — the read restores it from every footer,
-    // so the width guard runs no Spark job
+    // the sketch stores what a verify reads, and the batch wrote no
+    // `_fp` table: its fingerprints are `_bands` rows
+    assert(CorpusStream.readState(cat, "jb_seen").columns.toSeq ==
+      Seq("id", "sh", "sb"))
+    assert(fpRows(cat, "jb_seen").map(_._1) == (0L until 80L).toSet)
+    assert(cat.listTablesWithPrefix("jb_seen").toSet ==
+      Set("jb_seen", "jb_seen_bands", "jb_seen_emit"))
+    // the driver-path `_bands` partitions (batches 2 and 3) carry the
+    // sig width in their footers — the read restores it from every
+    // footer, so the width guard runs no Spark job
     assert(cat.listPartitions("jb_seen", "batch_id").toSet ==
       Set("c1", "2", "3"))
     // and the batch's output partition is one file, as a distributed
     // small batch's is
     assert(new java.io.File(cat.partitionPath("jb_out", "batch_id", "3"))
       .list().count(_.endsWith(".parquet")) == 1)
-    assert(graft.sim.MinHashLSH.sigWidthOf(
-      CorpusStream.readState(cat, "jb_seen")) ==
+    assert(graft.sim.MinHashLSH.sigWidthOf(spark.read.parquet(
+      cat.partitionPath("jb_seen_bands", "batch_id", "3"))) ==
       Some(graft.sim.MinHashLSH.geometryFor(
         graft.text.CorpusPipeline.NearDupThreshold).numPerm))
   }
 
   /** Jobs a merge-free 20-doc batch over a compacted state starts
-    * (measured: 7 — batch collect, seen state and the five writes). */
-  private val MergeFreeBatchJobs = 7
+    * (measured: 6 — batch collect, seen state and the four writes:
+    * sketch, `_bands`, emit, out). */
+  private val MergeFreeBatchJobs = 6
 
   /** The batch dp01 chain (gate, exact dedup, near-dup clustering,
     * sample, project) under the stream's admission and threshold: what
@@ -1105,7 +1124,7 @@ class StreamingSpec extends SparkSpec {
   test("the driver path equals the distributed path row for row: an " +
        "out-of-order feed with exact re-arrivals both ways, null and " +
        "sub-3-char texts, run as <= 64-doc batches and as > 64-doc " +
-       "batches, writes identical sketch, _bands, _fp, _emit and _lbl " +
+       "batches, writes identical sketch, _bands, _emit and _lbl " +
        "rows and converges to batch dp01") {
     import graft.text.CorpusPipeline
     val dir = "/root/testdata/sf0.001"
@@ -1165,7 +1184,7 @@ class StreamingSpec extends SparkSpec {
             i.toLong, admit = admit, compactEvery = 4)
         }
       }
-      (cat, jobs.map(_._1))
+      (cat, jobs)
     }
     val (dCat, dLabels) = run("dp", padded = false)
     val (xCat, xLabels) = run("dx", padded = true)
@@ -1178,7 +1197,7 @@ class StreamingSpec extends SparkSpec {
         case a: scala.collection.Seq[_] => a.toList
         case v => v
       }).toSet
-    Seq("eq_seen", "eq_seen_bands", "eq_seen_fp", "eq_seen_emit",
+    Seq("eq_seen", "eq_seen_bands", "eq_seen_emit",
         "eq_seen_lbl").foreach { t =>
       val d = rowsOf(dCat, t)
       assert(d.nonEmpty, t)
@@ -1216,7 +1235,7 @@ class StreamingSpec extends SparkSpec {
       CorpusStream.processBatch(rows.toDF("doc_id", "text", "lang"), cat,
         "pc_seen", "pc_out", b, threshold = 0.45, admit = df => df)
     run(stored, 0L)
-    val labels = jobsStartedBy(run(Seq(doc(100L), doc(101L)), 1L)).map(_._1)
+    val labels = jobsStartedBy(run(Seq(doc(100L), doc(101L)), 1L))
     assert(labels.exists(_.endsWith("b1 seen state")))
     assert(labels.exists(_.endsWith("b1 new docs [over pair cap]")),
       labels.mkString("\n"))
@@ -1287,7 +1306,7 @@ class StreamingSpec extends SparkSpec {
        "path, converges to batch dp01, and the next compaction aligns " +
        "the keys") {
     val (_, cat, run, want) = killedBandsFold("bf")
-    val labels = jobsStartedBy(run(3)).map(_._1)
+    val labels = jobsStartedBy(run(3))
     assert(!labels.exists(_.contains("backfill")), labels.mkString("\n"))
     assert(!labels.exists(_.endsWith("]")), labels.mkString("\n"))
     assert(labels.exists(_.endsWith("b3 seen state")), labels.mkString("\n"))
@@ -1304,7 +1323,7 @@ class StreamingSpec extends SparkSpec {
     val other = new graft.catalog.TableCatalog(spark, wh)
     assert(other.tryAcquireTableLock("bl_seen", owner = "other"))
     try {
-      val labels = jobsStartedBy(run(3)).map(_._1)
+      val labels = jobsStartedBy(run(3))
       assert(!labels.exists(_.endsWith("]")), labels.mkString("\n"))
       assert(labels.exists(_.endsWith("b3 seen state")),
         labels.mkString("\n"))
@@ -1312,9 +1331,10 @@ class StreamingSpec extends SparkSpec {
     assert(streamedOutput(cat, "bl_out") == want)
   }
 
-  test("a sketch partition in an older format — no sig width in its " +
-       "footer, or no sb column — makes processBatch and removeDocs " +
-       "raise, naming the table, with no output partition changed") {
+  test("a state in an older format — a sketch partition that still " +
+       "carries fp or sig, or a _bands partition with no sig width in " +
+       "its footer — makes processBatch and removeDocs raise, naming " +
+       "the table, with no output file changed") {
     import org.apache.spark.sql.types.Metadata
     import scala.jdk.CollectionConverters._
     def batch(ids: Range) = ids.map(i => (i.toLong, randomWords(i), "en"))
@@ -1325,15 +1345,19 @@ class StreamingSpec extends SparkSpec {
       cat, "of_seen", "of_out", b, admit = df => df)
     run(0 until 10, 0L)
     run(10 until 20, 1L)
-    val part = cat.partitionPath("of_seen", "batch_id", "1")
-    val read = spark.read.parquet(part)
-    // a local copy: the rewrites below replace the files `read` lists
-    val current = spark.createDataFrame(
-      java.util.Arrays.asList(read.collect(): _*), read.schema)
-    assert(graft.sim.MinHashLSH.sigWidthOf(current).nonEmpty)
-    assert(current.columns.contains("sb"))
-    def rewrite(df: org.apache.spark.sql.DataFrame): Unit =
-      df.coalesce(1).write.mode("overwrite").parquet(part)
+    // a local copy of one partition: the rewrites below replace the
+    // files a lazy read lists
+    def current(table: String) = {
+      val read = spark.read.parquet(cat.partitionPath(table, "batch_id", "1"))
+      spark.createDataFrame(java.util.Arrays.asList(read.collect(): _*),
+        read.schema)
+    }
+    val (sketch, bands) = (current("of_seen"), current("of_seen_bands"))
+    assert(sketch.columns.toSeq == Seq("id", "sh", "sb"))
+    assert(graft.sim.MinHashLSH.sigWidthOf(bands).nonEmpty)
+    def rewrite(table: String, df: org.apache.spark.sql.DataFrame): Unit =
+      df.coalesce(1).write.mode("overwrite")
+        .parquet(cat.partitionPath(table, "batch_id", "1"))
     def outFiles() = {
       val root = java.nio.file.Paths.get(cat.tablePath("of_out"))
       val files = java.nio.file.Files.walk(root)
@@ -1345,26 +1369,32 @@ class StreamingSpec extends SparkSpec {
     val before = outFiles()
     val emitted = streamedOutput(cat, "of_out")
     assert(emitted.nonEmpty)
+    // (table, its older partition, what the refusal says)
     val older = Seq(
-      "records no `sig` width" -> current.withColumn("sig",
-        $"sig".as("sig", Metadata.empty)),
-      "has no `sb` column" -> current.drop("sb"))
-    for ((why, df) <- older) {
-      rewrite(df)
+      ("of_seen", sketch.withColumn("fp", lit("f")),
+        "stores columns (id, sh, sb, fp), not (id, sh, sb)"),
+      ("of_seen", sketch.withColumn("sig", $"sh"),
+        "stores columns (id, sh, sb, sig), not (id, sh, sb)"),
+      ("of_seen_bands", bands.withColumn("sig",
+        $"sig".as("sig", Metadata.empty)), "records no `sig` width"))
+    for ((table, df, why) <- older) {
+      rewrite(table, df)
       val exBatch = intercept[IllegalStateException](run(20 until 30, 2L))
       val exRemove = intercept[IllegalStateException](
         CorpusStream.removeDocs(cat, "of_seen", "of_out",
           emitted.map(_._1).toSeq.toDF("doc_id")))
       for (ex <- Seq(exBatch, exRemove)) {
-        assert(ex.getMessage.contains("'of_seen'"), ex.getMessage)
+        assert(ex.getMessage.contains(s"'$table'"), ex.getMessage)
         assert(ex.getMessage.contains("batch_id=1"), ex.getMessage)
         assert(ex.getMessage.contains(why), ex.getMessage)
       }
       assert(outFiles() == before, why)
       assert(streamedOutput(cat, "of_out") == emitted, why)
+      // nothing of batch 2 was written either
+      assert(!cat.listPartitions("of_seen", "batch_id").contains("2"), why)
+      rewrite(table, if (table == "of_seen") sketch else bands)
     }
     // the current format reads again
-    rewrite(current)
     run(20 until 30, 2L)
     assert(streamedOutput(cat, "of_out").size > emitted.size)
   }
@@ -1386,8 +1416,7 @@ class StreamingSpec extends SparkSpec {
       CorpusStream.processBatch(b, cat, "cr_seen", "cr_out", i.toLong,
         compactEvery = 0)
     }
-    val state = CorpusStream.readState(cat, "cr_seen").select($"id", $"fp")
-      .as[(Long, String)].collect().toSet
+    val state = fpRows(cat, "cr_seen")
     val bands = cat.read("cr_seen_bands")
       .select($"id", $"band_idx", $"band_key")
       .as[(Long, Int, String)].collect().toSet
@@ -1602,15 +1631,13 @@ class StreamingSpec extends SparkSpec {
         // pre-heal: duplicated rows (committed target + undeleted sources)
         // must not change any consumer's semantics — a batch processed
         // before the healing pass sees the same seen-corpus
-        assert(CorpusStream.readState(cat, "cr_seen").select($"id", $"fp")
-          .as[(Long, String)].collect().toSet == wantState,
+        assert(fpRows(cat, "cr_seen") == wantState,
           s"$window: set-of-rows state changed by the crash")
         // heal: rerun skips the committed target's rewrite, finishes the
         // deletes, and ends bit-identical to the never-crashed run
         CorpusStream.compactState(cat, "cr_seen", "99",
           pkSplitMinRows = minRows)
-        assert(CorpusStream.readState(cat, "cr_seen").select($"id", $"fp")
-          .as[(Long, String)].collect().toSet == wantState, window)
+        assert(fpRows(cat, "cr_seen") == wantState, window)
         assert(cat.read("cr_seen_bands")
           .select($"id", $"band_idx", $"band_key")
           .as[(Long, Int, String)].collect().toSet == wantBands, window)
@@ -1646,8 +1673,7 @@ class StreamingSpec extends SparkSpec {
       }
       CorpusStream.compactState(cat, "cr_seen", "99",
         pkSplitMinRows = minRows)
-      assert(CorpusStream.readState(cat, "cr_seen").select($"id", $"fp")
-        .as[(Long, String)].collect().toSet == wantState)
+      assert(fpRows(cat, "cr_seen") == wantState)
       assert(cat.read("cr_seen_bands")
         .select($"id", $"band_idx", $"band_key")
         .as[(Long, Int, String)].collect().toSet == wantBands)
@@ -1727,8 +1753,7 @@ class StreamingSpec extends SparkSpec {
         .toDF("doc_id", "text", "lang"),
       cat, "mx_seen", "mx_out", 2L, threshold = 0.45, admit = df => df)
     assert(out() == Set(33L, 52L))
-    val preCompact = CorpusStream.readState(cat, "mx_seen")
-      .select($"id", $"fp").as[(Long, String)].collect().toSet
+    val preCompact = fpRows(cat, "mx_seen")
     assert(preCompact.map(_._1) == Set(33L, 41L, 51L, 52L))
     // compaction folds both shapes into ONE partition, row-identically;
     // the pk-split source alone held >= its threshold, so the target
@@ -1738,11 +1763,8 @@ class StreamingSpec extends SparkSpec {
     val cdir = new java.io.File(s"$wh/mx_seen/batch_id=c2")
     assert(cdir.listFiles().exists(f =>
       f.isDirectory && f.getName.startsWith("pk=")))
-    for (t <- Seq("mx_seen_bands", "mx_seen_fp"))
-      assert(pkDirs(cat, t, "c2").nonEmpty, t)
-    assert(CorpusStream.readState(cat, "mx_seen")
-      .select($"id", $"fp").as[(Long, String)].collect().toSet
-      == preCompact)
+    assert(pkDirs(cat, "mx_seen_bands", "c2").nonEmpty)
+    assert(fpRows(cat, "mx_seen") == preCompact)
     // and the healed state still serves the pruned fetch: one more
     // near-dup arrival dies against the compacted pk-split partition
     CorpusStream.processBatch(
@@ -1787,8 +1809,8 @@ class StreamingSpec extends SparkSpec {
     }
     assert(CorpusStream.compactState(cat, "geo_c", "2"))
     assert(cat.listPartitions("geo_c", "batch_id") == Seq("c1"))
-    assert(graft.sim.MinHashLSH.sigWidthOf(
-      CorpusStream.readState(cat, "geo_c")) == Some(48))
+    assert(graft.sim.MinHashLSH.sigWidthOf(spark.read.parquet(
+      cat.partitionPath("geo_c_bands", "batch_id", "c1"))) == Some(48))
     val jobs = jobsStartedBy {
       val e2 = intercept[IllegalArgumentException] {
         CorpusStream.processBatch(docs.filter($"doc_id" >= 300), cat,
@@ -1796,8 +1818,7 @@ class StreamingSpec extends SparkSpec {
       }
       assert(e2.getMessage.contains("geo_c"))
     }
-    assert(!jobs.exists(_._1.endsWith("state width")),
-      jobs.map(_._1).mkString("\n"))
+    assert(!jobs.exists(_.endsWith("state width")), jobs.mkString("\n"))
   }
 
   test("incremental corpus pipeline decontaminates each batch against " +

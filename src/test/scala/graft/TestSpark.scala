@@ -32,34 +32,8 @@ trait SparkSpec extends AnyFunSuite {
   override def withFixture(test: NoArgTest): Outcome =
     graft.core.Scratch.scope(super.withFixture(test))
 
-  /** (spark.job.description, stage names) of every job `body` starts:
-    * a listener drained by a labelled sentinel job — one queue delivers
-    * a listener's events in order, so once the sentinel's start arrives
-    * every earlier job's start has too. */
-  def jobsStartedBy(body: => Unit): Seq[(String, String)] = {
-    import scala.jdk.CollectionConverters._
-    val started =
-      new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        started.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("") -> e.stageInfos.map(_.name).mkString("; "))
-    }
-    val sc = spark.sparkContext
-    val sentinel = "job-label-sentinel"
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription(sentinel)
-      try spark.range(1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!started.asScala.exists(_._1 == sentinel) &&
-          System.nanoTime() < deadline) Thread.sleep(50)
-    } finally sc.removeSparkListener(listener)
-    val jobs = started.asScala.toSeq
-    assert(jobs.exists(_._1 == sentinel), "listener never drained")
-    jobs.filter(_._1 != sentinel)
-  }
+  /** The `spark.job.description` of every job `body` starts, in job
+    * id order ([[graft.core.Trace.record]]). */
+  def jobsStartedBy(body: => Unit): Seq[String] =
+    graft.core.Trace.record(spark)(body)._2.jobs.map(_.label)
 }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import graft.tools.Trace
+import graft.core.Trace
 
 class ToolsSpec extends SparkSpec {
   test("the library's entry points are exactly Bench, Verify, Trace and " +
@@ -49,5 +49,31 @@ class ToolsSpec extends SparkSpec {
     val inside = byLabel("trace-inside")
     assert(inside.jobs >= 1 && inside.stages >= 1 && inside.tasks > 0,
       inside)
+  }
+
+  test("every Par.concurrently lane in the library is a site with a " +
+       "recorded verdict (ROADMAP item 6)") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root, not $root")
+    // each lane site named by its file and the nearest object member
+    // `def` above it
+    val owner = "(?m)^  (?:private(?:\\[\\w+\\])? )?def (\\w+)".r
+    val sites = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = new String(Files.readAllBytes(p), "UTF-8")
+        val file = p.getFileName.toString.stripSuffix(".scala")
+        "Par\\.concurrently\\(".r.findAllMatchIn(src).map { m =>
+          val o = owner.findAllMatchIn(src.take(m.start)).toSeq.last
+          s"$file.${o.group(1)}"
+        }
+      }.toSeq.sorted
+    assert(sites == Seq(
+      "CorpusStream.compactStateLocked", // fold lanes
+      "CorpusStream.processBatchInner", // write lanes
+      "LlmQueries.servingComposition", // dp06/dp12 three feeds
+      "ShardExport.exportJsonl", // JSONL beside the membership index
+      "ShardExport.purgeAll"), // per-export purges
+      sites)
   }
 }
